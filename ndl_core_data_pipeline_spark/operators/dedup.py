@@ -92,13 +92,6 @@ def _shingles_from_words(words):
     return F.when(F.size(words) >= SHINGLE_N, shingles)
 
 
-def _shingles_spark(text_col):
-    """Single-expression form of the shingle construction (kept for
-    parity tests); hot paths use the two-step _split_words +
-    _shingles_from_words projection split instead."""
-    return _shingles_from_words(_split_words(text_col))
-
-
 # affine-permutation constants for h_j(x) = (A_j * x + B_j) mod P — the
 # classic universal-hash MinHash family; x < 2^48 (12 hex chars) and
 # A_j ≤ 17 keep A*x + B < 2^53, safely inside bigint for both engines
@@ -365,8 +358,7 @@ def simhash_fingerprints(spark, sf_dir):
     # CONSTRUCTION per query before any job ran (the execute itself is
     # ~1 s at sf0.1). The same expressions are now rendered as SQL text
     # (one F.expr parse per aggregate, one for the fingerprint); the
-    # analyzed plan and results are identical. Same fix as
-    # vector._lsh_signature.
+    # analyzed plan and results are identical.
     votes = []
     for bpos in range(SIMHASH_BITS):
         char = bpos // 4  # 0-based hex char index
@@ -453,7 +445,7 @@ def simhash_near_dup_pairs(spark, sf_dir):
 # ---- oracle SQL fragments shared by the minhash family (module-level so
 # ---- register() and register_round2() compose the same text).
 # range(0, len-n+1) is empty for len < n, mirroring the size(words) >=
-# SHINGLE_N guard in _shingles_spark — both engines emit zero shingles
+# SHINGLE_N guard in _shingles_from_words — both engines emit zero shingles
 # for docs shorter than the n-gram
 _SHINGLE_SQL = """
 shingles AS (

@@ -230,8 +230,8 @@ def _triangle_count_from_edges(e: DataFrame) -> DataFrame:
     arboricity regardless of max degree — a power-law hub with degree d
     contributes O(d) wedges instead of O(d²), which is what makes this
     survive skewed co-purchase graphs at 100 TB (the naive canonical-order
-    wedge join, kept as _triangle_count_naive and pinned equal by test,
-    puts degree² rows on one key). Costs vs naive: one extra keyed
+    wedge join, kept in tests/reference_forms.py and pinned equal by
+    test, puts degree² rows on one key). Costs vs naive: one extra keyed
     degree aggregation plus two keyed joins to attach ranks — all
     map-side-combinable, no new skew introduced (the degree table is
     uniform in vertex id)."""
@@ -276,23 +276,6 @@ def _triangle_count_from_edges(e: DataFrame) -> DataFrame:
     tri = wedges.join(
         closing,
         (F.col("c_src") == F.col("o1.dst")) & (F.col("c_dst") == F.col("o2.dst")),
-        "left_semi",
-    )
-    n_tri = tri.groupBy().agg(F.count("*").alias("n_triangles"))
-    n_edges = e.groupBy().agg(F.count("*").alias("n_edges"))
-    return n_edges.crossJoin(F.broadcast(n_tri))
-
-
-def _triangle_count_naive(e: DataFrame) -> DataFrame:
-    """Canonical-order wedge join (a<b)+(b<c) closed by (a,c): correct but
-    wedge rows per key grow with degree² — kept only as the test oracle
-    pinning the oriented form's count at small sf."""
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    wedges = e1.join(e2, F.col("e1.part_b") == F.col("e2.part_a"))
-    tri = wedges.join(
-        e3,
-        (F.col("e3.part_a") == F.col("e1.part_a"))
-        & (F.col("e3.part_b") == F.col("e2.part_b")),
         "left_semi",
     )
     n_tri = tri.groupBy().agg(F.count("*").alias("n_triangles"))

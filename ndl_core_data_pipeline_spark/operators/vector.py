@@ -196,41 +196,13 @@ def embedding_dim(df, vec_col: str = "embedding") -> int:
     return int(row["d"])
 
 
-def _sql_double(v: float) -> str:
-    """Shortest-roundtrip double literal for Spark SQL (D suffix — an
-    unsuffixed decimal literal would parse as DECIMAL, not DOUBLE)."""
-    return repr(float(v)) + "D"
-
-
-def _plane_dot_sql(emb_sql: str, plane) -> str:
-    """SQL text of the hyperplane dot product — semantically identical
-    to the former Column-DSL aggregate(zip_with(...)) form."""
-    arr = "array(" + ", ".join(_sql_double(v) for v in plane) + ")"
-    return (
-        f"aggregate(zip_with({emb_sql}, {arr}, "
-        "(x, hv) -> CAST(x AS DOUBLE) * hv), "
-        "CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
-
-
-def _lsh_signature(emb_sql: str, planes):
-    """16-bit random-hyperplane signature: bit j = sign of the dot product
-    with literal hyperplane j (plan-time constants, nothing rebuilt per
-    row). `emb_sql` is the embedding column's SQL identifier.
-
-    r19 (guide §1 — the cost was DRIVER-side): the former Column-DSL
-    form created n_planes x dim literal Column objects, one py4j round
-    trip each (~1k calls at 16x64) — measured 0.9-1.1 s of per-query
-    DataFrame CONSTRUCTION before any job ran. The whole expression is
-    now rendered as ONE SQL string and parsed with a single F.expr
-    call; the resulting expression tree (and therefore the plan and the
-    results) is the same."""
-    terms = " + ".join(
-        f"(CASE WHEN {_plane_dot_sql(emb_sql, plane)} > 0 "
-        f"THEN 1 ELSE 0 END) * {2 ** j}"
-        for j, plane in enumerate(planes)
-    )
-    return F.expr(f"CAST({terms} AS BIGINT)")
+def _passthrough(df, *names):
+    """(name, sql_type) pairs for the columns an Arrow pass carries
+    through unchanged, typed from `df`'s own schema: a hardcoded type
+    makes the pass fail as soon as the input differs (a bigint label
+    read through an int schema dies in ArrowVectorAccessor.getInt)."""
+    types = dict(df.dtypes)
+    return [(nm, types[nm]) for nm in names]
 
 
 def lsh_bucket_assignment(spark, sf_dir):
@@ -245,14 +217,14 @@ def lsh_bucket_assignment(spark, sf_dir):
     planes = hyperplane_matrix(LSH_SIG_BITS, embedding_dim(emb))
     # r20 (guide §4.2): the 16 dot-product folds per row run as one
     # Arrow/numpy pass (_lsh_bands_arrow with a single band of width 16
-    # — band 0's value IS the full signature); the SQL-HOF form
-    # (_lsh_signature) stays as the reference the equivalence tests pin
-    # against. Plan: plans/r20/vector_lsh_buckets_{before,after}.txt.
+    # — band 0's value IS the full signature); tests pin it to the
+    # SQL-HOF form in tests/reference_forms.py. Plan:
+    # plans/r20/vector_lsh_buckets_{before,after}.txt.
     out = _lsh_bands_arrow(
         emb.select("vec_id", "label", "embedding"),
         planes,
         1,
-        keep=[("vec_id", "bigint"), ("label", "int")],
+        keep=_passthrough(emb, "vec_id", "label"),
     )
     return out.select(
         "vec_id", "label", F.col("bvals")[0].alias("lsh_bucket")
@@ -334,7 +306,7 @@ def ivf_cell_assignments(spark, sf_dir, cents=None):
     per_row = _nearest_arrow(
         emb.select("vec_id", "embedding"),
         cent_rows,
-        keep=[("vec_id", "bigint")],
+        keep=_passthrough(emb, "vec_id"),
         v_name="embedding",
         v_sql_type="array<float>",
         id_sql_type="int",
@@ -508,11 +480,11 @@ def embedding_cosine_near_dup(spark, sf_dir):
     # r20 (guide §4.2): the exact re-verify runs as one Arrow pass (same
     # helper as the LSH form — exact fold order, quotient + HALF_UP
     # rounding in the JVM)
+    pairs = cand.join(a, "vec_a").join(b, "vec_b").select(
+        "label", "vec_a", "vec_b", "emb_a", "emb_b"
+    )
     verified = _cos_verify_arrow(
-        cand.join(a, "vec_a").join(b, "vec_b").select(
-            "label", "vec_a", "vec_b", "emb_a", "emb_b"
-        ),
-        keep=[("label", label_t), ("vec_a", "bigint"), ("vec_b", "bigint")],
+        pairs, keep=_passthrough(pairs, "label", "vec_a", "vec_b")
     )
     return (
         verified.select(
@@ -535,29 +507,31 @@ LSH_BAND_MASK = (1 << LSH_BAND_BITS) - 1
 EMB_NEAR_DUP_MIN_COS = 0.35
 
 
-def _band_value_structs(emb_sql: str, planes, n_bands: int):
-    """Per-band LSH values, each computed directly from its own
-    hyperplane subset: band b's value is Σ_k bit_{b·w+k}·2^k for band
-    width w = len(planes)/n_bands. Computing bands independently (rather
-    than slicing a monolithic signature) is what lets sig_bits exceed 63
-    — a production 128-bit signature never fits a bigint, but each of
-    its 16-bit band values does."""
-    w = len(planes) // n_bands
-    out = []
+def _lsh_band_values(M, H, n_bands: int):
+    """LSH band values of the clean float64 vectors M (rows, dim) against
+    the planes H (bits, dim): an (rows, n_bands) int64 array where bit k
+    of band b is the sign of plane b·w+k's dot, w = bits/n_bands. The
+    one signature kernel — the Arrow index pass and search.ann_topk's
+    query signature both call it, so a query and the vector it was
+    indexed from always agree on the bucket.
+
+    Each dot is the left fold of x·h in dimension order (the fold order
+    of the JVM's aggregate(zip_with(...)), which a BLAS dot does not
+    keep), and the bit is Spark's `dot > 0`: NaN is GREATER than every
+    value in Spark, so a NaN dot sets its bit (numpy's NaN > 0 is False
+    — pinned by test_lsh_bands_arrow_matches_sql_hof)."""
+    import numpy as np
+
+    bits, dim = H.shape
+    w = bits // n_bands
+    acc = np.zeros((len(M), bits))
+    for i in range(dim):  # exact left-fold order per plane
+        acc = acc + M[:, i : i + 1] * H[:, i][None, :]
+    bitvals = ((acc > 0) | np.isnan(acc)).astype(np.int64)
+    out = np.zeros((len(M), n_bands), dtype=np.int64)
     for bnd in range(n_bands):
-        # same single-F.expr construction as _lsh_signature (r19): one
-        # SQL parse per band instead of w x dim py4j literal calls
-        terms = " + ".join(
-            f"(CASE WHEN {_plane_dot_sql(emb_sql, planes[bnd * w + k])} > 0 "
-            f"THEN 1 ELSE 0 END) * {2 ** k}"
-            for k in range(w)
-        )
-        out.append(
-            F.struct(
-                F.lit(bnd).alias("band"),
-                F.expr(f"CAST({terms} AS BIGINT)").alias("bval"),
-            )
-        )
+        for k in range(w):
+            out[:, bnd] += bitvals[:, bnd * w + k] << k
     return out
 
 
@@ -567,11 +541,10 @@ def _lsh_bands_arrow(df, planes, n_bands: int, *, keep, v_name="embedding"):
     interpreted zip_with/aggregate dot-product folds per row.
 
     Exactness contract (pinned in tests/test_round20_argmin.py):
-    - each plane's dot is the left fold of CAST(x AS DOUBLE) * hv — the
-      accumulation loop preserves the fold order, so finite/NaN/Inf
-      arithmetic is bit-identical to the JVM HOF;
-    - bit k of band b is (dot > 0): NaN > 0 and NULL > 0 are both false
-      in both engines;
+    - each plane's dot is the left fold of CAST(x AS DOUBLE) * hv and
+      bit k of band b is Spark's (dot > 0), NaN included — both in
+      _lsh_band_values, so finite/NaN/Inf arithmetic is bit-identical
+      to the JVM HOF;
     - a row whose vector is NULL, has a NULL element, or whose length
       differs from the plane dimension makes EVERY dot NULL (zip_with
       pads with NULL and the fold sticks), so all its band values are 0
@@ -579,8 +552,7 @@ def _lsh_bands_arrow(df, planes, n_bands: int, *, keep, v_name="embedding"):
     import numpy as np
 
     H = np.array(planes, dtype=np.float64)  # (bits, dim)
-    bits, dim = H.shape
-    w = bits // n_bands
+    dim = H.shape[1]
 
     def bands(batches):
         import pyarrow as pa
@@ -606,18 +578,7 @@ def _lsh_bands_arrow(df, planes, n_bands: int, *, keep, v_name="embedding"):
                 M = vals.to_numpy(zero_copy_only=False).astype(
                     np.float64, copy=False
                 )[gather]
-                acc = np.zeros((len(idx), bits))
-                for i in range(dim):  # exact left-fold order per plane
-                    acc = acc + M[:, i : i + 1] * H[:, i][None, :]
-                # Spark comparison semantics: NaN is GREATER than every
-                # value, so a NaN dot sets its bit (numpy's NaN > 0 is
-                # False — pinned by test_lsh_bands_arrow_matches_sql_hof)
-                bitvals = ((acc > 0) | np.isnan(acc)).astype(np.int64)
-                for bnd in range(n_bands):
-                    v = np.zeros(len(idx), dtype=np.int64)
-                    for k in range(w):
-                        v += bitvals[:, bnd * w + k] << k
-                    bv[idx, bnd] = v
+                bv[idx] = _lsh_band_values(M, H, n_bands)
             arrays = [b.column(b.schema.get_field_index(nm)) for nm, _ in keep]
             names = [nm for nm, _ in keep]
             arrays.append(vcol)
@@ -776,13 +737,13 @@ def lsh_near_dup_pairs(
     emb = emb.filter(F.col("embedding").isNotNull() & F.col("vec_id").isNotNull())
     # r20 (guide §4.2): band values from ONE Arrow pass, exploded JVM-
     # side (posexplode index == the former struct's band literal); the
-    # SQL-HOF band form (_band_value_structs) stays as the test
-    # reference. Bit-exactness: _lsh_bands_arrow block comment.
+    # SQL-HOF band form it replaced is the test reference in
+    # tests/reference_forms.py. Bit-exactness: _lsh_band_values.
     banded = _lsh_bands_arrow(
         emb.select("vec_id", "embedding"),
         planes,
         n_bands,
-        keep=[("vec_id", "bigint")],
+        keep=_passthrough(emb, "vec_id"),
     ).select(
         "vec_id", "embedding", F.posexplode("bvals").alias("band", "bval")
     )
@@ -836,11 +797,11 @@ def lsh_near_dup_pairs(
     # per candidate, the pipeline's dominant cost once tiles prune the
     # collisions — runs as one Arrow pass (_cos_verify_arrow, exact
     # fold order); HALF_UP rounding stays in the JVM.
+    pairs = pair_ids.join(a, "vec_a").join(b, "vec_b").select(
+        "vec_a", "vec_b", "emb_a", "emb_b"
+    )
     verified = _cos_verify_arrow(
-        pair_ids.join(a, "vec_a").join(b, "vec_b").select(
-            "vec_a", "vec_b", "emb_a", "emb_b"
-        ),
-        keep=[("vec_a", "bigint"), ("vec_b", "bigint")],
+        pairs, keep=_passthrough(pairs, "vec_a", "vec_b")
     )
     return (
         verified.select(
@@ -1097,64 +1058,12 @@ def _pq_filtered(emb):
     embedding would emit M NULL-subvec rows (oracle's UNNEST emits
     none); NULL vec_ids would merge distinct vectors into one argmin
     group; a NULL label would train a NULL codeword class whose argmin
-    tie order is engine-specific. Shared by the scored-expansion helper
-    and the map-side encode paths so the domain filter cannot drift."""
+    tie order is engine-specific. Shared by every PQ encode path so
+    the domain filter cannot drift."""
     return emb.filter(
         F.col("embedding").isNotNull()
         & F.col("vec_id").isNotNull()
         & F.col("label").isNotNull()
-    )
-
-
-def _codeword_arrays(cb):
-    """One row per subquantizer m holding array<struct<code, subcent>> —
-    the broadcast-hash-join build side for the map-side code argmin
-    (r19, guide §2.3/§2.4): joining the K-rows-per-m codebook expands
-    every (vec, m) subvector K ways and needs a keyed shuffle to argmin
-    it back down; joining THIS table keeps one row per (vec, m) and the
-    argmin runs in the scan projection (_argmin_code). collect_list
-    order is nondeterministic but irrelevant: every consumer reduces
-    the array with array_min, which is order-independent."""
-    return cb.groupBy("m").agg(
-        F.collect_list(F.struct("code", "subcent")).alias("cw")
-    )
-
-
-def _argmin_code(subvec_col):
-    """array_min over struct(d2, code) of the joined `cw` codeword
-    array — the SAME lexicographic comparator (incl. null-field
-    ordering) as the former groupBy.agg(min(struct(d2, code))), because
-    ArrayMin and the Min aggregate share one interpreted struct
-    ordering; see _argmin_cell for the full equivalence argument."""
-    return F.array_min(
-        F.transform(
-            "cw",
-            lambda c: F.struct(
-                _sq_l2(subvec_col, c["subcent"]).alias("d2"),
-                c["code"].alias("code"),
-            ),
-        )
-    )
-
-
-def _pq_scored(emb):
-    """(vec_id, label, m, code, d2): L2² of every subvector against every
-    codeword of its subquantizer. Broadcast codebook join keyed on m.
-    The codebook — M×K rows from a corpus-wide aggregation — is
-    localCheckpointed once: the ADC consumer references scored twice
-    (codes + LUT branches) and would otherwise re-run the corpus
-    aggregation per branch (round-9 A/B at sf0.1: 0.95-1.13 s direct vs
-    0.91-0.96 s cut, identical rows; at scale the win is one saved
-    corpus aggregation, the same cut ivfpq_adc_search makes)."""
-    emb = _pq_filtered(emb)
-    subs = _subvectors(emb)
-    cb = _pq_codebooks(emb).localCheckpoint(eager=True)
-    return subs.join(F.broadcast(cb), "m").select(
-        "vec_id",
-        "label",
-        "m",
-        "code",
-        _sq_l2(F.col("subvec"), F.col("subcent")).alias("d2"),
     )
 
 
@@ -1179,7 +1088,7 @@ def pq_codes(spark, sf_dir):
     enc = _pq_encode_arrow(
         emb.select("vec_id", "embedding"),
         cw,
-        keep=[("vec_id", "bigint")],
+        keep=_passthrough(emb, "vec_id"),
         v_name="embedding",
         with_d2=True,
     )
@@ -1215,7 +1124,7 @@ def pq_adc_topk(spark, sf_dir):
     codes = _pq_encode_arrow(
         emb.filter(F.col("vec_id") != 0).select("vec_id", "label", "embedding"),
         cw,
-        keep=[("vec_id", "bigint"), ("label", "int")],
+        keep=_passthrough(emb, "vec_id", "label"),
         v_name="embedding",
     )
     cb_df = spark.createDataFrame(
@@ -1301,7 +1210,8 @@ _KM_DEC = "decimal(27,10)"  # exact partial sums for unit-magnitude dims
 
 # --------- r20: Arrow-native nearest-centroid argmin (guide §4.2) ---------
 #
-# The map-side argmin (r19's _argmin_cell) evaluates interpreted
+# The r19 map-side argmin (its HOF form is now the test reference
+# tests/reference_forms.argmin_cell) evaluated interpreted
 # higher-order functions per row: transform(cs, ...) × zip_with ×
 # aggregate is ~1.5k boxed lambda evaluations per vector (~70 µs/row at
 # sf1 — THE per-row cost of every kmeans/IVF/PQ corpus pass). Codegen
@@ -1708,40 +1618,6 @@ def _km_d2(v_col, c_col):
     )
 
 
-def _cent_struct_row(cents):
-    """Collapse the K-row centroid table to ONE row holding
-    array<struct<cell_id, centroid>> — the broadcastable literal the
-    map-side argmin (_argmin_cell) scans per vector. collect_list order
-    is nondeterministic but irrelevant: every consumer reduces the array
-    with array_min, which is order-independent."""
-    return cents.agg(F.collect_list(F.struct("cell_id", "centroid")).alias("cs"))
-
-
-def _argmin_cell(v_col, extra_fields=(), dist=None):
-    """Map-side nearest-centroid argmin over the broadcast `cs` array:
-    array_min over struct(d2, cell_id[, ...extra]) — the SAME (d2,
-    cell_id) lexicographic comparator (incl. null-field ordering) as the
-    former groupBy(vec_id).agg(min(struct(d2, cell_id))), because
-    ArrayMin and the Min aggregate share one interpreted struct
-    ordering. min over (row × cell) pairs == min over per-row argmins
-    (associativity), and vec_id is contractually unique (duprow fixtures
-    re-key; checks.enforce_unique_key rejects duplicate ids), so the
-    per-row form is exactly the per-key form. NULL elements can't occur
-    (struct() is never NULL); array_min of an empty cs is NULL — callers
-    filter, mirroring the old join-with-empty-assign drop."""
-    dist = dist or _km_d2
-    return F.array_min(
-        F.transform(
-            "cs",
-            lambda c: F.struct(
-                dist(v_col, c["centroid"]).alias("d2"),
-                c["cell_id"].alias("cell_id"),
-                *[c[f].alias(f) for f in extra_fields],
-            ),
-        )
-    )
-
-
 def _kmeans_means(emb, cents_rows):
     """One Lloyd round from driver-held centroid rows: Arrow-native
     map-side argmin assignment (_nearest_arrow — no join, no broadcast
@@ -1815,13 +1691,6 @@ def _cents_df(spark, cents_rows, id_sql_type: str = "BIGINT"):
         [(cid, cvals) for cid, cvals in cents_rows],
         f"cell_id {id_sql_type}, centroid ARRAY<DOUBLE>",
     )
-
-
-def _kmeans_fit(emb):
-    """Compatibility wrapper: the trained centroid table as a DataFrame
-    (kept for tests/tools; the query paths use _kmeans_rows directly)."""
-    spark = emb.sparkSession
-    return _cents_df(spark, _kmeans_rows(emb))
 
 
 def kmeans_centroids(spark, sf_dir):
@@ -1942,9 +1811,10 @@ def ivfpq_adc_search(spark, sf_dir):
     analog (reference create_lancedb_index.py:143-148) composed from the
     repo's three trained pieces instead of the label-derived stand-ins:
 
-    1. COARSE QUANTIZER: k-means (Lloyd, _kmeans_fit) trains K=8 cell
-       centroids; every vector map-side argmins against the broadcast
-       K×dim table (one shuffle per Lloyd round, vectors keyed by cell).
+    1. COARSE QUANTIZER: k-means (Lloyd, _kmeans_rows — driver-held
+       centroids, one job per round) trains K=8 cell centroids; every
+       vector argmins against the K×dim table in one Arrow pass
+       (_nearest_arrow).
     2. RESIDUAL PQ: each vector's residual v − centroid(cell) (rounded
        6 dp → exact shared intermediate) splits into M=8 subvectors;
        codebooks are per-(m, label) residual means with decimal-exact
@@ -1991,7 +1861,8 @@ def ivfpq_adc_search(spark, sf_dir):
     # more exchanges carrying the full v arrays). The argmin depends
     # only on (v, centroids), so it now runs in the scan projection via
     # the broadcast array<struct<cell_id, centroid>> row
-    # (_argmin_cell with the centroid carried as an extra struct field
+    # (the HOF argmin, now tests/reference_forms.argmin_cell, with the
+    # centroid carried as an extra struct field
     # — cell_id is unique per cs entry, so the widened struct never
     # changes the (d2, cell_id) comparator's decision), and the
     # residual zip_with reads the winning centroid straight out of the
@@ -2019,7 +1890,7 @@ def ivfpq_adc_search(spark, sf_dir):
                 "vec_id", "label", "v"
             ),
             cents_rows,
-            keep=[("vec_id", "bigint"), ("label", "int")],
+            keep=_passthrough(emb, "vec_id", "label"),
             v_name="v",
             v_sql_type="array<double>",
             id_sql_type="bigint",
@@ -2080,7 +1951,7 @@ def ivfpq_adc_search(spark, sf_dir):
     codes = _pq_encode_arrow(
         resid.filter(F.col("vec_id") != 0),
         cw,
-        keep=[("vec_id", "bigint"), ("label", "int"), ("cell_id", "bigint")],
+        keep=_passthrough(resid, "vec_id", "label", "cell_id"),
         v_name="r",
     )
     # the query-cell probe needs distances for vec 0 only: a 1×K

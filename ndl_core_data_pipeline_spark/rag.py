@@ -11,10 +11,11 @@ parquet + FAISS flat index). Here:
   flags that as non-portable to a distributed engine);
 - embedding: mapInPandas batch encode, sentence-transformers when
   importable, hashed featurizer otherwise (classify.embed_texts);
-- index: the chunk-embedding table itself (+ optional LSH bucket column
-  via search.lsh_index) — brute-force cosine is the exact tier, bucket
-  pruning the approximate tier. FAISS's role (K5) is filled by the
-  engine's own distributed top-k, not a driver-side index.
+- index: the chunk-embedding table itself (+ optional lsh_bucket column
+  via search.lsh_index, computed by the engine's one LSH kernel,
+  operators/vector._lsh_bands_arrow) — brute-force cosine is the exact
+  tier, bucket pruning the approximate tier. FAISS's role (K5) is filled
+  by the engine's own distributed top-k, not a driver-side index.
 """
 
 from __future__ import annotations

@@ -9,39 +9,39 @@ Reference: resources/embedding/rag_search.py —
 - neighbor merge (:50-65): extend each surviving chunk with the previous/
   next chunk of the same document, trimming the 100-char overlap.
 
-Spark form: the query vector broadcasts (a one-row literal); scoring is a
+Spark form: the query vector is one array<double> literal; scoring is a
 JVM-side expression over array<float>; top-k is TakeOrderedAndProject;
 the elbow is a window computation over k rows; the neighbor merge is
 lag/lead over (origin, chunk_index) — no collect() anywhere, and the
 heavy side (the corpus) is never moved except the k winners.
+
+The exact and LSH tiers hold no vector math of their own: the cosine
+folds are operators/vector's _dot/_norm, and the LSH index (lsh_index)
+and its query probe (ann_topk) both sign vectors with
+vector._lsh_band_values, so a query always lands in the bucket its own
+vector was indexed under. The MLlib k-means IVF pair (ivf_index/
+ivf_search) is a separate index that the registry's IVF does not share.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from .operators.vector import (
+    _arr_dlit,
+    _dot,
+    _lsh_band_values,
+    _lsh_bands_arrow,
+    _norm,
+    _passthrough,
+    embedding_dim,
+    hyperplane_matrix,
+)
+
 DEFAULT_K = 15  # rag_search.py:14
 ELBOW_SENSITIVITY = 2.5  # rag_search.py:77
 ELBOW_MIN_STEP = 0.05  # rag_search.py:77
 NEIGHBOR_OVERLAP = 100  # rag_search.py:12
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
 
 
 def cosine_topk(
@@ -53,7 +53,7 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact cosine top-k against a literal query vector. Emits
     (id, cos_sim, distance) with distance = 1 - cosine."""
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
+    q = F.expr(_arr_dlit(query_vec))
     cos = _dot(F.col(vec_col), q) / (_norm(F.col(vec_col)) * _norm(q))
     return (
         corpus.select(F.col(id_col), cos.alias("cos_sim"))
@@ -131,38 +131,41 @@ def neighbor_merge(
 N_PLANES = 12  # LSH signature bits for the approximate path
 
 
-def _lsh_bits(vec_col, dim: int, n_planes: int = N_PLANES):
-    """Deterministic random-hyperplane signature (same hyperplane_matrix as
-    operators/vector.lsh_bucket_assignment). The matrix is driver-side
-    constants embedded as literal arrays — per row the executors do
-    n_planes zip_with dot products and rebuild nothing."""
-    from .operators.vector import hyperplane_matrix
-
-    planes = hyperplane_matrix(n_planes, dim)
-    bits = []
-    for j in range(n_planes):
-        h = F.array(*[F.lit(v) for v in planes[j]])
-        h_dot = F.aggregate(
-            F.zip_with(vec_col, h, lambda x, hv: x.cast("double") * hv),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(h_dot > 0, F.lit(1)).otherwise(F.lit(0)) * (2**j))
-    return sum(bits[1:], bits[0]).cast("bigint")
-
-
 def lsh_index(
     corpus: DataFrame, vec_col: str = "embedding", dim: int | None = None
 ) -> DataFrame:
     """Materialize the ANN index: corpus + lsh_bucket column. Persist this
     (e.g. parquet partitioned by bucket) and candidate lookup becomes a
     partition-pruned scan — the IVF-list analog of the reference's
-    LanceDB index (create_lancedb_index.py:143-148)."""
-    from .operators.vector import embedding_dim
+    LanceDB index (create_lancedb_index.py:143-148).
 
+    The bucket is the engine's one LSH kernel (vector._lsh_bands_arrow)
+    with a single band of N_PLANES bits over the same hyperplane_matrix
+    as lsh_bucket_assignment; a NULL, ragged or NULL-element vector
+    gets bucket 0."""
     if dim is None:
         dim = embedding_dim(corpus, vec_col)
-    return corpus.withColumn("lsh_bucket", _lsh_bits(F.col(vec_col), dim))
+    rest = [c for c in corpus.columns if c != vec_col]
+    banded = _lsh_bands_arrow(
+        corpus,
+        hyperplane_matrix(N_PLANES, dim),
+        1,
+        keep=_passthrough(corpus, *rest),
+        v_name=vec_col,
+    )
+    return banded.select(
+        *corpus.columns, F.col("bvals")[0].alias("lsh_bucket")
+    )
+
+
+def _query_bucket(query_vec: list[float]) -> int:
+    """The query's LSH bucket: the same kernel, planes and fold order as
+    the lsh_bucket lsh_index stored for an identical vector."""
+    import numpy as np
+
+    q = np.asarray(query_vec, dtype=np.float64)[None, :]
+    planes = np.asarray(hyperplane_matrix(N_PLANES, q.shape[1]))
+    return int(_lsh_band_values(q, planes, 1)[0, 0])
 
 
 def ann_topk(
@@ -178,16 +181,7 @@ def ann_topk(
     exact-rerank the candidates. The candidate filter prunes the scan —
     at scale, bucket-partitioned storage turns it into partition pruning —
     and the expensive cosine runs on a small fraction of the corpus."""
-    import numpy as np
-
-    from .operators.vector import hyperplane_matrix
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    planes = np.asarray(hyperplane_matrix(N_PLANES, len(q)))
-    sig = 0
-    for j in range(N_PLANES):
-        if float(q @ planes[j]) > 0:
-            sig |= 1 << j
+    sig = _query_bucket(query_vec)
     probes = [sig]
     if probe_hamming >= 1:
         probes += [sig ^ (1 << b) for b in range(N_PLANES)]

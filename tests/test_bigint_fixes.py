@@ -18,14 +18,17 @@ and planted uniquely by gen_scale.inject_bigint_extremes):
 
 from __future__ import annotations
 
+import os
+
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as contract
 from ndl_core_data_pipeline_spark.operators.textops import SIZE_BAR_MAX
 
 from .oracle import run_compare
-from .test_nullheavy_fixes import _events_table, _fixture_dir
+from .test_nullheavy_fixes import _SRC, _events_table, _fixture_dir
 
 QUERIES = contract.queries()
 ORACLES = contract.oracle_sql()
@@ -356,3 +359,26 @@ def test_enforce_unique_key_rejects_unknown_mode():
     df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     with pytest.raises(ValueError, match="unknown mode"):
         enforce_unique_key(df, "doc_id", mode="merge")
+
+
+@pytest.fixture(scope="module")
+def bigint_label_dir(tmp_path_factory):
+    """sf0.001's embeddings with `label` widened from int to bigint."""
+    tbl = pq.read_table(os.path.join(_SRC, "embeddings.parquet"))
+    tbl = tbl.set_column(
+        tbl.schema.get_field_index("label"),
+        "label",
+        tbl.column("label").cast(pa.int64()),
+    ).replace_schema_metadata(None)
+    return _fixture_dir(tmp_path_factory.mktemp("bigintlabel"), "d", "embeddings", tbl)
+
+
+@pytest.mark.parametrize(
+    "name", ["vector_lsh_buckets", "vector_pq_codes", "vector_ivfpq_adc_search"]
+)
+def test_bigint_label_through_arrow_passes(spark, bigint_label_dir, name):
+    """The mapInArrow passes carry `label` through with the input's own
+    type. With a hardcoded int, a bigint label made the pass fail in
+    ArrowVectorAccessor.getInt."""
+    problems = run_compare(spark, name, QUERIES[name], ORACLES[name], bigint_label_dir)
+    assert problems == [], problems

@@ -16,6 +16,8 @@ from ndl_core_data_pipeline_spark.operators.vector import (
     lsh_bucket_assignment,
 )
 
+from .reference_forms import shingles_spark
+
 
 def test_short_docs_emit_no_shingles(spark):
     # docs shorter than SHINGLE_N words must yield zero shingles, matching
@@ -25,7 +27,7 @@ def test_short_docs_emit_no_shingles(spark):
         ["doc_id", "text"],
     )
     out = (
-        df.select("doc_id", F.explode(dedup._shingles_spark(F.col("text"))).alias("s"))
+        df.select("doc_id", F.explode(shingles_spark(F.col("text"))).alias("s"))
         .filter(F.length("s") > 0)
         .groupBy("doc_id")
         .count()

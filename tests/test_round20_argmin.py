@@ -5,10 +5,11 @@ HOF/broadcast forms they replaced — including every hostile shape the
 fixtures throw (NULL vectors, NULL elements, NaN/Inf values, ragged
 lengths, degenerate centroid tables).
 
-The r19 reference implementations (_argmin_cell over the broadcast
-struct row, _argmin_code over the joined codeword arrays, the
-broadcast-loop _kmeans_fit) are kept in vector.py / re-built here
-exactly so the equivalence stays executable.
+The r19 reference implementations (argmin_cell over the broadcast
+struct row, argmin_code over the joined codeword arrays, the SQL-HOF
+LSH signature and band forms) live in tests/reference_forms.py; the
+broadcast-loop k-means fit is re-built here, so the equivalence stays
+executable.
 """
 
 from __future__ import annotations
@@ -18,12 +19,15 @@ import math
 from pyspark.sql import functions as F
 
 from ndl_core_data_pipeline_spark.operators import vector as V
+from ndl_core_data_pipeline_spark.search import N_PLANES
+
+from . import reference_forms as R
 
 
-def _rows_nullsafe_equal(df_a, df_b, key):
+def _rows_nullsafe_equal(df_a, df_b, key, msg=""):
     a = {r[key]: tuple(r) for r in df_a.collect()}
     b = {r[key]: tuple(r) for r in df_b.collect()}
-    assert set(a) == set(b)
+    assert set(a) == set(b), msg
     bad = []
     for k in a:
         ta, tb = a[k], b[k]
@@ -43,7 +47,7 @@ def _rows_nullsafe_equal(df_a, df_b, key):
             if not same:
                 bad.append((k, ta, tb))
                 break
-    assert not bad, f"mismatches: {bad[:5]}"
+    assert not bad, f"{msg} mismatches: {bad[:5]}"
 
 
 VEC = [float(i) * 0.25 for i in range(64)]
@@ -81,10 +85,10 @@ def _hof_argmin(df, cents_rows, with_d2):
     cdf = df.sparkSession.createDataFrame(
         cents_rows, "cell_id long, centroid array<double>"
     )
-    base = df.crossJoin(F.broadcast(V._cent_struct_row(cdf))).filter(
+    base = df.crossJoin(F.broadcast(R.cent_struct_row(cdf))).filter(
         F.size("cs") > 0
     )
-    m = V._argmin_cell(F.col("v"))
+    m = R.argmin_cell(F.col("v"))
     cols = ["vec_id", m["cell_id"].alias("cell_id")]
     if with_d2:
         cols.append(m["d2"].alias("d2"))
@@ -104,7 +108,7 @@ def test_nearest_arrow_matches_hof_on_hostile_inputs(spark):
             id_sql_type="bigint",
             with_d2=True,
         ).select("vec_id", "cell_id", "d2")
-        _rows_nullsafe_equal(old, new, "vec_id"), tag
+        _rows_nullsafe_equal(old, new, "vec_id", tag)
 
 
 def test_nearest_arrow_matches_hof_on_real_embeddings(spark, sf_small):
@@ -143,9 +147,9 @@ def test_kmeans_rows_bitwise_equals_broadcast_loop(spark, sf_small):
     for _ in range(V.KMEANS_ITERS):
         assigned = (
             emb.filter(F.col("vec_id").isNotNull())
-            .crossJoin(F.broadcast(V._cent_struct_row(cents)))
+            .crossJoin(F.broadcast(R.cent_struct_row(cents)))
             .filter(F.size("cs") > 0)
-            .select(V._argmin_cell(F.col("v"))["cell_id"].alias("cell_id"), "v")
+            .select(R.argmin_cell(F.col("v"))["cell_id"].alias("cell_id"), "v")
         )
         dims = assigned.select("cell_id", F.posexplode("v").alias("pos", "x"))
         means = dims.groupBy("cell_id", "pos").agg(
@@ -183,7 +187,7 @@ def _hof_encode(df, cw, with_d2):
          for m, rows in cw.items()],
         "m int, cw array<struct<code:int,subcent:array<double>>>",
     )
-    b = V._argmin_code(F.col("subvec"))
+    b = R.argmin_code(F.col("subvec"))
     cols = ["vec_id", "m", b["code"].alias("code")]
     if with_d2:
         cols.append(b["d2"].alias("d2"))
@@ -254,46 +258,56 @@ def test_struct_min_ordering_assumptions(spark):
     assert r["null_id_first"] is None
 
 
+# (n_planes, dim, n_bands): the registry's 16-bit/4-band signature over
+# 64-dim embeddings, and the RAG index's shape — search.lsh_index over
+# 256-dim chunk embeddings, one band holding the whole signature
+LSH_SHAPES = [(V.LSH_SIG_BITS, 64, V.LSH_SIG_BANDS), (N_PLANES, 256, 1)]
+
+
 def test_lsh_bands_arrow_matches_sql_hof(spark):
     """Arrow band values == the SQL-HOF signature/band forms on real-ish
-    and hostile vectors (NULL rows, NULL elements, NaN/Inf, ragged)."""
-    planes = V.hyperplane_matrix(V.LSH_SIG_BITS, 64)
-    rows = [
-        (1, [0.1 * i - 3.0 for i in range(64)]),
-        (2, [-0.25 * i for i in range(64)]),
-        (3, [float("nan")] + [1.0] * 63),
-        (4, [float("inf")] + [1.0] * 63),
-        (5, [-float("inf")] + [1.0] * 63),
-        (6, [None] + [1.0] * 63),
-        (7, [1.0] * 32),
-        (8, [1.0] * 70),
-        (9, None),
-        (10, [0.0] * 64),
-    ]
-    hdf = spark.createDataFrame(rows, "vec_id long, v array<float>")
-    # full-signature form (1 band of 16 bits)
-    old_sig = hdf.select(
-        "vec_id", V._lsh_signature("v", planes).alias("s")
-    )
-    new_sig = V._lsh_bands_arrow(
-        hdf, planes, 1, keep=[("vec_id", "bigint")], v_name="v"
-    ).select("vec_id", F.col("bvals")[0].alias("s"))
-    a = {r["vec_id"]: r["s"] for r in old_sig.collect()}
-    b = {r["vec_id"]: r["s"] for r in new_sig.collect()}
-    assert a == b
-    # banded form (4 bands of 4 bits)
-    old_b = hdf.select(
-        "vec_id",
-        F.explode(
-            F.array(*V._band_value_structs("v", planes, V.LSH_SIG_BANDS))
-        ).alias("bk"),
-    ).select("vec_id", "bk.band", "bk.bval")
-    new_b = V._lsh_bands_arrow(
-        hdf, planes, V.LSH_SIG_BANDS, keep=[("vec_id", "bigint")], v_name="v"
-    ).select("vec_id", F.posexplode("bvals").alias("band", "bval"))
-    a = {(r["vec_id"], r["band"]): r["bval"] for r in old_b.collect()}
-    b = {(r["vec_id"], r["band"]): r["bval"] for r in new_b.collect()}
-    assert a == b
+    and hostile vectors (NULL rows, NULL elements, NaN/Inf, ragged), for
+    every signature shape the engine builds."""
+    import numpy as np
+
+    for n_planes, dim, n_bands in LSH_SHAPES:
+        shape = (n_planes, dim, n_bands)
+        planes = V.hyperplane_matrix(n_planes, dim)
+        one = [1.0] * (dim - 1)
+        rows = [
+            (1, [0.1 * i - 3.0 for i in range(dim)]),
+            (2, [-0.25 * i for i in range(dim)]),
+            (3, [float("nan")] + one),
+            (4, [float("inf")] + one),
+            (5, [-float("inf")] + one),
+            (6, [None] + one),
+            (7, [1.0] * (dim // 2)),
+            (8, [1.0] * (dim + 6)),
+            (9, None),
+            (10, [0.0] * dim),
+        ]
+        rng = np.random.default_rng(7)
+        rows += [(11 + i, rng.standard_normal(dim).tolist()) for i in range(20)]
+        hdf = spark.createDataFrame(rows, "vec_id long, v array<float>")
+        # full-signature form (1 band of n_planes bits)
+        old_sig = hdf.select("vec_id", R.lsh_signature("v", planes).alias("s"))
+        new_sig = V._lsh_bands_arrow(
+            hdf, planes, 1, keep=[("vec_id", "bigint")], v_name="v"
+        ).select("vec_id", F.col("bvals")[0].alias("s"))
+        a = {r["vec_id"]: r["s"] for r in old_sig.collect()}
+        b = {r["vec_id"]: r["s"] for r in new_sig.collect()}
+        assert a == b, shape
+        # banded form
+        old_b = hdf.select(
+            "vec_id",
+            F.explode(F.array(*R.band_value_structs("v", planes, n_bands))).alias("bk"),
+        ).select("vec_id", "bk.band", "bk.bval")
+        new_b = V._lsh_bands_arrow(
+            hdf, planes, n_bands, keep=[("vec_id", "bigint")], v_name="v"
+        ).select("vec_id", F.posexplode("bvals").alias("band", "bval"))
+        a = {(r["vec_id"], r["band"]): r["bval"] for r in old_b.collect()}
+        b = {(r["vec_id"], r["band"]): r["bval"] for r in new_b.collect()}
+        assert a == b, shape
 
 
 def test_cos_verify_arrow_matches_hof(spark):

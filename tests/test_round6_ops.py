@@ -318,12 +318,13 @@ def test_pq_adc_equals_distance_to_reconstruction(spark, sf_small):
     from ndl_core_data_pipeline_spark.operators.vector import (
         PQ_M,
         _pq_codebooks,
-        _pq_scored,
         _subvectors,
     )
 
+    from .reference_forms import pq_scored
+
     emb = load(spark, sf_small, "embeddings")
-    scored = _pq_scored(emb)
+    scored = pq_scored(emb)
     codes = (
         scored.groupBy("vec_id", "m")
         .agg(F.min(F.struct("d2", "code")).alias("b"))

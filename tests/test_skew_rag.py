@@ -89,6 +89,20 @@ def test_ann_matches_exact_on_probe_buckets(spark, doc_frame):
     assert ann[0]["chunk_id"] == target["chunk_id"]  # self-match survives pruning
 
 
+def test_ann_query_bucket_equals_indexed_bucket(spark, doc_frame):
+    """Index and probe sign vectors with one kernel: every chunk's own
+    embedding, used as an ann_topk query, lands in its stored bucket."""
+    rows = (
+        rag.build_index(doc_frame, approximate=True)
+        .select("embedding", "lsh_bucket")
+        .collect()
+    )
+    assert len({r["lsh_bucket"] for r in rows}) > 1
+    for r in rows:
+        q = [float(x) for x in r["embedding"]]
+        assert search._query_bucket(q) == r["lsh_bucket"]
+
+
 # ------------------------------------------------- hypothesis properties
 
 
