@@ -48,19 +48,25 @@ def build_registry() -> Registry:
     from .operators import (
         aggregates,
         arrays,
+        bpe,
+        checks,
         dedup,
         eventwindows,
         files,
         filters,
+        graphs,
         groupedmap,
         joins,
         multimodal,
         pii,
         setops,
+        sketches,
         sorts,
         textops,
         tpch,
+        training,
         vector,
+        warehouse,
         windows,
     )
 
@@ -82,76 +88,14 @@ def build_registry() -> Registry:
         joins,
         aggregates,
         windows,
+        training,
+        bpe,
+        checks,
+        warehouse,
+        graphs,
+        sketches,
     ):
         module.register(reg)
-    vector.register_round2(reg)
-    textops.register_round2(reg)
-    dedup.register_round2(reg)
-    tpch.register_round2(reg)
-    tpch.register_round6(reg)
-    from .operators import bpe, training
-
-    training.register(reg)
-    bpe.register(reg)
-    textops.register_round6(reg)
-    training.register_round6(reg)
-    joins.register_round6(reg)
-    aggregates.register_round6(reg)
-    vector.register_round6(reg)
-    eventwindows.register_round6(reg)
-    dedup.register_round6(reg)
-    training.register_round6b(reg)
-    groupedmap.register_round6(reg)
-    windows.register_round6(reg)
-    setops.register_round6(reg)
-    filters.register_round6(reg)
-    aggregates.register_round6b(reg)
-    from .operators import checks
-
-    checks.register(reg)
-    pii.register_round6(reg)
-    from .operators import graphs, warehouse
-
-    warehouse.register(reg)
-    graphs.register(reg)
-    arrays.register_round6(reg)
-    aggregates.register_round6c(reg)
-    windows.register_round6b(reg)
-    eventwindows.register_round6b(reg)
-    vector.register_round6b(reg)
-    arrays.register_round6b(reg)
-    aggregates.register_round6d(reg)
-    warehouse.register_round6b(reg)
-    aggregates.register_round6e(reg)
-    graphs.register_round6b(reg)
-    eventwindows.register_round6c(reg)
-    filters.register_round6b(reg)
-    textops.register_round6c(reg)
-    vector.register_round7(reg)
-    from .operators import sketches
-
-    sketches.register(reg)
-    graphs.register_round7(reg)
-    windows.register_round7(reg)
-    sorts.register_round7(reg)
-    textops.register_round7(reg)
-    joins.register_round7(reg)
-    dedup.register_round7(reg)
-    aggregates.register_round7(reg)
-    from .operators import warehouse as _wh
-
-    _wh.register_round7(reg)
-    sketches.register_round7b(reg)
-    eventwindows.register_round7(reg)
-    _wh.register_round7b(reg)
-    textops.register_round7b(reg)
-    aggregates.register_round7b(reg)
-    eventwindows.register_round7b(reg)
-    vector.register_round7b(reg)
-    sketches.register_round7c(reg)
-    textops.register_round7c(reg)
-    _wh.register_round7c(reg)
-    vector.register_round7c(reg)
     _prioritize(reg)
     return reg
 
@@ -181,15 +125,6 @@ _FORCE_FRONT: list[tuple[str, int]] = [
     # (bit-identical at sf0.001/0.01), so the r10 green row still
     # attests driver-data behavior.
 ]
-
-# Round 6 deferred its 39 trivial-semantics additions behind the stale-refresh
-# cohort (pinned last_green=2) because 60 new queries exceeded the window.
-# Round 7 retires the pin: the whole never-driver-checked backlog (those 39,
-# minus the four force-fronted above) now sorts first via last_green == 0,
-# clearing the backlog in one window per VERDICT r6 item 2. Keep the mechanism
-# for future rounds that again add more queries than the window holds.
-_DEFER_NEW: frozenset[str] = frozenset()
-
 
 def _last_green_rounds() -> dict[str, int]:
     """query name -> latest round with a driver-green correctness row."""
@@ -245,18 +180,19 @@ def _prioritize(reg: Registry) -> None:
     def key(name: str):
         # forced-front first (list order), then oracle-backed queries by
         # ascending last-green round (0 = never green / new this round), ties
-        # by registration order. Queries WITHOUT an oracle sort last: the
-        # driver can only ever record err=no_oracle for them, so they can
+        # by registration order: the module order of build_registry's loop,
+        # then reg.add order inside each module's register(). The tie order
+        # is not part of the rotation policy — staleness alone decides which
+        # cohort leads; it only fixes which members of an equally-stale
+        # cohort fill the window first. Queries WITHOUT an oracle sort last:
+        # the driver can only ever record err=no_oracle for them, so they can
         # never earn a green row and would otherwise pin themselves to the
         # front forever, burning a verification slot every round (their
         # correctness evidence lives in tests/, not CORRECTNESS_r*.json).
-        green = last_green.get(name, 0)
-        if name in _DEFER_NEW:
-            green = max(green, 2)
         return (
             0 if name in forced else (1 if name in reg.oracles else 2),
             forced.get(name, 0),
-            green,
+            last_green.get(name, 0),
             reg_index[name],
         )
 

@@ -739,25 +739,17 @@ def sql_davg(expr: str, dec: str = "DECIMAL(25,6)") -> str:
     return f"(CAST(SUM(CAST({expr} AS {dec})) AS DOUBLE) / COUNT({expr}))"
 
 
-# (appId, normalized analyzed plan, scan files, target) -> split count.
+# (appId, plan semantic hash, scan files, target) -> split count.
 # The df.rdd probe that measures the count builds the full physical plan
 # and RDD DAG per call (measured ~50 ms warm / 300 ms cold of driver
-# time; guide §7.3). Memoize it — keyed on the ANALYZED PLAN SHAPE, not
+# time; guide §7.3). Memoize it — keyed on WHAT THE PLAN COMPUTES, not
 # just the file set (r20, ADVICE r19: two DataFrames over the same files
 # can have different partition counts — a repartitioned/joined/unioned
-# df must not inherit a bare scan's memoized count). Expression ids
-# (#123) are normalized away so re-building the same logical scan hits.
-# Entries from prior Spark applications are evicted on insert.
+# df must not inherit a bare scan's memoized count). The public
+# DataFrame.semanticHash() hashes the canonicalized plan, so expression
+# ids are already normalized away and re-building the same logical scan
+# hits. Entries from prior Spark applications are evicted on insert.
 _SPLIT_CACHE: dict = {}
-
-_EXPR_ID_RE = re.compile(r"#\d+")
-
-
-def _plan_shape_key(df) -> str:
-    """Analyzed-plan string with expression ids stripped — a stable
-    fingerprint of what the DataFrame computes (same shape => same
-    partitioning for the scan-derived plans this keys)."""
-    return _EXPR_ID_RE.sub("#", df._jdf.queryExecution().analyzed().toString())
 
 
 def corpus_checkpoint(df):
@@ -791,7 +783,7 @@ def rebalance_narrow_scan(df, spark):
     target = spark.sparkContext.defaultParallelism
     key = (
         spark.sparkContext.applicationId,
-        _plan_shape_key(df),
+        df.semanticHash(),
         tuple(df.inputFiles()),
         target,
     )

@@ -245,109 +245,6 @@ def median_percentiles(spark, sf_dir):
     )
 
 
-def register(reg):
-    reg.add(
-        "agg_count_by_key",
-        count_by_key,
-        "SELECT event_type, COUNT(*) AS cnt FROM events GROUP BY event_type",
-    )
-    reg.add(
-        "agg_count_by_source",
-        count_by_source,
-        "SELECT source, lang, COUNT(*) AS cnt FROM documents GROUP BY source, lang",
-    )
-    reg.add(
-        "agg_multi_field_rollup",
-        multi_field_rollup,
-        "SELECT l_returnflag, "
-        f"{sql_dsum('l_quantity')} AS sum_qty, "
-        f"{sql_dsum('l_extendedprice')} AS sum_price, "
-        f"{sql_dsum('l_discount')} AS sum_disc, "
-        f"{sql_dsum('l_tax')} AS sum_tax, "
-        "COUNT(*) AS cnt FROM lineitem GROUP BY l_returnflag",
-    )
-    reg.add(
-        "agg_min_max_per_group",
-        min_max_per_group,
-        "SELECT o_custkey, MIN(o_orderdate) AS oldest, MAX(o_orderdate) AS newest "
-        "FROM orders GROUP BY o_custkey",
-    )
-    reg.add(
-        "agg_ceil_batches",
-        ceil_batch_count,
-        "SELECT o_orderpriority, CAST(CEIL(COUNT(*) / 100.0) AS BIGINT) AS num_batches "
-        "FROM orders GROUP BY o_orderpriority",
-    )
-    reg.add(
-        "agg_stats_family",
-        agg_stats_family,
-        "SELECT l_linestatus, "
-        f"{sql_dsum('l_extendedprice')} AS sum_price, "
-        f"{sql_davg('l_quantity')} AS avg_qty, "
-        "MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty, "
-        "COUNT(*) AS cnt, COUNT(DISTINCT l_partkey) AS distinct_parts "
-        "FROM lineitem GROUP BY l_linestatus",
-    )
-    reg.add(
-        "agg_cube",
-        cube_agg,
-        "SELECT l_returnflag, l_linestatus, "
-        f"{sql_dsum('l_quantity')} AS sum_qty, COUNT(*) AS cnt "
-        "FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)",
-    )
-    reg.add(
-        "agg_rollup",
-        rollup_agg,
-        "SELECT o_orderstatus, o_orderpriority, "
-        f"{sql_dsum('o_totalprice')} AS sum_price, COUNT(*) AS cnt "
-        "FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)",
-    )
-    reg.add(
-        "agg_conditional_counters",
-        conditional_counters,
-        "SELECT source, "
-        "COUNT(*) FILTER (WHERE n_chars >= 200) AS saved, "
-        "COUNT(*) FILTER (WHERE n_chars < 200) AS skipped, "
-        "COUNT(*) FILTER (WHERE lang = 'zh') AS flagged "
-        "FROM documents GROUP BY source",
-    )
-    reg.add(
-        "agg_approx_distinct",
-        approx_distinct,
-        "SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS exact_parts, "
-        "TRUE AS approx_within_bound FROM lineitem GROUP BY l_returnflag",
-    )
-    reg.add(
-        "agg_grouping_sets",
-        grouping_sets_agg,
-        "SELECT o_orderstatus, o_orderpriority, "
-        f"{sql_dsum('o_totalprice')} AS sum_price, COUNT(*) AS cnt "
-        "FROM orders GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())",
-    )
-    reg.add(
-        "agg_median_percentiles",
-        median_percentiles,
-        "SELECT l_returnflag, "
-        "MEDIAN(CASE WHEN isfinite(l_extendedprice) THEN l_extendedprice END)"
-        " AS median_price, "
-        "quantile_cont(CASE WHEN isfinite(l_extendedprice) "
-        "THEN l_extendedprice END, 0.25) AS p25_price, "
-        "quantile_cont(CASE WHEN isfinite(l_extendedprice) "
-        "THEN l_extendedprice END, 0.95) AS p95_price "
-        "FROM lineitem GROUP BY l_returnflag",
-    )
-    open_case = sql_dsum("CASE WHEN l_linestatus='O' THEN l_quantity END")
-    filled_case = sql_dsum("CASE WHEN l_linestatus='F' THEN l_quantity END")
-    reg.add(
-        "agg_pivot",
-        pivot_agg,
-        "SELECT l_returnflag, "
-        f"{open_case} AS qty_open, "
-        f"{filled_case} AS qty_filled "
-        "FROM lineitem GROUP BY l_returnflag",
-    )
-
-
 def mode_per_group(spark, sf_dir):
     """Deterministic per-group mode: most frequent c_nationkey per market
     segment, ties broken by smallest key. Built-in `F.mode` is
@@ -411,86 +308,6 @@ def value_histogram(spark, sf_dir):
     )
 
 
-def register_round6(reg):
-    """Round-6 aggregate additions: deterministic mode, fixed-width
-    histogram."""
-    reg.add(
-        "agg_mode_per_group",
-        mode_per_group,
-        "WITH counts AS (SELECT c_mktsegment, c_nationkey, COUNT(*) AS cnt "
-        "FROM customer GROUP BY c_mktsegment, c_nationkey), "
-        # NULLS LAST mirrors the engine's max_by struct ordering, where a
-        # NULL -c_nationkey field is SMALLEST and so loses count ties to
-        # every real key; the session pragma's nulls-first-on-asc default
-        # made the NULL nationkey WIN oracle ties instead (r16 compound
-        # sweep — hot keys pile counts until the NULL group ties a real
-        # one)
-        "ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY c_mktsegment "
-        "ORDER BY cnt DESC, c_nationkey ASC NULLS LAST) AS rnk FROM counts) "
-        "SELECT c_mktsegment, c_nationkey AS mode_nationkey, cnt AS mode_count "
-        "FROM ranked WHERE rnk = 1",
-    )
-    reg.add(
-        "agg_value_histogram",
-        value_histogram,
-        "SELECT bucket, CAST(bucket * 25.0 AS DOUBLE) AS lo, "
-        "CAST((bucket + 1) * 25.0 AS DOUBLE) AS hi, "
-        "COUNT(*) AS n, "
-        "CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS bucket_value "
-        # clamp BEFORE the INT cast: FLOOR(1e19/25) overflows INT32 and
-        # DuckDB's cast raises where Spark's long-typed floor clamps
-        # clean (r16 extreme-value probe); values are non-NULL here so
-        # LEAST/GREATEST's null-skipping is moot
-        "FROM (SELECT CAST(LEAST(GREATEST(FLOOR(value / 25.0), 0.0), 19.0) "
-        "AS INT) AS bucket, value FROM events WHERE value IS NOT NULL "
-        "AND isfinite(value)) GROUP BY bucket",
-    )
-    corr_num = (
-        "(CAST(n AS DOUBLE) * CAST(s{a}{b} AS DOUBLE)"
-        " - CAST(s{a} AS DOUBLE) * CAST(s{b} AS DOUBLE))"
-    )
-    corr_var = (
-        "(CAST(n AS DOUBLE) * CAST(s{a}{a} AS DOUBLE)"
-        " - CAST(s{a} AS DOUBLE) * CAST(s{a} AS DOUBLE))"
-    )
-
-    def corr_sql(a: str, b: str) -> str:
-        return (
-            f"ROUND({corr_num.format(a=a, b=b)} / "
-            f"sqrt({corr_var.format(a=a)} * {corr_var.format(a=b)}), 6)"
-        )
-
-    reg.add(
-        "agg_corr_pairs",
-        corr_pairs,
-        "WITH g AS (SELECT l_returnflag, COUNT(*) AS n, "
-        "SUM(CAST(l_quantity AS DECIMAL(18,4))) AS sx, "
-        "SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS sy, "
-        "SUM(CAST(l_discount AS DECIMAL(18,4))) AS sz, "
-        # factor semantics must MATCH the engine's decimal(18,4)
-        # (round-17 extreme-double gate find): the old DECIMAL(25,4)
-        # factors admitted values in [1e14, 1e21) that the engine's
-        # cast NULLs, and their product hit DuckDB's DECIMAL(38) cap
-        # which RAISES where the engine never formed the term. The
-        # inner (18,4) cast carries the engine's per-factor 1e14 NULL
-        # bound; the outer widen to (19,4) forces DuckDB's multiply
-        # into int128 (probed: (18,4)x(18,4) multiplies in int64 and
-        # overflows at unscaled 3.05e12 squared) giving the exact
-        # DECIMAL(38,8) product Spark's decimal(37,8) computes.
-        "SUM(CAST(CAST(l_quantity AS DECIMAL(18,4)) AS DECIMAL(19,4)) * CAST(CAST(l_extendedprice AS DECIMAL(18,4)) AS DECIMAL(19,4))) AS sxy, "
-        "SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) AS DECIMAL(19,4)) * CAST(CAST(l_discount AS DECIMAL(18,4)) AS DECIMAL(19,4))) AS syz, "
-        "SUM(CAST(CAST(l_quantity AS DECIMAL(18,4)) AS DECIMAL(19,4)) * CAST(CAST(l_quantity AS DECIMAL(18,4)) AS DECIMAL(19,4))) AS sxx, "
-        "SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) AS DECIMAL(19,4)) * CAST(CAST(l_extendedprice AS DECIMAL(18,4)) AS DECIMAL(19,4))) AS syy, "
-        "SUM(CAST(CAST(l_discount AS DECIMAL(18,4)) AS DECIMAL(19,4)) * CAST(CAST(l_discount AS DECIMAL(18,4)) AS DECIMAL(19,4))) AS szz "
-        "FROM lineitem GROUP BY l_returnflag) "
-        "SELECT l_returnflag, n, "
-        + corr_sql("x", "y")
-        + " AS corr_qty_price, "
-        + corr_sql("y", "z")
-        + " AS corr_price_disc FROM g",
-    )
-
-
 def corr_pairs(spark, sf_dir):
     """Pearson correlation per group, numerically disciplined: built-in
     `corr` accumulates double co-moments in shuffle order, so Spark and
@@ -543,25 +360,6 @@ def bool_counters(spark, sf_dir):
         F.bool_and(F.col("l_discount") <= 0.1).alias("all_small_disc"),
         F.bool_or(F.col("l_tax") > 0.07).alias("any_high_tax"),
         F.count_if(F.col("l_extendedprice") > 30000.0).alias("n_pricey"),
-    )
-
-
-def register_round6b(reg):
-    """Round-6 predicate-aggregate family."""
-    reg.add(
-        "agg_bool_counters",
-        bool_counters,
-        "SELECT l_returnflag, "
-        "CAST(count_if(l_quantity >= 25) AS BIGINT) AS n_big, "
-        # explicit NaN arm: DuckDB 1.0's parquet scan path evaluates a
-        # pushed-down NaN comparison inconsistently (bool_and saw zero
-        # FALSE rows while COUNT FILTER over the same predicate saw the
-        # NaN rows as not-true); Spark's total order has NaN <= x FALSE
-        "bool_and(CASE WHEN isnan(l_discount) THEN FALSE "
-        "ELSE l_discount <= 0.1 END) AS all_small_disc, "
-        "bool_or(l_tax > 0.07) AS any_high_tax, "
-        "CAST(count_if(l_extendedprice > 30000.0) AS BIGINT) AS n_pricey "
-        "FROM lineitem GROUP BY l_returnflag",
     )
 
 
@@ -648,11 +446,6 @@ SELECT l.l_returnflag,
 FROM lineitem l JOIN fences USING (l_returnflag)
 GROUP BY 1, 2
 """
-
-
-def register_round6c(reg):
-    reg.add("reshape_unpivot", unpivot_metrics, _UNPIVOT_SQL)
-    reg.add("feature_quantile_bin", quantile_bin, _QBIN_SQL)
 
 
 def chi_square_independence(spark, sf_dir):
@@ -761,11 +554,6 @@ GROUP BY 1, 2 HAVING COUNT(*) >= {_PAIR_MINSUP}
 """
 
 
-def register_round6d(reg):
-    reg.add("stats_chi_square", chi_square_independence, _CHI2_SQL)
-    reg.add("mine_frequent_pairs", frequent_pairs, _PAIRS_SQL)
-
-
 def linreg_by_group(spark, sf_dir):
     """Per-group OLS regression (slope/intercept/r² of extendedprice on
     quantity) from closed-form moment sums — Σx, Σy, Σxy, Σx², Σy² each
@@ -821,10 +609,6 @@ SELECT l_returnflag, n AS n_points,
          / ((n * sxx - sx * sx) * (n * syy - sy * sy)) AS r2
 FROM m
 """
-
-
-def register_round6e(reg):
-    reg.add("stats_linreg", linreg_by_group, _LINREG_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -936,10 +720,6 @@ FROM mi, ha, hb
 """
 
 
-def register_round7(reg):
-    reg.add("stats_mutual_information", mutual_information, _MI_SQL)
-
-
 # ---------------------------------------------------------------------------
 # Calendar-trend analytics: weekly revenue growth
 
@@ -1017,5 +797,203 @@ WINDOW w AS (ORDER BY _wk_nn, _wk)
 """
 
 
-def register_round7b(reg):
+def register(reg):
+    reg.add(
+        "agg_count_by_key",
+        count_by_key,
+        "SELECT event_type, COUNT(*) AS cnt FROM events GROUP BY event_type",
+    )
+    reg.add(
+        "agg_count_by_source",
+        count_by_source,
+        "SELECT source, lang, COUNT(*) AS cnt FROM documents GROUP BY source, lang",
+    )
+    reg.add(
+        "agg_multi_field_rollup",
+        multi_field_rollup,
+        "SELECT l_returnflag, "
+        f"{sql_dsum('l_quantity')} AS sum_qty, "
+        f"{sql_dsum('l_extendedprice')} AS sum_price, "
+        f"{sql_dsum('l_discount')} AS sum_disc, "
+        f"{sql_dsum('l_tax')} AS sum_tax, "
+        "COUNT(*) AS cnt FROM lineitem GROUP BY l_returnflag",
+    )
+    reg.add(
+        "agg_min_max_per_group",
+        min_max_per_group,
+        "SELECT o_custkey, MIN(o_orderdate) AS oldest, MAX(o_orderdate) AS newest "
+        "FROM orders GROUP BY o_custkey",
+    )
+    reg.add(
+        "agg_ceil_batches",
+        ceil_batch_count,
+        "SELECT o_orderpriority, CAST(CEIL(COUNT(*) / 100.0) AS BIGINT) AS num_batches "
+        "FROM orders GROUP BY o_orderpriority",
+    )
+    reg.add(
+        "agg_stats_family",
+        agg_stats_family,
+        "SELECT l_linestatus, "
+        f"{sql_dsum('l_extendedprice')} AS sum_price, "
+        f"{sql_davg('l_quantity')} AS avg_qty, "
+        "MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty, "
+        "COUNT(*) AS cnt, COUNT(DISTINCT l_partkey) AS distinct_parts "
+        "FROM lineitem GROUP BY l_linestatus",
+    )
+    reg.add(
+        "agg_cube",
+        cube_agg,
+        "SELECT l_returnflag, l_linestatus, "
+        f"{sql_dsum('l_quantity')} AS sum_qty, COUNT(*) AS cnt "
+        "FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)",
+    )
+    reg.add(
+        "agg_rollup",
+        rollup_agg,
+        "SELECT o_orderstatus, o_orderpriority, "
+        f"{sql_dsum('o_totalprice')} AS sum_price, COUNT(*) AS cnt "
+        "FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)",
+    )
+    reg.add(
+        "agg_conditional_counters",
+        conditional_counters,
+        "SELECT source, "
+        "COUNT(*) FILTER (WHERE n_chars >= 200) AS saved, "
+        "COUNT(*) FILTER (WHERE n_chars < 200) AS skipped, "
+        "COUNT(*) FILTER (WHERE lang = 'zh') AS flagged "
+        "FROM documents GROUP BY source",
+    )
+    reg.add(
+        "agg_approx_distinct",
+        approx_distinct,
+        "SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS exact_parts, "
+        "TRUE AS approx_within_bound FROM lineitem GROUP BY l_returnflag",
+    )
+    reg.add(
+        "agg_grouping_sets",
+        grouping_sets_agg,
+        "SELECT o_orderstatus, o_orderpriority, "
+        f"{sql_dsum('o_totalprice')} AS sum_price, COUNT(*) AS cnt "
+        "FROM orders GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())",
+    )
+    reg.add(
+        "agg_median_percentiles",
+        median_percentiles,
+        "SELECT l_returnflag, "
+        "MEDIAN(CASE WHEN isfinite(l_extendedprice) THEN l_extendedprice END)"
+        " AS median_price, "
+        "quantile_cont(CASE WHEN isfinite(l_extendedprice) "
+        "THEN l_extendedprice END, 0.25) AS p25_price, "
+        "quantile_cont(CASE WHEN isfinite(l_extendedprice) "
+        "THEN l_extendedprice END, 0.95) AS p95_price "
+        "FROM lineitem GROUP BY l_returnflag",
+    )
+    open_case = sql_dsum("CASE WHEN l_linestatus='O' THEN l_quantity END")
+    filled_case = sql_dsum("CASE WHEN l_linestatus='F' THEN l_quantity END")
+    reg.add(
+        "agg_pivot",
+        pivot_agg,
+        "SELECT l_returnflag, "
+        f"{open_case} AS qty_open, "
+        f"{filled_case} AS qty_filled "
+        "FROM lineitem GROUP BY l_returnflag",
+    )
+    # deterministic mode, fixed-width histogram
+    reg.add(
+        "agg_mode_per_group",
+        mode_per_group,
+        "WITH counts AS (SELECT c_mktsegment, c_nationkey, COUNT(*) AS cnt "
+        "FROM customer GROUP BY c_mktsegment, c_nationkey), "
+        # NULLS LAST mirrors the engine's max_by struct ordering, where a
+        # NULL -c_nationkey field is SMALLEST and so loses count ties to
+        # every real key; the session pragma's nulls-first-on-asc default
+        # made the NULL nationkey WIN oracle ties instead (r16 compound
+        # sweep — hot keys pile counts until the NULL group ties a real
+        # one)
+        "ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY c_mktsegment "
+        "ORDER BY cnt DESC, c_nationkey ASC NULLS LAST) AS rnk FROM counts) "
+        "SELECT c_mktsegment, c_nationkey AS mode_nationkey, cnt AS mode_count "
+        "FROM ranked WHERE rnk = 1",
+    )
+    reg.add(
+        "agg_value_histogram",
+        value_histogram,
+        "SELECT bucket, CAST(bucket * 25.0 AS DOUBLE) AS lo, "
+        "CAST((bucket + 1) * 25.0 AS DOUBLE) AS hi, "
+        "COUNT(*) AS n, "
+        "CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS bucket_value "
+        # clamp BEFORE the INT cast: FLOOR(1e19/25) overflows INT32 and
+        # DuckDB's cast raises where Spark's long-typed floor clamps
+        # clean (r16 extreme-value probe); values are non-NULL here so
+        # LEAST/GREATEST's null-skipping is moot
+        "FROM (SELECT CAST(LEAST(GREATEST(FLOOR(value / 25.0), 0.0), 19.0) "
+        "AS INT) AS bucket, value FROM events WHERE value IS NOT NULL "
+        "AND isfinite(value)) GROUP BY bucket",
+    )
+    corr_num = (
+        "(CAST(n AS DOUBLE) * CAST(s{a}{b} AS DOUBLE)"
+        " - CAST(s{a} AS DOUBLE) * CAST(s{b} AS DOUBLE))"
+    )
+    corr_var = (
+        "(CAST(n AS DOUBLE) * CAST(s{a}{a} AS DOUBLE)"
+        " - CAST(s{a} AS DOUBLE) * CAST(s{a} AS DOUBLE))"
+    )
+
+    def corr_sql(a: str, b: str) -> str:
+        return (
+            f"ROUND({corr_num.format(a=a, b=b)} / "
+            f"sqrt({corr_var.format(a=a)} * {corr_var.format(a=b)}), 6)"
+        )
+
+    reg.add(
+        "agg_corr_pairs",
+        corr_pairs,
+        "WITH g AS (SELECT l_returnflag, COUNT(*) AS n, "
+        "SUM(CAST(l_quantity AS DECIMAL(18,4))) AS sx, "
+        "SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS sy, "
+        "SUM(CAST(l_discount AS DECIMAL(18,4))) AS sz, "
+        # factor semantics must MATCH the engine's decimal(18,4)
+        # (round-17 extreme-double gate find): the old DECIMAL(25,4)
+        # factors admitted values in [1e14, 1e21) that the engine's
+        # cast NULLs, and their product hit DuckDB's DECIMAL(38) cap
+        # which RAISES where the engine never formed the term. The
+        # inner (18,4) cast carries the engine's per-factor 1e14 NULL
+        # bound; the outer widen to (19,4) forces DuckDB's multiply
+        # into int128 (probed: (18,4)x(18,4) multiplies in int64 and
+        # overflows at unscaled 3.05e12 squared) giving the exact
+        # DECIMAL(38,8) product Spark's decimal(37,8) computes.
+        "SUM(CAST(CAST(l_quantity AS DECIMAL(18,4)) AS DECIMAL(19,4)) * CAST(CAST(l_extendedprice AS DECIMAL(18,4)) AS DECIMAL(19,4))) AS sxy, "
+        "SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) AS DECIMAL(19,4)) * CAST(CAST(l_discount AS DECIMAL(18,4)) AS DECIMAL(19,4))) AS syz, "
+        "SUM(CAST(CAST(l_quantity AS DECIMAL(18,4)) AS DECIMAL(19,4)) * CAST(CAST(l_quantity AS DECIMAL(18,4)) AS DECIMAL(19,4))) AS sxx, "
+        "SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) AS DECIMAL(19,4)) * CAST(CAST(l_extendedprice AS DECIMAL(18,4)) AS DECIMAL(19,4))) AS syy, "
+        "SUM(CAST(CAST(l_discount AS DECIMAL(18,4)) AS DECIMAL(19,4)) * CAST(CAST(l_discount AS DECIMAL(18,4)) AS DECIMAL(19,4))) AS szz "
+        "FROM lineitem GROUP BY l_returnflag) "
+        "SELECT l_returnflag, n, "
+        + corr_sql("x", "y")
+        + " AS corr_qty_price, "
+        + corr_sql("y", "z")
+        + " AS corr_price_disc FROM g",
+    )
+    # predicate-aggregate family
+    reg.add(
+        "agg_bool_counters",
+        bool_counters,
+        "SELECT l_returnflag, "
+        "CAST(count_if(l_quantity >= 25) AS BIGINT) AS n_big, "
+        # explicit NaN arm: DuckDB 1.0's parquet scan path evaluates a
+        # pushed-down NaN comparison inconsistently (bool_and saw zero
+        # FALSE rows while COUNT FILTER over the same predicate saw the
+        # NaN rows as not-true); Spark's total order has NaN <= x FALSE
+        "bool_and(CASE WHEN isnan(l_discount) THEN FALSE "
+        "ELSE l_discount <= 0.1 END) AS all_small_disc, "
+        "bool_or(l_tax > 0.07) AS any_high_tax, "
+        "CAST(count_if(l_extendedprice > 30000.0) AS BIGINT) AS n_pricey "
+        "FROM lineitem GROUP BY l_returnflag",
+    )
+    reg.add("reshape_unpivot", unpivot_metrics, _UNPIVOT_SQL)
+    reg.add("feature_quantile_bin", quantile_bin, _QBIN_SQL)
+    reg.add("stats_chi_square", chi_square_independence, _CHI2_SQL)
+    reg.add("mine_frequent_pairs", frequent_pairs, _PAIRS_SQL)
+    reg.add("stats_linreg", linreg_by_group, _LINREG_SQL)
+    reg.add("stats_mutual_information", mutual_information, _MI_SQL)
     reg.add("trend_weekly_growth", trend_weekly_growth, _TREND_SQL)

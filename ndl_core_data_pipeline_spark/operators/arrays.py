@@ -103,43 +103,6 @@ def min_over_array(spark, sf_dir):
     )
 
 
-def register(reg):
-    reg.add(
-        "array_tag_union",
-        tag_union,
-        "SELECT doc_id, array_to_string(list_sort(list_distinct(list_concat("
-        "[source, lang, 'open-data'], ['category', source]))), ',') AS tags "
-        "FROM documents",
-    )
-    reg.add(
-        "array_ordered_distinct",
-        ordered_distinct_members,
-        "WITH ranked AS ("
-        "  SELECT user_id, event_type, ts, event_id, ROW_NUMBER() OVER "
-        "    (PARTITION BY user_id, event_type ORDER BY (ts IS NOT NULL), ts, (event_id IS NOT NULL), event_id) AS rn "
-        "  FROM events) "
-        "SELECT user_id, string_agg(event_type, ',' ORDER BY (ts IS NOT NULL), ts, (event_id IS NOT NULL), event_id, "
-        "(event_type IS NOT NULL), event_type) AS types_in_order "
-        "FROM ranked WHERE rn = 1 GROUP BY user_id",
-    )
-    reg.add(
-        "array_concat_sep",
-        concat_with_separator,
-        "SELECT user_id, string_agg(event_type, ' \\p ' ORDER BY (ts IS NOT NULL), ts, (event_id IS NOT NULL), event_id, "
-        "(event_type IS NOT NULL), event_type) AS conversation "
-        "FROM events GROUP BY user_id",
-    )
-    reg.add(
-        "array_min_reduce",
-        min_over_array,
-        # COUNT(o_orderdate), not COUNT(*): the engine's collect_list
-        # SKIPS NULL elements (Spark array semantics), so the array
-        # length counts dated orders only
-        "SELECT o_custkey, COALESCE(MIN(o_orderdate), TIMESTAMP '1970-01-01') AS oldest, "
-        "COUNT(o_orderdate) AS n_changes FROM orders GROUP BY o_custkey",
-    )
-
-
 def hof_family(spark, sf_dir):
     """§2.9 higher-order-function surface as a registered query: filter /
     exists / forall / aggregate lambdas over the tokenized document text —
@@ -178,10 +141,6 @@ SELECT doc_id,
                       AS BIGINT) END AS n_chars
 FROM ws
 """
-
-
-def register_round6(reg):
-    reg.add("array_hof_family", hof_family, _HOF_SQL)
 
 
 def map_family(spark, sf_dir):
@@ -242,5 +201,40 @@ FROM j
 """
 
 
-def register_round6b(reg):
+def register(reg):
+    reg.add(
+        "array_tag_union",
+        tag_union,
+        "SELECT doc_id, array_to_string(list_sort(list_distinct(list_concat("
+        "[source, lang, 'open-data'], ['category', source]))), ',') AS tags "
+        "FROM documents",
+    )
+    reg.add(
+        "array_ordered_distinct",
+        ordered_distinct_members,
+        "WITH ranked AS ("
+        "  SELECT user_id, event_type, ts, event_id, ROW_NUMBER() OVER "
+        "    (PARTITION BY user_id, event_type ORDER BY (ts IS NOT NULL), ts, (event_id IS NOT NULL), event_id) AS rn "
+        "  FROM events) "
+        "SELECT user_id, string_agg(event_type, ',' ORDER BY (ts IS NOT NULL), ts, (event_id IS NOT NULL), event_id, "
+        "(event_type IS NOT NULL), event_type) AS types_in_order "
+        "FROM ranked WHERE rn = 1 GROUP BY user_id",
+    )
+    reg.add(
+        "array_concat_sep",
+        concat_with_separator,
+        "SELECT user_id, string_agg(event_type, ' \\p ' ORDER BY (ts IS NOT NULL), ts, (event_id IS NOT NULL), event_id, "
+        "(event_type IS NOT NULL), event_type) AS conversation "
+        "FROM events GROUP BY user_id",
+    )
+    reg.add(
+        "array_min_reduce",
+        min_over_array,
+        # COUNT(o_orderdate), not COUNT(*): the engine's collect_list
+        # SKIPS NULL elements (Spark array semantics), so the array
+        # length counts dated orders only
+        "SELECT o_custkey, COALESCE(MIN(o_orderdate), TIMESTAMP '1970-01-01') AS oldest, "
+        "COUNT(o_orderdate) AS n_changes FROM orders GROUP BY o_custkey",
+    )
+    reg.add("array_hof_family", hof_family, _HOF_SQL)
     reg.add("func_map_family", map_family, _map_sql())

@@ -12,8 +12,6 @@ shape is identical).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window as W, functions as F
 
 from ..io import load
@@ -442,8 +440,7 @@ def simhash_near_dup_pairs(spark, sf_dir):
     )
 
 
-# ---- oracle SQL fragments shared by the minhash family (module-level so
-# ---- register() and register_round2() compose the same text).
+# ---- oracle SQL fragments shared by the minhash family
 # range(0, len-n+1) is empty for len < n, mirroring the size(words) >=
 # SHINGLE_N guard in _shingles_from_words — both engines emit zero shingles
 # for docs shorter than the n-gram
@@ -482,13 +479,13 @@ CC_MAX_ITER = 25  # safety bound; pointer jumping needs ~log2(diameter) rounds
 # is driver-sized, label it with an in-process union-find instead of paying
 # 3+ job launches per pointer-jumping round. Larger edge sets keep the
 # fully-distributed loop below. 1M edges × two longs is ~16 MB.
-# r20: raised 1M -> 4M (env-overridable) on measurement — the sf1 tier's
+# r20: raised 1M -> 4M on measurement — the sf1 tier's
 # 1.08M-edge graph fell just past the old cap into the distributed loop
 # (19 s) where the driver label pass costs ~1 s; 4M edges collect to
 # ~64 MB against the 16 GB driver, the same envelope a broadcast join
 # accepts. Beyond the cap the fully-distributed pointer-jumping loop
 # below is unchanged (the only shape that exists at 100 TB edge counts).
-CC_EDGES_DRIVER_MAX = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX", "4000000"))
+CC_EDGES_DRIVER_MAX = 4_000_000
 
 
 def _union_find_labels(edge_rows) -> list[tuple[int, int]]:
@@ -668,183 +665,6 @@ def minhash_clusters(spark, sf_dir):
     )
 
 
-def register(reg):
-    reg.add(
-        "dedup_exact_keep_first",
-        exact_keep_first,
-        "SELECT MIN(doc_id) AS keeper_id, COUNT(*) AS n_copies "
-        "FROM documents GROUP BY text",
-    )
-    reg.add(
-        "dedup_duplicate_stats",
-        duplicate_stats,
-        "SELECT source, COUNT(*) AS total, COUNT(DISTINCT text) AS distinct_texts, "
-        "COUNT(*) - COUNT(DISTINCT text) AS n_duplicates FROM documents GROUP BY source",
-    )
-    reg.add(
-        "dedup_exact_hash",
-        exact_hash_dedup,
-        r"SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS content_hash, "
-        "MIN(doc_id) AS keeper_id FROM documents GROUP BY 1",
-    )
-    shingle_sql, hashed_sql = _SHINGLE_SQL, _HASHED_SQL
-    reg.add(
-        "dedup_minhash_signatures",
-        minhash_signatures,
-        "WITH " + shingle_sql + hashed_sql + "\nSELECT doc_id, j, minhash FROM sigs",
-    )
-    # bsize mirrors the MAX_BUCKET_MEMBERS degenerate-bucket guard in
-    # _bucket_pairs: both engines exclude buckets above the cap, so the
-    # guard is never a Spark-only divergence
-    reg.add(
-        "dedup_minhash_pairs",
-        minhash_near_dup_pairs,
-        "WITH "
-        + shingle_sql
-        + hashed_sql
-        + f""",
-bsize AS (SELECT j, minhash, COUNT(*) AS m FROM sigs GROUP BY j, minhash)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       COUNT(*) / {float(N_MINHASH)} AS est_jaccard
-FROM sigs a JOIN sigs b
-  ON a.j = b.j AND a.minhash = b.minhash AND a.doc_id < b.doc_id
-JOIN bsize s ON s.j = a.j AND s.minhash = a.minhash
-WHERE s.m <= {MAX_BUCKET_MEMBERS}
-GROUP BY a.doc_id, b.doc_id
-HAVING COUNT(*) / {float(N_MINHASH)} >= 0.25""",
-    )
-    reg.add(
-        "dedup_ngram_jaccard",
-        ngram_jaccard_pairs,
-        "WITH "
-        + shingle_sql
-        + f""",
-sizes AS (SELECT doc_id, COUNT(*) AS set_size FROM shingles GROUP BY doc_id),
-bsize AS (SELECT source, shingle, COUNT(*) AS m FROM shingles GROUP BY source, shingle),
-inter AS (
-  -- null-safe source match: the engine BLOCKS by groupBy(source,
-  -- shingle), where a NULL source is one real block (docs with an
-  -- unknown source still dedup against each other) — a plain equi-join
-  -- here drops those pairs (NULL = NULL is NULL), one pair short at 30%
-  -- NULL density (NULLHEAVY_r15); bsize's GROUP BY already treats NULL
-  -- as one group, so only the join predicates need IS NOT DISTINCT FROM
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM shingles a JOIN shingles b
-    ON a.source IS NOT DISTINCT FROM b.source
-   AND a.shingle = b.shingle AND a.doc_id < b.doc_id
-  JOIN bsize s ON s.source IS NOT DISTINCT FROM a.source
-   AND s.shingle = a.shingle
-  WHERE s.m <= {MAX_BUCKET_MEMBERS}
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT doc_a, doc_b,
-       ROUND(n_common / (sa.set_size + sb.set_size - n_common), 6) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE ROUND(n_common / (sa.set_size + sb.set_size - n_common), 6) >= 0.2""",
-    )
-    bit_exprs = []
-    for b in range(SIMHASH_BITS):
-        char = b // 4
-        half = "hi" if char < 8 else "lo"
-        shift = 4 * (7 - char % 8) + b % 4
-        bit = f"(({half} >> {shift}) & 1)"
-        vote = f"SUM(CASE WHEN {bit} = 1 THEN 1 ELSE -1 END)"
-        weight = -(2**63) if b == 63 else 2**b
-        bit_exprs.append(
-            f"(CASE WHEN {vote} > 0 THEN CAST({weight} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        )
-    halved_sql = r"""words AS (
-  SELECT DISTINCT doc_id, word
-  FROM (SELECT doc_id, UNNEST(string_split_regex(lower(trim(text)), '\s+')) AS word
-        FROM documents WHERE doc_id IS NOT NULL) t
-  WHERE LENGTH(word) > 0
-),
-halved AS (
-  SELECT doc_id,
-         CAST('0x' || substring(md5(word), 1, 8) AS BIGINT) AS hi,
-         CAST('0x' || substring(md5(word), 9, 8) AS BIGINT) AS lo
-  FROM words
-)"""
-    reg.add(
-        "dedup_simhash",
-        simhash_fingerprints,
-        "WITH "
-        + halved_sql
-        + "\nSELECT doc_id, CAST("
-        + " + ".join(bit_exprs)
-        + " AS BIGINT) AS simhash FROM halved GROUP BY doc_id",
-    )
-    # pairs: the oracle mirrors the banded blocking (lossless for hamming ≤
-    # SIMHASH_MAX_HAMMING by pigeonhole over 4 bands) INCLUDING the
-    # MAX_BUCKET_MEMBERS degenerate-bucket guard, so a pathological corpus
-    # drops the same buckets in both engines. DuckDB's >> on BIGINT is an
-    # arithmetic shift like Spark's shiftright; & 65535 discards sign fill.
-    fp_sql = (
-        "WITH "
-        + halved_sql
-        + ",\nfp AS (SELECT doc_id, CAST("
-        + " + ".join(bit_exprs)
-        + " AS BIGINT) AS simhash FROM halved GROUP BY doc_id)"
-    )
-    reg.add(
-        "dedup_simhash_pairs",
-        simhash_near_dup_pairs,
-        fp_sql
-        + f""",
-banded AS (
-  SELECT doc_id, simhash, band, ((simhash >> (16 * band)) & 65535) AS nibble
-  FROM fp, (VALUES (0), (1), (2), (3)) AS bands(band)
-),
-bsize AS (SELECT band, nibble, COUNT(*) AS m FROM banded GROUP BY band, nibble)
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-FROM banded a
-JOIN banded b ON a.band = b.band AND a.nibble = b.nibble AND a.doc_id < b.doc_id
-JOIN bsize s ON s.band = a.band AND s.nibble = a.nibble
-WHERE s.m <= {MAX_BUCKET_MEMBERS}
-  AND bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_MAX_HAMMING}""",
-    )
-
-
-def register_round2(reg):
-    """Round-2 additions — registered after every round-1 query (see
-    contract.build_registry ordering note). The cluster oracle computes
-    the same transitive closure as the Spark loop with a recursive CTE:
-    reach(node, lbl) enumerates every label reachable from each node,
-    MIN(lbl) per node is the component id."""
-    reg.add(
-        "dedup_minhash_clusters",
-        minhash_clusters,
-        "WITH RECURSIVE "
-        + _SHINGLE_SQL
-        + _HASHED_SQL
-        + f""",
-bsize AS (SELECT j, minhash, COUNT(*) AS m FROM sigs GROUP BY j, minhash),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM sigs a JOIN sigs b
-    ON a.j = b.j AND a.minhash = b.minhash AND a.doc_id < b.doc_id
-  JOIN bsize s ON s.j = a.j AND s.minhash = a.minhash
-  WHERE s.m <= {MAX_BUCKET_MEMBERS}
-  GROUP BY a.doc_id, b.doc_id
-  HAVING COUNT(*) / {float(N_MINHASH)} >= 0.25
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-reach(node, lbl) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.node = e.dst
-)
-SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node""",
-    )
-
-
 # --------------------------------------------- exact-substring span dedup
 
 SPAN_W = 10  # gram width (words); Lee et al. 2021 use 50 BPE tokens
@@ -924,59 +744,6 @@ def substring_dup_spans(spark, sf_dir):
         F.min("start").alias("span_start"),
         F.max("end").alias("span_end"),
         F.count("*").alias("n_dup_grams"),
-    )
-
-
-def register_round6(reg):
-    """Round-6 dedup addition: exact-substring duplicate spans."""
-    reg.add(
-        "dedup_substring_spans",
-        substring_dup_spans,
-        rf"""WITH pos AS (
-  SELECT doc_id, i AS start,
-         md5(array_to_string(ws[i + 1 : i + {SPAN_W}], ' ')) AS gh
-  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
-        FROM documents) d,
-       UNNEST(range(0, len(ws) - {SPAN_W} + 1)) AS t(i)
-  WHERE len(ws) >= {SPAN_W}
-),
-dup AS (SELECT gh FROM pos GROUP BY gh HAVING COUNT(*) > 1),
-hits AS (
-  SELECT doc_id, start, start + {SPAN_W} - 1 AS "end"
-  FROM pos WHERE gh IN (SELECT gh FROM dup)
-),
-flagged AS (
-  SELECT doc_id, start, "end",
-         CASE WHEN MAX("end") OVER w IS NULL
-              OR start > MAX("end") OVER w THEN 1 ELSE 0 END AS is_new
-  FROM hits WINDOW w AS (PARTITION BY doc_id ORDER BY start
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-),
-spans AS (
-  SELECT doc_id, start, "end",
-         SUM(is_new) OVER (PARTITION BY doc_id ORDER BY start
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS span_id
-  FROM flagged
-)
-SELECT doc_id, CAST(span_id AS BIGINT) AS span_id,
-       MIN(start) AS span_start, MAX("end") AS span_end,
-       COUNT(*) AS n_dup_grams
-FROM spans GROUP BY doc_id, span_id""",
-    )
-    reg.add(
-        "dedup_incremental_vs_base",
-        incremental_dedup_vs_base,
-        rf"""WITH fp AS (
-  SELECT doc_id,
-         md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-  FROM documents
-),
-base AS (SELECT DISTINCT fp FROM fp WHERE doc_id < {INCREMENTAL_BASE_MAX}),
-incoming AS (SELECT * FROM fp WHERE doc_id >= {INCREMENTAL_BASE_MAX})
-SELECT doc_id, CASE WHEN fp IN (SELECT fp FROM base)
-                    THEN 'duplicate_of_base' ELSE 'new' END AS verdict
-FROM incoming"""
     )
 
 
@@ -1156,5 +923,224 @@ FROM pairs WHERE inter * {JACC_TAU_DEN} >= uni * {JACC_TAU_NUM}
 """
 
 
-def register_round7(reg):
+def register(reg):
+    reg.add(
+        "dedup_exact_keep_first",
+        exact_keep_first,
+        "SELECT MIN(doc_id) AS keeper_id, COUNT(*) AS n_copies "
+        "FROM documents GROUP BY text",
+    )
+    reg.add(
+        "dedup_duplicate_stats",
+        duplicate_stats,
+        "SELECT source, COUNT(*) AS total, COUNT(DISTINCT text) AS distinct_texts, "
+        "COUNT(*) - COUNT(DISTINCT text) AS n_duplicates FROM documents GROUP BY source",
+    )
+    reg.add(
+        "dedup_exact_hash",
+        exact_hash_dedup,
+        r"SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS content_hash, "
+        "MIN(doc_id) AS keeper_id FROM documents GROUP BY 1",
+    )
+    shingle_sql, hashed_sql = _SHINGLE_SQL, _HASHED_SQL
+    reg.add(
+        "dedup_minhash_signatures",
+        minhash_signatures,
+        "WITH " + shingle_sql + hashed_sql + "\nSELECT doc_id, j, minhash FROM sigs",
+    )
+    # bsize mirrors the MAX_BUCKET_MEMBERS degenerate-bucket guard in
+    # _bucket_pairs: both engines exclude buckets above the cap, so the
+    # guard is never a Spark-only divergence
+    reg.add(
+        "dedup_minhash_pairs",
+        minhash_near_dup_pairs,
+        "WITH "
+        + shingle_sql
+        + hashed_sql
+        + f""",
+bsize AS (SELECT j, minhash, COUNT(*) AS m FROM sigs GROUP BY j, minhash)
+SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       COUNT(*) / {float(N_MINHASH)} AS est_jaccard
+FROM sigs a JOIN sigs b
+  ON a.j = b.j AND a.minhash = b.minhash AND a.doc_id < b.doc_id
+JOIN bsize s ON s.j = a.j AND s.minhash = a.minhash
+WHERE s.m <= {MAX_BUCKET_MEMBERS}
+GROUP BY a.doc_id, b.doc_id
+HAVING COUNT(*) / {float(N_MINHASH)} >= 0.25""",
+    )
+    reg.add(
+        "dedup_ngram_jaccard",
+        ngram_jaccard_pairs,
+        "WITH "
+        + shingle_sql
+        + f""",
+sizes AS (SELECT doc_id, COUNT(*) AS set_size FROM shingles GROUP BY doc_id),
+bsize AS (SELECT source, shingle, COUNT(*) AS m FROM shingles GROUP BY source, shingle),
+inter AS (
+  -- null-safe source match: the engine BLOCKS by groupBy(source,
+  -- shingle), where a NULL source is one real block (docs with an
+  -- unknown source still dedup against each other) — a plain equi-join
+  -- here drops those pairs (NULL = NULL is NULL), one pair short at 30%
+  -- NULL density (NULLHEAVY_r15); bsize's GROUP BY already treats NULL
+  -- as one group, so only the join predicates need IS NOT DISTINCT FROM
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
+  FROM shingles a JOIN shingles b
+    ON a.source IS NOT DISTINCT FROM b.source
+   AND a.shingle = b.shingle AND a.doc_id < b.doc_id
+  JOIN bsize s ON s.source IS NOT DISTINCT FROM a.source
+   AND s.shingle = a.shingle
+  WHERE s.m <= {MAX_BUCKET_MEMBERS}
+  GROUP BY a.doc_id, b.doc_id
+)
+SELECT doc_a, doc_b,
+       ROUND(n_common / (sa.set_size + sb.set_size - n_common), 6) AS jaccard
+FROM inter
+JOIN sizes sa ON sa.doc_id = doc_a
+JOIN sizes sb ON sb.doc_id = doc_b
+WHERE ROUND(n_common / (sa.set_size + sb.set_size - n_common), 6) >= 0.2""",
+    )
+    bit_exprs = []
+    for b in range(SIMHASH_BITS):
+        char = b // 4
+        half = "hi" if char < 8 else "lo"
+        shift = 4 * (7 - char % 8) + b % 4
+        bit = f"(({half} >> {shift}) & 1)"
+        vote = f"SUM(CASE WHEN {bit} = 1 THEN 1 ELSE -1 END)"
+        weight = -(2**63) if b == 63 else 2**b
+        bit_exprs.append(
+            f"(CASE WHEN {vote} > 0 THEN CAST({weight} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
+        )
+    halved_sql = r"""words AS (
+  SELECT DISTINCT doc_id, word
+  FROM (SELECT doc_id, UNNEST(string_split_regex(lower(trim(text)), '\s+')) AS word
+        FROM documents WHERE doc_id IS NOT NULL) t
+  WHERE LENGTH(word) > 0
+),
+halved AS (
+  SELECT doc_id,
+         CAST('0x' || substring(md5(word), 1, 8) AS BIGINT) AS hi,
+         CAST('0x' || substring(md5(word), 9, 8) AS BIGINT) AS lo
+  FROM words
+)"""
+    reg.add(
+        "dedup_simhash",
+        simhash_fingerprints,
+        "WITH "
+        + halved_sql
+        + "\nSELECT doc_id, CAST("
+        + " + ".join(bit_exprs)
+        + " AS BIGINT) AS simhash FROM halved GROUP BY doc_id",
+    )
+    # pairs: the oracle mirrors the banded blocking (lossless for hamming ≤
+    # SIMHASH_MAX_HAMMING by pigeonhole over 4 bands) INCLUDING the
+    # MAX_BUCKET_MEMBERS degenerate-bucket guard, so a pathological corpus
+    # drops the same buckets in both engines. DuckDB's >> on BIGINT is an
+    # arithmetic shift like Spark's shiftright; & 65535 discards sign fill.
+    fp_sql = (
+        "WITH "
+        + halved_sql
+        + ",\nfp AS (SELECT doc_id, CAST("
+        + " + ".join(bit_exprs)
+        + " AS BIGINT) AS simhash FROM halved GROUP BY doc_id)"
+    )
+    reg.add(
+        "dedup_simhash_pairs",
+        simhash_near_dup_pairs,
+        fp_sql
+        + f""",
+banded AS (
+  SELECT doc_id, simhash, band, ((simhash >> (16 * band)) & 65535) AS nibble
+  FROM fp, (VALUES (0), (1), (2), (3)) AS bands(band)
+),
+bsize AS (SELECT band, nibble, COUNT(*) AS m FROM banded GROUP BY band, nibble)
+SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+FROM banded a
+JOIN banded b ON a.band = b.band AND a.nibble = b.nibble AND a.doc_id < b.doc_id
+JOIN bsize s ON s.band = a.band AND s.nibble = a.nibble
+WHERE s.m <= {MAX_BUCKET_MEMBERS}
+  AND bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_MAX_HAMMING}""",
+    )
+    # The cluster oracle computes the same transitive closure as the Spark
+    # loop with a recursive CTE: reach(node, lbl) enumerates every label
+    # reachable from each node, MIN(lbl) per node is the component id.
+    reg.add(
+        "dedup_minhash_clusters",
+        minhash_clusters,
+        "WITH RECURSIVE "
+        + _SHINGLE_SQL
+        + _HASHED_SQL
+        + f""",
+bsize AS (SELECT j, minhash, COUNT(*) AS m FROM sigs GROUP BY j, minhash),
+pairs AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM sigs a JOIN sigs b
+    ON a.j = b.j AND a.minhash = b.minhash AND a.doc_id < b.doc_id
+  JOIN bsize s ON s.j = a.j AND s.minhash = a.minhash
+  WHERE s.m <= {MAX_BUCKET_MEMBERS}
+  GROUP BY a.doc_id, b.doc_id
+  HAVING COUNT(*) / {float(N_MINHASH)} >= 0.25
+),
+edges AS (
+  SELECT doc_a AS src, doc_b AS dst FROM pairs
+  UNION
+  SELECT doc_b AS src, doc_a AS dst FROM pairs
+),
+reach(node, lbl) AS (
+  SELECT src, src FROM edges
+  UNION
+  SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.node = e.dst
+)
+SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node""",
+    )
+    # exact-substring duplicate spans
+    reg.add(
+        "dedup_substring_spans",
+        substring_dup_spans,
+        rf"""WITH pos AS (
+  SELECT doc_id, i AS start,
+         md5(array_to_string(ws[i + 1 : i + {SPAN_W}], ' ')) AS gh
+  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+        FROM documents) d,
+       UNNEST(range(0, len(ws) - {SPAN_W} + 1)) AS t(i)
+  WHERE len(ws) >= {SPAN_W}
+),
+dup AS (SELECT gh FROM pos GROUP BY gh HAVING COUNT(*) > 1),
+hits AS (
+  SELECT doc_id, start, start + {SPAN_W} - 1 AS "end"
+  FROM pos WHERE gh IN (SELECT gh FROM dup)
+),
+flagged AS (
+  SELECT doc_id, start, "end",
+         CASE WHEN MAX("end") OVER w IS NULL
+              OR start > MAX("end") OVER w THEN 1 ELSE 0 END AS is_new
+  FROM hits WINDOW w AS (PARTITION BY doc_id ORDER BY start
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+),
+spans AS (
+  SELECT doc_id, start, "end",
+         SUM(is_new) OVER (PARTITION BY doc_id ORDER BY start
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS span_id
+  FROM flagged
+)
+SELECT doc_id, CAST(span_id AS BIGINT) AS span_id,
+       MIN(start) AS span_start, MAX("end") AS span_end,
+       COUNT(*) AS n_dup_grams
+FROM spans GROUP BY doc_id, span_id""",
+    )
+    reg.add(
+        "dedup_incremental_vs_base",
+        incremental_dedup_vs_base,
+        rf"""WITH fp AS (
+  SELECT doc_id,
+         md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+  FROM documents
+),
+base AS (SELECT DISTINCT fp FROM fp WHERE doc_id < {INCREMENTAL_BASE_MAX}),
+incoming AS (SELECT * FROM fp WHERE doc_id >= {INCREMENTAL_BASE_MAX})
+SELECT doc_id, CASE WHEN fp IN (SELECT fp FROM base)
+                    THEN 'duplicate_of_base' ELSE 'new' END AS verdict
+FROM incoming"""
+    )
     reg.add("dedup_jaccard_prefix_join", jaccard_prefix_join, _JACC_SQL)

@@ -69,62 +69,6 @@ def watermark_dedup_projection(spark, sf_dir):
     return ev.select("user_id", "event_type").distinct()
 
 
-def register(reg):
-    reg.add(
-        "events_tumbling_window",
-        tumbling_window,
-        # ts IS NOT NULL: Spark's window() drops un-timestamped rows
-        # (engine semantics) where date_trunc(NULL) would emit a NULL group
-        "SELECT date_trunc('hour', ts) AS window_start, event_type, "
-        "COUNT(*) AS n_events, " + sql_dsum("value") + " AS sum_value "
-        "FROM events WHERE ts IS NOT NULL GROUP BY 1, 2",
-    )
-    reg.add(
-        "events_sliding_window",
-        sliding_window,
-        # each event belongs to the 1h windows starting at trunc30(ts) and
-        # trunc30(ts) - 30min (epoch-aligned, same as Spark's window()).
-        # FLOOR-mod, not bare %: Spark's window() floor-aligns for every
-        # instant, while DuckDB's sign-preserving % truncates a PRE-EPOCH
-        # epoch_us toward zero — one slide too late (extreme-timestamp
-        # axis find on year-1 plants; identity for ts >= epoch).
-        "WITH assigned AS ("
-        "  SELECT make_timestamp((epoch_us(ts) "
-        "- ((epoch_us(ts) % 1800000000) + 1800000000) % 1800000000) - s.shift) AS window_start, value"
-        "  FROM events, (SELECT UNNEST([0, 1800000000]) AS shift) s"
-        "  WHERE ts IS NOT NULL"
-        ") SELECT window_start, COUNT(*) AS n_events, "
-        + sql_dsum("value")
-        + " AS sum_value FROM assigned GROUP BY window_start",
-    )
-    reg.add(
-        "events_session_window",
-        session_window_per_user,
-        # gaps-and-islands: new session when gap > 30 min — <=, not <,
-        # mirrors Spark's end-INCLUSIVE session merge (an exact-timeout
-        # gap merges; extreme-timestamp axis find, latent on any
-        # second-granular log with exact 30-min spacings)
-        "WITH flagged AS ("
-        "  SELECT user_id, ts,"
-        "    CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER w <= 1800000000 THEN 0 ELSE 1 END AS is_start"
-        "  FROM events WHERE ts IS NOT NULL"
-        "  WINDOW w AS (PARTITION BY user_id ORDER BY ts)"
-        "), numbered AS ("
-        # is_start DESC tiebreak: see window_sessionize (round-17
-        # duprow-interaction find) — pass 2 re-sorts ts-tied rows whose
-        # is_start payloads differ; flag-first reconstructs pass 1.
-        "  SELECT user_id, ts, SUM(is_start) OVER (PARTITION BY user_id ORDER BY ts, is_start DESC "
-        "    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM flagged"
-        ") SELECT user_id, MIN(ts) AS session_start, COUNT(*) AS n_events "
-        "FROM numbered GROUP BY user_id, sid",
-    )
-    reg.add(
-        "events_distinct_keys",
-        watermark_dedup_projection,
-        "SELECT DISTINCT user_id, event_type FROM events",
-    )
-
-
 def funnel_steps(spark, sf_dir):
     """Ordered conversion funnel view → click → purchase: for each user,
     the first view, the first click strictly AFTER that view, and the
@@ -215,56 +159,6 @@ def cohort_retention(spark, sf_dir):
         )
         .groupBy("cohort_day", "day_offset")
         .agg(F.countDistinct("user_id").alias("n_users"))
-    )
-
-
-def register_round6(reg):
-    """Round-6 event-analytics additions: conversion funnel, cohort
-    retention."""
-    reg.add(
-        "events_funnel_steps",
-        funnel_steps,
-        "WITH v AS (SELECT user_id, MIN(ts) AS view_ts FROM events "
-        "WHERE event_type = 'view' GROUP BY user_id), "
-        "c AS (SELECT e.user_id, MIN(e.ts) AS click_ts FROM events e "
-        "JOIN v ON e.user_id = v.user_id AND e.ts > v.view_ts "
-        "WHERE e.event_type = 'click' GROUP BY e.user_id), "
-        "p AS (SELECT e.user_id, MIN(e.ts) AS purchase_ts FROM events e "
-        "JOIN c ON e.user_id = c.user_id AND e.ts > c.click_ts "
-        "WHERE e.event_type = 'purchase' GROUP BY e.user_id) "
-        "SELECT v.user_id, view_ts, click_ts, purchase_ts, "
-        "1 + CAST(click_ts IS NOT NULL AS INT) "
-        "+ CAST(purchase_ts IS NOT NULL AS INT) AS funnel_stage "
-        "FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)",
-    )
-    reg.add(
-        "events_cohort_retention",
-        cohort_retention,
-        "WITH f AS (SELECT user_id, MIN(CAST(ts AS DATE)) AS cohort_day "
-        "FROM events GROUP BY user_id) "
-        "SELECT cohort_day, "
-        "datediff('day', cohort_day, CAST(ts AS DATE)) AS day_offset, "
-        "COUNT(DISTINCT e.user_id) AS n_users "
-        "FROM events e JOIN f USING (user_id) "
-        "GROUP BY cohort_day, day_offset",
-    )
-    reg.add(
-        "events_pattern_match",
-        sequence_pattern_match,
-        # ORDER BY carries the aggregated char itself as the final
-        # tiebreak: the engine side sorts (ts, event_id, c) STRUCTS, so
-        # rows tying on both keys (dirty data: both NULL, ~9% at 30%
-        # NULL density) order by c there — without the same tiebreak
-        # here the oracle's tie order is arrival-dependent and the
-        # strict-funnel count diverges (NULLHEAVY_r15; rows tying on all
-        # three contribute identical chars, so order among them is moot)
-        "WITH seqs AS (SELECT user_id, "
-        "string_agg(substr(event_type, 1, 1), '' "
-        "ORDER BY ts, event_id, substr(event_type, 1, 1)) AS seq "
-        "FROM events GROUP BY user_id) "
-        "SELECT user_id, CAST(LENGTH(seq) AS BIGINT) AS n_events, "
-        "CAST((LENGTH(seq) - LENGTH(REPLACE(seq, 'vcp', ''))) / 3 AS BIGINT) "
-        "AS n_strict_funnels FROM seqs",
     )
 
 
@@ -389,10 +283,6 @@ WITH b AS (
 SELECT trigram, COUNT(*) AS cnt FROM tris GROUP BY trigram
 ORDER BY cnt DESC, trigram LIMIT {PATH_TOPK}
 """
-
-
-def register_round6b(reg):
-    reg.add("events_session_paths", session_paths, _PATHS_SQL)
 
 
 def _ntile5_expr(rank: str, n: str):
@@ -533,10 +423,6 @@ FROM s
 """
 
 
-def register_round6c(reg):
-    reg.add("events_rfm_scores", rfm_scores, _RFM_SQL)
-
-
 # ---------------------------------------------------------------------------
 # Burst debouncing
 
@@ -613,10 +499,6 @@ SELECT user_id, event_type, CAST(burst_id AS BIGINT) AS burst_id,
          AS burst_value
 FROM numbered GROUP BY user_id, event_type, burst_id
 """
-
-
-def register_round7(reg):
-    reg.add("events_debounce", events_debounce, _DEBOUNCE_SQL)
 
 
 def events_markov_transitions(spark, sf_dir):
@@ -752,6 +634,108 @@ GROUP BY s.event_type
 """
 
 
-def register_round7b(reg):
+def register(reg):
+    reg.add(
+        "events_tumbling_window",
+        tumbling_window,
+        # ts IS NOT NULL: Spark's window() drops un-timestamped rows
+        # (engine semantics) where date_trunc(NULL) would emit a NULL group
+        "SELECT date_trunc('hour', ts) AS window_start, event_type, "
+        "COUNT(*) AS n_events, " + sql_dsum("value") + " AS sum_value "
+        "FROM events WHERE ts IS NOT NULL GROUP BY 1, 2",
+    )
+    reg.add(
+        "events_sliding_window",
+        sliding_window,
+        # each event belongs to the 1h windows starting at trunc30(ts) and
+        # trunc30(ts) - 30min (epoch-aligned, same as Spark's window()).
+        # FLOOR-mod, not bare %: Spark's window() floor-aligns for every
+        # instant, while DuckDB's sign-preserving % truncates a PRE-EPOCH
+        # epoch_us toward zero — one slide too late (extreme-timestamp
+        # axis find on year-1 plants; identity for ts >= epoch).
+        "WITH assigned AS ("
+        "  SELECT make_timestamp((epoch_us(ts) "
+        "- ((epoch_us(ts) % 1800000000) + 1800000000) % 1800000000) - s.shift) AS window_start, value"
+        "  FROM events, (SELECT UNNEST([0, 1800000000]) AS shift) s"
+        "  WHERE ts IS NOT NULL"
+        ") SELECT window_start, COUNT(*) AS n_events, "
+        + sql_dsum("value")
+        + " AS sum_value FROM assigned GROUP BY window_start",
+    )
+    reg.add(
+        "events_session_window",
+        session_window_per_user,
+        # gaps-and-islands: new session when gap > 30 min — <=, not <,
+        # mirrors Spark's end-INCLUSIVE session merge (an exact-timeout
+        # gap merges; extreme-timestamp axis find, latent on any
+        # second-granular log with exact 30-min spacings)
+        "WITH flagged AS ("
+        "  SELECT user_id, ts,"
+        "    CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER w <= 1800000000 THEN 0 ELSE 1 END AS is_start"
+        "  FROM events WHERE ts IS NOT NULL"
+        "  WINDOW w AS (PARTITION BY user_id ORDER BY ts)"
+        "), numbered AS ("
+        # is_start DESC tiebreak: see window_sessionize (round-17
+        # duprow-interaction find) — pass 2 re-sorts ts-tied rows whose
+        # is_start payloads differ; flag-first reconstructs pass 1.
+        "  SELECT user_id, ts, SUM(is_start) OVER (PARTITION BY user_id ORDER BY ts, is_start DESC "
+        "    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM flagged"
+        ") SELECT user_id, MIN(ts) AS session_start, COUNT(*) AS n_events "
+        "FROM numbered GROUP BY user_id, sid",
+    )
+    reg.add(
+        "events_distinct_keys",
+        watermark_dedup_projection,
+        "SELECT DISTINCT user_id, event_type FROM events",
+    )
+    # conversion funnel, cohort retention
+    reg.add(
+        "events_funnel_steps",
+        funnel_steps,
+        "WITH v AS (SELECT user_id, MIN(ts) AS view_ts FROM events "
+        "WHERE event_type = 'view' GROUP BY user_id), "
+        "c AS (SELECT e.user_id, MIN(e.ts) AS click_ts FROM events e "
+        "JOIN v ON e.user_id = v.user_id AND e.ts > v.view_ts "
+        "WHERE e.event_type = 'click' GROUP BY e.user_id), "
+        "p AS (SELECT e.user_id, MIN(e.ts) AS purchase_ts FROM events e "
+        "JOIN c ON e.user_id = c.user_id AND e.ts > c.click_ts "
+        "WHERE e.event_type = 'purchase' GROUP BY e.user_id) "
+        "SELECT v.user_id, view_ts, click_ts, purchase_ts, "
+        "1 + CAST(click_ts IS NOT NULL AS INT) "
+        "+ CAST(purchase_ts IS NOT NULL AS INT) AS funnel_stage "
+        "FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)",
+    )
+    reg.add(
+        "events_cohort_retention",
+        cohort_retention,
+        "WITH f AS (SELECT user_id, MIN(CAST(ts AS DATE)) AS cohort_day "
+        "FROM events GROUP BY user_id) "
+        "SELECT cohort_day, "
+        "datediff('day', cohort_day, CAST(ts AS DATE)) AS day_offset, "
+        "COUNT(DISTINCT e.user_id) AS n_users "
+        "FROM events e JOIN f USING (user_id) "
+        "GROUP BY cohort_day, day_offset",
+    )
+    reg.add(
+        "events_pattern_match",
+        sequence_pattern_match,
+        # ORDER BY carries the aggregated char itself as the final
+        # tiebreak: the engine side sorts (ts, event_id, c) STRUCTS, so
+        # rows tying on both keys (dirty data: both NULL, ~9% at 30%
+        # NULL density) order by c there — without the same tiebreak
+        # here the oracle's tie order is arrival-dependent and the
+        # strict-funnel count diverges (NULLHEAVY_r15; rows tying on all
+        # three contribute identical chars, so order among them is moot)
+        "WITH seqs AS (SELECT user_id, "
+        "string_agg(substr(event_type, 1, 1), '' "
+        "ORDER BY ts, event_id, substr(event_type, 1, 1)) AS seq "
+        "FROM events GROUP BY user_id) "
+        "SELECT user_id, CAST(LENGTH(seq) AS BIGINT) AS n_events, "
+        "CAST((LENGTH(seq) - LENGTH(REPLACE(seq, 'vcp', ''))) / 3 AS BIGINT) "
+        "AS n_strict_funnels FROM seqs",
+    )
+    reg.add("events_session_paths", session_paths, _PATHS_SQL)
+    reg.add("events_rfm_scores", rfm_scores, _RFM_SQL)
+    reg.add("events_debounce", events_debounce, _DEBOUNCE_SQL)
     reg.add("events_markov_transitions", events_markov_transitions, _MARKOV_SQL)
     reg.add("window_cusum_drift", window_cusum_drift, _CUSUM_SQL)

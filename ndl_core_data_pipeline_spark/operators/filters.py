@@ -82,53 +82,6 @@ def null_domain_filter(spark, sf_dir):
     )
 
 
-def register(reg):
-    reg.add(
-        "filter_format_lang",
-        format_lang_filter,
-        "SELECT doc_id, lang, source, n_chars FROM documents "
-        "WHERE lang = 'en' AND text IS NOT NULL",
-    )
-    reg.add(
-        "filter_min_length",
-        min_length_filter,
-        "SELECT doc_id, LENGTH(TRIM(text)) AS trimmed_len FROM documents "
-        "WHERE LENGTH(TRIM(text)) >= 200",
-    )
-    reg.add(
-        "filter_whitelist_rejects",
-        whitelist_reject_stats,
-        "SELECT event_type, COUNT(*) AS rejected FROM events "
-        "WHERE event_type NOT IN ('view','click','purchase') GROUP BY event_type",
-    )
-    reg.add(
-        "filter_size_cap",
-        size_cap_filter,
-        "SELECT doc_id, n_chars FROM documents WHERE n_chars <= 300",
-    )
-    reg.add(
-        "filter_like",
-        like_filter,
-        "SELECT doc_id, source FROM documents WHERE text LIKE '%vector%'",
-    )
-    reg.add(
-        "filter_regexp",
-        regexp_filter,
-        "SELECT doc_id FROM documents WHERE regexp_matches(text, 'join\\s+stream')",
-    )
-    reg.add(
-        "project_drop_vector",
-        project_drop_column,
-        "SELECT vec_id, label FROM embeddings",
-    )
-    reg.add(
-        "filter_null_domain",
-        null_domain_filter,
-        "SELECT doc_id, TRIM(lang) AS lang_clean FROM documents "
-        "WHERE TRIM(lang) NOT IN ('NA','N/A','NULL','null','na','n/a','None','NONE','-','')",
-    )
-
-
 IQR_MULT = 0.25  # synthetic orders are near-uniform — 1.5×IQR (the Tukey
 # default for production) flags nothing; 0.25 exercises both tails
 
@@ -162,22 +115,6 @@ def iqr_outlier_filter(spark, sf_dir):
             .otherwise("high")
             .alias("tail"),
         )
-    )
-
-
-def register_round6(reg):
-    """Round-6 filter addition: quantile-fence outliers."""
-    reg.add(
-        "filter_iqr_outliers",
-        iqr_outlier_filter,
-        f"WITH o AS (SELECT * FROM orders WHERE isfinite(o_totalprice)), "
-        f"b AS (SELECT quantile_cont(o_totalprice, 0.25) AS q1, "
-        f"quantile_cont(o_totalprice, 0.75) AS q3 FROM o), "
-        f"f AS (SELECT q1 - {IQR_MULT} * (q3 - q1) AS lo, "
-        f"q3 + {IQR_MULT} * (q3 - q1) AS hi FROM b) "
-        "SELECT o_orderkey, o_totalprice, "
-        "CASE WHEN o_totalprice < lo THEN 'low' ELSE 'high' END AS tail "
-        "FROM o, f WHERE o_totalprice < lo OR o_totalprice > hi",
     )
 
 
@@ -261,5 +198,62 @@ def mad_outliers_approx(spark, sf_dir):
     )
 
 
-def register_round6b(reg):
+def register(reg):
+    reg.add(
+        "filter_format_lang",
+        format_lang_filter,
+        "SELECT doc_id, lang, source, n_chars FROM documents "
+        "WHERE lang = 'en' AND text IS NOT NULL",
+    )
+    reg.add(
+        "filter_min_length",
+        min_length_filter,
+        "SELECT doc_id, LENGTH(TRIM(text)) AS trimmed_len FROM documents "
+        "WHERE LENGTH(TRIM(text)) >= 200",
+    )
+    reg.add(
+        "filter_whitelist_rejects",
+        whitelist_reject_stats,
+        "SELECT event_type, COUNT(*) AS rejected FROM events "
+        "WHERE event_type NOT IN ('view','click','purchase') GROUP BY event_type",
+    )
+    reg.add(
+        "filter_size_cap",
+        size_cap_filter,
+        "SELECT doc_id, n_chars FROM documents WHERE n_chars <= 300",
+    )
+    reg.add(
+        "filter_like",
+        like_filter,
+        "SELECT doc_id, source FROM documents WHERE text LIKE '%vector%'",
+    )
+    reg.add(
+        "filter_regexp",
+        regexp_filter,
+        "SELECT doc_id FROM documents WHERE regexp_matches(text, 'join\\s+stream')",
+    )
+    reg.add(
+        "project_drop_vector",
+        project_drop_column,
+        "SELECT vec_id, label FROM embeddings",
+    )
+    reg.add(
+        "filter_null_domain",
+        null_domain_filter,
+        "SELECT doc_id, TRIM(lang) AS lang_clean FROM documents "
+        "WHERE TRIM(lang) NOT IN ('NA','N/A','NULL','null','na','n/a','None','NONE','-','')",
+    )
+    # quantile-fence outliers
+    reg.add(
+        "filter_iqr_outliers",
+        iqr_outlier_filter,
+        f"WITH o AS (SELECT * FROM orders WHERE isfinite(o_totalprice)), "
+        f"b AS (SELECT quantile_cont(o_totalprice, 0.25) AS q1, "
+        f"quantile_cont(o_totalprice, 0.75) AS q3 FROM o), "
+        f"f AS (SELECT q1 - {IQR_MULT} * (q3 - q1) AS lo, "
+        f"q3 + {IQR_MULT} * (q3 - q1) AS hi FROM b) "
+        "SELECT o_orderkey, o_totalprice, "
+        "CASE WHEN o_totalprice < lo THEN 'low' ELSE 'high' END AS tail "
+        "FROM o, f WHERE o_totalprice < lo OR o_totalprice > hi",
+    )
     reg.add("filter_mad_outliers", mad_outliers, _MAD_SQL)

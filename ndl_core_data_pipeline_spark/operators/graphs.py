@@ -200,11 +200,6 @@ FROM walk GROUP BY node
 """
 
 
-def register(reg) -> None:
-    reg.add("join_fuzzy_name_pairs", join_fuzzy_name_pairs, _FUZZY_SQL)
-    reg.add("graph_tree_depth_root", graph_tree_depth_root, _TREE_SQL)
-
-
 TRI_MINSUP = 2  # co-order support for triangle edges (denser than the
 # frequent-pairs report's threshold so the graph has closed wedges)
 
@@ -318,10 +313,6 @@ edges AS (
 SELECT (SELECT COUNT(*) FROM edges) AS n_edges,
        (SELECT COUNT(*) FROM tri) AS n_triangles
 """
-
-
-def register_round6b(reg) -> None:
-    reg.add("graph_triangle_count", graph_triangle_count, _triangle_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -460,5 +451,8 @@ FROM r{PR_ITERS} ORDER BY pagerank DESC, part LIMIT 100"""
     return "".join(parts)
 
 
-def register_round7(reg) -> None:
+def register(reg) -> None:
+    reg.add("join_fuzzy_name_pairs", join_fuzzy_name_pairs, _FUZZY_SQL)
+    reg.add("graph_tree_depth_root", graph_tree_depth_root, _TREE_SQL)
+    reg.add("graph_triangle_count", graph_triangle_count, _triangle_sql())
     reg.add("graph_pagerank", graph_pagerank, _pagerank_sql())

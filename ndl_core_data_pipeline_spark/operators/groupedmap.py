@@ -48,24 +48,6 @@ def zscore_per_group(spark, sf_dir):
     )
 
 
-def register(reg):
-    reg.add(
-        "groupedmap_zscore",
-        zscore_per_group,
-# the NULL-n_chars branch comes FIRST: a row with no length has no
-        # z-score (the pandas form propagates NaN through (x-mean)/std and
-        # x*0.0 alike), but the bare ELSE 0.0 assigned such rows 0.0 in
-        # zero-variance groups — which hot-key duplication mass-produces
-        # (r16 compound sweep)
-        "SELECT doc_id, source, n_chars, "
-        "ROUND(CASE WHEN n_chars IS NULL THEN NULL "
-        "WHEN stddev_pop(n_chars) OVER w > 0 "
-        "THEN (n_chars - AVG(n_chars) OVER w) / (stddev_pop(n_chars) OVER w) "
-        "ELSE 0.0 END, 6) AS zscore "
-        "FROM documents WINDOW w AS (PARTITION BY source)",
-    )
-
-
 UDTF_CHUNK_WORDS = 40  # words per emitted chunk
 
 
@@ -99,8 +81,23 @@ def udtf_word_chunks(spark, sf_dir):
     )
 
 
-def register_round6(reg):
-    """Round-6 §2.13 addition: Python UDTF chunker."""
+def register(reg):
+    reg.add(
+        "groupedmap_zscore",
+        zscore_per_group,
+# the NULL-n_chars branch comes FIRST: a row with no length has no
+        # z-score (the pandas form propagates NaN through (x-mean)/std and
+        # x*0.0 alike), but the bare ELSE 0.0 assigned such rows 0.0 in
+        # zero-variance groups — which hot-key duplication mass-produces
+        # (r16 compound sweep)
+        "SELECT doc_id, source, n_chars, "
+        "ROUND(CASE WHEN n_chars IS NULL THEN NULL "
+        "WHEN stddev_pop(n_chars) OVER w > 0 "
+        "THEN (n_chars - AVG(n_chars) OVER w) / (stddev_pop(n_chars) OVER w) "
+        "ELSE 0.0 END, 6) AS zscore "
+        "FROM documents WINDOW w AS (PARTITION BY source)",
+    )
+    # §2.13 Python UDTF chunker
     reg.add(
         "udtf_word_chunks",
         udtf_word_chunks,

@@ -398,137 +398,6 @@ def merge_upsert_latest(spark, sf_dir):
     )
 
 
-def register(reg):
-    reg.add(
-        "join_inner_equi",
-        inner_equi_join,
-        "SELECT c_custkey, c_name, n_name, r_name FROM customer "
-        "JOIN nation ON c_nationkey = n_nationkey "
-        "JOIN region ON n_regionkey = r_regionkey",
-    )
-    reg.add(
-        "join_left_coalesce",
-        left_join_coalesce,
-        "SELECT c_custkey, COALESCE(n_name, c_mktsegment) AS tag FROM customer "
-        "LEFT JOIN (SELECT n_nationkey, n_name FROM nation WHERE n_regionkey <= 1) p "
-        "ON c_nationkey = p.n_nationkey",
-    )
-    reg.add(
-        "join_semi",
-        semi_join,
-        "SELECT c_custkey, c_name FROM customer WHERE EXISTS ("
-        "SELECT 1 FROM orders WHERE o_custkey = c_custkey "
-        "AND o_orderpriority = '1-URGENT' AND o_orderstatus = 'O')",
-    )
-    reg.add(
-        "join_anti_skip_existing",
-        anti_join_skip_existing,
-        "SELECT c_custkey, c_name FROM customer WHERE NOT EXISTS ("
-        "SELECT 1 FROM orders WHERE o_custkey = c_custkey)",
-    )
-    reg.add(
-        "join_right_outer",
-        right_outer_join,
-        "SELECT o_orderkey, o_orderstatus, l_linenumber, l_quantity FROM "
-        "(SELECT * FROM lineitem WHERE l_shipdate >= TIMESTAMP '2001-06-01') l "
-        "RIGHT JOIN orders ON l.l_orderkey = o_orderkey",
-    )
-    reg.add(
-        "join_full_outer",
-        full_outer_join,
-        "SELECT s_suppkey, s_name, n_nationkey, n_name FROM supplier "
-        "FULL OUTER JOIN nation ON s_nationkey = n_nationkey",
-    )
-    reg.add(
-        "join_broadcast",
-        broadcast_join,
-        "SELECT o_orderkey, c_name, o_totalprice FROM orders "
-        "JOIN customer ON o_custkey = c_custkey",
-    )
-    reg.add(
-        "join_theta_range",
-        theta_range_join,
-        "SELECT p_partkey, s_suppkey, p_retailprice, s_acctbal FROM part "
-        "JOIN supplier ON p_retailprice >= s_acctbal/10.0 "
-        "AND p_retailprice < s_acctbal/5.0",
-    )
-    reg.add(
-        "join_asof_last_view",
-        asof_join_last_view,
-        "SELECT event_id, user_id, ts, last_view_ts, last_view_id FROM ("
-        "SELECT event_id, user_id, ts, event_type, "
-        "last_value(CASE WHEN event_type='view' THEN ts END IGNORE NULLS) OVER w AS last_view_ts, "
-        "last_value(CASE WHEN event_type='view' THEN event_id END IGNORE NULLS) OVER w AS last_view_id "
-        "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id, event_type "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
-        ") t WHERE event_type = 'purchase'",
-    )
-
-
-def register_round6(reg):
-    """Round-6 join-family additions: the three shuffle-strategy shapes a
-    100 TB deployment leans on (binned range join, salt-split skew join,
-    full-outer MERGE)."""
-    reg.add(
-        "join_range_binned",
-        range_join_binned,
-        # COUNT(v.event_type), not COUNT(v.event_id): the join ON pins
-        # event_type non-null for every matched row, so this counts ALL
-        # matched views — a matched view with a NULL event_id is still a
-        # view in the window
-        "SELECT p.event_id, p.user_id, COUNT(v.event_type) AS n_views_1h, "
-        "COALESCE(CAST(SUM(CAST(v.value AS DECIMAL(25,6))) AS DOUBLE), 0.0)"
-        " AS view_value_1h "
-        "FROM events p LEFT JOIN events v ON v.event_type = 'view' "
-        "AND abs(epoch_us(p.ts) - epoch_us(v.ts)) <= 3600000000 "
-        "WHERE p.event_type = 'purchase' "
-        "GROUP BY p.event_id, p.user_id",
-    )
-    reg.add(
-        "join_skew_salted",
-        salted_skew_join,
-        "SELECT e.event_id, e.user_id, p.n_events, p.user_value "
-        "FROM events e JOIN (SELECT user_id, COUNT(*) AS n_events, "
-        "CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS user_value "
-        "FROM events GROUP BY user_id) p USING (user_id) "
-        "WHERE e.event_type = 'purchase'",
-    )
-    reg.add(
-        "merge_upsert_latest",
-        merge_upsert_latest,
-        "WITH o AS (SELECT o_orderkey AS key, o_orderstatus AS status, "
-        "o_totalprice AS totalprice FROM orders), "
-        "updates AS ("
-        "  SELECT key, 'U' AS u_status, CAST(ROUND(CAST(totalprice AS DECIMAL(18,2))"
-        " * CAST(1.10 AS DECIMAL(3,2)), 2) AS DOUBLE) AS u_totalprice"
-        "  FROM o WHERE key % 7 = 0"
-        "  UNION ALL"
-        "  SELECT -key AS key, 'N' AS u_status, totalprice AS u_totalprice"
-        "  FROM o WHERE key % 97 = 0 AND key > 0) "
-        "SELECT COALESCE(o.key, u.key) AS key, "
-        "COALESCE(u.u_status, o.status) AS status, "
-        "COALESCE(u.u_totalprice, o.totalprice) AS totalprice, "
-        "CASE WHEN u.u_status IS NULL THEN 'keep' "
-        "WHEN o.status IS NULL THEN 'insert' ELSE 'update' END AS row_op "
-        "FROM o FULL OUTER JOIN updates u ON o.key = u.key",
-    )
-    reg.add(
-        "join_asof_tolerance",
-        asof_join_with_tolerance,
-        "SELECT event_id, user_id, ts, "
-        "CASE WHEN epoch_us(ts) - v_us <= 1800000000 THEN v_id END AS last_view_id, "
-        "CASE WHEN epoch_us(ts) - v_us <= 1800000000 THEN "
-        "CAST(floor((epoch_us(ts) - v_us) / 1000000.0) AS BIGINT) END AS view_age_sec "
-        "FROM ("
-        "SELECT event_id, user_id, ts, event_type, "
-        "last_value(CASE WHEN event_type='view' THEN epoch_us(ts) END IGNORE NULLS) OVER w AS v_us, "
-        "last_value(CASE WHEN event_type='view' THEN event_id END IGNORE NULLS) OVER w AS v_id "
-        "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id, event_type "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
-        ") t WHERE event_type = 'purchase'",
-    )
-
-
 ASOF_TOLERANCE_US = 1800 * 1_000_000  # 30-minute match window
 
 
@@ -668,5 +537,129 @@ FROM a JOIN b ON a_s <= b_e AND b_s <= a_e
 """
 
 
-def register_round7(reg):
+def register(reg):
+    reg.add(
+        "join_inner_equi",
+        inner_equi_join,
+        "SELECT c_custkey, c_name, n_name, r_name FROM customer "
+        "JOIN nation ON c_nationkey = n_nationkey "
+        "JOIN region ON n_regionkey = r_regionkey",
+    )
+    reg.add(
+        "join_left_coalesce",
+        left_join_coalesce,
+        "SELECT c_custkey, COALESCE(n_name, c_mktsegment) AS tag FROM customer "
+        "LEFT JOIN (SELECT n_nationkey, n_name FROM nation WHERE n_regionkey <= 1) p "
+        "ON c_nationkey = p.n_nationkey",
+    )
+    reg.add(
+        "join_semi",
+        semi_join,
+        "SELECT c_custkey, c_name FROM customer WHERE EXISTS ("
+        "SELECT 1 FROM orders WHERE o_custkey = c_custkey "
+        "AND o_orderpriority = '1-URGENT' AND o_orderstatus = 'O')",
+    )
+    reg.add(
+        "join_anti_skip_existing",
+        anti_join_skip_existing,
+        "SELECT c_custkey, c_name FROM customer WHERE NOT EXISTS ("
+        "SELECT 1 FROM orders WHERE o_custkey = c_custkey)",
+    )
+    reg.add(
+        "join_right_outer",
+        right_outer_join,
+        "SELECT o_orderkey, o_orderstatus, l_linenumber, l_quantity FROM "
+        "(SELECT * FROM lineitem WHERE l_shipdate >= TIMESTAMP '2001-06-01') l "
+        "RIGHT JOIN orders ON l.l_orderkey = o_orderkey",
+    )
+    reg.add(
+        "join_full_outer",
+        full_outer_join,
+        "SELECT s_suppkey, s_name, n_nationkey, n_name FROM supplier "
+        "FULL OUTER JOIN nation ON s_nationkey = n_nationkey",
+    )
+    reg.add(
+        "join_broadcast",
+        broadcast_join,
+        "SELECT o_orderkey, c_name, o_totalprice FROM orders "
+        "JOIN customer ON o_custkey = c_custkey",
+    )
+    reg.add(
+        "join_theta_range",
+        theta_range_join,
+        "SELECT p_partkey, s_suppkey, p_retailprice, s_acctbal FROM part "
+        "JOIN supplier ON p_retailprice >= s_acctbal/10.0 "
+        "AND p_retailprice < s_acctbal/5.0",
+    )
+    reg.add(
+        "join_asof_last_view",
+        asof_join_last_view,
+        "SELECT event_id, user_id, ts, last_view_ts, last_view_id FROM ("
+        "SELECT event_id, user_id, ts, event_type, "
+        "last_value(CASE WHEN event_type='view' THEN ts END IGNORE NULLS) OVER w AS last_view_ts, "
+        "last_value(CASE WHEN event_type='view' THEN event_id END IGNORE NULLS) OVER w AS last_view_id "
+        "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id, event_type "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
+        ") t WHERE event_type = 'purchase'",
+    )
+    # the three shuffle-strategy shapes a 100 TB deployment leans on
+    # (binned range join, salt-split skew join, full-outer MERGE)
+    reg.add(
+        "join_range_binned",
+        range_join_binned,
+        # COUNT(v.event_type), not COUNT(v.event_id): the join ON pins
+        # event_type non-null for every matched row, so this counts ALL
+        # matched views — a matched view with a NULL event_id is still a
+        # view in the window
+        "SELECT p.event_id, p.user_id, COUNT(v.event_type) AS n_views_1h, "
+        "COALESCE(CAST(SUM(CAST(v.value AS DECIMAL(25,6))) AS DOUBLE), 0.0)"
+        " AS view_value_1h "
+        "FROM events p LEFT JOIN events v ON v.event_type = 'view' "
+        "AND abs(epoch_us(p.ts) - epoch_us(v.ts)) <= 3600000000 "
+        "WHERE p.event_type = 'purchase' "
+        "GROUP BY p.event_id, p.user_id",
+    )
+    reg.add(
+        "join_skew_salted",
+        salted_skew_join,
+        "SELECT e.event_id, e.user_id, p.n_events, p.user_value "
+        "FROM events e JOIN (SELECT user_id, COUNT(*) AS n_events, "
+        "CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS user_value "
+        "FROM events GROUP BY user_id) p USING (user_id) "
+        "WHERE e.event_type = 'purchase'",
+    )
+    reg.add(
+        "merge_upsert_latest",
+        merge_upsert_latest,
+        "WITH o AS (SELECT o_orderkey AS key, o_orderstatus AS status, "
+        "o_totalprice AS totalprice FROM orders), "
+        "updates AS ("
+        "  SELECT key, 'U' AS u_status, CAST(ROUND(CAST(totalprice AS DECIMAL(18,2))"
+        " * CAST(1.10 AS DECIMAL(3,2)), 2) AS DOUBLE) AS u_totalprice"
+        "  FROM o WHERE key % 7 = 0"
+        "  UNION ALL"
+        "  SELECT -key AS key, 'N' AS u_status, totalprice AS u_totalprice"
+        "  FROM o WHERE key % 97 = 0 AND key > 0) "
+        "SELECT COALESCE(o.key, u.key) AS key, "
+        "COALESCE(u.u_status, o.status) AS status, "
+        "COALESCE(u.u_totalprice, o.totalprice) AS totalprice, "
+        "CASE WHEN u.u_status IS NULL THEN 'keep' "
+        "WHEN o.status IS NULL THEN 'insert' ELSE 'update' END AS row_op "
+        "FROM o FULL OUTER JOIN updates u ON o.key = u.key",
+    )
+    reg.add(
+        "join_asof_tolerance",
+        asof_join_with_tolerance,
+        "SELECT event_id, user_id, ts, "
+        "CASE WHEN epoch_us(ts) - v_us <= 1800000000 THEN v_id END AS last_view_id, "
+        "CASE WHEN epoch_us(ts) - v_us <= 1800000000 THEN "
+        "CAST(floor((epoch_us(ts) - v_us) / 1000000.0) AS BIGINT) END AS view_age_sec "
+        "FROM ("
+        "SELECT event_id, user_id, ts, event_type, "
+        "last_value(CASE WHEN event_type='view' THEN epoch_us(ts) END IGNORE NULLS) OVER w AS v_us, "
+        "last_value(CASE WHEN event_type='view' THEN event_id END IGNORE NULLS) OVER w AS v_id "
+        "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id, event_type "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
+        ") t WHERE event_type = 'purchase'",
+    )
     reg.add("join_interval_overlap", interval_overlap_join, _OVERLAP_SQL)

@@ -116,6 +116,29 @@ def _sql_mask(col: str) -> str:
     )
 
 
+K_ANON = 5  # minimum group size for quasi-identifier combinations
+
+
+def k_anonymity_report(spark, sf_dir):
+    """k-anonymity audit (P-family extension): customers grouped by their
+    quasi-identifier combination (nation × market segment); combinations
+    with fewer than K_ANON members re-identify individuals and are
+    flagged. One keyed count — the shuffle carries (qi-combo, count)
+    rows only; the flagged set is what a release gate would suppress or
+    generalize."""
+    c = load(spark, sf_dir, "customer")
+    return (
+        c.groupBy("c_nationkey", "c_mktsegment")
+        .agg(F.count("*").alias("group_size"))
+        .select(
+            "c_nationkey",
+            "c_mktsegment",
+            "group_size",
+            (F.col("group_size") < K_ANON).alias("at_risk"),
+        )
+    )
+
+
 def register(reg):
     reg.add(
         "pii_anonymize_regex",
@@ -142,33 +165,7 @@ def register(reg):
         "CAST(lang = 'en' AS INT) AS was_masked "
         f"FROM ({_sql_with_pii()}) t",
     )
-
-
-K_ANON = 5  # minimum group size for quasi-identifier combinations
-
-
-def k_anonymity_report(spark, sf_dir):
-    """k-anonymity audit (P-family extension): customers grouped by their
-    quasi-identifier combination (nation × market segment); combinations
-    with fewer than K_ANON members re-identify individuals and are
-    flagged. One keyed count — the shuffle carries (qi-combo, count)
-    rows only; the flagged set is what a release gate would suppress or
-    generalize."""
-    c = load(spark, sf_dir, "customer")
-    return (
-        c.groupBy("c_nationkey", "c_mktsegment")
-        .agg(F.count("*").alias("group_size"))
-        .select(
-            "c_nationkey",
-            "c_mktsegment",
-            "group_size",
-            (F.col("group_size") < K_ANON).alias("at_risk"),
-        )
-    )
-
-
-def register_round6(reg):
-    """Round-6 privacy addition: k-anonymity audit."""
+    # k-anonymity audit
     reg.add(
         "pii_k_anonymity",
         k_anonymity_report,

@@ -43,32 +43,6 @@ def distinct_rows(spark, sf_dir):
     return l.select("l_returnflag", "l_linestatus").distinct()
 
 
-def register(reg):
-    reg.add(
-        "setop_union_all",
-        union_all_parts,
-        "SELECT doc_id, lang, source FROM documents WHERE lang = 'en' "
-        "UNION ALL SELECT doc_id, lang, source FROM documents WHERE lang = 'fr'",
-    )
-    reg.add(
-        "setop_except",
-        except_missing_keys,
-        "SELECT c_custkey AS key FROM customer "
-        "EXCEPT SELECT o_custkey AS key FROM orders",
-    )
-    reg.add(
-        "setop_intersect",
-        intersect_keys,
-        "SELECT o_custkey AS key FROM orders WHERE o_orderstatus = 'F' "
-        "INTERSECT SELECT o_custkey AS key FROM orders WHERE o_orderstatus = 'O'",
-    )
-    reg.add(
-        "setop_distinct",
-        distinct_rows,
-        "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
-    )
-
-
 def except_all_keys(spark, sf_dir):
     """Engine surface: EXCEPT ALL — multiplicity-preserving difference
     (each order's custkey consumed once per matching row, the bag
@@ -96,8 +70,31 @@ def intersect_all_keys(spark, sf_dir):
     return f_cust.intersectAll(o_cust)
 
 
-def register_round6(reg):
-    """Round-6 set-op completions: bag (ALL) variants."""
+def register(reg):
+    reg.add(
+        "setop_union_all",
+        union_all_parts,
+        "SELECT doc_id, lang, source FROM documents WHERE lang = 'en' "
+        "UNION ALL SELECT doc_id, lang, source FROM documents WHERE lang = 'fr'",
+    )
+    reg.add(
+        "setop_except",
+        except_missing_keys,
+        "SELECT c_custkey AS key FROM customer "
+        "EXCEPT SELECT o_custkey AS key FROM orders",
+    )
+    reg.add(
+        "setop_intersect",
+        intersect_keys,
+        "SELECT o_custkey AS key FROM orders WHERE o_orderstatus = 'F' "
+        "INTERSECT SELECT o_custkey AS key FROM orders WHERE o_orderstatus = 'O'",
+    )
+    reg.add(
+        "setop_distinct",
+        distinct_rows,
+        "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
+    )
+    # bag (ALL) variants
     reg.add(
         "setop_except_all",
         except_all_keys,

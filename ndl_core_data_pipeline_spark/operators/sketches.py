@@ -258,12 +258,6 @@ SELECT user_id, n_exact, n_est FROM est JOIN exact USING (user_id)
 """
 
 
-def register(reg) -> None:
-    reg.add("agg_hll_distinct", hll_distinct, _hll_sql())
-    reg.add("agg_countmin_sketch", countmin_sketch, _cm_sql())
-    reg.add("agg_countmin_estimates", countmin_estimates, _cm_est_sql())
-
-
 # ------------------------------------------------ bottom-k sample quantiles
 
 BK_K = 256  # sample size per group
@@ -367,12 +361,6 @@ FROM exact JOIN est USING (o_orderpriority)
 """
 
 
-def register_round7b(reg) -> None:
-    reg.add(
-        "agg_bottomk_sample_quantiles", bottomk_sample_quantiles, _BK_SQL
-    )
-
-
 def hll_merge_proof(spark, sf_dir):
     """Mergeability, demonstrated IN-QUERY and oracle-checked: split the
     event stream into two halves by event_id parity, build an HLL
@@ -445,5 +433,11 @@ SELECT {est('whole')} AS est_whole,
 """
 
 
-def register_round7c(reg) -> None:
+def register(reg) -> None:
+    reg.add("agg_hll_distinct", hll_distinct, _hll_sql())
+    reg.add("agg_countmin_sketch", countmin_sketch, _cm_sql())
+    reg.add("agg_countmin_estimates", countmin_estimates, _cm_est_sql())
+    reg.add(
+        "agg_bottomk_sample_quantiles", bottomk_sample_quantiles, _BK_SQL
+    )
     reg.add("agg_hll_merge", hll_merge_proof, _hll_merge_sql())

@@ -142,73 +142,6 @@ def elbow_cut(spark, sf_dir):
     return cut
 
 
-def register(reg):
-    reg.add(
-        "topk_by_value",
-        topk_by_value,
-        "SELECT o_orderkey, o_custkey, o_totalprice FROM orders "
-        "ORDER BY o_totalprice DESC, o_orderkey, o_custkey LIMIT 25",
-    )
-    reg.add(
-        "sort_limit_offset",
-        sort_limit_offset,
-        "SELECT o_orderkey, o_orderdate, o_totalprice FROM orders "
-        "ORDER BY o_orderdate, o_orderkey, o_totalprice LIMIT 50 OFFSET 100",
-    )
-    reg.add(
-        "sort_recency",
-        recency_sort,
-        "SELECT event_id, ts, event_type FROM events "
-        "ORDER BY ts DESC, event_id, event_type LIMIT 100",
-    )
-    reg.add(
-        "topk_per_group",
-        topk_per_group,
-        "SELECT o_custkey, o_orderkey, o_totalprice, rn FROM ("
-        "SELECT o_custkey, o_orderkey, o_totalprice, ROW_NUMBER() OVER "
-        "(PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn "
-        "FROM orders) t WHERE rn <= 3",
-    )
-    reg.add(
-        "elbow_cut",
-        elbow_cut,
-        """
-WITH q AS (SELECT embedding AS q_embedding FROM embeddings WHERE vec_id = 0),
-scored AS (
-  SELECT vec_id,
-         ROUND(list_sum(list_transform(list_zip(e.embedding, q.q_embedding),
-               x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
-                  * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))), 6) AS dist
-  FROM embeddings e, q WHERE vec_id <> 0
-),
--- defined distances only: a corrupt vector's NULL/NaN dist would rank
--- NULLS-FIRST into the top-15 and poison the elbow
-topk AS (
-  SELECT vec_id, dist FROM scored
-  WHERE dist IS NOT NULL AND isfinite(dist)
-  ORDER BY dist, vec_id LIMIT 15
-),
-diffs AS (
-  SELECT vec_id, dist,
-         ROW_NUMBER() OVER (ORDER BY dist, vec_id) AS rnk,
-         dist - LAG(dist, 1) OVER (ORDER BY dist, vec_id) AS diff
-  FROM topk
-),
-med AS (SELECT quantile_cont(diff, 0.5) AS median_diff FROM diffs),
-flagged AS (
-  SELECT d.vec_id, d.dist, d.rnk,
-         CASE WHEN d.diff > GREATEST(2.5 * m.median_diff, 0.05) THEN 1 ELSE 0 END AS is_cut
-  FROM diffs d, med m
-)
-SELECT vec_id, dist, rnk FROM (
-  SELECT vec_id, dist, rnk,
-         SUM(is_cut) OVER (ORDER BY rnk ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cut_seen
-  FROM flagged
-) t WHERE cut_seen = 0
-""",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Skyline / pareto front
 
@@ -299,5 +232,69 @@ WHERE NOT (COALESCE(mp_prev <= o_totalprice, FALSE)
 """
 
 
-def register_round7(reg):
+def register(reg):
+    reg.add(
+        "topk_by_value",
+        topk_by_value,
+        "SELECT o_orderkey, o_custkey, o_totalprice FROM orders "
+        "ORDER BY o_totalprice DESC, o_orderkey, o_custkey LIMIT 25",
+    )
+    reg.add(
+        "sort_limit_offset",
+        sort_limit_offset,
+        "SELECT o_orderkey, o_orderdate, o_totalprice FROM orders "
+        "ORDER BY o_orderdate, o_orderkey, o_totalprice LIMIT 50 OFFSET 100",
+    )
+    reg.add(
+        "sort_recency",
+        recency_sort,
+        "SELECT event_id, ts, event_type FROM events "
+        "ORDER BY ts DESC, event_id, event_type LIMIT 100",
+    )
+    reg.add(
+        "topk_per_group",
+        topk_per_group,
+        "SELECT o_custkey, o_orderkey, o_totalprice, rn FROM ("
+        "SELECT o_custkey, o_orderkey, o_totalprice, ROW_NUMBER() OVER "
+        "(PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn "
+        "FROM orders) t WHERE rn <= 3",
+    )
+    reg.add(
+        "elbow_cut",
+        elbow_cut,
+        """
+WITH q AS (SELECT embedding AS q_embedding FROM embeddings WHERE vec_id = 0),
+scored AS (
+  SELECT vec_id,
+         ROUND(list_sum(list_transform(list_zip(e.embedding, q.q_embedding),
+               x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
+                  * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))), 6) AS dist
+  FROM embeddings e, q WHERE vec_id <> 0
+),
+-- defined distances only: a corrupt vector's NULL/NaN dist would rank
+-- NULLS-FIRST into the top-15 and poison the elbow
+topk AS (
+  SELECT vec_id, dist FROM scored
+  WHERE dist IS NOT NULL AND isfinite(dist)
+  ORDER BY dist, vec_id LIMIT 15
+),
+diffs AS (
+  SELECT vec_id, dist,
+         ROW_NUMBER() OVER (ORDER BY dist, vec_id) AS rnk,
+         dist - LAG(dist, 1) OVER (ORDER BY dist, vec_id) AS diff
+  FROM topk
+),
+med AS (SELECT quantile_cont(diff, 0.5) AS median_diff FROM diffs),
+flagged AS (
+  SELECT d.vec_id, d.dist, d.rnk,
+         CASE WHEN d.diff > GREATEST(2.5 * m.median_diff, 0.05) THEN 1 ELSE 0 END AS is_cut
+  FROM diffs d, med m
+)
+SELECT vec_id, dist, rnk FROM (
+  SELECT vec_id, dist, rnk,
+         SUM(is_cut) OVER (ORDER BY rnk ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cut_seen
+  FROM flagged
+) t WHERE cut_seen = 0
+""",
+    )
     reg.add("sort_pareto_front", pareto_front, _PARETO_SQL)

@@ -483,111 +483,6 @@ def gopher_filters(spark, sf_dir):
     )
 
 
-def register_round2(reg):
-    """Round-2 additions — registered after every round-1 query (see
-    contract.build_registry ordering note)."""
-    reg.add(
-        "text_winnowing_fingerprints",
-        winnowing_fingerprints,
-        r"""WITH sh AS (
-  SELECT doc_id, i AS pos,
-         words[i + 1] || ' ' || words[i + 2] || ' ' || words[i + 3] AS shingle
-  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words
-        FROM documents WHERE doc_id IS NOT NULL) w,
-       UNNEST(range(0, len(words) - 2)) AS t(i)
-  WHERE len(words) >= 3
-),
-hashed AS (
-  SELECT doc_id, pos,
-         CAST('0x' || substring(md5(shingle), 1, 12) AS BIGINT) AS h
-  FROM sh
-),
-wins AS (
-  SELECT doc_id,
-         MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN CURRENT ROW AND %d FOLLOWING) AS fp
-  FROM hashed
-)
-SELECT DISTINCT doc_id, fp FROM wins""" % (WINNOW_W - 1),
-    )
-    reg.add(
-        "text_repetition_signals",
-        repetition_signals,
-        r"""WITH words AS (
-  SELECT doc_id, w FROM (
-    SELECT doc_id, UNNEST(string_split_regex(lower(trim(text)), '\s+')) AS w
-    FROM documents) t
-  WHERE LENGTH(w) > 0
-),
-wc AS (SELECT doc_id, w, COUNT(*) AS cnt FROM words GROUP BY doc_id, w),
-ws AS (
-  SELECT doc_id,
-         CAST(SUM(cnt) AS BIGINT) AS n_words,
-         CAST(COUNT(*) AS BIGINT) AS n_uniq,
-         CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT) AS dup_occ
-  FROM wc GROUP BY doc_id),
-topw AS (
-  SELECT doc_id, cnt, w,
-         ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY cnt DESC, w DESC) AS rn
-  FROM wc),
-bg AS (
-  SELECT doc_id, LENGTH(text) AS n_chars, ws[i + 1] || ' ' || ws[i + 2] AS bg
-  FROM (SELECT doc_id, text,
-               string_split_regex(lower(trim(text)), '\s+') AS ws
-        FROM documents) t,
-       UNNEST(range(0, len(ws) - 1)) AS u(i)
-  WHERE len(ws) >= 2),
-bgc AS (SELECT doc_id, n_chars, bg, COUNT(*) AS cnt
-        FROM bg GROUP BY doc_id, n_chars, bg),
-bs AS (
-  SELECT doc_id, n_chars,
-         CAST(SUM(cnt) AS BIGINT) AS n_bg,
-         CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT) AS dup_bg_occ
-  FROM bgc GROUP BY doc_id, n_chars),
-topb AS (
-  SELECT doc_id, cnt, bg,
-         ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY cnt DESC, bg DESC) AS rn
-  FROM bgc)
-SELECT w.doc_id, w.n_words,
-       ROUND(w.n_uniq / w.n_words, 6) AS uniq_word_frac,
-       ROUND(tw.cnt / w.n_words, 6) AS top_word_frac,
-       ROUND(w.dup_occ / w.n_words, 6) AS dup_word_frac,
-       ROUND(tb.cnt * LENGTH(tb.bg) / b.n_chars, 6) AS top_bigram_char_frac,
-       ROUND(b.dup_bg_occ / b.n_bg, 6) AS dup_bigram_frac
-FROM ws w
--- null-safe: Spark computes the top word IN-GROUP (max struct), so the
--- merged NULL-doc_id group still gets a value; a NULL-dropping join
--- here would lose it. The bs/topb joins mirror Spark's REAL (and
--- equally NULL-insensitive) left join and stay plain equality.
-LEFT JOIN topw tw ON tw.doc_id IS NOT DISTINCT FROM w.doc_id AND tw.rn = 1
-LEFT JOIN bs b ON b.doc_id = w.doc_id
-LEFT JOIN topb tb ON tb.doc_id = w.doc_id AND tb.rn = 1""",
-    )
-    reg.add(
-        "text_gopher_filters",
-        gopher_filters,
-        f"""WITH m AS ({GOPHER_METRICS_SQL})
-SELECT doc_id, n_words, mean_word_len, symbol_ratio, bullet_frac,
-       ellipsis_frac, alpha_word_frac,
-       CAST(n_words BETWEEN {GOPHER_MIN_WORDS} AND {GOPHER_MAX_WORDS} AS BIGINT)
-         AS f_word_count,
-       CAST(mean_word_len BETWEEN {GOPHER_MIN_MEAN_WLEN} AND {GOPHER_MAX_MEAN_WLEN}
-         AS BIGINT) AS f_mean_word_len,
-       CAST(symbol_ratio <= {GOPHER_MAX_SYMBOL_RATIO} AS BIGINT) AS f_symbol_ratio,
-       CAST(bullet_frac <= {GOPHER_MAX_BULLET_FRAC} AS BIGINT) AS f_bullet_lines,
-       CAST(ellipsis_frac <= {GOPHER_MAX_ELLIPSIS_FRAC} AS BIGINT) AS f_ellipsis_lines,
-       CAST(alpha_word_frac >= {GOPHER_MIN_ALPHA_WORD_FRAC} AS BIGINT) AS f_alpha_words,
-       CAST(n_words BETWEEN {GOPHER_MIN_WORDS} AND {GOPHER_MAX_WORDS}
-            AND mean_word_len BETWEEN {GOPHER_MIN_MEAN_WLEN} AND {GOPHER_MAX_MEAN_WLEN}
-            AND symbol_ratio <= {GOPHER_MAX_SYMBOL_RATIO}
-            AND bullet_frac <= {GOPHER_MAX_BULLET_FRAC}
-            AND ellipsis_frac <= {GOPHER_MAX_ELLIPSIS_FRAC}
-            AND alpha_word_frac >= {GOPHER_MIN_ALPHA_WORD_FRAC} AS BIGINT)
-         AS keep_gopher
-FROM m""",
-    )
-
-
 def search_text_compose(spark, sf_dir):
     """V6: search text = title + ' ' + description + ' ' + text[:500]
     (ref: create_lancedb_index.py:18-44)."""
@@ -711,156 +606,6 @@ def numeric_clean(spark, sf_dir):
     )
 
 
-def register(reg):
-    reg.add(
-        "text_word_count",
-        word_count,
-        r"SELECT doc_id, len(regexp_extract_all(text, '\S+')) AS word_count FROM documents",
-    )
-    reg.add(
-        "text_token_count",
-        token_count_regex,
-        r"SELECT doc_id, len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))"
-        " AS token_count FROM documents",
-    )
-    reg.add(
-        "text_langid",
-        langid_heuristic,
-        rf"""
-SELECT doc_id, n_en, n_de, n_es, n_fr,
-  CASE WHEN n_en >= GREATEST(n_de, n_es, n_fr) THEN 'en'
-       WHEN n_de >= GREATEST(n_es, n_fr) THEN 'de'
-       WHEN n_es >= n_fr THEN 'es'
-       ELSE 'fr' END AS lang_guess
-FROM (
-  -- token-exact stopword counts (not \b regex): Java \b is
-  -- Unicode-aware, RE2 \b is ASCII — see _stop_count
-  SELECT doc_id,
-    CAST(len(list_filter(string_split_regex(lower(text), '\s+'), w -> w IN ({_sql_in(EN_STOP)}))) AS INT) AS n_en,
-    CAST(len(list_filter(string_split_regex(lower(text), '\s+'), w -> w IN ({_sql_in(DE_STOP)}))) AS INT) AS n_de,
-    CAST(len(list_filter(string_split_regex(lower(text), '\s+'), w -> w IN ({_sql_in(ES_STOP)}))) AS INT) AS n_es,
-    CAST(len(list_filter(string_split_regex(lower(text), '\s+'), w -> w IN ({_sql_in(FR_STOP)}))) AS INT) AS n_fr
-  FROM documents) t
-""",
-    )
-    reg.add(
-        "text_quality_score",
-        quality_score,
-        rf"""
-SELECT doc_id, n_chars_m, n_words,
-  ROUND(n_punct / GREATEST(n_chars_m, 1), 6) AS punct_ratio,
-  ROUND(n_digit / GREATEST(n_chars_m, 1), 6) AS digit_ratio,
-  ROUND(n_stop / GREATEST(n_words, 1), 6) AS stop_ratio,
-  ROUND((n_chars_m - n_words + 1) / GREATEST(n_words, 1), 6) AS mean_word_len,
-  CASE WHEN n_chars_m >= 200
-        AND ROUND(n_punct / GREATEST(n_chars_m, 1), 6) < 0.2
-        AND ROUND(n_stop / GREATEST(n_words, 1), 6) > 0.0
-       THEN 1 ELSE 0 END AS keep_flag
-FROM (
-  SELECT doc_id,
-    LENGTH(text) AS n_chars_m,
-    len(regexp_extract_all(text, '\S+')) AS n_words,
-    len(regexp_extract_all(text, '[^\w\s]')) AS n_punct,
-    len(regexp_extract_all(text, '[0-9]')) AS n_digit,
-    CAST(len(list_filter(string_split_regex(lower(text), '\s+'), w -> w IN ({_sql_in(EN_STOP)}))) AS INT) AS n_stop
-  FROM documents) t
-""",
-    )
-    reg.add(
-        "text_fingerprint",
-        fingerprint,
-        r"SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint FROM documents",
-    )
-    reg.add(
-        "text_search_compose",
-        search_text_compose,
-        "SELECT doc_id, concat_ws(' ', source, lang, substring(text, 1, 500)) AS search_text FROM documents",
-    )
-    reg.add(
-        "text_slugify",
-        slugify,
-        r"""SELECT doc_id,
- regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-   substring(text, 1, 40), '/', '_', 'g'), '\s+', '_', 'g'),
-   '[<>:"\\|?*]', '', 'g'), '_+', '_', 'g'), '^_+|_+$', '', 'g') AS slug
-FROM documents""",
-    )
-    license_cases = " ".join(
-        f"WHEN lower(raw_license) = '{k}' THEN '{v}'" for k, v in LICENSE_MAP.items()
-    )
-    reg.add(
-        "func_license_normalize",
-        license_normalize,
-        f"""
-SELECT doc_id, raw_license,
-  CASE {license_cases} ELSE '{LICENSE_DEFAULT}' END AS license
-FROM (
-  SELECT doc_id,
-    CASE WHEN lang='en' THEN 'CC-BY' WHEN lang='fr' THEN 'cc by'
-         WHEN lang='de' THEN 'ODC-ODbL' WHEN lang='es' THEN 'unknown-license'
-         ELSE NULL END AS raw_license
-  FROM documents) t
-""",
-    )
-    reg.add(
-        "func_date_format_iso",
-        date_format_iso,
-        "SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%dT%H:%M:%S+00:00') AS iso_date FROM orders",
-    )
-    reg.add(
-        "func_date_parse_multi",
-        date_parse_multi,
-        "SELECT o_orderkey, strftime(o_orderdate, '%d %b %Y') AS rendered, "
-        "COALESCE(TRY_CAST(try_strptime(strftime(o_orderdate, '%d %b %Y'), '%d/%m/%Y') AS TIMESTAMP), "
-        "TRY_CAST(try_strptime(strftime(o_orderdate, '%d %b %Y'), '%Y-%m-%d') AS TIMESTAMP), "
-        "TRY_CAST(try_strptime(strftime(o_orderdate, '%d %b %Y'), '%d %b %Y') AS TIMESTAMP)) AS parsed "
-        "FROM orders",
-    )
-    reg.add(
-        "func_regexp_extract_date",
-        regexp_extract_date,
-        r"""SELECT event_id,
- 'dump_' || strftime(ts, '%Y-%m-%d') || '_' || CAST(event_id AS VARCHAR) || '.xml' AS filename,
- regexp_extract('dump_' || strftime(ts, '%Y-%m-%d') || '_' || CAST(event_id AS VARCHAR) || '.xml',
-                '(\d{4}-\d{2}-\d{2})', 1) AS file_date
-FROM events""",
-    )
-    reg.add(
-        "func_json_extract",
-        json_extract,
-        # json_valid guard: DuckDB json_extract_string RAISES on malformed
-        # input (e.g. '') where Spark's get_json_object yields NULL.
-        # sql_str_to_bigint: a valid-JSON STRING value (unicode tier
-        # injects {"k": "漢字"}) raises under DuckDB CAST where Spark's
-        # non-ANSI cast yields NULL, and DuckDB TRY_CAST ROUNDS
-        # fractional strings where Spark truncates; identity on clean
-        # integer values. sql_jackson_json: Spark's Jackson parses raw
-        # control chars inside JSON strings where yyjson rejects. The
-        # escaped doc and the extracted string are each bound ONCE in
-        # CTEs — inlining them re-ran replace+json_extract ~7x per row
-        # (review finding).
-        f"""WITH p AS (SELECT event_id, {sql_jackson_json()} AS _p FROM events),
- j AS (SELECT event_id, CASE WHEN json_valid(_p) THEN
-       json_extract_string(_p, '$.k') END AS _k FROM p)
-SELECT event_id, {sql_str_to_bigint("_k")} AS k_value FROM j""",
-    )
-    reg.add(
-        "func_numeric_clean",
-        numeric_clean,
-        # TRY_CAST, not CAST: a NEGATIVE planted p_partkey (extreme-BIGINT
-        # tier) composes a dirty string with an embedded '-' that survives
-        # the token strip ('42-4611686018427387904.75') — Spark's non-ANSI
-        # cast NULLs it, DuckDB CAST raises. TRY_CAST ≡ CAST wherever the
-        # parse succeeds, so this is identity on every parseable value.
-        r"""SELECT p_partkey,
- '£' || CAST(p_size AS VARCHAR) || ',' || CAST(p_partkey AS VARCHAR) || '.75' AS dirty_money,
- TRY_CAST(regexp_replace('£' || CAST(p_size AS VARCHAR) || ',' || CAST(p_partkey AS VARCHAR) || '.75', '[£$€,%\s]', '', 'g') AS DOUBLE) AS clean_money,
- CAST(p_size AS VARCHAR) || '.25 %' AS dirty_pct,
- TRY_CAST(regexp_replace(CAST(p_size AS VARCHAR) || '.25 %', '[£$€,%\s]', '', 'g') AS DOUBLE) AS clean_pct
-FROM part""",
-    )
-
-
 # --------------------------------------------------- corpus statistics (r6)
 
 TFIDF_TOPK = 3  # keywords emitted per document
@@ -965,210 +710,6 @@ def bigram_nll(spark, sf_dir):
     return scored.groupBy("doc_id").agg(
         F.count("*").alias("n_bigrams"),
         davg(F.col("nll"), "avg_nll", dec="decimal(25,4)"),
-    )
-
-
-def register_round6(reg):
-    """Round-6 additions: corpus-statistics quality scoring."""
-    reg.add(
-        "text_tfidf_topk",
-        tfidf_topk,
-        r"""WITH words AS (
-  SELECT doc_id, t.term FROM (
-    SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
-    FROM documents) d, UNNEST(d.ws) AS t(term)
-  WHERE len(t.term) > 0
-),
-tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM words GROUP BY doc_id, term),
-dfreq AS (SELECT term, COUNT(*) AS df
-          FROM (SELECT DISTINCT doc_id, term FROM words) GROUP BY term),
-n AS (SELECT COUNT(*) AS n_docs FROM documents),
-scored AS (
-  SELECT doc_id, term, tf, df,
-         ROUND(tf * ln((n_docs + 1) / (df + 1.0)), 6) AS tfidf
-  FROM tf JOIN dfreq USING (term), n
-),
-ranked AS (
-  SELECT doc_id, term, tf, df, tfidf,
-         ROW_NUMBER() OVER (PARTITION BY doc_id
-                            ORDER BY tfidf DESC, term) AS rnk
-  FROM scored
-)
-SELECT doc_id, rnk, term, tf, df, tfidf FROM ranked WHERE rnk <= 3""",
-    )
-    reg.add(
-        "text_bigram_nll",
-        bigram_nll,
-        rf"""WITH toks AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
-  FROM documents
-  WHERE len(string_split_regex(lower(trim(text)), '\s+')) >= 2
-),
-uni AS (
-  SELECT t.w1, COUNT(*) AS c1
-  FROM toks, UNNEST(toks.ws) AS t(w1) GROUP BY t.w1
-),
-bi AS (
-  SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2
-  FROM toks, UNNEST(range(1, len(ws))) AS t(i)
-),
-big AS (SELECT w1, w2, COUNT(*) AS c12 FROM bi GROUP BY w1, w2),
-vocab AS (SELECT COUNT(*) AS v FROM uni),
-scored AS (
-  SELECT doc_id,
-         ROUND(-ln((c12 + {BIGRAM_SMOOTH_K}) / (c1 + {BIGRAM_SMOOTH_K} * v)), 4) AS nll
-  FROM bi JOIN big USING (w1, w2) JOIN uni USING (w1), vocab
-)
-SELECT doc_id, COUNT(*) AS n_bigrams,
-       CAST(SUM(CAST(nll AS DECIMAL(25,4))) AS DOUBLE) / COUNT(nll) AS avg_nll
-FROM scored GROUP BY doc_id""",
-    )
-    reg.add(
-        "text_token_entropy",
-        token_entropy,
-        r"""WITH words AS (
-  SELECT doc_id, t.term FROM (
-    SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
-    FROM documents) d, UNNEST(d.ws) AS t(term)
-  WHERE len(t.term) > 0
-),
-counts AS (SELECT doc_id, term, COUNT(*) AS cnt FROM words GROUP BY doc_id, term)
-SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_tokens, COUNT(*) AS n_distinct,
-       ROUND(ln(SUM(cnt)) -
-             CAST(SUM(CAST(ROUND(cnt * ln(cnt), 6) AS DECIMAL(25,6))) AS DOUBLE)
-             / SUM(cnt), 6) AS token_entropy
-FROM counts GROUP BY doc_id""",
-    )
-    terms_in = ", ".join(f"'{t}'" for t in BM25_TERMS)
-    reg.add(
-        "text_bm25_topk",
-        bm25_topk,
-        rf"""WITH words AS (
-  SELECT doc_id, t.term FROM (
-    SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
-    FROM documents WHERE doc_id IS NOT NULL) d, UNNEST(d.ws) AS t(term)
-  WHERE len(t.term) > 0
-),
-doclen AS (SELECT doc_id, COUNT(*) AS dl FROM words GROUP BY doc_id),
-stats AS (SELECT CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM doclen),
-n AS (SELECT COUNT(*) AS n_docs FROM documents WHERE doc_id IS NOT NULL),
-tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM words
-       WHERE term IN ({terms_in}) GROUP BY doc_id, term),
-dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-scored AS (
-  SELECT doc_id,
-    ROUND(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-          * (tf * ({BM25_K1} + 1))
-          / (tf + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * dl / avgdl)),
-          6) AS s
-  FROM tf JOIN dfreq USING (term) JOIN doclen USING (doc_id), stats, n
-)
-SELECT doc_id, CAST(SUM(CAST(s AS DECIMAL(25,6))) AS DOUBLE) AS bm25,
-       COUNT(*) AS n_terms_matched
-FROM scored GROUP BY doc_id
-ORDER BY bm25 DESC, doc_id LIMIT {BM25_TOPK}""",
-    )
-    reg.add(
-        "search_inverted_postings",
-        inverted_postings,
-        rf"""WITH words AS (
-  SELECT DISTINCT doc_id, t.term FROM (
-    SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
-    FROM documents WHERE doc_id IS NOT NULL) d, UNNEST(d.ws) AS t(term)
-  WHERE len(t.term) > 0
-)
-SELECT term, COUNT(*) AS df,
-       string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS postings
-FROM words GROUP BY term HAVING COUNT(*) <= {POSTINGS_MAX_DF}""",
-    )
-    reg.add(
-        "func_date_arithmetic",
-        date_arithmetic,
-        "SELECT o_orderkey, CAST(o_orderdate AS DATE) AS d, "
-        "CAST(o_orderdate AS DATE) + 30 AS due_30d, "
-        "CASE WHEN o_orderdate IS NULL THEN NULL ELSE "
-        "CAST(date_trunc('month', CAST(o_orderdate AS DATE)) AS DATE) END AS month_start, "
-        "CAST(quarter(CAST(o_orderdate AS DATE)) AS INT) AS qtr, "
-        "CAST(DATE '1998-12-31' - CAST(o_orderdate AS DATE) AS BIGINT) AS days_to_eoy "
-        "FROM orders",
-    )
-    # replace-after-upper: the JVM's FULL uppercase expands the ligature
-    # code points ﬁ/ﬂ to FI/FL (unicode tier) while DuckDB's simple
-    # mapping leaves them unchanged — post-substituting the SURVIVING
-    # ligatures reproduces the engine; no other pool code point differs
-    # under upper() and ASCII is untouched (identity on clean data)
-    dirty_sql = (
-        "'HTTPS://' || replace(replace(upper(source), 'ﬁ', 'FI'), 'ﬂ', 'FL')"
-        " || '.Example.COM:443//docs//' || "
-        "CAST(doc_id AS VARCHAR) || '/?utm_source=feed&utm_campaign=x&id=' || "
-        "CAST(doc_id AS VARCHAR) || '&fbclid=abc'"
-    )
-    norm_sql = (
-        "lower(regexp_extract({u}, '^([A-Za-z]+)://', 1)) || '://' || "
-        "regexp_replace(lower(regexp_extract(regexp_replace({u}, '^[A-Za-z]+://', ''), '^([^/]+)', 1)), ':443$', '') || "
-        "regexp_replace(regexp_replace(regexp_replace(regexp_replace("
-        "regexp_replace(regexp_replace({u}, '^[A-Za-z]+://', ''), '^[^/]+', ''), "
-        "'//+', '/', 'g'), '(utm_[A-Za-z]+|fbclid)=[^&]*&?', '', 'g'), "
-        "'[?&]+$', ''), '/$', '')"
-    )
-    reg.add(
-        "func_url_normalize",
-        url_normalize,
-        f"SELECT doc_id, {dirty_sql} AS dirty_url, "
-        + norm_sql.format(u=f"({dirty_sql})")
-        + " AS canonical_url FROM documents",
-    )
-    reg.add(
-        "func_string_family",
-        string_function_family,
-        # DuckDB lacks initcap — emulated per word (upper head + lower
-        # tail). The head substitutions mirror the JVM's TITLE-case of a
-        # leading ligature (ﬁ→Fi, ﬂ→Fl, SpecialCasing.txt) which
-        # DuckDB's simple upper() leaves unchanged; identity on ASCII.
-        "SELECT p_partkey, "
-        "array_to_string(list_transform(string_split(p_name, ' '), "
-        "w -> replace(replace(upper(w[1]), 'ﬁ', 'Fi'), 'ﬂ', 'Fl') "
-        "|| lower(w[2:])), ' ') AS title_name, "
-        "lpad(CAST(p_partkey AS VARCHAR), 10, '0') AS padded_key, "
-        "translate(p_name, 'aeiou', '') AS consonants, "
-        "CAST(levenshtein(p_name, translate(p_name, 'aeiou', '')) AS BIGINT) "
-        "AS vowel_distance, "
-        # clamped count, mirroring the engine: see string_function_family
-        "CASE WHEN p_size IS NULL THEN NULL ELSE repeat('*', "
-        f"CAST(LEAST(GREATEST(CAST(p_size AS BIGINT), 0), {SIZE_BAR_MAX}) AS INT)) "
-        "END AS size_bar "
-        "FROM part",
-    )
-    reg.add(
-        "func_variant_json",
-        variant_json_extract,
-        # json_valid guards: DuckDB json_extract_string RAISES on
-        # malformed input where Spark's try_parse_json null-safes it.
-        # sql_str_to_bigint: string-valued k (unicode tier) raises under
-        # CAST where Spark's non-ANSI cast yields NULL, and DuckDB
-        # TRY_CAST rounds fractional strings where Spark truncates;
-        # identity on clean ints. NO sql_jackson_json here, unlike the
-        # get_json_object-backed oracles: the engine side is
-        # try_parse_json (Variant), which is STRICT about raw control
-        # chars exactly like yyjson (probed: NULL on raw-VT JSON where
-        # get_json_object parses it), so bare props already agrees.
-        # CTE-bound extract, computed once per row (review finding).
-        """WITH j AS (SELECT event_id,
-       CASE WHEN json_valid(props) THEN json_extract_string(props, '$.k') END AS _k,
-       CASE WHEN json_valid(props) THEN json_extract_string(props, '$.tag') END AS _tag,
-       (props IS NULL OR NOT json_valid(props)) AS malformed FROM events)
-SELECT event_id, """
-        + sql_str_to_bigint("_k")
-        + """ AS k_value,
-       _tag AS tag_value, malformed FROM j""",
-    )
-    reg.add(
-        "agg_ordered_string_concat",
-        ordered_string_concat,
-        "SELECT o_orderstatus, "
-        "string_agg(o_orderpriority, ',' ORDER BY o_orderpriority) AS priorities "
-        "FROM (SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders) "
-        "GROUP BY o_orderstatus",
     )
 
 
@@ -1488,10 +1029,6 @@ FROM hits, UNNEST(range(1, len(ctxs) + 1)) AS u(i)
 """
 
 
-def register_round6c(reg):
-    reg.add("text_kwic_contexts", kwic_contexts, _KWIC_SQL)
-
-
 # ---------------------------------------------------------------------------
 # Word association: PMI co-occurrence mining
 
@@ -1608,10 +1145,6 @@ SELECT term_a, term_b, n_ab,
 FROM pairs WHERE n_ab >= {PMI_MIN_COOC}
 ORDER BY pmi DESC, term_a, term_b LIMIT 50
 """
-
-
-def register_round7(reg):
-    reg.add("text_cooccur_pmi", cooccur_pmi, _PMI_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1752,10 +1285,6 @@ WHERE FLOOR(dot / (na.norm * nb.norm) * 1000000.0 + 0.5) / 1000000.0
 """
 
 
-def register_round7b(reg):
-    reg.add("text_tfidf_doc_pairs", tfidf_doc_pairs, _TFIDF_PAIRS_SQL)
-
-
 # ---------------------------------------------------------------------------
 # Corpus diagnostics: Zipf's-law fit
 
@@ -1851,5 +1380,456 @@ FROM m
 """
 
 
-def register_round7c(reg):
+def register(reg):
+    reg.add(
+        "text_word_count",
+        word_count,
+        r"SELECT doc_id, len(regexp_extract_all(text, '\S+')) AS word_count FROM documents",
+    )
+    reg.add(
+        "text_token_count",
+        token_count_regex,
+        r"SELECT doc_id, len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))"
+        " AS token_count FROM documents",
+    )
+    reg.add(
+        "text_langid",
+        langid_heuristic,
+        rf"""
+SELECT doc_id, n_en, n_de, n_es, n_fr,
+  CASE WHEN n_en >= GREATEST(n_de, n_es, n_fr) THEN 'en'
+       WHEN n_de >= GREATEST(n_es, n_fr) THEN 'de'
+       WHEN n_es >= n_fr THEN 'es'
+       ELSE 'fr' END AS lang_guess
+FROM (
+  -- token-exact stopword counts (not \b regex): Java \b is
+  -- Unicode-aware, RE2 \b is ASCII — see _stop_count
+  SELECT doc_id,
+    CAST(len(list_filter(string_split_regex(lower(text), '\s+'), w -> w IN ({_sql_in(EN_STOP)}))) AS INT) AS n_en,
+    CAST(len(list_filter(string_split_regex(lower(text), '\s+'), w -> w IN ({_sql_in(DE_STOP)}))) AS INT) AS n_de,
+    CAST(len(list_filter(string_split_regex(lower(text), '\s+'), w -> w IN ({_sql_in(ES_STOP)}))) AS INT) AS n_es,
+    CAST(len(list_filter(string_split_regex(lower(text), '\s+'), w -> w IN ({_sql_in(FR_STOP)}))) AS INT) AS n_fr
+  FROM documents) t
+""",
+    )
+    reg.add(
+        "text_quality_score",
+        quality_score,
+        rf"""
+SELECT doc_id, n_chars_m, n_words,
+  ROUND(n_punct / GREATEST(n_chars_m, 1), 6) AS punct_ratio,
+  ROUND(n_digit / GREATEST(n_chars_m, 1), 6) AS digit_ratio,
+  ROUND(n_stop / GREATEST(n_words, 1), 6) AS stop_ratio,
+  ROUND((n_chars_m - n_words + 1) / GREATEST(n_words, 1), 6) AS mean_word_len,
+  CASE WHEN n_chars_m >= 200
+        AND ROUND(n_punct / GREATEST(n_chars_m, 1), 6) < 0.2
+        AND ROUND(n_stop / GREATEST(n_words, 1), 6) > 0.0
+       THEN 1 ELSE 0 END AS keep_flag
+FROM (
+  SELECT doc_id,
+    LENGTH(text) AS n_chars_m,
+    len(regexp_extract_all(text, '\S+')) AS n_words,
+    len(regexp_extract_all(text, '[^\w\s]')) AS n_punct,
+    len(regexp_extract_all(text, '[0-9]')) AS n_digit,
+    CAST(len(list_filter(string_split_regex(lower(text), '\s+'), w -> w IN ({_sql_in(EN_STOP)}))) AS INT) AS n_stop
+  FROM documents) t
+""",
+    )
+    reg.add(
+        "text_fingerprint",
+        fingerprint,
+        r"SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint FROM documents",
+    )
+    reg.add(
+        "text_search_compose",
+        search_text_compose,
+        "SELECT doc_id, concat_ws(' ', source, lang, substring(text, 1, 500)) AS search_text FROM documents",
+    )
+    reg.add(
+        "text_slugify",
+        slugify,
+        r"""SELECT doc_id,
+ regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
+   substring(text, 1, 40), '/', '_', 'g'), '\s+', '_', 'g'),
+   '[<>:"\\|?*]', '', 'g'), '_+', '_', 'g'), '^_+|_+$', '', 'g') AS slug
+FROM documents""",
+    )
+    license_cases = " ".join(
+        f"WHEN lower(raw_license) = '{k}' THEN '{v}'" for k, v in LICENSE_MAP.items()
+    )
+    reg.add(
+        "func_license_normalize",
+        license_normalize,
+        f"""
+SELECT doc_id, raw_license,
+  CASE {license_cases} ELSE '{LICENSE_DEFAULT}' END AS license
+FROM (
+  SELECT doc_id,
+    CASE WHEN lang='en' THEN 'CC-BY' WHEN lang='fr' THEN 'cc by'
+         WHEN lang='de' THEN 'ODC-ODbL' WHEN lang='es' THEN 'unknown-license'
+         ELSE NULL END AS raw_license
+  FROM documents) t
+""",
+    )
+    reg.add(
+        "func_date_format_iso",
+        date_format_iso,
+        "SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%dT%H:%M:%S+00:00') AS iso_date FROM orders",
+    )
+    reg.add(
+        "func_date_parse_multi",
+        date_parse_multi,
+        "SELECT o_orderkey, strftime(o_orderdate, '%d %b %Y') AS rendered, "
+        "COALESCE(TRY_CAST(try_strptime(strftime(o_orderdate, '%d %b %Y'), '%d/%m/%Y') AS TIMESTAMP), "
+        "TRY_CAST(try_strptime(strftime(o_orderdate, '%d %b %Y'), '%Y-%m-%d') AS TIMESTAMP), "
+        "TRY_CAST(try_strptime(strftime(o_orderdate, '%d %b %Y'), '%d %b %Y') AS TIMESTAMP)) AS parsed "
+        "FROM orders",
+    )
+    reg.add(
+        "func_regexp_extract_date",
+        regexp_extract_date,
+        r"""SELECT event_id,
+ 'dump_' || strftime(ts, '%Y-%m-%d') || '_' || CAST(event_id AS VARCHAR) || '.xml' AS filename,
+ regexp_extract('dump_' || strftime(ts, '%Y-%m-%d') || '_' || CAST(event_id AS VARCHAR) || '.xml',
+                '(\d{4}-\d{2}-\d{2})', 1) AS file_date
+FROM events""",
+    )
+    reg.add(
+        "func_json_extract",
+        json_extract,
+        # json_valid guard: DuckDB json_extract_string RAISES on malformed
+        # input (e.g. '') where Spark's get_json_object yields NULL.
+        # sql_str_to_bigint: a valid-JSON STRING value (unicode tier
+        # injects {"k": "漢字"}) raises under DuckDB CAST where Spark's
+        # non-ANSI cast yields NULL, and DuckDB TRY_CAST ROUNDS
+        # fractional strings where Spark truncates; identity on clean
+        # integer values. sql_jackson_json: Spark's Jackson parses raw
+        # control chars inside JSON strings where yyjson rejects. The
+        # escaped doc and the extracted string are each bound ONCE in
+        # CTEs — inlining them re-ran replace+json_extract ~7x per row
+        # (review finding).
+        f"""WITH p AS (SELECT event_id, {sql_jackson_json()} AS _p FROM events),
+ j AS (SELECT event_id, CASE WHEN json_valid(_p) THEN
+       json_extract_string(_p, '$.k') END AS _k FROM p)
+SELECT event_id, {sql_str_to_bigint("_k")} AS k_value FROM j""",
+    )
+    reg.add(
+        "func_numeric_clean",
+        numeric_clean,
+        # TRY_CAST, not CAST: a NEGATIVE planted p_partkey (extreme-BIGINT
+        # tier) composes a dirty string with an embedded '-' that survives
+        # the token strip ('42-4611686018427387904.75') — Spark's non-ANSI
+        # cast NULLs it, DuckDB CAST raises. TRY_CAST ≡ CAST wherever the
+        # parse succeeds, so this is identity on every parseable value.
+        r"""SELECT p_partkey,
+ '£' || CAST(p_size AS VARCHAR) || ',' || CAST(p_partkey AS VARCHAR) || '.75' AS dirty_money,
+ TRY_CAST(regexp_replace('£' || CAST(p_size AS VARCHAR) || ',' || CAST(p_partkey AS VARCHAR) || '.75', '[£$€,%\s]', '', 'g') AS DOUBLE) AS clean_money,
+ CAST(p_size AS VARCHAR) || '.25 %' AS dirty_pct,
+ TRY_CAST(regexp_replace(CAST(p_size AS VARCHAR) || '.25 %', '[£$€,%\s]', '', 'g') AS DOUBLE) AS clean_pct
+FROM part""",
+    )
+    reg.add(
+        "text_winnowing_fingerprints",
+        winnowing_fingerprints,
+        r"""WITH sh AS (
+  SELECT doc_id, i AS pos,
+         words[i + 1] || ' ' || words[i + 2] || ' ' || words[i + 3] AS shingle
+  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words
+        FROM documents WHERE doc_id IS NOT NULL) w,
+       UNNEST(range(0, len(words) - 2)) AS t(i)
+  WHERE len(words) >= 3
+),
+hashed AS (
+  SELECT doc_id, pos,
+         CAST('0x' || substring(md5(shingle), 1, 12) AS BIGINT) AS h
+  FROM sh
+),
+wins AS (
+  SELECT doc_id,
+         MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
+                      ROWS BETWEEN CURRENT ROW AND %d FOLLOWING) AS fp
+  FROM hashed
+)
+SELECT DISTINCT doc_id, fp FROM wins""" % (WINNOW_W - 1),
+    )
+    reg.add(
+        "text_repetition_signals",
+        repetition_signals,
+        r"""WITH words AS (
+  SELECT doc_id, w FROM (
+    SELECT doc_id, UNNEST(string_split_regex(lower(trim(text)), '\s+')) AS w
+    FROM documents) t
+  WHERE LENGTH(w) > 0
+),
+wc AS (SELECT doc_id, w, COUNT(*) AS cnt FROM words GROUP BY doc_id, w),
+ws AS (
+  SELECT doc_id,
+         CAST(SUM(cnt) AS BIGINT) AS n_words,
+         CAST(COUNT(*) AS BIGINT) AS n_uniq,
+         CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT) AS dup_occ
+  FROM wc GROUP BY doc_id),
+topw AS (
+  SELECT doc_id, cnt, w,
+         ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY cnt DESC, w DESC) AS rn
+  FROM wc),
+bg AS (
+  SELECT doc_id, LENGTH(text) AS n_chars, ws[i + 1] || ' ' || ws[i + 2] AS bg
+  FROM (SELECT doc_id, text,
+               string_split_regex(lower(trim(text)), '\s+') AS ws
+        FROM documents) t,
+       UNNEST(range(0, len(ws) - 1)) AS u(i)
+  WHERE len(ws) >= 2),
+bgc AS (SELECT doc_id, n_chars, bg, COUNT(*) AS cnt
+        FROM bg GROUP BY doc_id, n_chars, bg),
+bs AS (
+  SELECT doc_id, n_chars,
+         CAST(SUM(cnt) AS BIGINT) AS n_bg,
+         CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT) AS dup_bg_occ
+  FROM bgc GROUP BY doc_id, n_chars),
+topb AS (
+  SELECT doc_id, cnt, bg,
+         ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY cnt DESC, bg DESC) AS rn
+  FROM bgc)
+SELECT w.doc_id, w.n_words,
+       ROUND(w.n_uniq / w.n_words, 6) AS uniq_word_frac,
+       ROUND(tw.cnt / w.n_words, 6) AS top_word_frac,
+       ROUND(w.dup_occ / w.n_words, 6) AS dup_word_frac,
+       ROUND(tb.cnt * LENGTH(tb.bg) / b.n_chars, 6) AS top_bigram_char_frac,
+       ROUND(b.dup_bg_occ / b.n_bg, 6) AS dup_bigram_frac
+FROM ws w
+-- null-safe: Spark computes the top word IN-GROUP (max struct), so the
+-- merged NULL-doc_id group still gets a value; a NULL-dropping join
+-- here would lose it. The bs/topb joins mirror Spark's REAL (and
+-- equally NULL-insensitive) left join and stay plain equality.
+LEFT JOIN topw tw ON tw.doc_id IS NOT DISTINCT FROM w.doc_id AND tw.rn = 1
+LEFT JOIN bs b ON b.doc_id = w.doc_id
+LEFT JOIN topb tb ON tb.doc_id = w.doc_id AND tb.rn = 1""",
+    )
+    reg.add(
+        "text_gopher_filters",
+        gopher_filters,
+        f"""WITH m AS ({GOPHER_METRICS_SQL})
+SELECT doc_id, n_words, mean_word_len, symbol_ratio, bullet_frac,
+       ellipsis_frac, alpha_word_frac,
+       CAST(n_words BETWEEN {GOPHER_MIN_WORDS} AND {GOPHER_MAX_WORDS} AS BIGINT)
+         AS f_word_count,
+       CAST(mean_word_len BETWEEN {GOPHER_MIN_MEAN_WLEN} AND {GOPHER_MAX_MEAN_WLEN}
+         AS BIGINT) AS f_mean_word_len,
+       CAST(symbol_ratio <= {GOPHER_MAX_SYMBOL_RATIO} AS BIGINT) AS f_symbol_ratio,
+       CAST(bullet_frac <= {GOPHER_MAX_BULLET_FRAC} AS BIGINT) AS f_bullet_lines,
+       CAST(ellipsis_frac <= {GOPHER_MAX_ELLIPSIS_FRAC} AS BIGINT) AS f_ellipsis_lines,
+       CAST(alpha_word_frac >= {GOPHER_MIN_ALPHA_WORD_FRAC} AS BIGINT) AS f_alpha_words,
+       CAST(n_words BETWEEN {GOPHER_MIN_WORDS} AND {GOPHER_MAX_WORDS}
+            AND mean_word_len BETWEEN {GOPHER_MIN_MEAN_WLEN} AND {GOPHER_MAX_MEAN_WLEN}
+            AND symbol_ratio <= {GOPHER_MAX_SYMBOL_RATIO}
+            AND bullet_frac <= {GOPHER_MAX_BULLET_FRAC}
+            AND ellipsis_frac <= {GOPHER_MAX_ELLIPSIS_FRAC}
+            AND alpha_word_frac >= {GOPHER_MIN_ALPHA_WORD_FRAC} AS BIGINT)
+         AS keep_gopher
+FROM m""",
+    )
+    # corpus-statistics quality scoring
+    reg.add(
+        "text_tfidf_topk",
+        tfidf_topk,
+        r"""WITH words AS (
+  SELECT doc_id, t.term FROM (
+    SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+    FROM documents) d, UNNEST(d.ws) AS t(term)
+  WHERE len(t.term) > 0
+),
+tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM words GROUP BY doc_id, term),
+dfreq AS (SELECT term, COUNT(*) AS df
+          FROM (SELECT DISTINCT doc_id, term FROM words) GROUP BY term),
+n AS (SELECT COUNT(*) AS n_docs FROM documents),
+scored AS (
+  SELECT doc_id, term, tf, df,
+         ROUND(tf * ln((n_docs + 1) / (df + 1.0)), 6) AS tfidf
+  FROM tf JOIN dfreq USING (term), n
+),
+ranked AS (
+  SELECT doc_id, term, tf, df, tfidf,
+         ROW_NUMBER() OVER (PARTITION BY doc_id
+                            ORDER BY tfidf DESC, term) AS rnk
+  FROM scored
+)
+SELECT doc_id, rnk, term, tf, df, tfidf FROM ranked WHERE rnk <= 3""",
+    )
+    reg.add(
+        "text_bigram_nll",
+        bigram_nll,
+        rf"""WITH toks AS (
+  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+  FROM documents
+  WHERE len(string_split_regex(lower(trim(text)), '\s+')) >= 2
+),
+uni AS (
+  SELECT t.w1, COUNT(*) AS c1
+  FROM toks, UNNEST(toks.ws) AS t(w1) GROUP BY t.w1
+),
+bi AS (
+  SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2
+  FROM toks, UNNEST(range(1, len(ws))) AS t(i)
+),
+big AS (SELECT w1, w2, COUNT(*) AS c12 FROM bi GROUP BY w1, w2),
+vocab AS (SELECT COUNT(*) AS v FROM uni),
+scored AS (
+  SELECT doc_id,
+         ROUND(-ln((c12 + {BIGRAM_SMOOTH_K}) / (c1 + {BIGRAM_SMOOTH_K} * v)), 4) AS nll
+  FROM bi JOIN big USING (w1, w2) JOIN uni USING (w1), vocab
+)
+SELECT doc_id, COUNT(*) AS n_bigrams,
+       CAST(SUM(CAST(nll AS DECIMAL(25,4))) AS DOUBLE) / COUNT(nll) AS avg_nll
+FROM scored GROUP BY doc_id""",
+    )
+    reg.add(
+        "text_token_entropy",
+        token_entropy,
+        r"""WITH words AS (
+  SELECT doc_id, t.term FROM (
+    SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+    FROM documents) d, UNNEST(d.ws) AS t(term)
+  WHERE len(t.term) > 0
+),
+counts AS (SELECT doc_id, term, COUNT(*) AS cnt FROM words GROUP BY doc_id, term)
+SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_tokens, COUNT(*) AS n_distinct,
+       ROUND(ln(SUM(cnt)) -
+             CAST(SUM(CAST(ROUND(cnt * ln(cnt), 6) AS DECIMAL(25,6))) AS DOUBLE)
+             / SUM(cnt), 6) AS token_entropy
+FROM counts GROUP BY doc_id""",
+    )
+    terms_in = ", ".join(f"'{t}'" for t in BM25_TERMS)
+    reg.add(
+        "text_bm25_topk",
+        bm25_topk,
+        rf"""WITH words AS (
+  SELECT doc_id, t.term FROM (
+    SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+    FROM documents WHERE doc_id IS NOT NULL) d, UNNEST(d.ws) AS t(term)
+  WHERE len(t.term) > 0
+),
+doclen AS (SELECT doc_id, COUNT(*) AS dl FROM words GROUP BY doc_id),
+stats AS (SELECT CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM doclen),
+n AS (SELECT COUNT(*) AS n_docs FROM documents WHERE doc_id IS NOT NULL),
+tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM words
+       WHERE term IN ({terms_in}) GROUP BY doc_id, term),
+dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
+scored AS (
+  SELECT doc_id,
+    ROUND(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+          * (tf * ({BM25_K1} + 1))
+          / (tf + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * dl / avgdl)),
+          6) AS s
+  FROM tf JOIN dfreq USING (term) JOIN doclen USING (doc_id), stats, n
+)
+SELECT doc_id, CAST(SUM(CAST(s AS DECIMAL(25,6))) AS DOUBLE) AS bm25,
+       COUNT(*) AS n_terms_matched
+FROM scored GROUP BY doc_id
+ORDER BY bm25 DESC, doc_id LIMIT {BM25_TOPK}""",
+    )
+    reg.add(
+        "search_inverted_postings",
+        inverted_postings,
+        rf"""WITH words AS (
+  SELECT DISTINCT doc_id, t.term FROM (
+    SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+    FROM documents WHERE doc_id IS NOT NULL) d, UNNEST(d.ws) AS t(term)
+  WHERE len(t.term) > 0
+)
+SELECT term, COUNT(*) AS df,
+       string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS postings
+FROM words GROUP BY term HAVING COUNT(*) <= {POSTINGS_MAX_DF}""",
+    )
+    reg.add(
+        "func_date_arithmetic",
+        date_arithmetic,
+        "SELECT o_orderkey, CAST(o_orderdate AS DATE) AS d, "
+        "CAST(o_orderdate AS DATE) + 30 AS due_30d, "
+        "CASE WHEN o_orderdate IS NULL THEN NULL ELSE "
+        "CAST(date_trunc('month', CAST(o_orderdate AS DATE)) AS DATE) END AS month_start, "
+        "CAST(quarter(CAST(o_orderdate AS DATE)) AS INT) AS qtr, "
+        "CAST(DATE '1998-12-31' - CAST(o_orderdate AS DATE) AS BIGINT) AS days_to_eoy "
+        "FROM orders",
+    )
+    # replace-after-upper: the JVM's FULL uppercase expands the ligature
+    # code points ﬁ/ﬂ to FI/FL (unicode tier) while DuckDB's simple
+    # mapping leaves them unchanged — post-substituting the SURVIVING
+    # ligatures reproduces the engine; no other pool code point differs
+    # under upper() and ASCII is untouched (identity on clean data)
+    dirty_sql = (
+        "'HTTPS://' || replace(replace(upper(source), 'ﬁ', 'FI'), 'ﬂ', 'FL')"
+        " || '.Example.COM:443//docs//' || "
+        "CAST(doc_id AS VARCHAR) || '/?utm_source=feed&utm_campaign=x&id=' || "
+        "CAST(doc_id AS VARCHAR) || '&fbclid=abc'"
+    )
+    norm_sql = (
+        "lower(regexp_extract({u}, '^([A-Za-z]+)://', 1)) || '://' || "
+        "regexp_replace(lower(regexp_extract(regexp_replace({u}, '^[A-Za-z]+://', ''), '^([^/]+)', 1)), ':443$', '') || "
+        "regexp_replace(regexp_replace(regexp_replace(regexp_replace("
+        "regexp_replace(regexp_replace({u}, '^[A-Za-z]+://', ''), '^[^/]+', ''), "
+        "'//+', '/', 'g'), '(utm_[A-Za-z]+|fbclid)=[^&]*&?', '', 'g'), "
+        "'[?&]+$', ''), '/$', '')"
+    )
+    reg.add(
+        "func_url_normalize",
+        url_normalize,
+        f"SELECT doc_id, {dirty_sql} AS dirty_url, "
+        + norm_sql.format(u=f"({dirty_sql})")
+        + " AS canonical_url FROM documents",
+    )
+    reg.add(
+        "func_string_family",
+        string_function_family,
+        # DuckDB lacks initcap — emulated per word (upper head + lower
+        # tail). The head substitutions mirror the JVM's TITLE-case of a
+        # leading ligature (ﬁ→Fi, ﬂ→Fl, SpecialCasing.txt) which
+        # DuckDB's simple upper() leaves unchanged; identity on ASCII.
+        "SELECT p_partkey, "
+        "array_to_string(list_transform(string_split(p_name, ' '), "
+        "w -> replace(replace(upper(w[1]), 'ﬁ', 'Fi'), 'ﬂ', 'Fl') "
+        "|| lower(w[2:])), ' ') AS title_name, "
+        "lpad(CAST(p_partkey AS VARCHAR), 10, '0') AS padded_key, "
+        "translate(p_name, 'aeiou', '') AS consonants, "
+        "CAST(levenshtein(p_name, translate(p_name, 'aeiou', '')) AS BIGINT) "
+        "AS vowel_distance, "
+        # clamped count, mirroring the engine: see string_function_family
+        "CASE WHEN p_size IS NULL THEN NULL ELSE repeat('*', "
+        f"CAST(LEAST(GREATEST(CAST(p_size AS BIGINT), 0), {SIZE_BAR_MAX}) AS INT)) "
+        "END AS size_bar "
+        "FROM part",
+    )
+    reg.add(
+        "func_variant_json",
+        variant_json_extract,
+        # json_valid guards: DuckDB json_extract_string RAISES on
+        # malformed input where Spark's try_parse_json null-safes it.
+        # sql_str_to_bigint: string-valued k (unicode tier) raises under
+        # CAST where Spark's non-ANSI cast yields NULL, and DuckDB
+        # TRY_CAST rounds fractional strings where Spark truncates;
+        # identity on clean ints. NO sql_jackson_json here, unlike the
+        # get_json_object-backed oracles: the engine side is
+        # try_parse_json (Variant), which is STRICT about raw control
+        # chars exactly like yyjson (probed: NULL on raw-VT JSON where
+        # get_json_object parses it), so bare props already agrees.
+        # CTE-bound extract, computed once per row (review finding).
+        """WITH j AS (SELECT event_id,
+       CASE WHEN json_valid(props) THEN json_extract_string(props, '$.k') END AS _k,
+       CASE WHEN json_valid(props) THEN json_extract_string(props, '$.tag') END AS _tag,
+       (props IS NULL OR NOT json_valid(props)) AS malformed FROM events)
+SELECT event_id, """
+        + sql_str_to_bigint("_k")
+        + """ AS k_value,
+       _tag AS tag_value, malformed FROM j""",
+    )
+    reg.add(
+        "agg_ordered_string_concat",
+        ordered_string_concat,
+        "SELECT o_orderstatus, "
+        "string_agg(o_orderpriority, ',' ORDER BY o_orderpriority) AS priorities "
+        "FROM (SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders) "
+        "GROUP BY o_orderstatus",
+    )
+    reg.add("text_kwic_contexts", kwic_contexts, _KWIC_SQL)
+    reg.add("text_cooccur_pmi", cooccur_pmi, _PMI_SQL)
+    reg.add("text_tfidf_doc_pairs", tfidf_doc_pairs, _TFIDF_PAIRS_SQL)
     reg.add("text_zipf_fit", text_zipf_fit, _ZIPF_SQL)

@@ -639,6 +639,128 @@ def text_token_histogram(spark, sf_dir):
     )
 
 
+# ------------------------------------------------- block-rewrite dedup (r6)
+
+
+def dedup_block_rewrite(spark, sf_dir):
+    """Exact-substring deduplication WITH document rewriting (the Lee
+    et al. deduplicate-text-datasets semantics at BLOCK_W-word
+    granularity): every duplicated 10-word block keeps only its first
+    global occurrence (ordered by doc_id, then block position); all
+    later occurrences are cut and the surviving blocks plus the <10-word
+    tail reassemble into the cleaned text.
+
+    Plan shape for 100 TB: map-only block split, ONE shuffle keyed on
+    the 48-bit block hash for the first-occurrence rank, one keyed
+    re-aggregation per doc to reassemble — text travels exactly twice
+    (to the rank, back to the doc), never through a self-join."""
+    from pyspark.sql import Window as W
+
+    docs = load(spark, sf_dir, "documents")
+    words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    n_blocks = F.floor(F.size(words) / BLOCK_W).cast("int")
+    tail = F.concat_ws(
+        " ", F.slice(words, n_blocks * BLOCK_W + 1, F.size(words) - n_blocks * BLOCK_W)
+    )
+    base = docs.select(
+        "doc_id", words.alias("ws"), n_blocks.alias("nb"), tail.alias("tail")
+    )
+    blocks = base.filter(F.col("nb") > 0).select(
+        "doc_id",
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.col("nb") - 1),
+                lambda i: F.concat_ws(" ", F.slice(F.col("ws"), i * BLOCK_W + 1, BLOCK_W)),
+            )
+        ).alias("idx", "block"),
+    ).withColumn("block_hash", _hash48(F.col("block")))
+    w = W.partitionBy("block_hash").orderBy("doc_id", "idx")
+    kept = (
+        blocks.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").alias("n_kept"),
+            F.array_sort(F.collect_list(F.struct("idx", "block"))).alias("kb"),
+        )
+        .select(
+            "doc_id",
+            "n_kept",
+            F.concat_ws(" ", F.transform("kb", lambda s: s["block"])).alias("kept_text"),
+        )
+    )
+    return (
+        base.join(kept, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.col("nb").cast("bigint").alias("n_blocks"),
+            F.coalesce(F.col("n_kept"), F.lit(0)).alias("n_kept"),
+            F.concat_ws(
+                " ",
+                F.filter(
+                    F.array(F.col("kept_text"), F.col("tail")),
+                    lambda x: x.isNotNull() & (x != ""),
+                ),
+            ).alias("clean_text"),
+        )
+    )
+
+
+MIN_KEEP_CHARS = 200  # quality floor shared with the filter family
+
+
+def corpus_pipeline_summary(spark, sf_dir):
+    """The training-corpus pipeline as ONE declarative plan — exact dedup
+    (keep-first by content fingerprint) → quality floor → deterministic
+    train/val/test assignment → per-split accounting. Each stage is an
+    operator the registry also exposes standalone; composed, Catalyst
+    fuses the fingerprint, the quality predicate, and the split key into
+    a single scan projection, and the only shuffles are the dedup
+    groupBy(fingerprint) and the final 3-row rollup. This is the shape a
+    100 TB curation run actually executes: content hashes and doc ids
+    shuffle, text never moves after the scan."""
+    docs = load(spark, sf_dir, "documents")
+    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
+    with_fp = docs.select(
+        "doc_id",
+        "n_chars",
+        F.regexp_count(F.col("text"), F.lit(r"\S+")).cast("bigint").alias("n_words"),
+        F.md5(norm).alias("fp"),
+    )
+    keep_first = with_fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
+    deduped = with_fp.join(keep_first, ["fp", "doc_id"], "left_semi")
+    kept = deduped.filter(F.col("n_chars") >= MIN_KEEP_CHARS)
+    bucket = _hash48(F.col("doc_id").cast("string")) % 100
+    split = (
+        F.when(bucket < SPLIT_TRAIN_PCT, F.lit("train"))
+        .when(bucket < SPLIT_TRAIN_PCT + SPLIT_VAL_PCT, F.lit("val"))
+        .otherwise(F.lit("test"))
+    )
+    # totals sum through decimal(38,0), then narrow with try_cast:
+    # Spark's long SUM wraps silently on overflow (Java +) — with a
+    # corrupt extreme n_chars the wrapped total is a plausible-looking
+    # WRONG number. decimal(38,0) cannot overflow on any feasible row
+    # count, and try_cast yields NULL when the total is out of bigint
+    # range (defined, detectable) — mirrored by TRY_CAST in the oracle.
+    # try_cast, not cast: under this engine's non-ANSI sessions a plain
+    # decimal→bigint cast WRAPS (Decimal.toLong), and under ANSI it
+    # throws; try_cast is NULL-on-overflow in both modes. Exact and
+    # identical on every in-range total (extreme-BIGINT axis find).
+    return (
+        kept.select(split.alias("split"), "n_chars", "n_words")
+        .groupBy("split")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum(F.col("n_chars").cast("decimal(38,0)"))
+            .try_cast("bigint")
+            .alias("total_chars"),
+            F.sum(F.col("n_words").cast("decimal(38,0)"))
+            .try_cast("bigint")
+            .alias("total_words"),
+        )
+    )
+
+
 def register(reg):
     reg.add(
         "sample_hash_bucket",
@@ -734,77 +856,7 @@ FROM documents""",
        ROUND(COUNT(*) / (SELECT COUNT(*) FROM documents), 6) AS share
 FROM documents GROUP BY 1 ORDER BY bucket""",
     )
-
-
-# ------------------------------------------------- block-rewrite dedup (r6)
-
-
-def dedup_block_rewrite(spark, sf_dir):
-    """Exact-substring deduplication WITH document rewriting (the Lee
-    et al. deduplicate-text-datasets semantics at BLOCK_W-word
-    granularity): every duplicated 10-word block keeps only its first
-    global occurrence (ordered by doc_id, then block position); all
-    later occurrences are cut and the surviving blocks plus the <10-word
-    tail reassemble into the cleaned text.
-
-    Plan shape for 100 TB: map-only block split, ONE shuffle keyed on
-    the 48-bit block hash for the first-occurrence rank, one keyed
-    re-aggregation per doc to reassemble — text travels exactly twice
-    (to the rank, back to the doc), never through a self-join."""
-    from pyspark.sql import Window as W
-
-    docs = load(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    n_blocks = F.floor(F.size(words) / BLOCK_W).cast("int")
-    tail = F.concat_ws(
-        " ", F.slice(words, n_blocks * BLOCK_W + 1, F.size(words) - n_blocks * BLOCK_W)
-    )
-    base = docs.select(
-        "doc_id", words.alias("ws"), n_blocks.alias("nb"), tail.alias("tail")
-    )
-    blocks = base.filter(F.col("nb") > 0).select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.col("nb") - 1),
-                lambda i: F.concat_ws(" ", F.slice(F.col("ws"), i * BLOCK_W + 1, BLOCK_W)),
-            )
-        ).alias("idx", "block"),
-    ).withColumn("block_hash", _hash48(F.col("block")))
-    w = W.partitionBy("block_hash").orderBy("doc_id", "idx")
-    kept = (
-        blocks.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_kept"),
-            F.array_sort(F.collect_list(F.struct("idx", "block"))).alias("kb"),
-        )
-        .select(
-            "doc_id",
-            "n_kept",
-            F.concat_ws(" ", F.transform("kb", lambda s: s["block"])).alias("kept_text"),
-        )
-    )
-    return (
-        base.join(kept, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("nb").cast("bigint").alias("n_blocks"),
-            F.coalesce(F.col("n_kept"), F.lit(0)).alias("n_kept"),
-            F.concat_ws(
-                " ",
-                F.filter(
-                    F.array(F.col("kept_text"), F.col("tail")),
-                    lambda x: x.isNotNull() & (x != ""),
-                ),
-            ).alias("clean_text"),
-        )
-    )
-
-
-def register_round6(reg):
-    """Round-6 additions: rewriting exact-substring dedup."""
+    # rewriting exact-substring dedup
     reg.add(
         "dedup_block_rewrite",
         dedup_block_rewrite,
@@ -845,65 +897,7 @@ SELECT b.doc_id, CAST(b.nb AS BIGINT) AS n_blocks,
        END AS clean_text
 FROM based b LEFT JOIN kept k ON b.doc_id = k.doc_id""",
     )
-
-
-MIN_KEEP_CHARS = 200  # quality floor shared with the filter family
-
-
-def corpus_pipeline_summary(spark, sf_dir):
-    """The training-corpus pipeline as ONE declarative plan — exact dedup
-    (keep-first by content fingerprint) → quality floor → deterministic
-    train/val/test assignment → per-split accounting. Each stage is an
-    operator the registry also exposes standalone; composed, Catalyst
-    fuses the fingerprint, the quality predicate, and the split key into
-    a single scan projection, and the only shuffles are the dedup
-    groupBy(fingerprint) and the final 3-row rollup. This is the shape a
-    100 TB curation run actually executes: content hashes and doc ids
-    shuffle, text never moves after the scan."""
-    docs = load(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    with_fp = docs.select(
-        "doc_id",
-        "n_chars",
-        F.regexp_count(F.col("text"), F.lit(r"\S+")).cast("bigint").alias("n_words"),
-        F.md5(norm).alias("fp"),
-    )
-    keep_first = with_fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    deduped = with_fp.join(keep_first, ["fp", "doc_id"], "left_semi")
-    kept = deduped.filter(F.col("n_chars") >= MIN_KEEP_CHARS)
-    bucket = _hash48(F.col("doc_id").cast("string")) % 100
-    split = (
-        F.when(bucket < SPLIT_TRAIN_PCT, F.lit("train"))
-        .when(bucket < SPLIT_TRAIN_PCT + SPLIT_VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    # totals sum through decimal(38,0), then narrow with try_cast:
-    # Spark's long SUM wraps silently on overflow (Java +) — with a
-    # corrupt extreme n_chars the wrapped total is a plausible-looking
-    # WRONG number. decimal(38,0) cannot overflow on any feasible row
-    # count, and try_cast yields NULL when the total is out of bigint
-    # range (defined, detectable) — mirrored by TRY_CAST in the oracle.
-    # try_cast, not cast: under this engine's non-ANSI sessions a plain
-    # decimal→bigint cast WRAPS (Decimal.toLong), and under ANSI it
-    # throws; try_cast is NULL-on-overflow in both modes. Exact and
-    # identical on every in-range total (extreme-BIGINT axis find).
-    return (
-        kept.select(split.alias("split"), "n_chars", "n_words")
-        .groupBy("split")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.col("n_chars").cast("decimal(38,0)"))
-            .try_cast("bigint")
-            .alias("total_chars"),
-            F.sum(F.col("n_words").cast("decimal(38,0)"))
-            .try_cast("bigint")
-            .alias("total_words"),
-        )
-    )
-
-
-def register_round6b(reg):
-    """Round-6 composed-pipeline addition."""
+    # composed pipeline
     bucket = f"{_sql_hash48('CAST(doc_id AS VARCHAR)')} % 100"
     reg.add(
         "pipeline_corpus_summary",

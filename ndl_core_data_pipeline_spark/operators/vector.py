@@ -820,127 +820,41 @@ def embedding_lsh_near_dup(spark, sf_dir, min_cos: float = EMB_NEAR_DUP_MIN_COS)
     )
 
 
-def register(reg):
-    dot_sql = (
-        "list_sum(list_transform(list_zip({a}, {b}), "
+# DuckDB oracle fragments: each formula is spelled once here and every
+# vector oracle composes them.
+
+
+def _dot_sql(a: str, b: str) -> str:
+    return (
+        f"list_sum(list_transform(list_zip({a}, {b}), "
         "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
     )
-    norm_sql = (
-        "sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
+
+
+def _norm_sql(a: str) -> str:
+    return (
+        f"sqrt(list_sum(list_transform({a}, "
+        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
     )
-    cos_expr = (
-        dot_sql.format(a="e.embedding", b="q.q_emb")
-        + " / ("
-        + norm_sql.format(a="e.embedding")
-        + " * "
-        + norm_sql.format(a="q.q_emb")
-        + ")"
-    )
-    reg.add(
-        "vector_cosine_topk",
-        cosine_topk,
-        "WITH q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0) "
-        f"SELECT vec_id, label, ROUND({cos_expr}, 6) AS cos_sim "
-        "FROM embeddings e, q WHERE vec_id <> 0 "
-        "ORDER BY cos_sim DESC, vec_id, label LIMIT 20",
-    )
-    reg.add(
-        "vector_threshold_labels",
-        threshold_labels,
-        "WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5), "
-        "scored AS ("
-        f"  SELECT q.query_id, e.vec_id, e.label, ROUND({cos_expr}, 6) AS cos_sim "
-        "  FROM embeddings e, q WHERE e.vec_id <> q.query_id), "
-        "ranked AS ("
-        "  SELECT query_id, vec_id, label, cos_sim, "
-        "  ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id, label) AS rnk "
-        "  FROM scored WHERE cos_sim > 0.3) "
-        "SELECT query_id, rnk, vec_id, label, cos_sim FROM ranked WHERE rnk <= 3",
-    )
-    reg.add(
-        "vector_norms",
-        vector_norms,
-        "SELECT vec_id, len(embedding) AS dim, "
-        + "ROUND("
-        + norm_sql.format(a="embedding")
-        + ", 6) AS l2_norm FROM embeddings",
-    )
-    reg.add(
-        "vector_label_centroids",
-        label_centroids,
-        "SELECT label, CAST(i - 1 AS INT) AS pos, "
-        "ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 6) AS centroid_val "
-        "FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i) "
-        "GROUP BY label, CAST(i - 1 AS INT)",
-    )
-    pair_cos = (
-        dot_sql.format(a="a.embedding", b="b.embedding")
-        + " / ("
-        + norm_sql.format(a="a.embedding")
-        + " * "
-        + norm_sql.format(a="b.embedding")
-        + ")"
-    )
-    reg.add(
-        "dedup_embedding_cosine",
-        embedding_cosine_near_dup,
-        "SELECT a.label, a.vec_id AS vec_a, b.vec_id AS vec_b, "
-        f"ROUND({pair_cos}, 6) AS cos_sim "
-        "FROM embeddings a JOIN embeddings b "
-        "ON a.label = b.label AND a.vec_id < b.vec_id "
-        f"WHERE ROUND({pair_cos}, 6) >= {EMB_NEAR_DUP_MIN_COS}",
-    )
-    # shared IVF CTEs: exact-rounded centroids → per-vector nearest cell
-    sq_l2 = (
-        "list_sum(list_transform(list_zip({a}, {b}), "
+
+
+def _cos_sql(a: str, b: str) -> str:
+    return f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})"
+
+
+def _sq_l2_cast_sql(a: str, b: str) -> str:
+    """Squared L2 that casts each left element to DOUBLE."""
+    return (
+        f"list_sum(list_transform(list_zip({a}, {b}), "
         "x -> (CAST(x[1] AS DOUBLE) - x[2]) * (CAST(x[1] AS DOUBLE) - x[2])))"
     )
-    ivf_cte = (
-        "cent AS ("
-        "  SELECT label AS cell_id, CAST(i - 1 AS INT) AS pos, "
-        "  ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 6) AS cval "
-        "  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i) "
-        "  GROUP BY cell_id, pos), "
-        "cent_arr AS ("
-        "  SELECT cell_id, list(cval ORDER BY pos) AS centroid "
-        "  FROM cent GROUP BY cell_id), "
-        "assign AS ("
-        "  SELECT vec_id, cell_id, "
-        + sq_l2.format(a="e.embedding", b="c.centroid")
-        + " AS d2 FROM embeddings e CROSS JOIN cent_arr c), "
-        "best AS ("
-        "  SELECT vec_id, cell_id, d2, "
-        "  ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rn "
-        "  FROM assign)"
-    )
-    reg.add(
-        "vector_ivf_assignments",
-        ivf_cell_assignments,
-        "WITH " + ivf_cte + " "
-        "SELECT vec_id, cell_id, ROUND(d2, 6) AS dist2 FROM best WHERE rn = 1",
-    )
-    reg.add(
-        "vector_ivf_topk",
-        ivf_topk,
-        "WITH " + ivf_cte + ", "
-        "q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0), "
-        "probed AS ("
-        "  SELECT cell_id FROM cent_arr, q "
-        "  ORDER BY " + sq_l2.format(a="q.q_emb", b="centroid") + ", cell_id "
-        f"  LIMIT {IVF_NPROBE}), "
-        "members AS ("
-        "  SELECT vec_id FROM best WHERE rn = 1 "
-        "  AND cell_id IN (SELECT cell_id FROM probed)) "
-        f"SELECT e.vec_id, e.label, ROUND({cos_expr}, 6) AS cos_sim "
-        "FROM embeddings e JOIN members USING (vec_id), q "
-        "WHERE e.vec_id <> 0 "
-        "ORDER BY cos_sim DESC, vec_id, label LIMIT 10",
-    )
-    reg.add(
-        "vector_lsh_buckets",
-        lsh_bucket_assignment,
-        "SELECT vec_id, label, CAST(" + _lsh_bit_terms_sql() + " AS BIGINT) AS lsh_bucket "
-        "FROM (SELECT vec_id, label, embedding, len(embedding) AS dim FROM embeddings) t",
+
+
+def _sq_l2_sql(a: str, b: str) -> str:
+    """Squared L2 over operands that are already DOUBLE."""
+    return (
+        f"list_sum(list_transform(list_zip({a}, {b}), "
+        "x -> (x[1] - x[2]) * (x[1] - x[2])))"
     )
 
 
@@ -953,54 +867,6 @@ def _lsh_bit_terms_sql() -> str:
         f"d -> CAST(embedding[d + 1] AS DOUBLE) * ({hp.format(j=j)}))) > 0 "
         f"THEN 1 ELSE 0 END) * {2**j}"
         for j in range(LSH_SIG_BITS)
-    )
-
-
-def register_round2(reg):
-    """Round-2 additions, registered AFTER every round-1 query (see
-    contract.build_registry): the driver verifies a bounded window per
-    round, and a new query must not displace a never-checked one."""
-    from .dedup import MAX_BUCKET_MEMBERS
-
-    dot_sql = (
-        "list_sum(list_transform(list_zip({a}, {b}), "
-        "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    )
-    norm_sql = (
-        "sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    )
-    pc = (
-        dot_sql.format(a="ea.embedding", b="eb.embedding")
-        + " / ("
-        + norm_sql.format(a="ea.embedding")
-        + " * "
-        + norm_sql.format(a="eb.embedding")
-        + ")"
-    )
-    reg.add(
-        "dedup_embedding_lsh",
-        embedding_lsh_near_dup,
-        f"""WITH sigs AS (
-  SELECT vec_id, CAST({_lsh_bit_terms_sql()} AS BIGINT) AS sig
-  FROM (SELECT vec_id, embedding, len(embedding) AS dim FROM embeddings) t
-),
-banded AS (
-  SELECT vec_id, band, ((sig >> ({LSH_BAND_BITS} * band)) & {LSH_BAND_MASK}) AS bval
-  FROM sigs, (VALUES {", ".join(f"({b})" for b in range(LSH_SIG_BANDS))}) AS bands(band)
-),
-bsize AS (SELECT band, bval, COUNT(*) AS m FROM banded GROUP BY band, bval),
-pairs AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-  FROM banded a
-  JOIN banded b ON a.band = b.band AND a.bval = b.bval AND a.vec_id < b.vec_id
-  JOIN bsize s ON s.band = a.band AND s.bval = a.bval
-  WHERE s.m <= {MAX_BUCKET_MEMBERS}
-)
-SELECT vec_a, vec_b, ROUND({pc}, 6) AS cos_sim
-FROM pairs
-JOIN embeddings ea ON ea.vec_id = vec_a
-JOIN embeddings eb ON eb.vec_id = vec_b
-WHERE ROUND({pc}, 6) >= {EMB_NEAR_DUP_MIN_COS}""",
     )
 
 
@@ -1147,59 +1013,6 @@ def pq_adc_topk(spark, sf_dir):
         # label tiebreak: totality over the output row (r16 lint)
         .orderBy("adc_d2", "vec_id", "label")
         .limit(10)
-    )
-
-
-def register_round6(reg):
-    """Round-6 vector additions: product quantization (encode + ADC scan)."""
-    sq_l2 = (
-        "list_sum(list_transform(list_zip({a}, {b}), "
-        "x -> (CAST(x[1] AS DOUBLE) - x[2]) * (CAST(x[1] AS DOUBLE) - x[2])))"
-    )
-    pq_cte = (
-        "cb AS ("
-        "  SELECT CAST((i - 1) // 8 AS INT) AS m, label AS code, "
-        "  CAST((i - 1) % 8 AS BIGINT) AS spos, "
-        "  ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 6) AS cval "
-        "  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i) "
-        "  WHERE vec_id IS NOT NULL AND label IS NOT NULL "
-        "  GROUP BY m, code, spos), "
-        "cb_arr AS ("
-        "  SELECT m, code, list(cval ORDER BY spos) AS subcent "
-        "  FROM cb GROUP BY m, code), "
-        "sub AS ("
-        "  SELECT vec_id, label, CAST((i - 1) // 8 AS INT) AS m, "
-        "  list(CAST(embedding[i] AS DOUBLE) ORDER BY i) AS subvec "
-        "  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i) "
-        "  WHERE vec_id IS NOT NULL AND label IS NOT NULL "
-        "  GROUP BY vec_id, label, m), "
-        "scored AS ("
-        "  SELECT vec_id, label, s.m AS m, code, "
-        + sq_l2.format(a="s.subvec", b="c.subcent")
-        + "  AS d2 FROM sub s JOIN cb_arr c ON s.m = c.m), "
-        "best AS ("
-        "  SELECT vec_id, label, m, code, d2, "
-        "  ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2, code) AS rn "
-        "  FROM scored)"
-    )
-    reg.add(
-        "vector_pq_codes",
-        pq_codes,
-        "WITH " + pq_cte + " "
-        "SELECT vec_id, m, code, ROUND(d2, 6) AS dist2 FROM best WHERE rn = 1",
-    )
-    reg.add(
-        "vector_pq_adc_topk",
-        pq_adc_topk,
-        "WITH " + pq_cte + ", "
-        "lut AS (SELECT m, code, ROUND(d2, 6) AS qd2 "
-        "        FROM scored WHERE vec_id = 0) "
-        "SELECT b.vec_id, b.label, "
-        "CAST(SUM(CAST(l.qd2 AS DECIMAL(25,6))) AS DOUBLE) AS adc_d2 "
-        "FROM best b JOIN lut l ON b.m = l.m AND b.code = l.code "
-        "WHERE b.rn = 1 AND b.vec_id <> 0 "
-        "GROUP BY b.vec_id, b.label "
-        "ORDER BY adc_d2, vec_id, label LIMIT 10",
     )
 
 
@@ -1722,10 +1535,7 @@ def kmeans_centroids(spark, sf_dir):
     )
 
 
-_KM_SQ = (
-    "list_sum(list_transform(list_zip(e.v, c.centroid), "
-    "x -> (x[1] - x[2]) * (x[1] - x[2])))"
-)
+_KM_SQ = _sq_l2_sql("e.v", "c.centroid")
 
 
 def _km_ctes() -> list[str]:
@@ -1768,10 +1578,6 @@ def _kmeans_oracle_sql() -> str:
         "WITH " + ", ".join(_km_ctes())
         + f" SELECT cell_id, pos, cval AS centroid_val FROM m{last}"
     )
-
-
-def register_round6b(reg):
-    reg.add("vector_kmeans_centroids", kmeans_centroids, _kmeans_oracle_sql())
 
 
 # ------------------------------------------------- IVF-PQ end-to-end search
@@ -2005,10 +1811,6 @@ def ivfpq_adc_search(spark, sf_dir):
 
 def _ivfpq_oracle_sql() -> str:
     n = KMEANS_ITERS
-    sq = (
-        "list_sum(list_transform(list_zip({a}, {b}), "
-        "x -> (x[1] - x[2]) * (x[1] - x[2])))"
-    )
     ctes = _km_ctes() + [
         # final assignment against the trained centroids
         f"af AS (SELECT e.vec_id, c.cell_id, {_KM_SQ} AS d2 "
@@ -2036,7 +1838,7 @@ def _ivfpq_oracle_sql() -> str:
         f"FROM resid, UNNEST(range(1, len(r) + 1)) AS t(i) "
         f"GROUP BY vec_id, label, cell_id, m)",
         "scored AS (SELECT vec_id, label, cell_id, s.m AS m, code, "
-        + sq.format(a="s.subvec", b="c.subcent")
+        + _sq_l2_sql("s.subvec", "c.subcent")
         + " AS d2 FROM rsub s JOIN cba c ON s.m = c.m)",
         "best AS (SELECT vec_id, label, cell_id, m, code, "
         "ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2, code) AS rn "
@@ -2054,7 +1856,7 @@ def _ivfpq_oracle_sql() -> str:
         f"FROM qres, UNNEST(range(1, len(r) + 1)) AS t(i) "
         f"GROUP BY cell_id, m)",
         "lut AS (SELECT cell_id, q.m AS m, code, "
-        + _sql_r6("(" + sq.format(a="q.subvec", b="c.subcent") + ")")
+        + _sql_r6("(" + _sq_l2_sql("q.subvec", "c.subcent") + ")")
         + " AS qd2 FROM qsub q JOIN cba c ON q.m = c.m)",
     ]
     return (
@@ -2067,10 +1869,6 @@ def _ivfpq_oracle_sql() -> str:
         "GROUP BY b.vec_id, b.label, b.cell_id "
         "ORDER BY adc_d2, vec_id, label, b.cell_id LIMIT 10"
     )
-
-
-def register_round7(reg):
-    reg.add("vector_ivfpq_adc_search", ivfpq_adc_search, _ivfpq_oracle_sql())
 
 
 # ------------------------------------------- matryoshka prefix-dim rerank
@@ -2131,45 +1929,26 @@ def matryoshka_prefix_topk(spark, sf_dir):
 
 
 def _mrl_sql() -> str:
-    def dot_norm(a, b):
-        dot = (
-            f"list_sum(list_transform(list_zip({a}, {b}), "
-            f"x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-        )
-        na = (
-            f"sqrt(list_sum(list_transform({a}, "
-            f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-        )
-        nb = (
-            f"sqrt(list_sum(list_transform({b}, "
-            f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-        )
-        return f"({dot} / ({na} * {nb}))"
-
-    pre = dot_norm(
+    pre = _cos_sql(
         f"list_slice(e.embedding, 1, {MRL_PREFIX_DIMS})",
         f"list_slice(q.embedding, 1, {MRL_PREFIX_DIMS})",
     )
-    full = dot_norm("c.embedding", "q.embedding")
+    full = _cos_sql("c.embedding", "q.embedding")
     return f"""
 WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
 scored AS (
   SELECT e.vec_id, e.label, e.embedding,
-         {_sql_r6(pre)} AS pre_cos
+         {_sql_r6(f"({pre})")} AS pre_cos
   FROM embeddings e, q WHERE e.vec_id <> 0
 ),
 cands AS (
   SELECT * FROM scored ORDER BY pre_cos DESC, vec_id, label LIMIT {MRL_CANDIDATES}
 )
 SELECT c.vec_id, c.label, c.pre_cos,
-       {_sql_r6(full)} AS cos_sim
+       {_sql_r6(f"({full})")} AS cos_sim
 FROM cands c, q
 ORDER BY cos_sim DESC, c.vec_id, c.label, c.pre_cos LIMIT 10
 """
-
-
-def register_round7b(reg):
-    reg.add("vector_matryoshka_topk", matryoshka_prefix_topk, _mrl_sql())
 
 
 # ------------------------------------------------- ANN quality evaluation
@@ -2274,26 +2053,9 @@ def ann_recall_report(spark, sf_dir):
 
 
 def _ann_recall_sql() -> str:
-    dot = (
-        "list_sum(list_transform(list_zip(e.embedding, q.q_emb), "
-        "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    )
-    na = (
-        "sqrt(list_sum(list_transform(e.embedding, "
-        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    )
-    nb = (
-        "sqrt(list_sum(list_transform(q.q_emb, "
-        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    )
-    sq = (
-        "list_sum(list_transform(list_zip(q.q_emb, c.centroid), "
-        "x -> (CAST(x[1] AS DOUBLE) - x[2]) * (CAST(x[1] AS DOUBLE) - x[2])))"
-    )
-    asq = (
-        "list_sum(list_transform(list_zip(e.embedding, c.centroid), "
-        "x -> (CAST(x[1] AS DOUBLE) - x[2]) * (CAST(x[1] AS DOUBLE) - x[2])))"
-    )
+    cos = _cos_sql("e.embedding", "q.q_emb")
+    sq = _sq_l2_cast_sql("q.q_emb", "c.centroid")
+    asq = _sq_l2_cast_sql("e.embedding", "c.centroid")
     return f"""
 WITH cent AS (
   SELECT label AS cell_id, list(cval ORDER BY pos) AS centroid FROM (
@@ -2306,7 +2068,7 @@ q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings
       WHERE vec_id < {ANN_RECALL_QUERIES}),
 scored AS (
   SELECT q.query_id, e.vec_id,
-         {_sql_r6(f"{dot} / ({na} * {nb})")} AS cos_sim
+         {_sql_r6(cos)} AS cos_sim
   FROM embeddings e, q WHERE e.vec_id <> q.query_id
 ),
 exact AS (
@@ -2355,5 +2117,178 @@ FROM q LEFT JOIN ncand n USING (query_id) LEFT JOIN hits h USING (query_id)
 """
 
 
-def register_round7c(reg):
+def register(reg):
+    from .dedup import MAX_BUCKET_MEMBERS
+
+    cos_expr = _cos_sql("e.embedding", "q.q_emb")
+    reg.add(
+        "vector_cosine_topk",
+        cosine_topk,
+        "WITH q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0) "
+        f"SELECT vec_id, label, ROUND({cos_expr}, 6) AS cos_sim "
+        "FROM embeddings e, q WHERE vec_id <> 0 "
+        "ORDER BY cos_sim DESC, vec_id, label LIMIT 20",
+    )
+    reg.add(
+        "vector_threshold_labels",
+        threshold_labels,
+        "WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5), "
+        "scored AS ("
+        f"  SELECT q.query_id, e.vec_id, e.label, ROUND({cos_expr}, 6) AS cos_sim "
+        "  FROM embeddings e, q WHERE e.vec_id <> q.query_id), "
+        "ranked AS ("
+        "  SELECT query_id, vec_id, label, cos_sim, "
+        "  ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id, label) AS rnk "
+        "  FROM scored WHERE cos_sim > 0.3) "
+        "SELECT query_id, rnk, vec_id, label, cos_sim FROM ranked WHERE rnk <= 3",
+    )
+    reg.add(
+        "vector_norms",
+        vector_norms,
+        "SELECT vec_id, len(embedding) AS dim, "
+        + "ROUND("
+        + _norm_sql("embedding")
+        + ", 6) AS l2_norm FROM embeddings",
+    )
+    reg.add(
+        "vector_label_centroids",
+        label_centroids,
+        "SELECT label, CAST(i - 1 AS INT) AS pos, "
+        "ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 6) AS centroid_val "
+        "FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i) "
+        "GROUP BY label, CAST(i - 1 AS INT)",
+    )
+    pair_cos = _cos_sql("a.embedding", "b.embedding")
+    reg.add(
+        "dedup_embedding_cosine",
+        embedding_cosine_near_dup,
+        "SELECT a.label, a.vec_id AS vec_a, b.vec_id AS vec_b, "
+        f"ROUND({pair_cos}, 6) AS cos_sim "
+        "FROM embeddings a JOIN embeddings b "
+        "ON a.label = b.label AND a.vec_id < b.vec_id "
+        f"WHERE ROUND({pair_cos}, 6) >= {EMB_NEAR_DUP_MIN_COS}",
+    )
+    # shared IVF CTEs: exact-rounded centroids → per-vector nearest cell
+    ivf_cte = (
+        "cent AS ("
+        "  SELECT label AS cell_id, CAST(i - 1 AS INT) AS pos, "
+        "  ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 6) AS cval "
+        "  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i) "
+        "  GROUP BY cell_id, pos), "
+        "cent_arr AS ("
+        "  SELECT cell_id, list(cval ORDER BY pos) AS centroid "
+        "  FROM cent GROUP BY cell_id), "
+        "assign AS ("
+        "  SELECT vec_id, cell_id, "
+        + _sq_l2_cast_sql("e.embedding", "c.centroid")
+        + " AS d2 FROM embeddings e CROSS JOIN cent_arr c), "
+        "best AS ("
+        "  SELECT vec_id, cell_id, d2, "
+        "  ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rn "
+        "  FROM assign)"
+    )
+    reg.add(
+        "vector_ivf_assignments",
+        ivf_cell_assignments,
+        "WITH " + ivf_cte + " "
+        "SELECT vec_id, cell_id, ROUND(d2, 6) AS dist2 FROM best WHERE rn = 1",
+    )
+    reg.add(
+        "vector_ivf_topk",
+        ivf_topk,
+        "WITH " + ivf_cte + ", "
+        "q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0), "
+        "probed AS ("
+        "  SELECT cell_id FROM cent_arr, q "
+        "  ORDER BY " + _sq_l2_cast_sql("q.q_emb", "centroid") + ", cell_id "
+        f"  LIMIT {IVF_NPROBE}), "
+        "members AS ("
+        "  SELECT vec_id FROM best WHERE rn = 1 "
+        "  AND cell_id IN (SELECT cell_id FROM probed)) "
+        f"SELECT e.vec_id, e.label, ROUND({cos_expr}, 6) AS cos_sim "
+        "FROM embeddings e JOIN members USING (vec_id), q "
+        "WHERE e.vec_id <> 0 "
+        "ORDER BY cos_sim DESC, vec_id, label LIMIT 10",
+    )
+    reg.add(
+        "vector_lsh_buckets",
+        lsh_bucket_assignment,
+        "SELECT vec_id, label, CAST(" + _lsh_bit_terms_sql() + " AS BIGINT) AS lsh_bucket "
+        "FROM (SELECT vec_id, label, embedding, len(embedding) AS dim FROM embeddings) t",
+    )
+    pc = _cos_sql("ea.embedding", "eb.embedding")
+    reg.add(
+        "dedup_embedding_lsh",
+        embedding_lsh_near_dup,
+        f"""WITH sigs AS (
+  SELECT vec_id, CAST({_lsh_bit_terms_sql()} AS BIGINT) AS sig
+  FROM (SELECT vec_id, embedding, len(embedding) AS dim FROM embeddings) t
+),
+banded AS (
+  SELECT vec_id, band, ((sig >> ({LSH_BAND_BITS} * band)) & {LSH_BAND_MASK}) AS bval
+  FROM sigs, (VALUES {", ".join(f"({b})" for b in range(LSH_SIG_BANDS))}) AS bands(band)
+),
+bsize AS (SELECT band, bval, COUNT(*) AS m FROM banded GROUP BY band, bval),
+pairs AS (
+  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+  FROM banded a
+  JOIN banded b ON a.band = b.band AND a.bval = b.bval AND a.vec_id < b.vec_id
+  JOIN bsize s ON s.band = a.band AND s.bval = a.bval
+  WHERE s.m <= {MAX_BUCKET_MEMBERS}
+)
+SELECT vec_a, vec_b, ROUND({pc}, 6) AS cos_sim
+FROM pairs
+JOIN embeddings ea ON ea.vec_id = vec_a
+JOIN embeddings eb ON eb.vec_id = vec_b
+WHERE ROUND({pc}, 6) >= {EMB_NEAR_DUP_MIN_COS}""",
+    )
+    # product quantization (encode + ADC scan)
+    pq_cte = (
+        "cb AS ("
+        "  SELECT CAST((i - 1) // 8 AS INT) AS m, label AS code, "
+        "  CAST((i - 1) % 8 AS BIGINT) AS spos, "
+        "  ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 6) AS cval "
+        "  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i) "
+        "  WHERE vec_id IS NOT NULL AND label IS NOT NULL "
+        "  GROUP BY m, code, spos), "
+        "cb_arr AS ("
+        "  SELECT m, code, list(cval ORDER BY spos) AS subcent "
+        "  FROM cb GROUP BY m, code), "
+        "sub AS ("
+        "  SELECT vec_id, label, CAST((i - 1) // 8 AS INT) AS m, "
+        "  list(CAST(embedding[i] AS DOUBLE) ORDER BY i) AS subvec "
+        "  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i) "
+        "  WHERE vec_id IS NOT NULL AND label IS NOT NULL "
+        "  GROUP BY vec_id, label, m), "
+        "scored AS ("
+        "  SELECT vec_id, label, s.m AS m, code, "
+        + _sq_l2_cast_sql("s.subvec", "c.subcent")
+        + "  AS d2 FROM sub s JOIN cb_arr c ON s.m = c.m), "
+        "best AS ("
+        "  SELECT vec_id, label, m, code, d2, "
+        "  ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2, code) AS rn "
+        "  FROM scored)"
+    )
+    reg.add(
+        "vector_pq_codes",
+        pq_codes,
+        "WITH " + pq_cte + " "
+        "SELECT vec_id, m, code, ROUND(d2, 6) AS dist2 FROM best WHERE rn = 1",
+    )
+    reg.add(
+        "vector_pq_adc_topk",
+        pq_adc_topk,
+        "WITH " + pq_cte + ", "
+        "lut AS (SELECT m, code, ROUND(d2, 6) AS qd2 "
+        "        FROM scored WHERE vec_id = 0) "
+        "SELECT b.vec_id, b.label, "
+        "CAST(SUM(CAST(l.qd2 AS DECIMAL(25,6))) AS DOUBLE) AS adc_d2 "
+        "FROM best b JOIN lut l ON b.m = l.m AND b.code = l.code "
+        "WHERE b.rn = 1 AND b.vec_id <> 0 "
+        "GROUP BY b.vec_id, b.label "
+        "ORDER BY adc_d2, vec_id, label LIMIT 10",
+    )
+    reg.add("vector_kmeans_centroids", kmeans_centroids, _kmeans_oracle_sql())
+    reg.add("vector_ivfpq_adc_search", ivfpq_adc_search, _ivfpq_oracle_sql())
+    reg.add("vector_matryoshka_topk", matryoshka_prefix_topk, _mrl_sql())
     reg.add("vector_ann_recall_report", ann_recall_report, _ann_recall_sql())

@@ -155,86 +155,6 @@ def range_frame_trailing(spark, sf_dir):
     )
 
 
-def register(reg):
-    reg.add(
-        "window_lag_lead_neighbors",
-        lag_lead_neighbors,
-        "SELECT doc_id, source, "
-        "SUBSTRING(LAG(text, 1) OVER w, 1, 30) AS prev_snippet, "
-        "SUBSTRING(LEAD(text, 1) OVER w, 1, 30) AS next_snippet "
-        "FROM documents WINDOW w AS (PARTITION BY source ORDER BY doc_id, text)",
-    )
-    reg.add(
-        "window_first_in_group",
-        first_in_group,
-        "SELECT source, doc_id, n_chars FROM ("
-        "SELECT source, doc_id, n_chars, ROW_NUMBER() OVER "
-        "(PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rn FROM documents"
-        ") t WHERE rn = 1",
-    )
-    reg.add(
-        "window_chunk_index",
-        chunk_index_assignment,
-        "SELECT doc_id, CAST(i AS INT) AS chunk_index, "
-        "SUBSTRING(text, CAST(i AS INT)*400 + 1, 400) AS chunk "
-        "FROM documents, UNNEST(range(0, CAST(CEIL(LENGTH(text)/400.0) AS BIGINT))) AS t(i) "
-        "WHERE LENGTH(text) > 0",
-    )
-    reg.add(
-        "window_sessionize",
-        sessionize_conversations,
-        "WITH flagged AS ("
-        "  SELECT user_id, ts, event_id, value,"
-        "    CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER w <= 1800000000 THEN 0 ELSE 1 END AS is_start"
-        "  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id, value)"
-        "), numbered AS ("
-        # is_start DESC tiebreak (round-17 duprow-interaction find, the
-        # events_debounce class): is_start is a POSITIONAL payload from
-        # pass 1 — within a tie group of key-identical rows exactly the
-        # head can carry 1 — and pass 2's independent re-sort may
-        # interleave the tied rows differently, moving the 1 mid-group
-        # and splitting it across two sessions. Spark computes both
-        # windows in ONE operator over one sort, so the engine is
-        # consistent by construction; flag-first ordering reconstructs
-        # that arrangement exactly.
-        "  SELECT *, SUM(is_start) OVER (PARTITION BY user_id ORDER BY ts, event_id, value, is_start DESC "
-        "    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id FROM flagged"
-        ") SELECT user_id, CAST(session_id AS BIGINT) AS session_id, "
-        "MIN(ts) AS session_start, MAX(ts) AS session_end, "
-        "COUNT(*) AS n_events, "
-        + sql_dsum("value")
-        + " AS session_value FROM numbered GROUP BY user_id, session_id",
-    )
-    reg.add(
-        "window_ranking_family",
-        ranking_family,
-        "SELECT c_custkey, c_nationkey, "
-        "RANK() OVER w AS rnk, DENSE_RANK() OVER w AS drnk, NTILE(4) OVER w AS quartile "
-        "FROM customer WINDOW w AS "
-        "(PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey)",
-    )
-    reg.add(
-        "window_running_sum",
-        running_sum_frame,
-        "SELECT o_custkey, o_orderkey, "
-        "CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) OVER "
-        "(PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey, o_totalprice "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total "
-        "FROM orders",
-    )
-    reg.add(
-        "window_range_frame",
-        range_frame_trailing,
-        "SELECT o_custkey, o_orderkey, "
-        "CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) OVER w AS DOUBLE) "
-        "AS trailing_30d_total, "
-        "COUNT(*) OVER w AS trailing_30d_orders "
-        "FROM orders WINDOW w AS "
-        "(PARTITION BY o_custkey ORDER BY CAST(epoch(o_orderdate) AS BIGINT) "
-        f"RANGE BETWEEN {30 * 86400} PRECEDING AND CURRENT ROW)",
-    )
-
-
 def distribution_family(spark, sf_dir):
     """Engine surface: percent_rank / cume_dist per nation — the relative-
     position companions to `window_ranking_family`. Integer-ratio doubles
@@ -247,30 +167,6 @@ def distribution_family(spark, sf_dir):
         "c_nationkey",
         F.percent_rank().over(w).alias("pct_rank"),
         F.cume_dist().over(w).alias("cume"),
-    )
-
-
-def register_round6(reg):
-    """Round-6 window addition: distribution functions."""
-    reg.add(
-        "window_distribution_family",
-        distribution_family,
-        "SELECT c_custkey, c_nationkey, "
-        "percent_rank() OVER w AS pct_rank, "
-        "cume_dist() OVER w AS cume "
-        "FROM customer WINDOW w AS (PARTITION BY c_nationkey "
-        "ORDER BY c_acctbal DESC, c_custkey)",
-    )
-    reg.add(
-        "window_gaps_islands",
-        gaps_and_islands,
-        "WITH days AS (SELECT DISTINCT o_custkey, CAST(o_orderdate AS DATE) AS d "
-        "FROM orders), "
-        "isl AS (SELECT o_custkey, d, d - CAST(ROW_NUMBER() OVER ("
-        "PARTITION BY o_custkey ORDER BY d) AS INT) AS island FROM days) "
-        "SELECT o_custkey, MIN(d) AS streak_start, MAX(d) AS streak_end, "
-        "COUNT(*) AS streak_days FROM isl GROUP BY o_custkey, island "
-        "HAVING COUNT(*) >= 2",
     )
 
 
@@ -368,10 +264,6 @@ FROM events
 """
 
 
-def register_round6b(reg):
-    reg.add("window_distributed_prefix_sum", distributed_prefix_sum, _PREFIX_SQL)
-
-
 ROLL_N = 7  # trailing rows per frame (current + 6 preceding)
 
 
@@ -451,5 +343,104 @@ FROM f
 """
 
 
-def register_round7(reg):
+def register(reg):
+    reg.add(
+        "window_lag_lead_neighbors",
+        lag_lead_neighbors,
+        "SELECT doc_id, source, "
+        "SUBSTRING(LAG(text, 1) OVER w, 1, 30) AS prev_snippet, "
+        "SUBSTRING(LEAD(text, 1) OVER w, 1, 30) AS next_snippet "
+        "FROM documents WINDOW w AS (PARTITION BY source ORDER BY doc_id, text)",
+    )
+    reg.add(
+        "window_first_in_group",
+        first_in_group,
+        "SELECT source, doc_id, n_chars FROM ("
+        "SELECT source, doc_id, n_chars, ROW_NUMBER() OVER "
+        "(PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rn FROM documents"
+        ") t WHERE rn = 1",
+    )
+    reg.add(
+        "window_chunk_index",
+        chunk_index_assignment,
+        "SELECT doc_id, CAST(i AS INT) AS chunk_index, "
+        "SUBSTRING(text, CAST(i AS INT)*400 + 1, 400) AS chunk "
+        "FROM documents, UNNEST(range(0, CAST(CEIL(LENGTH(text)/400.0) AS BIGINT))) AS t(i) "
+        "WHERE LENGTH(text) > 0",
+    )
+    reg.add(
+        "window_sessionize",
+        sessionize_conversations,
+        "WITH flagged AS ("
+        "  SELECT user_id, ts, event_id, value,"
+        "    CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER w <= 1800000000 THEN 0 ELSE 1 END AS is_start"
+        "  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id, value)"
+        "), numbered AS ("
+        # is_start DESC tiebreak (round-17 duprow-interaction find, the
+        # events_debounce class): is_start is a POSITIONAL payload from
+        # pass 1 — within a tie group of key-identical rows exactly the
+        # head can carry 1 — and pass 2's independent re-sort may
+        # interleave the tied rows differently, moving the 1 mid-group
+        # and splitting it across two sessions. Spark computes both
+        # windows in ONE operator over one sort, so the engine is
+        # consistent by construction; flag-first ordering reconstructs
+        # that arrangement exactly.
+        "  SELECT *, SUM(is_start) OVER (PARTITION BY user_id ORDER BY ts, event_id, value, is_start DESC "
+        "    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id FROM flagged"
+        ") SELECT user_id, CAST(session_id AS BIGINT) AS session_id, "
+        "MIN(ts) AS session_start, MAX(ts) AS session_end, "
+        "COUNT(*) AS n_events, "
+        + sql_dsum("value")
+        + " AS session_value FROM numbered GROUP BY user_id, session_id",
+    )
+    reg.add(
+        "window_ranking_family",
+        ranking_family,
+        "SELECT c_custkey, c_nationkey, "
+        "RANK() OVER w AS rnk, DENSE_RANK() OVER w AS drnk, NTILE(4) OVER w AS quartile "
+        "FROM customer WINDOW w AS "
+        "(PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey)",
+    )
+    reg.add(
+        "window_running_sum",
+        running_sum_frame,
+        "SELECT o_custkey, o_orderkey, "
+        "CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) OVER "
+        "(PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey, o_totalprice "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total "
+        "FROM orders",
+    )
+    reg.add(
+        "window_range_frame",
+        range_frame_trailing,
+        "SELECT o_custkey, o_orderkey, "
+        "CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) OVER w AS DOUBLE) "
+        "AS trailing_30d_total, "
+        "COUNT(*) OVER w AS trailing_30d_orders "
+        "FROM orders WINDOW w AS "
+        "(PARTITION BY o_custkey ORDER BY CAST(epoch(o_orderdate) AS BIGINT) "
+        f"RANGE BETWEEN {30 * 86400} PRECEDING AND CURRENT ROW)",
+    )
+    # distribution functions
+    reg.add(
+        "window_distribution_family",
+        distribution_family,
+        "SELECT c_custkey, c_nationkey, "
+        "percent_rank() OVER w AS pct_rank, "
+        "cume_dist() OVER w AS cume "
+        "FROM customer WINDOW w AS (PARTITION BY c_nationkey "
+        "ORDER BY c_acctbal DESC, c_custkey)",
+    )
+    reg.add(
+        "window_gaps_islands",
+        gaps_and_islands,
+        "WITH days AS (SELECT DISTINCT o_custkey, CAST(o_orderdate AS DATE) AS d "
+        "FROM orders), "
+        "isl AS (SELECT o_custkey, d, d - CAST(ROW_NUMBER() OVER ("
+        "PARTITION BY o_custkey ORDER BY d) AS INT) AS island FROM days) "
+        "SELECT o_custkey, MIN(d) AS streak_start, MAX(d) AS streak_end, "
+        "COUNT(*) AS streak_days FROM isl GROUP BY o_custkey, island "
+        "HAVING COUNT(*) >= 2",
+    )
+    reg.add("window_distributed_prefix_sum", distributed_prefix_sum, _PREFIX_SQL)
     reg.add("window_rolling_stats", rolling_stats, _ROLL_SQL)

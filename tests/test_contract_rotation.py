@@ -4,6 +4,9 @@ CORRECTNESS_r*.json records rather than a hand-kept list."""
 
 from __future__ import annotations
 
+import ast
+import os
+
 import pytest
 
 from ndl_core_data_pipeline_spark import contract
@@ -44,12 +47,7 @@ def test_forced_lead_then_stalest():
     backed = [n for n in tail if n in reg.oracles]
     bare = [n for n in tail if n not in reg.oracles]
     assert tail == backed + bare
-    def effective(n):
-        # _DEFER_NEW queries sort as if last-green in round 2 (see contract)
-        g = last.get(n, 0)
-        return max(g, 2) if n in contract._DEFER_NEW else g
-
-    ranks = [effective(n) for n in backed]
+    ranks = [last.get(n, 0) for n in backed]
     assert ranks == sorted(ranks)
 
 
@@ -60,17 +58,11 @@ def test_driver_window_is_all_oracle_backed():
     names = list(reg.queries)
     window = names[:50]
     assert all(n in reg.oracles for n in window)
-    # and the window is exactly the 50 stalest oracle-backed queries by
-    # EFFECTIVE staleness (deferred-new queries rank as round-2 green)
+    # and the window is exactly the 50 stalest oracle-backed queries
     last = contract._last_green_rounds()
     backed = [n for n in names if n in reg.oracles]
-
-    def effective(n):
-        g = last.get(n, 0)
-        return max(g, 2) if n in contract._DEFER_NEW else g
-
-    worst_in_window = max(effective(n) for n in window)
-    best_outside = min(effective(n) for n in backed[50:])
+    worst_in_window = max(last.get(n, 0) for n in window)
+    best_outside = min(last.get(n, 0) for n in backed[50:])
     assert worst_in_window <= best_outside
 
 
@@ -98,7 +90,7 @@ def test_steady_state_window_is_exactly_the_50_stalest():
     last = contract._last_green_rounds()
     backed = [n for n in reg.queries if n in reg.oracles]
     never_checked = [n for n in backed if last.get(n, 0) == 0]
-    if contract._active_pins() or contract._DEFER_NEW or never_checked:
+    if contract._active_pins() or never_checked:
         pytest.skip("not steady state: pins or never-checked queries present")
     window = backed[:50]
     boundary = max(last[n] for n in window)
@@ -136,3 +128,40 @@ def test_every_query_name_documented():
     docs = (root / "SURVEY.md").read_text() + (root / "COVERAGE.md").read_text()
     missing = [n for n in contract.queries() if n not in docs]
     assert not missing, f"undocumented queries: {missing}"
+
+
+def test_each_operator_module_registers_once():
+    """Structure lint (static, AST): every operator module registers its
+    queries in ONE register(reg), and build_registry loops over exactly the
+    modules that define one — a module missing from the loop would
+    silently drop all its queries from the driver contract."""
+    pkg = os.path.dirname(os.path.abspath(contract.__file__))
+    ops = os.path.join(pkg, "operators")
+    defines_register = set()
+    for fn in sorted(os.listdir(ops)):
+        if not fn.endswith(".py"):
+            continue
+        with open(os.path.join(ops, fn), encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), fn)
+        names = [
+            n.name
+            for n in tree.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        assert not [n for n in names if n.startswith("register_")], fn
+        assert names.count("register") <= 1, fn
+        if "register" in names:
+            defines_register.add(fn[: -len(".py")])
+
+    with open(contract.__file__, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    build = next(
+        n
+        for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "build_registry"
+    )
+    loops = [n for n in ast.walk(build) if isinstance(n, ast.For)]
+    assert len(loops) == 1, "build_registry registers from a single loop"
+    looped = [e.id for e in loops[0].iter.elts]
+    assert len(looped) == len(set(looped))
+    assert set(looped) == defines_register
