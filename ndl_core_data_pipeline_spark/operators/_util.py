@@ -11,7 +11,6 @@ deterministic and needs no special handling.
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import Column, functions as F
@@ -761,12 +760,7 @@ def corpus_checkpoint(df):
     EXECUTOR-LOCAL — a lost executor loses them with no lineage past the
     truncation, and the persisted footprint is corpus-sized, unlike the
     engine's other checkpoints (per-doc stats, K×dim tables). That trade
-    is right for this engine's single-node bench/oracle contract; a
-    large fault-sensitive deployment can set SPARK_GRAFT_NO_CORPUS_CKPT=1
-    to fall back to lineage recompute (results identical, the shared
-    subtree just re-executes per consumer)."""
-    if os.environ.get("SPARK_GRAFT_NO_CORPUS_CKPT"):
-        return df
+    is right for this engine's single-node bench/oracle contract."""
     return df.localCheckpoint(eager=False)
 
 

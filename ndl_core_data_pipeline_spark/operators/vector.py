@@ -36,6 +36,10 @@ def _norm(a):
     )
 
 
+def _cos(a, b):
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
 def cosine_topk(spark, sf_dir):
     """V3/O3: brute-force cosine top-k against the vec_id=0 query vector
     (ref: eu_theme_classifier.py:28-43 cos_sim + argsort; FAISS flat search
@@ -43,9 +47,7 @@ def cosine_topk(spark, sf_dir):
     plans TakeOrderedAndProject for the limit."""
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-    cos = _dot(F.col("embedding"), F.col("q_emb")) / (
-        _norm(F.col("embedding")) * _norm(F.col("q_emb"))
-    )
+    cos = _cos(F.col("embedding"), F.col("q_emb"))
     return (
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -66,9 +68,7 @@ def threshold_labels(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    cos = _dot(F.col("embedding"), F.col("q_emb")) / (
-        _norm(F.col("embedding")) * _norm(F.col("q_emb"))
-    )
+    cos = _cos(F.col("embedding"), F.col("q_emb"))
     scored = (
         emb.crossJoin(F.broadcast(queries))
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -350,9 +350,7 @@ def ivf_topk(spark, sf_dir):
         F.broadcast(probed), "cell_id", "left_semi"
     )
     cand = emb.join(members, "vec_id", "left_semi").filter(F.col("vec_id") != 0)
-    cos = _dot(F.col("embedding"), F.col("q_emb")) / (
-        _norm(F.col("embedding")) * _norm(F.col("q_emb"))
-    )
+    cos = _cos(F.col("embedding"), F.col("q_emb"))
     return (
         cand.crossJoin(F.broadcast(q))
         .select("vec_id", "label", F.round(cos, 6).alias("cos_sim"))
@@ -1421,16 +1419,6 @@ def _cent_lookup(cents, id_col: str, id_sql_type: str):
     return F.expr(expr)
 
 
-def _km_d2(v_col, c_col):
-    """Squared L2 as a sequential left fold — bit-identical to the
-    oracle's list_sum(list_transform(list_zip(...)))."""
-    return F.aggregate(
-        F.zip_with(v_col, c_col, lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-
-
 def _kmeans_means(emb, cents_rows):
     """One Lloyd round from driver-held centroid rows: Arrow-native
     map-side argmin assignment (_nearest_arrow — no join, no broadcast
@@ -1767,7 +1755,7 @@ def ivfpq_adc_search(spark, sf_dir):
         emb.filter(F.col("vec_id") == 0)
         .crossJoin(F.broadcast(cents))
         .select(
-            "cell_id", _km_d2(F.col("v"), F.col("centroid")).alias("d2")
+            "cell_id", _sq_l2(F.col("v"), F.col("centroid")).alias("d2")
         )
         .orderBy("d2", "cell_id")
         .limit(IVFPQ_NPROBE)
@@ -1896,9 +1884,7 @@ def matryoshka_prefix_topk(spark, sf_dir):
         F.col("embedding").alias("q_emb"),
         F.slice("embedding", 1, MRL_PREFIX_DIMS).alias("q_pre"),
     )
-    pre_cos = _dot(F.slice("embedding", 1, MRL_PREFIX_DIMS), F.col("q_pre")) / (
-        _norm(F.slice("embedding", 1, MRL_PREFIX_DIMS)) * _norm(F.col("q_pre"))
-    )
+    pre_cos = _cos(F.slice("embedding", 1, MRL_PREFIX_DIMS), F.col("q_pre"))
     cands = (
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -1916,9 +1902,7 @@ def matryoshka_prefix_topk(spark, sf_dir):
         .orderBy(F.desc("pre_cos"), "vec_id", "label")
         .limit(MRL_CANDIDATES)
     )
-    full_cos = _dot(F.col("embedding"), F.col("q_emb")) / (
-        _norm(F.col("embedding")) * _norm(F.col("q_emb"))
-    )
+    full_cos = _cos(F.col("embedding"), F.col("q_emb"))
     return (
         cands.select(
             "vec_id", "label", "pre_cos", round6_det(full_cos).alias("cos_sim")
@@ -1980,9 +1964,7 @@ def ann_recall_report(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
     )
-    cos = _dot(F.col("embedding"), F.col("q_emb")) / (
-        _norm(F.col("embedding")) * _norm(F.col("q_emb"))
-    )
+    cos = _cos(F.col("embedding"), F.col("q_emb"))
     # scored feeds BOTH the exact subtree and the approx rerank — cache
     # it so the corpus-wide cosine scan runs once (cents is cheap; this
     # is the expensive side)

@@ -16,7 +16,7 @@ lag/lead over (origin, chunk_index) — no collect() anywhere, and the
 heavy side (the corpus) is never moved except the k winners.
 
 The exact and LSH tiers hold no vector math of their own: the cosine
-folds are operators/vector's _dot/_norm, and the LSH index (lsh_index)
+fold is operators/vector's _cos, and the LSH index (lsh_index)
 and its query probe (ann_topk) both sign vectors with
 vector._lsh_band_values, so a query always lands in the bucket its own
 vector was indexed under. The MLlib k-means IVF pair (ivf_index/
@@ -29,10 +29,9 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 
 from .operators.vector import (
     _arr_dlit,
-    _dot,
+    _cos,
     _lsh_band_values,
     _lsh_bands_arrow,
-    _norm,
     _passthrough,
     embedding_dim,
     hyperplane_matrix,
@@ -54,7 +53,7 @@ def cosine_topk(
     """Exact cosine top-k against a literal query vector. Emits
     (id, cos_sim, distance) with distance = 1 - cosine."""
     q = F.expr(_arr_dlit(query_vec))
-    cos = _dot(F.col(vec_col), q) / (_norm(F.col(vec_col)) * _norm(q))
+    cos = _cos(F.col(vec_col), q)
     return (
         corpus.select(F.col(id_col), cos.alias("cos_sim"))
         .withColumn("distance", 1.0 - F.col("cos_sim"))

@@ -41,25 +41,14 @@ _HASH_INPUTS = (
     # of completed sweep work.
     "scripts/_sweeplib.py",
     "scripts/gen_scale.py",
-    "scripts/nulls_sweep.py",
+    "scripts/sweep.py",
     "scripts/order_sweep.py",
     "scripts/width_sweep.py",
     "scripts/config_sweep.py",
     "scripts/empty_sweep.py",
     "scripts/asym_empty_sweep.py",
-    "scripts/unicode_sweep.py",
     "scripts/oracle_stability_sweep.py",
     "scripts/forced_distributed_sweep.py",
-    "scripts/skew_sweep.py",
-    "scripts/nonfinite_sweep.py",
-    "scripts/nullheavy_sweep.py",
-    "scripts/bigint_sweep.py",
-    "scripts/timestamp_sweep.py",
-    "scripts/duprow_sweep.py",
-    "scripts/compound_sweep.py",
-    "scripts/sf_parity_sweep.py",
-    "scripts/duprow_compound_sweep.py",
-    "scripts/double_extreme_sweep.py",
     "scripts/ann_recall_floor.py",
 )
 
@@ -127,23 +116,6 @@ def save_results(path: str, results: dict) -> None:
         json.dump(out, fh, indent=1)
 
 
-def _drop_non_ascii_rows(df):
-    """Rows whose string cells are all-ASCII (NULLs kept). Used by the
-    ascii_subset fallback for oracle-inexpressible queries."""
-
-    if df.empty:
-        # df.apply on a 0-row frame would collapse it to 0 COLUMNS,
-        # turning an agreeing empty result into a spurious
-        # column-mismatch verdict (review finding)
-        return df, 0
-
-    def _bad(v):
-        return isinstance(v, str) and not v.isascii()
-
-    mask = df.apply(lambda row: any(_bad(v) for v in row), axis=1)
-    return df[~mask], int(mask.sum())
-
-
 # Queries whose result multiset is too large to driver-collect at
 # volumetric scales (sf1+): routed through tests.oracle.checksum_compare
 # (per-key count + dual order-insensitive hash sums, oracle side streamed
@@ -169,30 +141,14 @@ def parity_sweep(
     out: str,
     only=frozenset(),
     redo: bool = False,
-    ascii_subset: dict | None = None,
     checksum: dict | None = None,
     sql_overrides: dict | None = None,
 ) -> int:
     """Full-registry Spark-vs-DuckDB parity run against `data_dir`,
-    checkpointed per query into `out` (tree-stamped, resumable). Shared
-    by nulls_sweep.py and unicode_sweep.py — the loop is identical, only
-    the fixture differs (r13 review: triplicated scaffolds drift).
-
-    ``ascii_subset`` maps query names to a REASON string for queries
-    whose full result is oracle-inexpressible on multibyte input (e.g.
-    DuckDB 1.x levenshtein is byte-based where the engine's is
-    code-point). For those, both result sets are compared after dropping
-    rows containing any non-ASCII string cell; the entry records the
-    weaker check and the dropped-row counts so certification shows the
-    exemption rather than a silent pass. Unequal dropped-row counts
-    FAIL (r14 ADVICE: a multibyte-confined cardinality bug would
-    otherwise certify ok) UNLESS the exemption value is a dict with
-    ``allow_count_mismatch: True`` — for queries where the divergent
-    semantics legitimately changes the multibyte row COUNT itself (the
-    fuzzy join emits a pair whose code-point distance meets the
-    threshold while its byte distance does not, so the engine drops
-    more multibyte rows than the oracle ever had). Returns the number
-    of failing queries.
+    checkpointed per query into `out` (tree-stamped, resumable). Every
+    fixture axis in sweep.py runs through this one loop; only the
+    fixture and the extras differ. Returns the number of failing
+    queries.
 
     ``checksum`` maps query names to digest-key column lists: those
     queries compare via tests.oracle.checksum_compare (aggregate digest,
@@ -206,9 +162,8 @@ def parity_sweep(
     import __spark_entry__ as contract
     from pyspark.sql import SparkSession
 
-    from tests.oracle import checksum_compare, compare, duckdb_conn, run_compare
+    from tests.oracle import checksum_compare, run_compare
 
-    ascii_subset = ascii_subset or {}
     checksum = checksum or {}
     sql_overrides = sql_overrides or {}
 
@@ -227,42 +182,7 @@ def parity_sweep(
             continue
         t0 = time.monotonic()
         try:
-            if name in ascii_subset:
-                exemption = ascii_subset[name]
-                allow_mismatch = False
-                if isinstance(exemption, dict):
-                    allow_mismatch = bool(exemption.get("allow_count_mismatch"))
-                    exemption = exemption["reason"]
-                a = queries[name](spark, data_dir).toPandas()
-                con = duckdb_conn(data_dir)
-                try:
-                    b = con.execute(oracles[name]).df()
-                finally:
-                    con.close()
-                a2, na = _drop_non_ascii_rows(a)
-                b2, nb = _drop_non_ascii_rows(b)
-                problems = compare(a2, b2)
-                # equal dropped-row counts is an invariant the subset
-                # check still owes: a divergence confined to multibyte
-                # rows (engine emits pairs the oracle omits, or vice
-                # versa) drops DIFFERENT counts per side yet compares
-                # equal on the ascii remainder (r14 ADVICE). Queries
-                # whose exemption DECLARES the mismatch (the divergent
-                # semantics changes the multibyte row count itself)
-                # record it without failing.
-                if na != nb and not allow_mismatch:
-                    problems = problems + [
-                        f"multibyte-row count mismatch: spark dropped "
-                        f"{na}, oracle dropped {nb}"
-                    ]
-                results[name] = {
-                    "ok": not problems,
-                    "problems": problems,
-                    "ascii_subset_only": exemption,
-                    "count_mismatch_declared": allow_mismatch,
-                    "dropped_rows": {"spark": na, "oracle": nb},
-                }
-            elif name in checksum and oracles.get(name) is not None:
+            if name in checksum and oracles.get(name) is not None:
                 tm: dict = {}
                 problems = checksum_compare(
                     spark, name, queries[name], oracles[name], data_dir,

@@ -15,8 +15,7 @@ deterministic, so drift means a code change, not noise):
   mean recall@10 >= 0.40, min recall@10 >= 0.15, and every query must
   scan a non-empty candidate set.
 
-Usage: python scripts/ann_recall_floor.py [--dir .scale/sf1]
-         [--out .scale/ann_recall_sf1.json]
+Usage: python scripts/ann_recall_floor.py [--out .scale/ann_recall_sf1.json]
 """
 
 from __future__ import annotations
@@ -37,13 +36,12 @@ FLOORS = {"mean_recall": 0.60, "min_recall": 0.40}
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--dir", default=".scale/sf1")
     ap.add_argument("--out", default=".scale/ann_recall_sf1.json")
     args = ap.parse_args()
 
-    from sf_parity_sweep import ensure_sf_dataset
+    from sweep import ensure
 
-    ensure_sf_dataset(args.dir, 10)
+    sf_dir = ensure("sf1")
 
     import __spark_entry__ as contract
     from pyspark.sql import SparkSession, functions as F
@@ -56,7 +54,7 @@ def main() -> None:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    df = contract.queries()["vector_ann_recall_report"](spark, args.dir)
+    df = contract.queries()["vector_ann_recall_report"](spark, sf_dir)
     row = df.agg(
         F.avg("recall_at_k").alias("mean_recall"),
         F.min("recall_at_k").alias("min_recall"),

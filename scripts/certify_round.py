@@ -40,6 +40,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from sweep import AXES  # noqa: E402
+
 BASELINE_CORE_TOTAL = 31.8  # BASELINE.md: 18 headliners, sf0.1, best-of-2
 
 # any ALL-CAPS round-numbered artifact (BENCH/CORRECTNESS/ORDER/
@@ -48,8 +50,11 @@ BASELINE_CORE_TOTAL = 31.8  # BASELINE.md: 18 headliners, sf0.1, best-of-2
 # very round it was introduced) plus the bench detail record
 ROUND_ARTIFACT_RE = re.compile(r"^[A-Z_]+_r\d+\.json$|^bench_detail\.json$")
 
+# the fixture-axis parity gates come from sweep.AXES (run with
+# python scripts/sweep.py --axis NAME); the rest are harness variants
+# with their own runners, plus the recipe-less seed-B dirty sweep
 SWEEP_FILES = {
-    "dirty parity (seed A)": ".scale/nulls_sweep.json",
+    **{row.label: row.checkpoint for row in AXES.values()},
     "dirty parity (seed B)": ".scale/nulls_sweep_b.json",
     "order invariance (seed A)": ".scale/order_sweep.json",
     "order invariance (seed B)": ".scale/order_sweep_b.json",
@@ -57,16 +62,8 @@ SWEEP_FILES = {
     "config invariance": ".scale/config_sweep.json",
     "empty-input totality": ".scale/empty_sweep.json",
     "asymmetric-empty totality": ".scale/asym_empty_sweep.json",
-    "unicode text parity": ".scale/unicode_sweep.json",
     "oracle stability": ".scale/oracle_stability.json",
     "forced-distributed oracle parity": ".scale/forced_distributed_sweep.json",
-    "hot-key skew parity": ".scale/skew_sweep.json",
-    "non-finite doubles parity": ".scale/nonfinite_sweep.json",
-    # round 16: the r15 escalation probe promoted to a certified gate
-    # (30% NULL density, seed 7121) and the three-axis compound fixture
-    # (hotkey 50% -> unicode 5% -> nulls 30% on one copy)
-    "null-heavy parity (30%)": ".scale/nullheavy_sweep.json",
-    "compound hot+unicode+null parity": ".scale/compound_sweep.json",
     # arrival-order invariance ON the compound fixture (the plain order
     # sweep's 2%-dirty base cannot form compound-scale tie groups — the
     # r16 sessionize find was exactly this blind spot). Runner:
@@ -74,61 +71,14 @@ SWEEP_FILES = {
     #     --shuffled .scale/compound_shuffled0.01 --seed 424242 \
     #     --out .scale/order_compound_sweep.json
     "order invariance (compound base)": ".scale/order_compound_sweep.json",
-    # round 16 (post-close continuation): the extreme-BIGINT probe made
-    # a certified gate — in-width integer extremes with the id contract
-    # held (gen_scale.inject_bigint_extremes). Runner:
-    #   python scripts/bigint_sweep.py
-    "extreme-BIGINT parity": ".scale/bigint_sweep.json",
-    # round 16 (post-close continuation): extreme temporal magnitudes —
-    # year 1 / year 9999 / Gregorian-gap / pre-epoch microseconds.
-    # Runner: python scripts/timestamp_sweep.py
-    "extreme-timestamp parity": ".scale/timestamp_sweep.json",
-    # round 16 (post-close continuation): 30% duplicate-content rows
-    # under fresh ids (the retry/re-crawl shape; the id contract makes
-    # byte-exact id collisions out of domain — see inject_duprows).
-    # Runner: python scripts/duprow_sweep.py
-    "duplicate-row parity": ".scale/duprow_sweep.json",
-    # round 17: extreme finite double magnitudes, promoted from the r16
-    # ad-hoc probe (EXTREME_r16.json, 197/221 where all 24 residuals
-    # were the comparator's absolute-tolerance band) once the 2-ULP
-    # relative band landed. Runner: python scripts/double_extreme_sweep.py
-    "extreme-double parity": ".scale/double_extreme_sweep.json",
-    # round 17: whole-registry volumetric parity at sf1 (100x the
-    # driver's correctness gate) — promoted from the r16 one-off
-    # attestation (PARITY_SF1_r16.json, 218/221 with declared residuals)
-    # to a standing gate once the comparator gained the 2-ULP relative
-    # float band and the aggregate-checksum tier for O(n²) results.
-    # Runner: python scripts/sf_parity_sweep.py  (~35 min)
-    "volumetric parity (sf1)": ".scale/sf1_parity.json",
-    # round 17: ANN recall-quality floor at sf1 (the report was always
-    # oracle-exact; this gates the recall VALUES — mean >= 0.40,
-    # min >= 0.15, pinned from the deterministic measurement).
+    # ANN recall-quality floor at sf1 (the report was always
+    # oracle-exact; this gates the recall VALUES against pinned floors).
     # Runner: python scripts/ann_recall_floor.py
     "ANN recall floor (sf1)": ".scale/ann_recall_sf1.json",
-    # round 17: batch-equals-stream twin pins on the hostile fixtures
-    # (first run found two real stateful_funnel bugs). Runner:
-    #   SPARK_GRAFT_HOSTILE_TWINS=1 SPARK_GRAFT_NULLS_SWEEP=1 \
-    #     pytest tests/test_streaming_parity.py \
-    #       tests/test_streaming.py -k 'matches_batch' ; then record
-    #   via the save_results snippet in scripts/collect_r17_artifacts.py
+    # batch-equals-stream twin pins on the hostile fixtures (first run
+    # found two real stateful_funnel bugs).
+    # Runner: python scripts/run_hostile_twins.py
     "hostile streaming twins": ".scale/hostile_twins.json",
-    # round 18 (VERDICT r17 item 4): the two r17 escalation probes that
-    # found real bugs (the q9 exact-integer class; the flag-resort
-    # oracle class) become standing gates — history shows probes that
-    # found bugs keep finding them at higher densities.
-    # Runners: python scripts/probe_dblextreme5.py
-    #          python scripts/duprow_compound_sweep.py
-    "extreme-double parity (5% escalation)": ".scale/dblextreme5_sweep.json",
-    "duprow-interaction parity": ".scale/duprow_compound_sweep.json",
-    # round 19 (VERDICT r18 item 3): the sf3 volumetric probe becomes a
-    # standing gate now that its five r18 residuals are closed (the two
-    # collect-tier monsters are checksum-routed, the pagerank oracle is
-    # CTE-materialized, theta/pack get a run-alone window). Runs LAST
-    # and ALONE — concurrent battery lanes starve the DuckDB oracle of
-    # memory at this scale (r18: 63 malloc failures, none semantic).
-    # Runner: python scripts/sf_parity_sweep.py --dir .scale/sf3 \
-    #           --mult 30 --out .scale/sf3_parity.json
-    "volumetric parity (sf3)": ".scale/sf3_parity.json",
 }
 
 # nested {outer: {inner: {ok: ...}}} checkpoint shapes
@@ -332,14 +282,6 @@ def step_sweeps(report: dict) -> bool:
         else:
             n_ok = sum(1 for r in data.values() if r.get("ok"))
             out[label] = f"{n_ok}/{len(data)}"
-            # a weakened (ascii-subset-only) pass must be VISIBLE in
-            # certification, not folded into the plain ok count
-            # (review finding)
-            subset = sorted(
-                n for n, r in data.items() if r.get("ascii_subset_only")
-            )
-            if subset:
-                out[label] += f" (ascii-subset-only: {subset})"
             ok = ok and n_ok == len(data)
     report["sweeps"] = out
     return ok
@@ -438,7 +380,6 @@ def main() -> None:
     )
     args = ap.parse_args()
     if args.verify_stamp:
-        sys.path.insert(0, os.path.join(REPO, "scripts"))
         verify_stamp(
             args.round,
             args.out or os.path.join(REPO, ".scale", f"certify_r{args.round}.json"),
@@ -456,7 +397,6 @@ def main() -> None:
     # certification is visible as a stamp mismatch instead of silently
     # post-dating the "frozen tree" (the r15
     # test_turkish_i_casing_agrees_without_locale case)
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
     from _sweeplib import engine_tree_hash
 
     report["engine_tree"] = engine_tree_hash()

@@ -12,7 +12,7 @@ registry for it.
 
 Inputs: the NULL-injected dirty copy (ties are far more likely with
 injected duplicate/empty values than on clean data) and a row-shuffled
-re-write of it. Resumable like nulls_sweep.py.
+re-write of it. Resumable like sweep.py.
 
 Usage: python scripts/order_sweep.py [--out .scale/order_sweep.json]
                                      [--base .scale/nulls0.01]

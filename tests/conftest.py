@@ -5,7 +5,11 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+# the fixture table (sweep.AXES, sweep.ensure) and the harness-variant
+# sweep helpers the tiers share
+sys.path.insert(0, os.path.join(_REPO, "scripts"))
 
 from ndl_core_data_pipeline_spark.session import get_spark
 from ndl_core_data_pipeline_spark.streaming.protoshim import (
@@ -40,65 +44,3 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_medium():
     return SF_MEDIUM
-
-
-# NULL/NaN/''-injected copy of every driver table (scripts/gen_scale.py
-# --nulls). Shared by the registry-wide dirty sweep (test_nulls_parity)
-# and the streaming-twin dirty runs (test_streaming) so both tiers read
-# the SAME dataset. Built on first use; survives across runs on disk.
-NULLS_DIR = os.environ.get(
-    "SPARK_GRAFT_NULLS_SF_DIR",
-    os.path.join(os.path.dirname(os.path.dirname(__file__)), ".scale", "nulls0.01"),
-)
-
-
-def ensure_dirty_dataset() -> str:
-    if not os.path.exists(os.path.join(NULLS_DIR, "MANIFEST.json")):
-        sys.path.insert(
-            0,
-            os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"),
-        )
-        from gen_scale import inject_nulls
-
-        # clean source configurable (ADVICE r11: a hardcoded absolute
-        # path blocked running the sweep with testdata elsewhere)
-        base = os.environ.get("SPARK_GRAFT_SF_BASE", "/root/testdata/sf0.01")
-        inject_nulls(base, NULLS_DIR)
-    return NULLS_DIR
-
-
-# Round-17 (verdict item 5): the batch≡stream twin-equality pins run on
-# the three hostile fixtures that found the last 30 batch bugs —
-# null-heavy (30% NULL, seed 7121), compound (hotkey 50% → unicode 5% →
-# nulls 30%), and duplicate-row (30% payload-identical rows, fresh ids).
-# Each builds once via its sweep's own ensure function (same recipe +
-# manifest staleness rules as the registry sweeps) so twins and batch
-# sweeps read the SAME bytes.
-def ensure_hostile_dataset(kind: str) -> str:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    base = os.environ.get("SPARK_GRAFT_SF_BASE", "/root/testdata/sf0.01")
-    root = os.path.join(repo, ".scale")
-    if kind == "nullheavy":
-        from nullheavy_sweep import ensure_nullheavy_dataset
-
-        d = os.path.join(root, "nullheavy0.01")
-        ensure_nullheavy_dataset(base, d)
-    elif kind == "compound":
-        from compound_sweep import ensure_compound_dataset
-
-        d = os.path.join(root, "compound0.01")
-        ensure_compound_dataset(base, d)
-    elif kind == "duprow":
-        from duprow_sweep import ensure_duprow_dataset
-
-        d = os.path.join(root, "duprow0.01")
-        ensure_duprow_dataset(base, d)
-    elif kind == "duprow_compound":
-        from duprow_compound_sweep import ensure_duprow_compound_dataset
-
-        d = os.path.join(root, "duprow_compound0.01")
-        ensure_duprow_compound_dataset(base, d)
-    else:
-        raise ValueError(f"unknown hostile fixture kind {kind!r}")
-    return d

@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from ndl_core_data_pipeline_spark.operators import dedup
 from ndl_core_data_pipeline_spark.operators.vector import (
-    _km_d2,
     _pq_codebooks,
     _pq_filtered,
     _sq_l2,
@@ -95,7 +94,7 @@ def argmin_cell(v_col):
         F.transform(
             "cs",
             lambda c: F.struct(
-                _km_d2(v_col, c["centroid"]).alias("d2"),
+                _sq_l2(v_col, c["centroid"]).alias("d2"),
                 c["cell_id"].alias("cell_id"),
             ),
         )

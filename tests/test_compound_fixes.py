@@ -1,7 +1,7 @@
 """Pin tests for the six round-16 compound-sweep divergences.
 
 The first compound-dirty probe (hot keys 50% × unicode 5% × NULLs 30%
-on one sf0.01 copy, scripts/compound_sweep.py) found six cross-engine
+on one sf0.01 copy, `sweep.py --axis compound`) found six cross-engine
 gaps that every SINGLE-axis certified tier had passed — each needs the
 interaction (hot-key mass duplication × high NULL density) to
 materialize. Each test reconstructs the interaction shape on a tiny

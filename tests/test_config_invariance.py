@@ -22,19 +22,15 @@ for these four — all are read at query planning time).
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
 
 import __spark_entry__ as contract
+import sweep
+from config_sweep import CONFIGS  # single source of truth
 
-from .conftest import ensure_dirty_dataset
 from .oracle import compare
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(_REPO, "scripts"))
-
-from config_sweep import CONFIGS  # noqa: E402  (single source of truth)
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_NULLS_SWEEP"),
@@ -46,7 +42,7 @@ QUERIES = contract.queries()
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_is_execution_config_invariant(spark, name):
-    base = ensure_dirty_dataset()
+    base = sweep.ensure("nulls")
     touched: set[str] = set()
     for confs in CONFIGS.values():
         touched.update(confs)
@@ -98,7 +94,7 @@ _CAL_ORACLES = sorted(n for n, sql in ORACLES.items() if _CAL_RE.search(sql))
 def test_oracle_is_duckdb_timezone_invariant(name):
     from .oracle import _canon, duckdb_conn
 
-    base = ensure_dirty_dataset()
+    base = sweep.ensure("nulls")
     frames = []
     for tz in (None, "Asia/Tokyo"):
         con = duckdb_conn(base)

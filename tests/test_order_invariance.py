@@ -18,17 +18,15 @@ Batch runner with resume: scripts/order_sweep.py.
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
 
 import __spark_entry__ as contract
+import sweep
 
-from .conftest import ensure_dirty_dataset
 from .oracle import compare
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(_REPO, "scripts"))
 
 pytestmark = pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_NULLS_SWEEP"),
@@ -45,7 +43,7 @@ SHUFFLED_DIR = os.environ.get(
 
 @pytest.fixture(scope="session")
 def order_dirs():
-    base = ensure_dirty_dataset()
+    base = sweep.ensure("nulls")
     if not os.path.exists(os.path.join(SHUFFLED_DIR, "MANIFEST.json")):
         from order_sweep import build_shuffled
 

@@ -1,7 +1,7 @@
 """Pre-fix-failing pins for the round-17 finds.
 
-Two sources: (a) the rebuilt extreme-double gate (scripts/
-double_extreme_sweep.py) re-adjudicated the 24 r16 "comparator-band"
+Two sources: (a) the rebuilt extreme-double gate (`scripts/sweep.py
+--axis double_extreme`) re-adjudicated the 24 r16 "comparator-band"
 residuals under the new 2-ULP relative tolerance and exposed five REAL
 divergences the absolute-tolerance noise had masked; (b) the duprow
 interaction probe (hotkey × duprows × nulls) found the positional-flag

@@ -1,12 +1,9 @@
 """r20 pins for the driver-side memo caches (VERDICT r19 item 8 /
 ADVICE r19): prior-application entries are evicted, the split cache
 keys on the plan shape (a repartitioned df must not inherit a bare
-scan's memoized count), and the corpus-checkpoint gate falls back to
-lineage recompute when set."""
+scan's memoized count)."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
@@ -56,32 +53,6 @@ def test_split_cache_does_not_mix_plan_shapes(spark, sf_small):
     # and the two shapes occupy distinct cache entries
     shapes = {k[1] for k in _util._SPLIT_CACHE}
     assert len(shapes) == 2
-
-
-def test_corpus_checkpoint_gate_falls_back_to_lineage(spark, sf_small):
-    docs = nio.load(spark, sf_small, "documents").select("text")
-    os.environ["SPARK_GRAFT_NO_CORPUS_CKPT"] = "1"
-    try:
-        assert _util.corpus_checkpoint(docs) is docs
-    finally:
-        del os.environ["SPARK_GRAFT_NO_CORPUS_CKPT"]
-    ck = _util.corpus_checkpoint(docs)
-    assert ck is not docs
-    assert ck.count() == docs.count()
-
-
-def test_corpus_checkpoint_gate_keeps_results_identical(spark, sf_small):
-    """The gated fallback must not change any query's rows — spot-check
-    the heaviest gated path (ivfpq) end to end."""
-    from ndl_core_data_pipeline_spark.operators import vector as V
-
-    base = {tuple(r) for r in V.ivfpq_adc_search(spark, sf_small).collect()}
-    os.environ["SPARK_GRAFT_NO_CORPUS_CKPT"] = "1"
-    try:
-        gated = {tuple(r) for r in V.ivfpq_adc_search(spark, sf_small).collect()}
-    finally:
-        del os.environ["SPARK_GRAFT_NO_CORPUS_CKPT"]
-    assert base == gated
 
 
 def test_union_find_numpy_matches_per_edge_reference():

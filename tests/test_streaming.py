@@ -428,19 +428,17 @@ def twin_sf_dir(request, sf_small):
         return sf_small
     import os
 
+    import sweep
+
     if request.param == "dirty":
         if not os.environ.get("SPARK_GRAFT_NULLS_SWEEP"):
             pytest.skip("set SPARK_GRAFT_NULLS_SWEEP=1 for dirty-events twin runs")
-        from .conftest import ensure_dirty_dataset
-
-        return ensure_dirty_dataset()
+        return sweep.ensure("nulls")
     if not os.environ.get("SPARK_GRAFT_HOSTILE_TWINS"):
         pytest.skip(
             "set SPARK_GRAFT_HOSTILE_TWINS=1 for hostile-fixture twin runs"
         )
-    from .conftest import ensure_hostile_dataset
-
-    return ensure_hostile_dataset(request.param)
+    return sweep.ensure(request.param)
 
 
 def test_debounced_stream_matches_batch(spark, tmp_path, twin_sf_dir):

@@ -47,9 +47,9 @@ def twin_dirs(request, tmp_path_factory, sf_small):
             pytest.skip(
                 "set SPARK_GRAFT_HOSTILE_TWINS=1 for hostile-fixture twin runs"
             )
-        from .conftest import ensure_hostile_dataset
+        import sweep
 
-        sf_dir = ensure_hostile_dataset(request.param)
+        sf_dir = sweep.ensure(request.param)
     # the file stream source requires a directory; stage the events file
     d = tmp_path_factory.mktemp(f"events_landing_{request.param}")
     shutil.copy(f"{sf_dir}/events.parquet", d / "events.parquet")
