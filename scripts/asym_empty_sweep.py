@@ -45,8 +45,8 @@ from ndl_core_data_pipeline_spark.io import TABLES  # noqa: E402
 
 def build_asym_datasets(base: str, root: str) -> dict[str, str]:
     """One dir per table: all tables copied from base, that table
-    zero-rowed. Rebuilds a dir when its manifest is missing/stale
-    (empty_sweep's manifest pattern)."""
+    zero-rowed. Rebuilds a dir when its manifest is missing or differs
+    from the wanted one (sweep.ensure's rule)."""
     import pyarrow.parquet as pq
 
     dirs = {}

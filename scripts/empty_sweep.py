@@ -27,7 +27,6 @@ Usage: python scripts/empty_sweep.py [--base /root/testdata/sf0.001]
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import traceback
@@ -40,30 +39,15 @@ from ndl_core_data_pipeline_spark.io import TABLES  # noqa: E402
 
 
 def build_empty(base: str, out: str) -> None:
+    """Zero-row copy of every engine table. Rebuilt on every run (ten
+    schema-only files), so a table added to the engine never meets a
+    stale fixture and fails as a false totality defect."""
     import pyarrow.parquet as pq
 
     os.makedirs(out, exist_ok=True)
     for t in TABLES:
         src = pq.read_table(os.path.join(base, f"{t}.parquet"))
         pq.write_table(src.slice(0, 0), os.path.join(out, f"{t}.parquet"))
-    with open(os.path.join(out, "MANIFEST.json"), "w") as fh:
-        json.dump(
-            {"base": base, "mode": "empty", "rows": 0, "tables": list(TABLES)}, fh
-        )
-
-
-def ensure_empty_dataset(base: str, out: str) -> None:
-    """Build the fixture if missing OR if its manifest's table list no
-    longer matches the engine's (a table added after the fixture was
-    built would otherwise fail every query with file-not-found,
-    misreported as a totality defect)."""
-    manifest = os.path.join(out, "MANIFEST.json")
-    if os.path.exists(manifest):
-        with open(manifest) as fh:
-            if json.load(fh).get("tables") == list(TABLES):
-                return
-        print(f"rebuilding {out}: manifest table list is stale", flush=True)
-    build_empty(base, out)
 
 
 def main() -> None:
@@ -75,7 +59,7 @@ def main() -> None:
     ap.add_argument("--redo", action="store_true")
     args = ap.parse_args()
 
-    ensure_empty_dataset(args.base, args.dir)
+    build_empty(args.base, args.dir)
 
     import __spark_entry__ as contract
     from pyspark.sql import SparkSession

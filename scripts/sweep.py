@@ -24,8 +24,9 @@ Axes:
   duprow_compound  hotkey -> duprow -> nullheavy-density nulls, fresh seeds
   sf1, sf3         gen_scale synthesis at 10x / 30x sf0.1 (checksum tier)
 
-The base is SPARK_GRAFT_SF_BASE (default /root/testdata/sf0.01); the
-sf rows scale gen_scale's own source (SPARK_GRAFT_BASE_SF_DIR).
+The base is SPARK_GRAFT_SF_BASE (default: the sf0.01 tables listed in
+TESTDATA.md); the sf rows scale gen_scale's own source
+(SPARK_GRAFT_BASE_SF_DIR).
 
 Usage: python scripts/sweep.py --axis NAME [--only name1,name2] [--redo]
 """
@@ -188,7 +189,7 @@ def recipe(row: Axis) -> dict:
             params["snippet_pool"] = gen_scale._snippet_pool_fingerprint()
         stages.append([fn.__name__, params])
     base = row.base or os.environ.get("SPARK_GRAFT_SF_BASE", "/root/testdata/sf0.01")
-    return json.loads(json.dumps({"base": base, "stages": stages}))
+    return {"base": base, "stages": stages}
 
 
 def ensure(axis: str) -> str:

@@ -45,10 +45,10 @@ EMPTY_DIR = os.environ.get(
 
 
 @pytest.fixture(scope="session")
-def empty_dir():
-    from empty_sweep import ensure_empty_dataset
+def empty_dir(sf_small):
+    from empty_sweep import build_empty
 
-    ensure_empty_dataset("/root/testdata/sf0.001", EMPTY_DIR)
+    build_empty(sf_small, EMPTY_DIR)
     return EMPTY_DIR
 
 
