@@ -533,6 +533,51 @@ def _lsh_band_values(M, H, n_bands: int):
     return out
 
 
+def _arrow_vectors(col, dim: int):
+    """Decode one list<float|double> Arrow column: (clean, M) where
+    `clean` marks the rows that are not NULL, hold exactly `dim`
+    elements and no NULL element, and M is the float64 (clean rows, dim)
+    matrix of those rows in row order. The one Arrow vector decoder of
+    the vector passes; what a non-clean row gets is each pass's own
+    rule."""
+    import numpy as np
+
+    offs = col.offsets.to_numpy(zero_copy_only=False)
+    vals = col.values
+    el_null = np.asarray(vals.is_null()) if len(vals) else np.zeros(0, bool)
+    cum = np.concatenate([[0], np.cumsum(el_null)])
+    clean = (
+        ~np.asarray(col.is_null())
+        & (offs[1:] - offs[:-1] == dim)
+        & (cum[offs[1:]] == cum[offs[:-1]])
+    )
+    gather = offs[:-1][clean][:, None] + np.arange(dim)[None, :]
+    M = vals.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    return clean, M[gather]
+
+
+def _arrow_map(df, keep, out, batch_fn):
+    """mapInArrow with passthrough columns: each output batch is the
+    input batch's `keep` columns ((name, sql_type) pairs) followed by
+    the `out` columns. batch_fn(b) returns (arrays, take): one Arrow
+    array per `out` pair, and None or the row indices that repeat the
+    `keep` columns when one input row becomes several output rows."""
+    names = [nm for nm, _ in keep + out]
+    schema = ", ".join(f"{nm} {tp}" for nm, tp in keep + out)
+
+    def run(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            arrays, take = batch_fn(b)
+            kept = [b.column(nm) for nm, _ in keep]
+            if take is not None:
+                kept = [c.take(take) for c in kept]
+            yield pa.RecordBatch.from_arrays(kept + arrays, names)
+
+    return df.mapInArrow(run, schema)
+
+
 def _lsh_bands_arrow(df, planes, n_bands: int, *, keep, v_name="embedding"):
     """Per-row LSH band values as ONE Arrow pass (guide §4.2), appending
     `bvals` (array<bigint>, one value per band) — replaces n_planes
@@ -550,49 +595,19 @@ def _lsh_bands_arrow(df, planes, n_bands: int, *, keep, v_name="embedding"):
     import numpy as np
 
     H = np.array(planes, dtype=np.float64)  # (bits, dim)
-    dim = H.shape[1]
 
-    def bands(batches):
+    def bands(b):
         import pyarrow as pa
 
-        for b in batches:
-            n = b.num_rows
-            vcol = b.column(b.schema.get_field_index(v_name))
-            if isinstance(vcol, pa.ChunkedArray):  # pragma: no cover
-                vcol = vcol.combine_chunks()
-            offs = vcol.offsets.to_numpy(zero_copy_only=False)
-            rlens = offs[1:] - offs[:-1]
-            row_null = np.asarray(vcol.is_null())
-            vals = vcol.values
-            el_null = np.asarray(vals.is_null()) if len(vals) else np.zeros(0, bool)
-            cum = np.concatenate([[0], np.cumsum(el_null)])
-            any_el_null = (cum[offs[1:]] - cum[offs[:-1]]) > 0
-            clean = (~row_null) & (rlens == dim) & (~any_el_null)
-            bv = np.zeros((n, n_bands), dtype=np.int64)
-            idx = np.nonzero(clean)[0]
-            if len(idx):
-                starts = offs[:-1][idx]
-                gather = starts[:, None] + np.arange(dim)[None, :]
-                M = vals.to_numpy(zero_copy_only=False).astype(
-                    np.float64, copy=False
-                )[gather]
-                bv[idx] = _lsh_band_values(M, H, n_bands)
-            arrays = [b.column(b.schema.get_field_index(nm)) for nm, _ in keep]
-            names = [nm for nm, _ in keep]
-            arrays.append(vcol)
-            names.append(v_name)
-            arrays.append(
-                pa.array(bv.tolist(), type=pa.list_(pa.int64()))
-            )
-            names.append("bvals")
-            yield pa.RecordBatch.from_arrays(arrays, names)
+        clean, M = _arrow_vectors(b.column(v_name), H.shape[1])
+        bv = np.zeros((b.num_rows, n_bands), dtype=np.int64)
+        bv[clean] = _lsh_band_values(M, H, n_bands)
+        return [pa.array(bv.tolist(), type=pa.list_(pa.int64()))], None
 
     v_sql_type = dict(df.dtypes)[v_name]  # array<float> or array<double>
-    schema = ", ".join(
-        [f"{nm} {tp}" for nm, tp in keep]
-        + [f"{v_name} {v_sql_type}", "bvals array<bigint>"]
+    return _arrow_map(
+        df, keep + [(v_name, v_sql_type)], [("bvals", "array<bigint>")], bands
     )
-    return df.mapInArrow(bands, schema)
 
 
 def _fold_dot(a, b):
@@ -620,76 +635,39 @@ def _cos_verify_arrow(df, *, a_name="emb_a", b_name="emb_b", keep, dim=64):
     per-row scalar path (equal non-dim lengths still produce finite
     folds, exactly like zip_with)."""
 
-    def verify(batches):
+    def verify(b):
         import numpy as np
         import pyarrow as pa
 
-        for b in batches:
-            n = b.num_rows
+        ca, cb = b.column(a_name), b.column(b_name)
+        clean_a, A = _arrow_vectors(ca, dim)
+        clean_b, B = _arrow_vectors(cb, dim)
+        clean = clean_a & clean_b
+        A, B = A[clean[clean_a]], B[clean[clean_b]]
+        d = np.zeros(len(A))
+        sa = np.zeros(len(A))
+        sb = np.zeros(len(A))
+        for i in range(dim):  # exact left-fold order
+            d = d + A[:, i] * B[:, i]
+            sa = sa + A[:, i] * A[:, i]
+            sb = sb + B[:, i] * B[:, i]
+        outs = []
+        for folded in (d, sa, sb):
+            full = np.zeros(b.num_rows)
+            full[clean] = folded
+            outs.append(full.tolist())
+        dot_o, sa_o, sb_o = outs
+        for ri in np.nonzero(~clean)[0].tolist():
+            a_py = ca[ri].as_py()
+            b_py = cb[ri].as_py()
+            dot_o[ri] = _fold_dot(a_py, b_py)
+            sa_o[ri] = _fold_dot(a_py, a_py)
+            sb_o[ri] = _fold_dot(b_py, b_py)
+        return [pa.array(o, type=pa.float64()) for o in outs], None
 
-            def col_info(name):
-                c = b.column(b.schema.get_field_index(name))
-                if isinstance(c, pa.ChunkedArray):  # pragma: no cover
-                    c = c.combine_chunks()
-                offs = c.offsets.to_numpy(zero_copy_only=False)
-                rl = offs[1:] - offs[:-1]
-                rn = np.asarray(c.is_null())
-                vv = c.values
-                en = np.asarray(vv.is_null()) if len(vv) else np.zeros(0, bool)
-                cm = np.concatenate([[0], np.cumsum(en)])
-                anyn = (cm[offs[1:]] - cm[offs[:-1]]) > 0
-                return c, offs, (~rn) & (rl == dim) & (~anyn)
-
-            ca, offa, cleana = col_info(a_name)
-            cb, offb, cleanb = col_info(b_name)
-            clean = cleana & cleanb
-            dot_o = [None] * n
-            sa_o = [None] * n
-            sb_o = [None] * n
-            idx = np.nonzero(clean)[0]
-            if len(idx):
-                ga = offa[:-1][idx][:, None] + np.arange(dim)[None, :]
-                gb = offb[:-1][idx][:, None] + np.arange(dim)[None, :]
-                A = ca.values.to_numpy(zero_copy_only=False).astype(
-                    np.float64, copy=False
-                )[ga]
-                B = cb.values.to_numpy(zero_copy_only=False).astype(
-                    np.float64, copy=False
-                )[gb]
-                d = np.zeros(len(idx))
-                sa = np.zeros(len(idx))
-                sb = np.zeros(len(idx))
-                for i in range(dim):  # exact left-fold order
-                    d = d + A[:, i] * B[:, i]
-                    sa = sa + A[:, i] * A[:, i]
-                    sb = sb + B[:, i] * B[:, i]
-                for t, ri in enumerate(idx):
-                    ri = int(ri)
-                    dot_o[ri] = float(d[t])
-                    sa_o[ri] = float(sa[t])
-                    sb_o[ri] = float(sb[t])
-            for ri in np.nonzero(~clean)[0]:
-                ri = int(ri)
-                a_py = ca[ri].as_py()
-                b_py = cb[ri].as_py()
-                dot_o[ri] = _fold_dot(a_py, b_py)
-                sa_o[ri] = _fold_dot(a_py, a_py)
-                sb_o[ri] = _fold_dot(b_py, b_py)
-            arrays = [b.column(b.schema.get_field_index(nm)) for nm, _ in keep]
-            names = [nm for nm, _ in keep]
-            arrays.append(pa.array(dot_o, type=pa.float64()))
-            names.append("dot")
-            arrays.append(pa.array(sa_o, type=pa.float64()))
-            names.append("sa")
-            arrays.append(pa.array(sb_o, type=pa.float64()))
-            names.append("sb")
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    schema = ", ".join(
-        [f"{nm} {tp}" for nm, tp in keep]
-        + ["dot double", "sa double", "sb double"]
+    out = _arrow_map(
+        df, keep, [("dot", "double"), ("sa", "double"), ("sb", "double")], verify
     )
-    out = df.mapInArrow(verify, schema)
     return out.withColumn(
         "cos_raw", F.col("dot") / (F.sqrt("sa") * F.sqrt("sb"))
     ).drop("dot", "sa", "sb")
@@ -1095,6 +1073,32 @@ def _argmin_scalar(v, cents):
     return best
 
 
+def _argmin_l2(M, C):
+    """_argmin_scalar vectorized over clean inputs: for each row of M
+    (rows, dim), the index into C (K, dim) of its nearest row and that
+    d2. Each d2 is _fold_d2's left fold in dimension order, so it is
+    bit-identical; with no NULL to meet, the comparator is _d2_key's NaN
+    greatest, and on ties the earlier row of C wins (callers sort C by
+    _id_key)."""
+    import numpy as np
+
+    best_j = np.zeros(len(M), dtype=np.int64)
+    best = None
+    for j, c in enumerate(C):
+        diff = M - c[None, :]
+        sq = diff * diff
+        acc = np.zeros(len(M))
+        for i in range(M.shape[1]):  # exact left-fold order
+            acc = acc + sq[:, i]
+        if best is None:
+            best = acc
+            continue
+        better = ~np.isnan(acc) & ((acc < best) | np.isnan(best))
+        best_j = np.where(better, j, best_j)
+        best = np.where(better, acc, best)
+    return best_j, best
+
+
 def _nearest_arrow(df, cents, *, keep, v_name, v_sql_type, id_sql_type,
                    with_d2=False, out_id="cell_id"):
     """Append the nearest-centroid id (and optionally its d2) per row via
@@ -1106,105 +1110,46 @@ def _nearest_arrow(df, cents, *, keep, v_name, v_sql_type, id_sql_type,
     boundary (guide §4.1). Bit-exactness argument + hostile-case pins:
     block comment above / tests/test_round20_argmin.py."""
     cents = list(cents)
-    lens = {len(c) for _, c in cents if c is not None}
-    uniform_dim = (
-        lens.pop()
-        if len(lens) == 1 and not any(c is None for _, c in cents)
-        else None
-    )
-    clean_cells = (
-        [(cid, c) for cid, c in cents if _vec_clean(c, uniform_dim)]
-        if uniform_dim
-        else []
-    )
+    dim = len(cents[0][1]) if cents and cents[0][1] is not None else None
     # the vectorized path only runs when EVERY cell is clean and
     # same-length; any hostile cell (NULL array, NULL element, ragged
     # length) sends every row through the exact scalar path instead
-    all_clean = bool(cents) and len(clean_cells) == len(cents)
-    # pre-sort clean cells in comparator id order: iterating with a
-    # strict < keeps the smallest id on d2 ties
-    clean_sorted = sorted(clean_cells, key=lambda rc: _id_key(rc[0]))
-    id_py = [cid for cid, _ in clean_sorted]
-    cents_all = cents
+    all_clean = bool(cents) and all(_vec_clean(c, dim) for _, c in cents)
+    # pre-sort cells in comparator id order so _argmin_l2's
+    # first-row-wins tie rule keeps the smallest id
+    cents_sorted = sorted(cents, key=lambda rc: _id_key(rc[0]))
+    id_py = [cid for cid, _ in cents_sorted]
 
-    def assign(batches):
+    def assign(b):
         import numpy as np
         import pyarrow as pa
 
-        C = (
-            np.array([c for _, c in clean_sorted], dtype=np.float64)
-            if clean_sorted
-            else None
-        )
-        dim = uniform_dim or 0
-        for b in batches:
-            n = b.num_rows
-            vcol = b.column(b.schema.get_field_index(v_name))
-            if isinstance(vcol, pa.ChunkedArray):  # pragma: no cover
-                vcol = vcol.combine_chunks()
-            offs = vcol.offsets.to_numpy(zero_copy_only=False)
-            rlens = offs[1:] - offs[:-1]
-            row_null = np.asarray(vcol.is_null())
-            vals = vcol.values
-            el_null = np.asarray(vals.is_null()) if len(vals) else np.zeros(0, bool)
-            cum = np.concatenate([[0], np.cumsum(el_null)])
-            any_el_null = (cum[offs[1:]] - cum[offs[:-1]]) > 0
-            fast = (~row_null) & (rlens == dim) & (~any_el_null) if all_clean else np.zeros(n, bool)
-            cell_out = [None] * n
-            d2_out = [None] * n
-            if all_clean and C is not None and fast.any():
-                idx = np.nonzero(fast)[0]
-                starts = offs[:-1][idx]
-                gather = starts[:, None] + np.arange(dim)[None, :]
-                M = vals.to_numpy(zero_copy_only=False).astype(
-                    np.float64, copy=False
-                )[gather]
-                best_k1 = best_k2 = best_j = best_d2 = None
-                for j in range(len(clean_sorted)):
-                    diff = M - C[j][None, :]
-                    sq = diff * diff
-                    acc = np.zeros(len(idx))
-                    for i in range(dim):  # exact left-fold order
-                        acc = acc + sq[:, i]
-                    k1 = np.where(np.isnan(acc), 2, 1)
-                    k2 = np.where(np.isnan(acc), 0.0, acc)
-                    if best_k1 is None:
-                        best_k1, best_k2 = k1, k2
-                        best_j = np.zeros(len(idx), dtype=np.int64)
-                        best_d2 = acc
-                    else:
-                        better = (k1 < best_k1) | ((k1 == best_k1) & (k2 < best_k2))
-                        best_k1 = np.where(better, k1, best_k1)
-                        best_k2 = np.where(better, k2, best_k2)
-                        best_j = np.where(better, j, best_j)
-                        best_d2 = np.where(better, acc, best_d2)
-                for t, ri in enumerate(idx):
-                    cell_out[ri] = id_py[int(best_j[t])]
-                    d2_out[ri] = float(best_d2[t])
-            for ri in np.nonzero(~fast)[0]:  # exact per-row authority path
-                hit = _argmin_scalar(vcol[int(ri)].as_py(), cents_all)
-                if hit is not None:
-                    cell_out[int(ri)] = hit[0]
-                    d2_out[int(ri)] = hit[1]
-            arrays = [b.column(b.schema.get_field_index(nm)) for nm, _ in keep]
-            names = [nm for nm, _ in keep]
-            arrays.append(vcol)
-            names.append(v_name)
-            arrays.append(
-                pa.array(cell_out, type=pa.int64() if id_sql_type == "bigint" else pa.int32())
-            )
-            names.append(out_id)
-            if with_d2:
-                arrays.append(pa.array(d2_out, type=pa.float64()))
-                names.append("d2")
-            yield pa.RecordBatch.from_arrays(arrays, names)
+        n = b.num_rows
+        vcol = b.column(v_name)
+        cell_out = [None] * n
+        d2_out = [None] * n
+        fast = np.zeros(n, bool)
+        if all_clean:
+            fast, M = _arrow_vectors(vcol, dim)
+            C = np.array([c for _, c in cents_sorted], dtype=np.float64)
+            best_j, best_d2 = _argmin_l2(M, C)
+            for ri, j, d2 in zip(
+                np.nonzero(fast)[0].tolist(), best_j.tolist(), best_d2.tolist()
+            ):
+                cell_out[ri] = id_py[j]
+                d2_out[ri] = d2
+        for ri in np.nonzero(~fast)[0].tolist():  # exact per-row authority path
+            hit = _argmin_scalar(vcol[ri].as_py(), cents)
+            if hit is not None:
+                cell_out[ri], d2_out[ri] = hit
+        id_type = pa.int64() if id_sql_type == "bigint" else pa.int32()
+        arrays = [pa.array(cell_out, type=id_type)]
+        if with_d2:
+            arrays.append(pa.array(d2_out, type=pa.float64()))
+        return arrays, None
 
-    schema = ", ".join(
-        [f"{nm} {tp}" for nm, tp in keep]
-        + [f"{v_name} {v_sql_type}", f"{out_id} {id_sql_type}"]
-        + (["d2 double"] if with_d2 else [])
-    )
-    return df.mapInArrow(assign, schema)
+    out = [(out_id, id_sql_type)] + ([("d2", "double")] if with_d2 else [])
+    return _arrow_map(df, keep + [(v_name, v_sql_type)], out, assign)
 
 
 def _pq_encode_arrow(df, cw, *, keep, v_name, with_d2=False):
@@ -1229,11 +1174,11 @@ def _pq_encode_arrow(df, cw, *, keep, v_name, with_d2=False):
     cw_sorted = {
         m: sorted(cw[m], key=lambda rc: _id_key(rc[0])) for m in ms
     }
-    fast_m = {
-        m: all(_vec_clean(sc_, PQ_SUBDIM) for _, sc_ in rows) and bool(rows)
-        for m, rows in cw_sorted.items()
-    }
-    all_fast = all(fast_m.values()) and bool(ms)
+    all_fast = bool(ms) and all(
+        rows and all(_vec_clean(sc_, PQ_SUBDIM) for _, sc_ in rows)
+        for rows in cw_sorted.values()
+    )
+    code_py = {m: [c for c, _ in rows] for m, rows in cw_sorted.items()}
     dim = PQ_M * PQ_SUBDIM
 
     def _encode_row(v):
@@ -1249,120 +1194,42 @@ def _pq_encode_arrow(df, cw, *, keep, v_name, with_d2=False):
             out.append((m, best[0] if best else None, best[1] if best else None))
         return out
 
-    def encode(batches):
+    def encode(b):
         import numpy as np
         import pyarrow as pa
 
-        CW = (
-            {
-                m: np.array([sc_ for _, sc_ in rows], dtype=np.float64)
-                for m, rows in cw_sorted.items()
-            }
-            if all_fast
-            else {}
-        )
-        code_py = {m: [c for c, _ in rows] for m, rows in cw_sorted.items()}
-        for b in batches:
-            n = b.num_rows
-            vcol = b.column(b.schema.get_field_index(v_name))
-            if isinstance(vcol, pa.ChunkedArray):  # pragma: no cover
-                vcol = vcol.combine_chunks()
-            offs = vcol.offsets.to_numpy(zero_copy_only=False)
-            rlens = offs[1:] - offs[:-1]
-            row_null = np.asarray(vcol.is_null())
-            vals = vcol.values
-            el_null = np.asarray(vals.is_null()) if len(vals) else np.zeros(0, bool)
-            cum = np.concatenate([[0], np.cumsum(el_null)])
-            any_el_null = (cum[offs[1:]] - cum[offs[:-1]]) > 0
-            fast = (
-                (~row_null) & (rlens == dim) & (~any_el_null)
-                if all_fast
-                else np.zeros(n, bool)
-            )
-            # per-row outputs: list of (m, code, d2) triples
-            m_out: list = [None] * n
-            code_out: list = [None] * n
-            d2_out: list = [None] * n
-            idx = np.nonzero(fast)[0]
-            if len(idx):
-                starts = offs[:-1][idx]
-                gather = starts[:, None] + np.arange(dim)[None, :]
-                M = (
-                    vals.to_numpy(zero_copy_only=False)
-                    .astype(np.float64, copy=False)[gather]
-                    .reshape(len(idx), PQ_M, PQ_SUBDIM)
+        n = b.num_rows
+        vcol = b.column(v_name)
+        # per input row: one (m, code, d2) triple per m in ms
+        rows: list = [None] * n
+        fast = np.zeros(n, bool)
+        if all_fast:
+            fast, M = _arrow_vectors(vcol, dim)
+            M = M.reshape(len(M), PQ_M, PQ_SUBDIM)
+            per_m = []
+            for m in ms:
+                C = np.array([sc_ for _, sc_ in cw_sorted[m]], dtype=np.float64)
+                best_j, best_d2 = _argmin_l2(M[:, m, :], C)
+                per_m.append(
+                    [(m, code_py[m][j], d2)
+                     for j, d2 in zip(best_j.tolist(), best_d2.tolist())]
                 )
-                for m in ms:
-                    S = M[:, m, :]
-                    best_k1 = best_k2 = best_j = best_d2 = None
-                    for j in range(len(code_py[m])):
-                        diff = S - CW[m][j][None, :]
-                        sq = diff * diff
-                        acc = np.zeros(len(idx))
-                        for i in range(PQ_SUBDIM):  # exact left-fold order
-                            acc = acc + sq[:, i]
-                        k1 = np.where(np.isnan(acc), 2, 1)
-                        k2 = np.where(np.isnan(acc), 0.0, acc)
-                        if best_k1 is None:
-                            best_k1, best_k2 = k1, k2
-                            best_j = np.zeros(len(idx), dtype=np.int64)
-                            best_d2 = acc
-                        else:
-                            better = (k1 < best_k1) | (
-                                (k1 == best_k1) & (k2 < best_k2)
-                            )
-                            best_k1 = np.where(better, k1, best_k1)
-                            best_k2 = np.where(better, k2, best_k2)
-                            best_j = np.where(better, j, best_j)
-                            best_d2 = np.where(better, acc, best_d2)
-                    for t, ri in enumerate(idx):
-                        ri = int(ri)
-                        if m_out[ri] is None:
-                            m_out[ri], code_out[ri], d2_out[ri] = [], [], []
-                        m_out[ri].append(m)
-                        code_out[ri].append(code_py[m][int(best_j[t])])
-                        d2_out[ri].append(float(best_d2[t]))
-            for ri in np.nonzero(~fast)[0]:  # exact per-row authority path
-                ri = int(ri)
-                m_out[ri], code_out[ri], d2_out[ri] = [], [], []
-                for m, code, d2 in _encode_row(vcol[ri].as_py()):
-                    m_out[ri].append(m)
-                    code_out[ri].append(code)
-                    d2_out[ri].append(d2)
-            # explode: one output row per (input row, m)
-            reps = np.array([len(x) if x else 0 for x in m_out], dtype=np.int64)
-            take = np.repeat(np.arange(n), reps)
-            arrays = [
-                b.column(b.schema.get_field_index(nm)).take(pa.array(take))
-                for nm, _ in keep
-            ]
-            names = [nm for nm, _ in keep]
-            arrays.append(
-                pa.array([m for row in m_out if row for m in row], type=pa.int32())
-            )
-            names.append("m")
-            arrays.append(
-                pa.array(
-                    [c for row in code_out if row for c in row], type=pa.int32()
-                )
-            )
-            names.append("code")
-            if with_d2:
-                arrays.append(
-                    pa.array(
-                        [d for row in d2_out if row for d in row],
-                        type=pa.float64(),
-                    )
-                )
-                names.append("d2")
-            yield pa.RecordBatch.from_arrays(arrays, names)
+            for ri, triples in zip(np.nonzero(fast)[0].tolist(), zip(*per_m)):
+                rows[ri] = triples
+        for ri in np.nonzero(~fast)[0].tolist():  # exact per-row authority path
+            rows[ri] = _encode_row(vcol[ri].as_py())
+        # explode: one output row per (input row, m)
+        flat = [t for row in rows for t in row]
+        arrays = [
+            pa.array([t[0] for t in flat], type=pa.int32()),
+            pa.array([t[1] for t in flat], type=pa.int32()),
+        ]
+        if with_d2:
+            arrays.append(pa.array([t[2] for t in flat], type=pa.float64()))
+        return arrays, pa.array(np.repeat(np.arange(n), len(ms)))
 
-    schema = ", ".join(
-        [f"{nm} {tp}" for nm, tp in keep]
-        + ["m int", "code int"]
-        + (["d2 double"] if with_d2 else [])
-    )
-    return df.mapInArrow(encode, schema)
+    out = [("m", "int"), ("code", "int")] + ([("d2", "double")] if with_d2 else [])
+    return _arrow_map(df, keep, out, encode)
 
 
 def _collect_codebook(cb) -> dict:
@@ -1464,8 +1331,8 @@ def _assemble_cents(mean_rows):
     ]
 
 
-def _kmeans_rows(emb, rounds: int = KMEANS_ITERS):
-    """Lloyd's loop with DRIVER-held centroids (the MLlib/BPE pattern —
+def _kmeans_rows(emb, cents=None, rounds: int = KMEANS_ITERS):
+    """Lloyd's loop with DRIVER-held centroids (the BPE pattern —
     bpe.train_bpe_merges is the registry precedent for bounded per-round
     driver state in a declared query). Each round is ONE job: scan ->
     Arrow argmin -> keyed decimal mean -> collect of <= K×dim rows. The
@@ -1475,9 +1342,14 @@ def _kmeans_rows(emb, rounds: int = KMEANS_ITERS):
     by the algorithm constant, never by data size. Values round-trip
     bit-exactly (collect -> Python float -> repr literal is the IEEE
     shortest-roundtrip path), so the trained table is byte-identical to
-    the r19 plan's — pinned by tests/test_round20_argmin.py."""
-    seeds = emb.filter(F.col("vec_id") < KMEANS_K).select("vec_id", "v").collect()
-    cents = [(r["vec_id"], r["v"]) for r in seeds]
+    the r19 plan's — pinned by tests/test_round20_argmin.py.
+
+    `cents` is the caller's seed [(cell_id, centroid)] rows; the default
+    is the registry's seeding, the rows with vec_id < KMEANS_K, which
+    the oracle CTEs fix."""
+    if cents is None:
+        seeds = emb.filter(F.col("vec_id") < KMEANS_K).select("vec_id", "v")
+        cents = [(r["vec_id"], r["v"]) for r in seeds.collect()]
     for _ in range(rounds):
         if not cents:
             return []

@@ -19,8 +19,11 @@ The exact and LSH tiers hold no vector math of their own: the cosine
 fold is operators/vector's _cos, and the LSH index (lsh_index)
 and its query probe (ann_topk) both sign vectors with
 vector._lsh_band_values, so a query always lands in the bucket its own
-vector was indexed under. The MLlib k-means IVF pair (ivf_index/
-ivf_search) is a separate index that the registry's IVF does not share.
+vector was indexed under. The IVF pair (ivf_index/ivf_search) trains
+its cells with the registry's Lloyd loop (vector._kmeans_rows) and
+assigns rows and ranks a query's cells with the same left-fold
+squared-L2 and comparator (vector._nearest_arrow, vector._fold_d2), so
+a query always probes the cell its own vector was indexed under first.
 """
 
 from __future__ import annotations
@@ -30,8 +33,13 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 from .operators.vector import (
     _arr_dlit,
     _cos,
+    _d2_key,
+    _fold_d2,
+    _id_key,
+    _kmeans_rows,
     _lsh_band_values,
     _lsh_bands_arrow,
+    _nearest_arrow,
     _passthrough,
     embedding_dim,
     hyperplane_matrix,
@@ -188,31 +196,38 @@ def ann_topk(
     return cosine_topk(cands, query_vec, k, vec_col=vec_col, id_col=id_col)
 
 
-def ivf_index(
-    corpus: DataFrame,
-    n_cells: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 7,
-):
-    """IVF coarse quantizer: k-means cells via MLlib (distributed Lloyd
-    iterations — idiomatic Spark, no hand-rolled loops), then every vector
-    tagged with its nearest cell. Returns (indexed_df_with_cell, centers)
-    where centers is the small driver-side list[np.ndarray] (K×dim — always
-    tiny relative to the corpus). Persist the indexed frame partitioned by
-    `cell` and candidate lookup becomes partition pruning — the IVF-list
-    analog of the reference's LanceDB index (create_lancedb_index.py:143-148,
+def ivf_index(corpus: DataFrame, n_cells: int = 16, vec_col: str = "embedding"):
+    """IVF coarse quantizer on the engine's k-means: KMEANS_ITERS rounds
+    of the registry's Lloyd loop (vector._kmeans_rows) seeded from the
+    n_cells rows with the smallest non-NULL vec_id, then every row
+    tagged with its nearest cell in one Arrow pass (vector._nearest_arrow).
+    Returns (indexed_df_with_cell, centers) where centers is the small
+    driver-side [(cell_id, centroid)] list; a cell's id is its seed's
+    vec_id. Persist the indexed frame partitioned by `cell` and
+    candidate lookup becomes partition pruning — the IVF-list analog of
+    the reference's LanceDB index (create_lancedb_index.py:143-148,
     num_partitions=256). Unlike the LSH path this adapts to the data's
-    cluster structure; on isotropic data both degrade to ~nprobe/K recall
-    (curse of dimensionality — property of the data, not the index)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    with_vec = corpus.withColumn("_v", array_to_vector(F.col(vec_col)))
-    model = KMeans(k=n_cells, seed=seed, featuresCol="_v", predictionCol="cell").fit(
-        with_vec
+    cluster structure; on isotropic data both degrade to ~nprobe/K
+    recall (curse of dimensionality — property of the data, not the
+    index)."""
+    emb = corpus.select(
+        "vec_id", F.transform(vec_col, lambda x: x.cast("double")).alias("v")
     )
-    indexed = model.transform(with_vec).drop("_v")
-    return indexed, model.clusterCenters()
+    seeds = (
+        emb.filter(F.col("vec_id").isNotNull()).orderBy("vec_id", "v").limit(n_cells)
+    )
+    centers = _kmeans_rows(emb, [(r["vec_id"], r["v"]) for r in seeds.collect()])
+    rest = [c for c in corpus.columns if c != vec_col]
+    indexed = _nearest_arrow(
+        corpus,
+        centers,
+        keep=_passthrough(corpus, *rest),
+        v_name=vec_col,
+        v_sql_type=dict(corpus.dtypes)[vec_col],
+        id_sql_type="bigint",
+        out_id="cell",
+    )
+    return indexed.select(*corpus.columns, "cell"), centers
 
 
 def ivf_search(
@@ -224,15 +239,16 @@ def ivf_search(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """IVF probe + exact rerank: nearest `nprobe` cells to the query are
-    chosen driver-side (K centroids — trivially small), members of those
-    cells are the candidate set (partition-pruned when stored by cell),
-    and the exact cosine runs only on candidates."""
-    import numpy as np
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    d2 = [float(((np.asarray(c) - q) ** 2).sum()) for c in centers]
-    probes = sorted(range(len(centers)), key=lambda i: (d2[i], i))[:nprobe]
+    """IVF probe + exact rerank: the `nprobe` cells nearest the query,
+    ranked on (d2, cell_id) with the index's own fold and comparator,
+    are chosen driver-side (K centroids — trivially small), members of
+    those cells are the candidate set (partition-pruned when stored by
+    cell), and the exact cosine runs only on candidates."""
+    q = [float(x) for x in query_vec]
+    ranked = sorted(
+        centers, key=lambda rc: (_d2_key(_fold_d2(q, rc[1])), _id_key(rc[0]))
+    )
+    probes = [cid for cid, _ in ranked[:nprobe]]
     cands = indexed.filter(F.col("cell").isin(probes))
     return cosine_topk(cands, query_vec, k, vec_col=vec_col, id_col=id_col)
 

@@ -43,7 +43,6 @@ _HASH_INPUTS = (
     "scripts/gen_scale.py",
     "scripts/sweep.py",
     "scripts/order_sweep.py",
-    "scripts/width_sweep.py",
     "scripts/config_sweep.py",
     "scripts/empty_sweep.py",
     "scripts/asym_empty_sweep.py",
@@ -239,11 +238,11 @@ def parity_sweep(
 
 
 def ensure_fresh_ckpt_dir(path: str) -> None:
-    """Phase-A pickle directories (width_sweep, config_sweep) have the
-    same staleness class (round-14 ADVICE, low): a resumed run would
-    compare new-code phase-B results against old-code baselines. Record
-    the engine tree in a manifest next to the pickles and wipe them when
-    it no longer matches."""
+    """config_sweep's phase-A pickle directory has the same staleness
+    class (round-14 ADVICE, low): a resumed run would compare new-code
+    phase-B results against old-code baselines. Record the engine tree
+    in a manifest next to the pickles and wipe them when it no longer
+    matches."""
     os.makedirs(path, exist_ok=True)
     manifest = os.path.join(path, "_MANIFEST.json")
     current = engine_tree_hash()

@@ -58,7 +58,6 @@ SWEEP_FILES = {
     "dirty parity (seed B)": ".scale/nulls_sweep_b.json",
     "order invariance (seed A)": ".scale/order_sweep.json",
     "order invariance (seed B)": ".scale/order_sweep_b.json",
-    "width invariance": ".scale/width_sweep.json",
     "config invariance": ".scale/config_sweep.json",
     "empty-input totality": ".scale/empty_sweep.json",
     "asymmetric-empty totality": ".scale/asym_empty_sweep.json",

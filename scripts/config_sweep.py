@@ -2,7 +2,7 @@
 """Config-invariance sweep (round 13, third determinism axis — VERDICT
 r12 item 1): every registry query must return the same result multiset
 when Spark's EXECUTION STRATEGY changes, not just when the data's
-arrival order (order_sweep.py) or shuffle width (width_sweep.py) does.
+arrival order (order_sweep.py) does.
 
 On a real cluster the optimizer flips strategies at runtime: AQE
 re-plans joins and coalesces partitions from observed sizes, a "small"
@@ -31,6 +31,12 @@ sweeps use):
   tz_tokyo    spark.sql.session.timeZone=Asia/Tokyo (the session STARTS
               on Tokyo time; the engine pins UTC at load — this proves
               the pin covers every query path, round 14)
+  tz_london   spark.sql.session.timeZone=Europe/London (a DST gap)
+  width       spark.sql.shuffle.partitions=37 (coprime to the baseline's
+              16) AND spark.sql.files.maxPartitionBytes=1m: the same
+              input under a different reduce-side fan-in and scan split,
+              where collect_list order, unordered first()/any_value()
+              and float merge order hide
 
 Resumable per query per config, like the sibling sweeps.
 
@@ -77,6 +83,14 @@ CONFIGS: dict[str, dict[str, str]] = {
     # paths. Same UTC-pinned-at-load contract: results must be
     # byte-identical.
     "tz_london": {"spark.sql.session.timeZone": "Europe/London"},
+    # round 12's shuffle-width axis: how many tasks an aggregation/
+    # window/join fans into and how partial results merge back. On a
+    # real cluster both knobs move run to run (AQE coalescing, dynamic
+    # allocation), so dependence on either is a latent wrong answer.
+    "width": {
+        "spark.sql.shuffle.partitions": "37",
+        "spark.sql.files.maxPartitionBytes": "1m",
+    },
 }
 
 

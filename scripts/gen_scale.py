@@ -289,10 +289,11 @@ def inject_nulls(
     Real corpora are never clean; the driver tables are — round 10 found
     seven latent NULL/NaN defects by hand-review precisely because no
     shipped column contains one. This makes that class mechanical: the
-    oracle-parity sweep (tests/test_nulls_parity.py) runs the full
-    registry against the dirty copy, and any Spark/DuckDB divergence or
-    crash is a bug in whichever side assumed clean data. Deterministic
-    (fixed seed); schema preserved except fields become nullable."""
+    oracle-parity sweep (scripts/sweep.py --axis nulls, gated tier
+    tests/test_axis_parity.py) runs the full registry against the dirty
+    copy, and any Spark/DuckDB divergence or crash is a bug in whichever
+    side assumed clean data. Deterministic (fixed seed); schema
+    preserved except fields become nullable."""
     import pyarrow.compute as pc
 
     rng = np.random.default_rng(seed)

@@ -2,7 +2,8 @@
 registry query must return the same result multiset when Spark's
 execution STRATEGY changes — AQE off, auto-broadcast disabled (every
 auto broadcast hash join becomes a sort-merge join), whole-stage
-codegen off.
+codegen off, a non-UTC session time zone, and a coprime shuffle width
+with 1 MiB scan splits (every row of config_sweep.CONFIGS).
 
 A real cluster flips these at runtime: AQE re-plans joins and coalesces
 partitions from observed sizes, and a "small" dimension that grows 100x
@@ -16,7 +17,7 @@ dirty copy, where injected ties make strategy-dependent orders visible.
 Gated with the rest of the dirty evidence: SPARK_GRAFT_NULLS_SWEEP=1.
 Batch runner with resume: scripts/config_sweep.py (fresh session per
 config; this tier flips the same confs at runtime, which is equivalent
-for these four — all are read at query planning time).
+for every row — all are read at query planning time).
 """
 
 from __future__ import annotations

@@ -312,6 +312,9 @@ ALLOWLIST: dict[tuple[str, str, str, str], str] = {
     ("search.py", "cosine_topk", "limit", "distance,F.asc(id_col)"):
         "output-dup: every output column (id, cos_sim, distance) is a "
         "function of the key columns",
+    ("search.py", "ivf_index", "limit", "vec_id,v"):
+        "full-row: (vec_id, v) is every column the k-means seed rows "
+        "consume; ties are fully duplicate rows, i.e. identical seeds",
     ("sources/conversations.py", "group_conversations", "window", "seq"):
         "unique: the parser emits a strictly increasing seq per doc_path",
 }

@@ -88,3 +88,25 @@ def test_allowlist_names_only_uncalled_functions():
     """An allowlisted function that gained a caller leaves the list."""
     uncalled = _uncalled_private_functions()
     assert set(ALLOWED) <= set(uncalled), set(ALLOWED) - set(uncalled)
+
+
+def test_no_package_module_imports_pyspark_ml():
+    """The engine's own vector kernels are the only ones: no module in the
+    package imports MLlib (`pyspark.ml`)."""
+    bad = []
+    for mod, _, tree in _modules():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and not node.level:
+                names = [node.module or ""]
+                if node.module == "pyspark":
+                    names += [f"pyspark.{a.name}" for a in node.names]
+            else:
+                continue
+            bad += [
+                f"{mod}:{node.lineno} {n}"
+                for n in names
+                if n == "pyspark.ml" or n.startswith("pyspark.ml.")
+            ]
+    assert not bad, "pyspark.ml imports in the package: " + ", ".join(bad)

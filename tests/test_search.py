@@ -95,6 +95,68 @@ def test_ivf_persisted_probe_partition_pruned(spark, corpus, tmp_path):
 
 
 @pytest.fixture(scope="module")
+def ivf(corpus):
+    df, _ = corpus
+    return search.ivf_index(df, n_cells=4)
+
+
+def test_ivf_cells_are_the_argmin_over_returned_centroids(corpus, ivf):
+    # each row's cell is its nearest returned centroid: the engine's
+    # Arrow argmin over the very list ivf_search ranks, and numpy's
+    from ndl_core_data_pipeline_spark.operators.vector import (
+        _nearest_arrow,
+        _passthrough,
+    )
+
+    df, vecs = corpus
+    indexed, centers = ivf
+    got = {r["vec_id"]: r["cell"] for r in indexed.collect()}
+    assert len(set(got.values())) > 1
+    want = _nearest_arrow(
+        df,
+        centers,
+        keep=_passthrough(df, "vec_id"),
+        v_name="embedding",
+        v_sql_type="array<float>",
+        id_sql_type="bigint",
+    )
+    assert got == {r["vec_id"]: r["cell_id"] for r in want.collect()}
+    ids = [cid for cid, _ in centers]
+    C = np.array([c for _, c in centers])
+    d2 = ((vecs.astype(np.float64)[:, None, :] - C[None]) ** 2).sum(-1)
+    assert [got[i] for i in range(len(vecs))] == [ids[j] for j in d2.argmin(1)]
+
+
+def test_ivf_centroids_are_kmeans_rows_on_the_smallest_ids(corpus, ivf):
+    # the cells are the engine's Lloyd loop seeded from the n_cells
+    # smallest vec_ids (0..3 here), each cell keyed by its seed's id
+    from pyspark.sql import functions as F
+
+    from ndl_core_data_pipeline_spark.operators.vector import _kmeans_rows
+
+    df, vecs = corpus
+    emb = df.select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+    )
+    seeds = [(i, [float(x) for x in vecs[i]]) for i in range(4)]
+    assert ivf[1] == _kmeans_rows(emb, seeds)
+
+
+def test_ivf_indexed_vector_probes_its_own_cell_first(corpus, ivf):
+    # a query equal to an indexed vector ranks that vector's cell first,
+    # so nprobe=1 finds the vector, and it tops the rerank
+    df, vecs = corpus
+    indexed, centers = ivf
+    cell = {r["vec_id"]: r["cell"] for r in indexed.collect()}
+    for qid in range(0, len(vecs), 7):
+        hits = search.ivf_search(
+            indexed, centers, [float(x) for x in vecs[qid]], nprobe=1, k=5
+        ).collect()
+        assert hits[0]["vec_id"] == qid
+        assert {cell[r["vec_id"]] for r in hits} == {cell[qid]}
+
+
+@pytest.fixture(scope="module")
 def near_dup_corpus(spark):
     """60 base vectors each with one noisy twin (pairwise cos ~0.92) plus
     80 unrelated fillers — the ground-truth near-dup workload for the LSH
