@@ -488,10 +488,12 @@ CC_MAX_ITER = 25  # safety bound; pointer jumping needs ~log2(diameter) rounds
 CC_EDGES_DRIVER_MAX = 4_000_000
 
 
-def _union_find_labels(edge_rows) -> list[tuple[int, int]]:
-    """In-driver min-label connected components over collected edges —
-    identical output contract to the distributed loop: every node maps to
-    the minimum node id reachable from it.
+def _union_find_labels(a, b):
+    """In-driver min-label connected components over dense int64 edge
+    arrays `a`, `b` (edge k joins a[k] and b[k]) — identical output
+    contract to the distributed loop: every node maps to the minimum
+    node id reachable from it. Returns (nodes, labels) numpy arrays
+    sorted by node id.
 
     r20 (guide §1.2 per-task work — here per-driver work): vectorized
     min-label propagation with pointer doubling over dense numpy arrays
@@ -500,21 +502,8 @@ def _union_find_labels(edge_rows) -> list[tuple[int, int]]:
     sweeps). Same fixpoint: labels only ever decrease toward the min
     reachable id, and termination is the exact no-change test.
     tests/test_dedup_guards.py pins equality against the distributed
-    loop; test_round20_caches-style property tests pin it against the
-    per-edge reference."""
-    if not edge_rows:
-        return []
-    import numpy as np
-
-    a = np.fromiter((e[0] for e in edge_rows), dtype=np.int64, count=len(edge_rows))
-    b = np.fromiter((e[1] for e in edge_rows), dtype=np.int64, count=len(edge_rows))
-    nodes, labels = _union_find_arrays(a, b)
-    return list(zip(nodes.tolist(), labels.tolist()))
-
-
-def _union_find_arrays(a, b):
-    """Core of the driver label pass over dense int64 edge arrays;
-    returns (nodes, labels) numpy arrays sorted by node id."""
+    loop; tests/test_round20_caches.py pins it against the per-edge
+    reference."""
     import numpy as np
 
     nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
@@ -587,26 +576,19 @@ def connected_components(edges, src: str = "doc_a", dst: str = "doc_b"):
     # pass -> pandas createDataFrame) — row-pickling a million-edge
     # collect cost multiple seconds on its own. Values are non-null
     # int64 both ways, so the transport is value-exact; a NULL edge id
-    # (no upstream produces one) falls back to the row path, which
-    # fails loudly exactly as the per-edge form always did.
+    # (no upstream produces one) is rejected loudly.
     head = e.limit(CC_EDGES_DRIVER_MAX + 1).toArrow()
     if head.num_rows <= CC_EDGES_DRIVER_MAX:
         import pandas as pd
 
         if head.column("src").null_count or head.column("dst").null_count:
-            pairs = _union_find_labels(
-                list(
-                    zip(
-                        head.column("src").to_pylist(),
-                        head.column("dst").to_pylist(),
-                    )
-                )
+            raise ValueError(
+                f"connected_components: NULL node id in {src!r}/{dst!r}"
             )
-            pdf = pd.DataFrame(pairs, columns=["node", "label"])
-        elif head.num_rows == 0:
+        if head.num_rows == 0:
             pdf = pd.DataFrame({"node": [], "label": []})
         else:
-            nodes, labels = _union_find_arrays(
+            nodes, labels = _union_find_labels(
                 head.column("src").to_numpy(zero_copy_only=False),
                 head.column("dst").to_numpy(zero_copy_only=False),
             )

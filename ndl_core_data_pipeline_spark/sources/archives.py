@@ -1,12 +1,9 @@
 """Archive ingestion: CSV/TSV members inside zip files (engine surface —
 open-data portals routinely publish a zip of CSVs per release).
 
-Same distributed shape as the workbook scan (sources/spreadsheet.py):
-binaryFile lists the archives (pathGlobFilter prunes at the LISTING),
-mapInPandas fans out one task per archive, and each task unzips from
-bytes with the stdlib — archives are unsplittable, so at 100 TB the
-parallelism is across MANY archives, which binaryFile distributes by
-file. Member rows come out as an all-string cell grid (archive, member,
+One task per archive (sources/files.py) unzips it from bytes with the
+stdlib; archives are unsplittable, so the parallelism is across MANY
+archives. Member rows come out as an all-string cell grid (archive, member,
 row_idx, cells) exactly like the workbook grid, feeding the same
 downstream typing; unreadable archives/members emit sentinel rows the
 quarantine splitter routes to the errors side-output.
@@ -15,6 +12,8 @@ quarantine splitter routes to the errors side-output.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from .files import fan_out, list_files
 
 ARCHIVE_CELLS_SCHEMA = (
     "archive string, member string, row_idx bigint, cells array<string>"
@@ -25,8 +24,9 @@ ERROR_MEMBER = "__error__"
 
 
 def _rows_from_zip(name: str, data: bytes):
-    """Yield (member, row_idx, cells) for every CSV/TSV member; one
-    sentinel row per unreadable archive or member."""
+    """Yield (archive, member, row_idx, cells) for every CSV/TSV member;
+    one sentinel row per unreadable archive or member, so a bad member
+    never hides the archive's good ones."""
     import csv
     import io
     import zipfile
@@ -34,7 +34,7 @@ def _rows_from_zip(name: str, data: bytes):
     try:
         zf = zipfile.ZipFile(io.BytesIO(data))
     except Exception as exc:  # noqa: BLE001 — any corrupt archive
-        yield ERROR_MEMBER, -1, [f"{type(exc).__name__}: {exc}"]
+        yield name, ERROR_MEMBER, -1, [f"{type(exc).__name__}: {exc}"]
         return
     with zf:
         for info in zf.infolist():
@@ -49,35 +49,16 @@ def _rows_from_zip(name: str, data: bytes):
                         fh, encoding="utf-8", errors="replace", newline=""
                     )
                     for i, row in enumerate(csv.reader(text, delimiter=delim)):
-                        yield member, i, ["" if c is None else c for c in row]
+                        yield name, member, i, ["" if c is None else c for c in row]
             except Exception as exc:  # noqa: BLE001 — truncated member etc.
-                yield member, -1, [f"{type(exc).__name__}: {exc}"]
+                yield name, member, -1, [f"{type(exc).__name__}: {exc}"]
 
 
 def scan_zip_tables(spark: SparkSession, path: str) -> DataFrame:
     """Distributed zip-of-CSVs scan → (archive, member, row_idx, cells)."""
-    import pandas as pd
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.[zZ][iI][pP]")
-        .load(path)
-        .where(F.col("path").rlike(r"(?i)\.zip$"))
-        .select("path", "content")
+    return fan_out(
+        list_files(spark, path, ("zip",)), ARCHIVE_CELLS_SCHEMA, _rows_from_zip
     )
-
-    def run(batches):
-        for pdf in batches:
-            out = {"archive": [], "member": [], "row_idx": [], "cells": []}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                for member, idx, cells in _rows_from_zip(fpath, bytes(content)):
-                    out["archive"].append(fpath)
-                    out["member"].append(member)
-                    out["row_idx"].append(idx)
-                    out["cells"].append(cells)
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, ARCHIVE_CELLS_SCHEMA)
 
 
 def scan_zip_tables_quarantined(

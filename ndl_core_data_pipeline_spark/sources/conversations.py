@@ -7,22 +7,21 @@ first-encounter order; segments join with the ' \\p ' separator
 (assets/hansard_parliament_uk/parser.py:94-152,203-252 — start marker
 :203-217, speaker list :236-246, separator :242-246).
 
-Spark shape: XML payloads arrive as rows (path, content) — e.g. from
-spark.read.format('binaryFile') — and parse inside mapInPandas with
-stdlib xml.etree (one Python stage, no shuffle); the conversation
-GROUPING runs as the W4 window sessionization over the exploded
-utterances, so the stateful scan is per-document and scales with
-documents, not with the corpus.
+Spark shape: XML payloads arrive as (path, content) rows with binary
+content — e.g. from sources.files.list_files — and parse one file at a
+time with stdlib xml.etree in one Python stage (sources/files.fan_out,
+no shuffle); the conversation GROUPING runs as the W4 window
+sessionization over the exploded utterances, so the stateful scan is
+per-document and scales with documents, not with the corpus.
 """
 
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window as W, functions as F
+
+from .files import fan_out
 
 SEPARATOR = " \\p "  # parser.py:242-246 (literal backslash-p)
 
@@ -60,26 +59,15 @@ def parse_utterances(xml_payload: str, doc_path: str = "") -> list[dict]:
     return rows
 
 
+def _utterance_rows(path: str, data: bytes):
+    # parse_utterances builds each dict in UTTERANCE_SCHEMA column order
+    payload = data.decode("utf-8", errors="replace")
+    return [tuple(r.values()) for r in parse_utterances(payload, path)]
+
+
 def utterances_from_xml(files: DataFrame) -> DataFrame:
-    """(path, content) rows → utterance rows via mapInPandas (map-only)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[dict] = []
-            for _, row in pdf.iterrows():
-                payload = row["content"]
-                if isinstance(payload, (bytes, bytearray)):
-                    payload = payload.decode("utf-8", errors="replace")
-                out.extend(parse_utterances(payload, row["path"]))
-            yield (
-                pd.DataFrame.from_records(out)
-                if out
-                else pd.DataFrame(
-                    columns=["doc_path", "seq", "utterance_type", "speaker", "text"]
-                )
-            )
-
-    return files.mapInPandas(run, UTTERANCE_SCHEMA)
+    """(path, content) rows → utterance rows (map-only)."""
+    return fan_out(files, UTTERANCE_SCHEMA, _utterance_rows)
 
 
 def group_conversations(utterances: DataFrame) -> DataFrame:

@@ -7,9 +7,8 @@ runs (`w:r`) of text nodes (`w:t`), with explicit tabs (`w:tab`) and
 line breaks (`w:br`); `w:p` boundaries become newlines, matching the
 paragraph-break posture of the HTML extractor. No python-docx needed.
 
-Distributed shape identical to scan_pdfs: binaryFile lists the files
-(listing-level glob pruning), mapInPandas fans out one task per
-document, corrupt files yield error rows instead of failed scans.
+`scan_docx` runs one task per document (sources/files.py); corrupt files
+yield error rows instead of failed scans.
 """
 
 from __future__ import annotations
@@ -19,7 +18,8 @@ import zipfile
 from xml.etree import ElementTree
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .files import fan_out, list_files
 
 _W_NS = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
 
@@ -52,44 +52,18 @@ def extract_docx_text(data) -> str:
     return "\n".join(paragraphs)
 
 
+def _docx_rows(path: str, data: bytes):
+    text = extract_docx_text(data)
+    n_paragraphs = len(text.split("\n")) if text else 0
+    return [(path, len(data), n_paragraphs, len(text), text, None)]
+
+
 def scan_docx(spark: SparkSession, path: str) -> DataFrame:
     """Distributed multi-DOCX text extraction: (path, n_bytes,
     n_paragraphs, n_chars, text, error) per document."""
-    import pandas as pd
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.[dD][oO][cC][xX]")
-        .load(path)
-        .where(F.col("path").rlike(r"(?i)\.docx$"))
-        .select("path", "content")
+    return fan_out(
+        list_files(spark, path, ("docx",)),
+        DOCX_TEXT_SCHEMA,
+        _docx_rows,
+        lambda path, data, err: [(path, len(data), 0, 0, "", err)],
     )
-
-    def run(batches):
-        for pdf in batches:
-            out = {
-                "path": [],
-                "n_bytes": [],
-                "n_paragraphs": [],
-                "n_chars": [],
-                "text": [],
-                "error": [],
-            }
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
-                out["path"].append(fpath)
-                out["n_bytes"].append(len(data))
-                try:
-                    text = extract_docx_text(data)
-                    err = None
-                except Exception as exc:  # noqa: BLE001 — per-file isolation
-                    text, err = "", f"{type(exc).__name__}: {exc}"
-                out["n_paragraphs"].append(
-                    len(text.split("\n")) if text else 0
-                )
-                out["n_chars"].append(len(text))
-                out["text"].append(text)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, DOCX_TEXT_SCHEMA)

@@ -13,8 +13,8 @@ per-file fan-out:
   links become `text (url)`, code-fence content kept verbatim, heading
   markers dropped).
 
-`scan_markdown` is the standard distributed shape: binaryFile listing →
-mapInPandas, one task per file, error rows for undecodable files.
+`scan_markdown` runs one task per file (sources/files.py), with error
+rows for undecodable files.
 """
 
 from __future__ import annotations
@@ -22,7 +22,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .files import fan_out, list_files
 
 MD_TEXT_SCHEMA = (
     "path string, meta map<string,string>, n_chars bigint, "
@@ -81,34 +82,17 @@ def markdown_to_text(body: str) -> str:
     return out.strip()
 
 
+def _markdown_rows(path: str, data: bytes):
+    meta, body = split_front_matter(data.decode("utf-8", errors="strict"))
+    text = markdown_to_text(body)
+    return [(path, meta, len(text), text, None)]
+
+
 def scan_markdown(spark: SparkSession, path: str) -> DataFrame:
     """Distributed markdown scan: (path, meta, n_chars, text, error)."""
-    import pandas as pd
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.{[mM][dD],[mM][aA][rR][kK][dD][oO][wW][nN]}")
-        .load(path)
-        .where(F.col("path").rlike(r"(?i)\.(md|markdown)$"))
-        .select("path", "content")
+    return fan_out(
+        list_files(spark, path, ("md", "markdown")),
+        MD_TEXT_SCHEMA,
+        _markdown_rows,
+        lambda path, data, err: [(path, {}, 0, "", err)],
     )
-
-    def run(batches):
-        for pdf in batches:
-            out = {"path": [], "meta": [], "n_chars": [], "text": [], "error": []}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                out["path"].append(fpath)
-                try:
-                    md = bytes(content).decode("utf-8", errors="strict")
-                    meta, body = split_front_matter(md)
-                    text = markdown_to_text(body)
-                    err = None
-                except Exception as exc:  # noqa: BLE001 — per-file isolation
-                    meta, text, err = {}, "", f"{type(exc).__name__}: {exc}"
-                out["meta"].append(meta)
-                out["n_chars"].append(len(text))
-                out["text"].append(text)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, MD_TEXT_SCHEMA)

@@ -1,58 +1,36 @@
-"""PDF corpus scan (SURVEY §2.1 S5, the at-scale shape): a binaryFile
-listing of .pdf files fanned out one-task-per-file through mapInPandas,
-each task running the tiered text extractor (PyMuPDF when importable,
-the pure-Python ISO-32000 parser otherwise) from bytes.
+"""PDF corpus scan (SURVEY §2.1 S5, the at-scale shape): one task per
+.pdf file (sources/files.py), each running the tiered text extractor
+(PyMuPDF when importable, the pure-Python ISO-32000 parser otherwise)
+from bytes.
 
 Reference analog: one converter invocation per document
-(resources/convertors/pdf_extractor.py:56-101). PDFs are individually
-small and unsplittable; at 100 TB the parallelism is across MILLIONS of
-files, which binaryFile distributes by file. Extraction is pure Python
-per document, so Arrow batching moves the bytes once and the per-file
-cost is the parser itself.
+(resources/convertors/pdf_extractor.py:56-101).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .files import fan_out, list_files
 
 # text plus per-file outcome; a corrupt document yields an error row, not
-# a failed scan (same fault-isolation contract as spreadsheet.scan_workbooks)
+# a failed scan
 PDF_TEXT_SCHEMA = "path string, n_bytes bigint, n_chars bigint, text string, error string"
+
+
+def _pdf_rows(path: str, data: bytes):
+    from ..functions.udfs import extract_pdf_text
+
+    text = extract_pdf_text(data)
+    return [(path, len(data), len(text), text, None)]
 
 
 def scan_pdfs(spark: SparkSession, path: str) -> DataFrame:
     """Distributed multi-PDF text extraction: (path, n_bytes, n_chars,
     text, error) per document."""
-    import pandas as pd
-
-    files = (
-        spark.read.format("binaryFile")
-        # prune at the LISTING so non-PDF bytes are never read
-        .option("pathGlobFilter", "*.[pP][dD][fF]")  # any-case .pdf — the
-        # rlike post-filter is (?i), so the listing glob must be too
-        .load(path)
-        .where(F.col("path").rlike(r"(?i)\.pdf$"))
-        .select("path", "content")
+    return fan_out(
+        list_files(spark, path, ("pdf",)),
+        PDF_TEXT_SCHEMA,
+        _pdf_rows,
+        lambda path, data, err: [(path, len(data), 0, "", err)],
     )
-
-    def run(batches):
-        from ..functions.udfs import extract_pdf_text
-
-        for pdf in batches:
-            out = {"path": [], "n_bytes": [], "n_chars": [], "text": [], "error": []}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
-                out["path"].append(fpath)
-                out["n_bytes"].append(len(data))
-                try:
-                    text = extract_pdf_text(data)
-                    err = None
-                except Exception as exc:  # noqa: BLE001 — per-file isolation
-                    text, err = "", f"{type(exc).__name__}: {exc}"
-                out["n_chars"].append(len(text))
-                out["text"].append(text)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, PDF_TEXT_SCHEMA)

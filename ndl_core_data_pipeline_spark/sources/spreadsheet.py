@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ingest.infer import infer_and_cast
+from .files import fan_out, list_files
 
 FILE_READ_TIMEOUT_S = 60  # spreadsheet_to_parquet.py:43
 
@@ -81,56 +82,32 @@ WORKBOOK_CELLS_SCHEMA = (
 ERROR_SHEET = "__error__"
 
 
+def _workbook_rows(path: str, data: bytes):
+    return [
+        (path, sheet, i, row)
+        for sheet, rows in read_workbook_bytes(path, data).items()
+        for i, row in enumerate(rows)
+    ]
+
+
 def scan_workbooks(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed multi-workbook scan (the at-scale S4 shape): a
-    binaryFile listing of .xlsx/.ods files fanned out one-task-per-file
-    through mapInPandas, each task parsing its workbook from bytes with
-    the pure-Python tiers. Output: (path, sheet, row_idx, cells) — the
-    exploded all-string cell grid, repartitionable downstream.
+    """Distributed multi-workbook scan (the at-scale S4 shape): one task
+    per .xlsx/.ods file (sources/files.py), each parsing its workbook
+    from bytes with the pure-Python tiers. Output: (path, sheet,
+    row_idx, cells) — the exploded all-string cell grid,
+    repartitionable downstream. One corrupt or truncated workbook
+    (BadZipFile, XML ParseError, missing content.xml, ...) yields one
+    ERROR_SHEET sentinel row instead of failing a million-file scan.
 
-    Workbooks are individually small and unsplittable; at 100 TB the
-    parallelism is across MILLIONS of files, which binaryFile
-    distributes by file. Reference analog: one converter invocation per
-    spreadsheet (resources/convertors/spreadsheet_to_parquet.py:108-187).
+    Reference analog: one converter invocation per spreadsheet
+    (resources/convertors/spreadsheet_to_parquet.py:108-187).
     """
-    import pandas as pd
-
-    files = (
-        spark.read.format("binaryFile")
-        # pathGlobFilter prunes at the LISTING, so non-workbook files are
-        # never read at all (binaryFile pushes down only length/modtime
-        # predicates — a post-hoc rlike on path would still load bytes)
-        .option("pathGlobFilter", "*.{[xX][lL][sS][xX],[oO][dD][sS]}")
-        .load(path)
-        .where(F.col("path").rlike(r"(?i)\.(xlsx|ods)$"))
-        .select("path", "content")
+    return fan_out(
+        list_files(spark, path, ("xlsx", "ods")),
+        WORKBOOK_CELLS_SCHEMA,
+        _workbook_rows,
+        lambda path, data, err: [(path, ERROR_SHEET, -1, [err])],
     )
-
-    def run(batches):
-        for pdf in batches:
-            out = {"path": [], "sheet": [], "row_idx": [], "cells": []}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                # per-file fault isolation: one corrupt/truncated workbook
-                # (BadZipFile, XML ParseError, missing content.xml, ...)
-                # must not fail a million-file scan after task retries —
-                # emit a sentinel row and keep going
-                try:
-                    sheets = read_workbook_bytes(fpath, bytes(content))
-                except Exception as exc:  # noqa: BLE001 — any parse failure
-                    out["path"].append(fpath)
-                    out["sheet"].append(ERROR_SHEET)
-                    out["row_idx"].append(-1)
-                    out["cells"].append([f"{type(exc).__name__}: {exc}"])
-                    continue
-                for sheet, rows in sheets.items():
-                    for i, row in enumerate(rows):
-                        out["path"].append(fpath)
-                        out["sheet"].append(sheet)
-                        out["row_idx"].append(i)
-                        out["cells"].append(row)
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, WORKBOOK_CELLS_SCHEMA)
 
 
 def scan_workbooks_quarantined(

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Large-path oracle attestation (round 15, VERDICT item 2).
 
-The size-adaptive operators (connected_components at dedup.py:514,
-train_bpe_merges at bpe.py:184) pick their strategy from one
+The size-adaptive operators (dedup.connected_components,
+bpe.train_bpe_merges) pick their strategy from one
 limit(MAX+1) probe; at sf0.01 the probe always lands driver-sized, so
 every oracle green row ever recorded attests the DRIVER branch only.
 At 100 TB the DISTRIBUTED branches are the only ones that run, and
@@ -73,16 +73,17 @@ def make_driver_path_guards(dedup_mod, bpe_mod):
     legitimately satisfies len(head) <= 0 and takes the driver branch —
     0 edges / 0 vocab is trivially equivalent on both paths, and raising
     there would misdiagnose empty input as a threshold bypass (review
-    finding). Shared with tests/test_forced_distributed.py."""
+    finding). Shared with tests/test_forced_distributed.py and
+    tests/test_dedup_guards.py."""
     orig_uf = dedup_mod._union_find_labels
     orig_tf = bpe_mod._train_from_freqs
 
-    def uf(edge_rows, *a, **k):
-        if edge_rows:
+    def uf(a, b):
+        if len(a):
             raise AssertionError(
                 "driver path taken despite forced-distributed thresholds"
             )
-        return orig_uf(edge_rows, *a, **k)
+        return orig_uf(a, b)
 
     def tf(freqs, *a, **k):
         if freqs:

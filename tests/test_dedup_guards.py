@@ -251,6 +251,29 @@ def test_connected_components_distributed_path_matches_driver(spark, monkeypatch
     assert small == big
 
 
+def test_driver_path_guard_catches_the_small_path(spark, monkeypatch):
+    # the forced-distributed guard patches the one driver union-find; a
+    # driver-sized graph (default CC_EDGES_DRIVER_MAX) must reach it, or a
+    # threshold bypass on the small path would go uncaught by the sweep
+    from forced_distributed_sweep import make_driver_path_guards
+
+    from ndl_core_data_pipeline_spark.operators import bpe
+
+    uf, _ = make_driver_path_guards(dedup, bpe)
+    monkeypatch.setattr(dedup, "_union_find_labels", uf)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8)], "doc_a BIGINT, doc_b BIGINT"
+    )
+    with pytest.raises(AssertionError, match="forced-distributed"):
+        dedup.connected_components(edges)
+
+
+def test_connected_components_rejects_null_ids(spark):
+    edges = spark.createDataFrame([(1, 2), (2, None)], "doc_a BIGINT, doc_b BIGINT")
+    with pytest.raises(ValueError, match="NULL node id"):
+        dedup.connected_components(edges)
+
+
 def test_output_bound_plans_emit_row_counters(spark, sf_small):
     # the two measured output-bound plans (SCALE_r10: theta band predicate
     # ~density^2, minhash collision pairs 8.9x per 3x rows) expose their

@@ -338,18 +338,63 @@ def test_fixed_width_header_skip_per_file(spark, tmp_path):
 
 def test_scan_handles_mixed_case_extensions(spark, tmp_path):
     """Review finding: case-sensitive listing globs silently dropped
-    'Data.Zip'-style names Windows tooling produces."""
+    'Data.Zip'-style names Windows tooling produces. Every file scanner
+    reads its own extension in any case and nothing else: each kind sits
+    beside a decoy whose name only contains the extension."""
     from ndl_core_data_pipeline_spark.sources.archives import scan_zip_tables
+    from ndl_core_data_pipeline_spark.sources.docx import scan_docx
     from ndl_core_data_pipeline_spark.sources.markdown import scan_markdown
+    from ndl_core_data_pipeline_spark.sources.pdfs import scan_pdfs
+    from ndl_core_data_pipeline_spark.sources.spreadsheet import scan_workbooks
+
+    from . import test_xlsx as X
+    from .test_ods import _CONTENT as ODS_CONTENT
+    from .test_pdf import _mini_pdf
 
     d = tmp_path / "mixed"
     d.mkdir()
     _make_zip(d / "Data.Zip", {"t.csv": "x\n1\n"})
     (d / "Read.Md").write_text("hello")
-    zrows = scan_zip_tables(spark, str(d)).collect()
-    assert any(r["archive"].endswith("Data.Zip") for r in zrows)
-    mrows = scan_markdown(spark, str(d)).collect()
-    assert any(r["path"].endswith("Read.Md") for r in mrows)
+    (d / "Doc.PDF").write_bytes(_mini_pdf([b"Hello PDF"]))
+    _make_docx(d / "Memo.DocX")
+    _make_zip(
+        d / "Book.XLSX",
+        {
+            "[Content_Types].xml": X._CT,
+            "_rels/.rels": X._ROOT_RELS,
+            "xl/workbook.xml": X._WORKBOOK,
+            "xl/_rels/workbook.xml.rels": X._WORKBOOK_RELS,
+            "xl/sharedStrings.xml": X._SHARED,
+            "xl/worksheets/sheet1.xml": X._SHEET1,
+            "xl/worksheets/sheet2.xml": X._SHEET2,
+        },
+    )
+    _make_zip(
+        d / "Sheet.Ods",
+        {
+            "mimetype": "application/vnd.oasis.opendocument.spreadsheet",
+            "content.xml": ODS_CONTENT,
+        },
+    )
+    for decoy in ("Data.Zip.part", "Read.Md.orig", "Doc.PDF.txt",
+                  "Memo.DocX.bak", "Book.XLSX.old", "Sheet.Ods.tmp"):
+        (d / decoy).write_text("decoy")
+
+    cases = [
+        (scan_zip_tables, "archive", {"Data.Zip"}),
+        (scan_markdown, "path", {"Read.Md"}),
+        (scan_pdfs, "path", {"Doc.PDF"}),
+        (scan_docx, "path", {"Memo.DocX"}),
+        (scan_workbooks, "path", {"Book.XLSX", "Sheet.Ods"}),
+    ]
+    for scan, col, want in cases:
+        df = scan(spark, str(d))
+        rows = df.collect()
+        assert {r[col].split("/")[-1] for r in rows} == want, scan.__name__
+        if "error" in df.columns:
+            assert all(r["error"] is None for r in rows), scan.__name__
+        else:
+            assert all(r["row_idx"] >= 0 for r in rows), scan.__name__
 
 
 def test_fixed_width_custom_regex_special_pad(spark, tmp_path):

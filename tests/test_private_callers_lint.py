@@ -110,3 +110,18 @@ def test_no_package_module_imports_pyspark_ml():
                 if n == "pyspark.ml" or n.startswith("pyspark.ml.")
             ]
     assert not bad, "pyspark.ml imports in the package: " + ", ".join(bad)
+
+
+def test_binary_file_listing_lives_in_the_file_seam():
+    """Raw files are listed in one place: the `"binaryFile"` format name
+    appears only in `sources.files` (the listing every file reader uses)
+    and in `sinks.compact_parquet`'s size-only listing."""
+    allowed = {(f"{PKG}.sources.files", "list_files"), (f"{PKG}.sinks", "compact_parquet")}
+    found = set()
+    for mod, _, tree in _modules():
+        for top in tree.body:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Constant) and node.value == "binaryFile":
+                    found.add((mod, getattr(top, "name", f"line {node.lineno}")))
+    assert found <= allowed, sorted(found - allowed)
+    assert found == allowed, sorted(allowed - found)

@@ -61,6 +61,8 @@ def test_union_find_numpy_matches_per_edge_reference():
     singleton self-loops, duplicate edges, negative ids)."""
     import random
 
+    import numpy as np
+
     from ndl_core_data_pipeline_spark.operators.dedup import _union_find_labels
 
     def reference(edge_rows):
@@ -95,4 +97,8 @@ def test_union_find_numpy_matches_per_edge_reference():
         [(rng.randrange(10**12), rng.randrange(10**12)) for _ in range(2000)],
     ]
     for edges in cases:
-        assert sorted(_union_find_labels(edges)) == reference(edges), edges[:5]
+        a = np.array([e[0] for e in edges], dtype=np.int64)
+        b = np.array([e[1] for e in edges], dtype=np.int64)
+        nodes, labels = _union_find_labels(a, b)
+        got = list(zip(nodes.tolist(), labels.tolist()))
+        assert got == reference(edges), edges[:5]
