@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
+from .functions.udfs import _tier
+
 DIM = 256
 COSINE_THRESHOLD = 0.3  # eu_theme_classifier.py:10
 TOP_K = 3  # eu_theme_classifier.py:12
@@ -62,24 +64,13 @@ def featurize(text: str) -> np.ndarray:
     return v / n if n else v
 
 
-_ST_MODEL = None
-_ST_TRIED = False
-
-
+@_tier
 def _sentence_transformer():
-    """Lazy once-per-executor all-MiniLM-L6-v2 (process_text_chunks.py:11)
-    — model load costs seconds, so it must never happen per batch. None
-    when sentence-transformers is absent."""
-    global _ST_MODEL, _ST_TRIED
-    if not _ST_TRIED:
-        _ST_TRIED = True
-        try:
-            from sentence_transformers import SentenceTransformer
+    """all-MiniLM-L6-v2 (process_text_chunks.py:11) — model load costs
+    seconds, so it must never happen per batch."""
+    from sentence_transformers import SentenceTransformer
 
-            _ST_MODEL = SentenceTransformer("all-MiniLM-L6-v2")
-        except ImportError:
-            _ST_MODEL = None
-    return _ST_MODEL
+    return SentenceTransformer("all-MiniLM-L6-v2")
 
 
 def embed_texts(texts: list[str]) -> np.ndarray:

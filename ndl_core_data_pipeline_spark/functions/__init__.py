@@ -2,20 +2,16 @@ from .udfs import (
     anonymize_text_udf,
     chunk_text,
     chunk_text_udf,
-    detect_language_udf,
     extract_html_text,
-    extract_html_text_udf,
     iso8601,
-    token_count_udf,
+    refine_text_udf,
 )
 
 __all__ = [
     "anonymize_text_udf",
     "chunk_text",
     "chunk_text_udf",
-    "detect_language_udf",
     "extract_html_text",
-    "extract_html_text_udf",
     "iso8601",
-    "token_count_udf",
+    "refine_text_udf",
 ]

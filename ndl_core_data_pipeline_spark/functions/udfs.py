@@ -16,21 +16,23 @@ Reference operators covered:
 - S6 HTML text extraction (resources/convertors/html_extractor.py:55-162:
   bs4 tier; regex strip fallback)
 
-Every UDF initializes its model once per executor process (module-level
-lazy singleton) and processes Arrow batches — the distributed analog of
-the reference's own batching (anonymizer.py:47-59, classifier batch 64).
+Each optional library tier is resolved once per Python worker process by
+a `_tier` loader, which returns the tier (module, model or engines) or
+None when the library is absent; no other code imports an optional
+library. The UDFs process Arrow batches — the distributed analog of the
+reference's own batching (anonymizer.py:47-59, classifier batch 64).
 """
 
 from __future__ import annotations
 
+import functools
 import re
-from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import Column, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, IntegerType, StringType
+from pyspark.sql.types import ArrayType, IntegerType, StringType, StructType
 
 # ---------------------------------------------------------------- helpers
 
@@ -44,24 +46,29 @@ _TOKEN_FALLBACK_RE = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]")
 EMAIL_RE = re.compile(r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}")
 UK_PHONE_RE = re.compile(r"(\+44[ -]?7\d{3}|07\d{3})[ -]?\d{3}[ -]?\d{3}")
 
-_ENCODER = None
-_ENCODER_TRIED = False
 
+def _tier(load):
+    """An optional library tier's loader: `load()` runs once per process
+    and its result is kept; None when the library is absent."""
 
-def _tiktoken_encoder():
-    global _ENCODER, _ENCODER_TRIED
-    if not _ENCODER_TRIED:
-        _ENCODER_TRIED = True
+    @functools.cache
+    def loader():
         try:
-            import tiktoken
-
-            try:
-                _ENCODER = tiktoken.encoding_for_model("gpt-4o")
-            except Exception:
-                _ENCODER = tiktoken.get_encoding("cl100k_base")
+            return load()
         except ImportError:
-            _ENCODER = None
-    return _ENCODER
+            return None
+
+    return loader
+
+
+@_tier
+def _tiktoken_encoder():
+    import tiktoken
+
+    try:
+        return tiktoken.encoding_for_model("gpt-4o")
+    except Exception:
+        return tiktoken.get_encoding("cl100k_base")
 
 
 def count_tokens(text: str | None) -> int:
@@ -74,30 +81,25 @@ def count_tokens(text: str | None) -> int:
     return len(_TOKEN_FALLBACK_RE.findall(text))
 
 
-@pandas_udf(IntegerType())
-def token_count_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(count_tokens).astype("int32")
+@_tier
+def _langdetect():
+    from langdetect import DetectorFactory, detect
 
-
-_LANGDETECT_READY = False
+    DetectorFactory.seed = 0  # reference pins the seed
+    return detect
 
 
 def detect_language(text: str | None, fallback: str | None = None) -> str:
     """X6: langdetect (seeded) for len>200, else metadata fallback, else
     'en'; stopword heuristic when langdetect is unavailable."""
-    global _LANGDETECT_READY
     if text and len(text) > LANGDETECT_MIN_CHARS:
-        try:
-            from langdetect import DetectorFactory, detect
-
-            if not _LANGDETECT_READY:
-                DetectorFactory.seed = 0  # reference pins the seed
-                _LANGDETECT_READY = True
+        detect = _langdetect()
+        if detect is not None:
             try:
                 return detect(text)
             except Exception:
                 pass
-        except ImportError:
+        else:
             low = text.lower()
             scores = {
                 "en": sum(low.count(f" {w} ") for w in ("the", "and", "of", "to")),
@@ -111,46 +113,22 @@ def detect_language(text: str | None, fallback: str | None = None) -> str:
     return fallback or "en"
 
 
-@pandas_udf(StringType())
-def detect_language_udf(texts: pd.Series, fallbacks: pd.Series) -> pd.Series:
-    return pd.Series(
-        [detect_language(t, f) for t, f in zip(texts, fallbacks)], dtype="object"
-    )
-
-
-_PRESIDIO = None
-_PRESIDIO_TRIED = False
-
-
+@_tier
 def _presidio_engines():
-    """Lazy once-per-executor presidio engines. AnalyzerEngine construction
-    loads spaCy models (seconds) — building it per row would be a
-    scale-killer, so the engines and the operator configs are module-level
-    singletons, mirroring _tiktoken_encoder. Returns (analyzer, anonymizer,
-    operators) or None when presidio is absent."""
-    global _PRESIDIO, _PRESIDIO_TRIED
-    if not _PRESIDIO_TRIED:
-        _PRESIDIO_TRIED = True
-        try:
-            from presidio_analyzer import AnalyzerEngine
-            from presidio_anonymizer import AnonymizerEngine
-            from presidio_anonymizer.entities import OperatorConfig
+    """(analyzer, anonymizer, operators). AnalyzerEngine construction loads
+    spaCy models (seconds), so it must never happen per row."""
+    from presidio_analyzer import AnalyzerEngine
+    from presidio_anonymizer import AnonymizerEngine
+    from presidio_anonymizer.entities import OperatorConfig
 
-            _PRESIDIO = (
-                AnalyzerEngine(),
-                AnonymizerEngine(),
-                {
-                    "EMAIL_ADDRESS": OperatorConfig(
-                        "replace", {"new_value": "xxx@xxx.xx"}
-                    ),
-                    "PHONE_NUMBER": OperatorConfig(
-                        "replace", {"new_value": "xx-xxxx-xxxx"}
-                    ),
-                },
-            )
-        except ImportError:
-            _PRESIDIO = None
-    return _PRESIDIO
+    return (
+        AnalyzerEngine(),
+        AnonymizerEngine(),
+        {
+            "EMAIL_ADDRESS": OperatorConfig("replace", {"new_value": "xxx@xxx.xx"}),
+            "PHONE_NUMBER": OperatorConfig("replace", {"new_value": "xx-xxxx-xxxx"}),
+        },
+    )
 
 
 def anonymize_text(text: str | None) -> str | None:
@@ -240,6 +218,13 @@ _BLOCK_RE = re.compile(r"</?(p|div|br|h[1-6]|tr|table|ul|ol)\b[^>]*>", re.I)
 _ANYTAG_RE = re.compile(r"<[^>]+>")
 
 
+@_tier
+def _bs4():
+    from bs4 import BeautifulSoup, Comment
+
+    return BeautifulSoup, Comment
+
+
 def extract_html_text(html: str | None) -> str | None:
     """S6: bs4 tier when importable; regex tier otherwise. Both preserve
     the reference's contract (html_extractor.py:55-162): drop script/style/
@@ -247,9 +232,9 @@ def extract_html_text(html: str | None) -> str | None:
     boundaries become newlines, whitespace normalized."""
     if html is None:
         return None
-    try:
-        from bs4 import BeautifulSoup, Comment
-
+    bs4 = _bs4()
+    if bs4 is not None:
+        BeautifulSoup, Comment = bs4
         soup = BeautifulSoup(html, "html.parser")
         for t in soup(["script", "style", "noscript"]):
             t.decompose()
@@ -260,7 +245,7 @@ def extract_html_text(html: str | None) -> str | None:
         for li in soup.find_all("li"):
             li.insert(0, "- ")
         text = soup.get_text(separator="\n")
-    except ImportError:
+    else:
         import html as html_mod
 
         s = _TAG_RE.sub(" ", html)
@@ -270,22 +255,27 @@ def extract_html_text(html: str | None) -> str | None:
         s = _BLOCK_RE.sub("\n", s)
         s = _ANYTAG_RE.sub(" ", s)
         text = html_mod.unescape(s)
-    lines = [re.sub(r"[ \t]+", " ", ln).strip() for ln in text.splitlines()]
-    out: list[str] = []
-    blank = False
-    for ln in lines:
-        if ln:
-            out.append(ln)
-            blank = False
-        elif not blank and out:
-            out.append("")
-            blank = True
-    return "\n".join(out).strip()
+    # normalized lines; a run of blank lines becomes one
+    text = "\n".join(re.sub(r"[ \t]+", " ", ln).strip() for ln in text.splitlines())
+    return re.sub(r"\n{3,}", "\n\n", text).strip()
 
 
-@pandas_udf(StringType())
-def extract_html_text_udf(htmls: pd.Series) -> pd.Series:
-    return htmls.map(extract_html_text)
+@pandas_udf(
+    StructType()
+    .add("text", StringType())
+    .add("language", StringType())
+    .add("token_count", IntegerType())
+)
+def refine_text_udf(texts: pd.Series, fallbacks: pd.Series) -> pd.DataFrame:
+    """One crawled record's text pass (assets/processing/assets.py:196-197,
+    318-327): residual HTML (both '<' and '>') is re-extracted, then the
+    language and token count are taken from the result."""
+    rows = []
+    for text, fallback in zip(texts, fallbacks):
+        if "<" in text and ">" in text:
+            text = extract_html_text(text)
+        rows.append((text, detect_language(text, fallback), count_tokens(text)))
+    return pd.DataFrame(rows, columns=["text", "language", "token_count"])
 
 
 # ------------------------------------------------------------ pdf extract
@@ -293,17 +283,32 @@ def extract_html_text_udf(htmls: pd.Series) -> pd.Series:
 PDF_OCR_THRESHOLD = 200  # resources/convertors/pdf_extractor.py:12
 
 
+@_tier
+def _pymupdf():
+    import fitz
+
+    return fitz
+
+
+@_tier
+def _ocr_libs():
+    import pdf2image
+    import pytesseract
+    from PIL import Image  # noqa: F401
+
+    return pdf2image, pytesseract
+
+
 def _pdf_ocr(payload: bytes) -> str:
-    """OCR tier (pdf_extractor.py:15-53: pdf2image + pytesseract). The
-    rasterizer/OCR libs are not in this container; absent them this
-    returns '' and the short text layer stands."""
-    try:
-        import pdf2image  # noqa: F401
-        import pytesseract
-        from PIL import Image  # noqa: F401
-    except ImportError:
+    """OCR tier (pdf_extractor.py:15-53: pdf2image + pytesseract). Absent
+    the rasterizer/OCR libs this returns '' and the short text layer
+    stands."""
+    libs = _ocr_libs()
+    if libs is None:
         return ""
     import tempfile
+
+    pdf2image, pytesseract = libs
 
     with tempfile.NamedTemporaryFile(suffix=".pdf") as tmp:
         tmp.write(payload)
@@ -317,15 +322,14 @@ def extract_pdf_text(payload: bytes, ocr_threshold: int = PDF_OCR_THRESHOLD) -> 
     Tiers: PyMuPDF when importable → pure-Python content-stream parser.
     When the text layer yields fewer than `ocr_threshold` chars the OCR
     tier is consulted and appended when longer (pdf_extractor.py:94-98)."""
-    try:
-        import fitz  # PyMuPDF
-
+    fitz = _pymupdf()
+    if fitz is not None:
         doc = fitz.open(stream=payload, filetype="pdf")
         try:
             text = "\n".join(page.get_text("text") for page in doc).strip()
         finally:
             doc.close()
-    except ImportError:
+    else:
         from .pdf import pdf_text
 
         text = pdf_text(payload).strip()

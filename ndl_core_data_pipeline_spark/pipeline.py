@@ -23,12 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .functions.udfs import (
-    anonymize_text_udf,
-    detect_language_udf,
-    extract_html_text_udf,
-    token_count_udf,
-)
+from .functions.udfs import anonymize_text_udf, refine_text_udf
 from .operators.textops import LICENSE_DEFAULT, LICENSE_MAP
 from .schema import (
     CANONICAL_SCHEMA,
@@ -78,21 +73,15 @@ def canonicalize(raw: DataFrame, parse_ts=None) -> DataFrame:
         if extra_cols
         else F.lit("{}")
     )
-    text = F.coalesce(get("text"), F.lit(""))
-    # embedded-markup sniff (assets/processing/assets.py:196-197): when the
-    # converted text still contains both '<' and '>', it is residual HTML —
-    # re-extract before language detection and the word/token counts.
-    # The UDF call must wrap the condition, not sit under it: Catalyst
-    # extracts Python UDFs out of CASE WHEN into an unconditional
-    # ArrowEvalPython node, so `when(cond, udf(text))` would ship EVERY
-    # row through the Python worker. Feeding the UDF a nulled input keeps
-    # non-markup rows on the None fast path inside the batch.
-    has_markup = text.contains("<") & text.contains(">")
-    text = F.coalesce(extract_html_text_udf(F.when(has_markup, text)), text)
+    # one Python pass per row: residual-HTML re-extraction, then language
+    # and token count on its result (functions.udfs.refine_text_udf). The
+    # UDF's struct fields are nullable; the coalesce keeps `text` non-null.
+    refined = refine_text_udf(F.coalesce(get("text"), F.lit("")), get("language"))
+    text = F.coalesce(F.col("_refined.text"), F.lit(""))
     word_count = F.when(F.length(F.trim(text)) == 0, F.lit(0)).otherwise(
         F.regexp_count(text, F.lit(r"\S+"))
     )
-    return raw.select(
+    return raw.select("*", refined.alias("_refined")).select(
         F.coalesce(get("identifier"), F.uuid()).alias("identifier"),
         get("title").alias("title"),
         get("description").alias("description"),
@@ -106,11 +95,11 @@ def canonicalize(raw: DataFrame, parse_ts=None) -> DataFrame:
             if "tags" in cols
             else F.lit(None).cast("array<string>")
         ).alias("tags"),
-        detect_language_udf(text, get("language")).alias("language"),
+        F.col("_refined.language").alias("language"),
         F.coalesce(get("format"), F.lit("text")).alias("format"),
         text.alias("text"),
         word_count.cast("int").alias("word_count"),
-        token_count_udf(text).alias("token_count"),
+        F.col("_refined.token_count").alias("token_count"),
         get("data_file").alias("data_file"),
         extra.alias("extra_metadata"),
     )
@@ -143,8 +132,9 @@ def filter_supported(df: DataFrame) -> DataFrame:
 def anonymize(df: DataFrame) -> DataFrame:
     """P2 (resources/refine/anonymizer.py:47-71): anonymize text rows only,
     pass the rest through untouched."""
-    # null-feed form for the same reason as the canonicalize markup sniff:
-    # a UDF under CASE WHEN is hoisted and evaluated for all rows
+    # null-feed form: Catalyst hoists a Python UDF out of CASE WHEN into an
+    # unconditional ArrowEvalPython node, so `when(mask, udf(text))` would
+    # ship every row through the worker; nulled rows take the fast path
     mask = (F.col("format") == "text") & F.col("text").isNotNull()
     return df.withColumn(
         "text",

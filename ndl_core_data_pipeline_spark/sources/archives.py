@@ -25,18 +25,14 @@ ERROR_MEMBER = "__error__"
 
 def _rows_from_zip(name: str, data: bytes):
     """Yield (archive, member, row_idx, cells) for every CSV/TSV member;
-    one sentinel row per unreadable archive or member, so a bad member
-    never hides the archive's good ones."""
+    one sentinel row per unreadable member, so a bad member never hides
+    the archive's good ones (an unreadable archive is fan_out's error
+    row)."""
     import csv
     import io
     import zipfile
 
-    try:
-        zf = zipfile.ZipFile(io.BytesIO(data))
-    except Exception as exc:  # noqa: BLE001 — any corrupt archive
-        yield name, ERROR_MEMBER, -1, [f"{type(exc).__name__}: {exc}"]
-        return
-    with zf:
+    with zipfile.ZipFile(io.BytesIO(data)) as zf:
         for info in zf.infolist():
             member = info.filename
             low = member.lower()
@@ -57,7 +53,10 @@ def _rows_from_zip(name: str, data: bytes):
 def scan_zip_tables(spark: SparkSession, path: str) -> DataFrame:
     """Distributed zip-of-CSVs scan → (archive, member, row_idx, cells)."""
     return fan_out(
-        list_files(spark, path, ("zip",)), ARCHIVE_CELLS_SCHEMA, _rows_from_zip
+        list_files(spark, path, ("zip",)),
+        ARCHIVE_CELLS_SCHEMA,
+        _rows_from_zip,
+        lambda path, data, err: [(path, ERROR_MEMBER, -1, [err])],
     )
 
 

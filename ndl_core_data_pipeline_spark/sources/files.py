@@ -13,6 +13,9 @@ cost is the decoder itself.
 
 from __future__ import annotations
 
+import re
+from urllib.parse import unquote
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -30,13 +33,24 @@ def list_files(spark: SparkSession, path: str, exts: tuple[str, ...]) -> DataFra
     """(path, content) for every file under `path` whose extension is one
     of `exts`, in any letter case ('Data.Zip' is a zip). The glob prunes
     at the LISTING, so other files' bytes are never read: binaryFile
-    pushes down only length/modificationTime predicates, never path."""
-    return (
+    pushes down only length/modificationTime predicates, never path.
+
+    Spark leaves zero-length files out of a file scan: each listed file
+    (`inputFiles()`, no job) that a path-only scan (one job, no content
+    read) lacks comes back as (path, b""), an error row in fan_out."""
+    scan = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", _any_case_glob(exts))
         .load(path)
         .select("path", "content")
     )
+    # listing URIs ('file:///a%20b') in the scan's path form ('file:/a b')
+    listed = {re.sub("^file:///", "file:/", unquote(p)) for p in scan.inputFiles()}
+    scanned = {r.path for r in scan.select("path").collect()}
+    empty = [(p, b"") for p in sorted(listed - scanned)]
+    if not empty:
+        return scan
+    return scan.union(spark.createDataFrame(empty, "path string, content binary"))
 
 
 def fan_out(files: DataFrame, schema: str, decode, error_rows=None) -> DataFrame:
@@ -46,7 +60,9 @@ def fan_out(files: DataFrame, schema: str, decode, error_rows=None) -> DataFrame
     built inside the `try`, so a file that raises yields only
     `error_rows(path, data, message)` — never partial rows — and the
     scan keeps going; with no `error_rows` the exception fails the
-    task."""
+    task. An empty payload is never decoded, and with `error_rows` a
+    file that yields no rows is an error too, so every file yields at
+    least one row."""
     names = StructType.fromDDL(schema).names
 
     def run(batches):
@@ -57,7 +73,9 @@ def fan_out(files: DataFrame, schema: str, decode, error_rows=None) -> DataFrame
             for path, content in zip(pdf["path"], pdf["content"]):
                 data = bytes(content)
                 try:
-                    got = list(decode(path, data))
+                    got = list(decode(path, data)) if data else []
+                    if not got and error_rows is not None:
+                        raise ValueError("no rows" if data else "empty file")
                 except Exception as exc:  # noqa: BLE001 — per-file isolation
                     if error_rows is None:
                         raise

@@ -407,3 +407,84 @@ def test_fixed_width_custom_regex_special_pad(spark, tmp_path):
     ).collect()[0]
     assert out["a"] == "ab"
     assert out["b"] == "cd"
+
+
+def test_every_listed_file_is_accounted_for(spark, tmp_path):
+    """For every file scanner, the files it lists equal the files that
+    produced rows plus the files it quarantined. Spark leaves zero-length
+    files out of a file scan, so without `list_files` bringing them back a
+    truncated upload vanished from both sides. The directory name holds a
+    space, so the listing's URI form has to match the scan's path form;
+    the listing is not recursive, so nothing under `nested/` is listed."""
+    import os
+
+    from ndl_core_data_pipeline_spark.sources.archives import (
+        scan_zip_tables_quarantined,
+    )
+    from ndl_core_data_pipeline_spark.sources.docx import scan_docx
+    from ndl_core_data_pipeline_spark.sources.markdown import scan_markdown
+    from ndl_core_data_pipeline_spark.sources.pdfs import scan_pdfs
+    from ndl_core_data_pipeline_spark.sources.spreadsheet import (
+        scan_workbooks_quarantined,
+    )
+
+    from . import test_xlsx as X
+    from .test_pdf import _mini_pdf
+
+    d = tmp_path / "hostile dir"
+    (d / "nested").mkdir(parents=True)
+    _make_zip(d / "Good.Zip", {"t.csv": "x\n1\n"})
+    _make_zip(d / "no_members.zip", {})
+    _make_zip(d / "zero_member.zip", {"t.csv": ""})
+    (d / "Good.Md").write_text("# hello\n\nbody")
+    (d / "Good.PDF").write_bytes(_mini_pdf([b"Hello PDF"]))
+    _make_docx(d / "Good.DocX")
+    _make_zip(
+        d / "Good.XLSX",
+        {
+            "[Content_Types].xml": X._CT,
+            "_rels/.rels": X._ROOT_RELS,
+            "xl/workbook.xml": X._WORKBOOK,
+            "xl/_rels/workbook.xml.rels": X._WORKBOOK_RELS,
+            "xl/sharedStrings.xml": X._SHARED,
+            "xl/worksheets/sheet1.xml": X._SHEET1,
+            "xl/worksheets/sheet2.xml": X._SHEET2,
+        },
+    )
+    for ext in ("zip", "md", "pdf", "docx", "xlsx"):
+        good = next(p for p in d.iterdir() if p.suffix.lower() == f".{ext}")
+        data = good.read_bytes()
+        (d / f"empty.{ext}").write_bytes(b"")
+        (d / f"truncated.{ext}").write_bytes(data[: len(data) // 2])
+        (d / f"wrong_magic.{ext}").write_bytes(b"\x89PNG\r\n\x1a\n\xff" + data[9:])
+        (d / "nested" / f"inner.{ext}").write_bytes(data)
+
+    def by_error(df, key):
+        rows = df.select(key, "error").collect()
+        ok = {r[0] for r in rows if r["error"] is None}
+        bad = {r[0]: r["error"] for r in rows if r["error"] is not None}
+        return ok, bad
+
+    def split(scan, key):
+        def run(spark, path):
+            cells, errors = scan(spark, path)
+            ok = {r[0] for r in cells.select(key).collect()}
+            return ok, {r[0]: r[1][0] for r in errors.select(key, "cells").collect()}
+
+        return run
+
+    scanners = {
+        "pdf": lambda s, p: by_error(scan_pdfs(s, p), "path"),
+        "docx": lambda s, p: by_error(scan_docx(s, p), "path"),
+        "md": lambda s, p: by_error(scan_markdown(s, p), "path"),
+        "xlsx": split(scan_workbooks_quarantined, "path"),
+        "zip": split(scan_zip_tables_quarantined, "archive"),
+    }
+    for ext, scan in scanners.items():
+        listed = {p for p in os.listdir(d) if p.lower().endswith(f".{ext}")}
+        ok, quarantined = scan(spark, str(d))
+        names = lambda paths: {p.rsplit("/", 1)[-1] for p in paths}  # noqa: E731
+        assert names(ok) | names(quarantined) == listed, ext
+        assert any(n.startswith("Good.") for n in names(ok)), ext
+        empty = [m for p, m in quarantined.items() if p.endswith(f"/empty.{ext}")]
+        assert empty == ["ValueError: empty file"], ext

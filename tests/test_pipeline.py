@@ -219,3 +219,15 @@ def test_embedded_html_reextracted(spark):
     assert out["h1"]["word_count"] == 5
     # a lone '<' without '>' is NOT markup — text passes through untouched
     assert out["h2"]["text"] == "plain 2 < 3 text"
+
+
+def test_process_plan_has_one_python_pass_each_side_of_the_dedup_shuffle(raw):
+    """canonicalize's text pass (markup re-extraction, language, tokens)
+    is one ArrowEvalPython below the dedup Exchange, and anonymize the
+    one above it: no chained Python nodes, one worker per task."""
+    from ndl_core_data_pipeline_spark.plans import explain_formatted
+
+    tree = explain_formatted(pipeline.process(raw)).split("\n\n", 1)[0]
+    above, below = tree.split("Exchange", 1)
+    assert above.count("ArrowEvalPython") == 1, tree
+    assert below.count("ArrowEvalPython") == 1, tree

@@ -125,3 +125,25 @@ def test_binary_file_listing_lives_in_the_file_seam():
                     found.add((mod, getattr(top, "name", f"line {node.lineno}")))
     assert found <= allowed, sorted(found - allowed)
     assert found == allowed, sorted(allowed - found)
+
+
+def test_optional_imports_live_in_the_tier_loader():
+    """Each optional library tier is resolved once per process: in
+    `functions/udfs.py` and `classify.py`, `except ImportError` appears
+    only in `udfs._tier`, the cached loader every tier goes through, never
+    on a per-call path."""
+    found = []
+    for mod, _, tree in _modules():
+        if mod not in {f"{PKG}.functions.udfs", f"{PKG}.classify"}:
+            continue
+        for top in tree.body:
+            for node in ast.walk(top):
+                if isinstance(node, ast.ExceptHandler) and node.type is not None:
+                    names = {n.id for n in ast.walk(node.type) if isinstance(n, ast.Name)}
+                    if names & {"ImportError", "ModuleNotFoundError"}:
+                        found.append((mod, getattr(top, "name", None), node.lineno))
+    bad = [f for f in found if f[:2] != (f"{PKG}.functions.udfs", "_tier")]
+    assert not bad, "ImportError handled outside the tier loader: " + ", ".join(
+        f"{mod}:{line}" for mod, _, line in bad
+    )
+    assert found, "udfs._tier no longer handles ImportError"

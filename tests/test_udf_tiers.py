@@ -1,12 +1,32 @@
-"""Model-tier plumbing: presidio engines must be constructed once per
-process (module-level lazy singletons), never per row."""
+"""Model-tier plumbing: each optional library tier is resolved once per
+process (a cached loader), never per row."""
 
 from __future__ import annotations
 
+import importlib.abc
 import sys
 import types
 
+import pytest
+
+from ndl_core_data_pipeline_spark import classify
 from ndl_core_data_pipeline_spark.functions import udfs
+
+
+def _clear_tier_caches():
+    for mod in (udfs, classify):
+        for fn in vars(mod).values():
+            if hasattr(fn, "cache_clear"):
+                fn.cache_clear()
+
+
+@pytest.fixture(autouse=True)
+def fresh_tiers():
+    """Every tier loader starts and ends each test unresolved, so a fake
+    module never outlives its test."""
+    _clear_tier_caches()
+    yield
+    _clear_tier_caches()
 
 
 def test_presidio_engines_built_once(monkeypatch):
@@ -44,8 +64,6 @@ def test_presidio_engines_built_once(monkeypatch):
     monkeypatch.setitem(sys.modules, "presidio_analyzer", mod_a)
     monkeypatch.setitem(sys.modules, "presidio_anonymizer", mod_b)
     monkeypatch.setitem(sys.modules, "presidio_anonymizer.entities", mod_c)
-    monkeypatch.setattr(udfs, "_PRESIDIO", None)
-    monkeypatch.setattr(udfs, "_PRESIDIO_TRIED", False)
 
     for i in range(25):
         out = udfs.anonymize_text(f"row {i} mail a@b.com")
@@ -62,8 +80,6 @@ def test_regex_tier_without_presidio():
 def test_sentence_transformer_built_once(monkeypatch):
     import numpy as np
 
-    from ndl_core_data_pipeline_spark import classify
-
     counts = {"model": 0}
 
     class FakeModel:
@@ -77,8 +93,6 @@ def test_sentence_transformer_built_once(monkeypatch):
     mod = types.ModuleType("sentence_transformers")
     mod.SentenceTransformer = FakeModel
     monkeypatch.setitem(sys.modules, "sentence_transformers", mod)
-    monkeypatch.setattr(classify, "_ST_MODEL", None)
-    monkeypatch.setattr(classify, "_ST_TRIED", False)
     for _ in range(10):
         out = classify.embed_texts(["a", "b"])
         assert out.shape == (2, 4)
@@ -99,7 +113,6 @@ def test_langdetect_tier_seeded(monkeypatch):
     mod.DetectorFactory = FakeFactory
     mod.detect = fake_detect
     monkeypatch.setitem(sys.modules, "langdetect", mod)
-    monkeypatch.setattr(udfs, "_LANGDETECT_READY", False)
     long_text = "word " * 60  # > 200 chars
     assert udfs.detect_language(long_text) == "xx"
     assert FakeFactory.seed == 0  # reference pins the seed
@@ -125,9 +138,26 @@ def test_tiktoken_tier(monkeypatch):
     mod.encoding_for_model = encoding_for_model
     mod.get_encoding = lambda name: FakeEnc()
     monkeypatch.setitem(sys.modules, "tiktoken", mod)
-    monkeypatch.setattr(udfs, "_ENCODER", None)
-    monkeypatch.setattr(udfs, "_ENCODER_TRIED", False)
     for _ in range(5):
         assert udfs.count_tokens("one two three") == 3
     assert fake_calls["for_model"] == 1  # encoder cached
     assert udfs.count_tokens(None) == 0 and udfs.count_tokens("") == 0
+
+
+def test_absent_tier_import_attempted_once(monkeypatch):
+    """An absent library costs one failed import per process, not one per
+    row: 50 long rows through detect_language try langdetect once."""
+    attempts = []
+
+    class Absent(importlib.abc.MetaPathFinder):
+        def find_spec(self, name, path=None, target=None):
+            if name == "langdetect":
+                attempts.append(name)
+                raise ModuleNotFoundError(f"No module named {name!r}", name=name)
+            return None
+
+    monkeypatch.delitem(sys.modules, "langdetect", raising=False)
+    monkeypatch.setattr(sys, "meta_path", [Absent(), *sys.meta_path])
+    long_text = "the cat and the dog sat on the mat " * 10  # > 200 chars
+    assert [udfs.detect_language(long_text) for _ in range(50)] == ["en"] * 50
+    assert attempts == ["langdetect"]
