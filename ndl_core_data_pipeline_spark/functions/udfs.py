@@ -34,6 +34,8 @@ from pyspark.sql import Column, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType, StringType, StructType
 
+from ..operators._util import EMAIL_MASK, EMAIL_PATTERN, PHONE_MASK, TOKEN_PATTERN, UK_PHONE_PATTERN
+
 # ---------------------------------------------------------------- helpers
 
 ANONYMIZER_MAX_CHARS = 1_000_000  # anonymizer.py:29-31
@@ -42,9 +44,10 @@ CHUNK_SIZE = 800  # process_text_chunks.py:12
 CHUNK_OVERLAP = 100  # process_text_chunks.py:13
 SEPARATORS = ("\n\n", "\n", " ", "")
 
-_TOKEN_FALLBACK_RE = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]")
-EMAIL_RE = re.compile(r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}")
-UK_PHONE_RE = re.compile(r"(\+44[ -]?7\d{3}|07\d{3})[ -]?\d{3}[ -]?\d{3}")
+# the JVM regex tiers' patterns; re.ASCII gives \s and [0-9] Java's meaning
+_TOKEN_FALLBACK_RE = re.compile(TOKEN_PATTERN, re.ASCII)
+EMAIL_RE = re.compile(EMAIL_PATTERN, re.ASCII)
+UK_PHONE_RE = re.compile(UK_PHONE_PATTERN, re.ASCII)
 
 
 def _tier(load):
@@ -125,8 +128,8 @@ def _presidio_engines():
         AnalyzerEngine(),
         AnonymizerEngine(),
         {
-            "EMAIL_ADDRESS": OperatorConfig("replace", {"new_value": "xxx@xxx.xx"}),
-            "PHONE_NUMBER": OperatorConfig("replace", {"new_value": "xx-xxxx-xxxx"}),
+            "EMAIL_ADDRESS": OperatorConfig("replace", {"new_value": EMAIL_MASK}),
+            "PHONE_NUMBER": OperatorConfig("replace", {"new_value": PHONE_MASK}),
         },
     )
 
@@ -140,7 +143,7 @@ def anonymize_text(text: str | None) -> str | None:
         return text
     engines = _presidio_engines()
     if engines is None:
-        return UK_PHONE_RE.sub("xx-xxxx-xxxx", EMAIL_RE.sub("xxx@xxx.xx", text))
+        return UK_PHONE_RE.sub(PHONE_MASK, EMAIL_RE.sub(EMAIL_MASK, text))
     analyzer, anonymizer, operators = engines
     results = analyzer.analyze(
         text=text, entities=["EMAIL_ADDRESS", "PHONE_NUMBER"], language="en"

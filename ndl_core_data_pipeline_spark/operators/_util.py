@@ -15,13 +15,78 @@ import re
 
 from pyspark.sql import Column, functions as F
 
-# The ONE ASCII-whitespace rule every Python-side tokenizer must share with
-# the Spark plans' split(lower(trim(text)), '\s+') (Java \s is ASCII-only)
-# and the DuckDB oracles' string_split_regex: a unicode-aware split would
-# draw different token boundaries at NBSP/ideographic spaces and break
-# guarantees that depend on identical tokens across tiers (BPE encode
-# parity, the heavy-hitter candidate superset).
+# The engine's text vocabulary. Every operator and oracle takes the word
+# split, content hash, 48-bit hash and word n-grams from the functions
+# below (`words`/`sql_words`, `content_md5`/`sql_content_md5`,
+# `hash48`/`sql_hash48`, `word_ngrams`), and every Python-side regex tier
+# compiles the pattern strings below with re.ASCII. WS_ASCII_RE is the
+# Python twin of the split: Java's \s is ASCII-only, so a unicode-aware
+# split would draw different token boundaries at NBSP/ideographic spaces
+# and break guarantees that depend on identical tokens across tiers (BPE
+# encode parity, the heavy-hitter candidate superset).
 WS_ASCII_RE = re.compile(r"\s+", re.ASCII)
+
+# regex tiers: X5's token count (textops.token_count_regex, the
+# udfs.count_tokens fallback) and P1's masks (operators/pii.py, the
+# udfs.anonymize_text fallback). Java reads \s and [0-9] as ASCII; Python
+# must compile these with re.ASCII to agree on NBSP and non-ASCII digits.
+TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
+EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
+# UK mobile shapes the reference's tests pin: "07123 456 789", "+44 7123 456789"
+UK_PHONE_PATTERN = r"(\+44[ -]?7[0-9]{3}|07[0-9]{3})[ -]?[0-9]{3}[ -]?[0-9]{3}"
+EMAIL_MASK = "xxx@xxx.xx"
+PHONE_MASK = "xx-xxxx-xxxx"
+
+
+def words(col: Column) -> Column:
+    """The canonical word split: lowercase, trim, split on ASCII \\s+."""
+    return F.split(F.lower(F.trim(col)), r"\s+")
+
+
+def sql_words(expr: str) -> str:
+    """DuckDB form of `words`."""
+    return f"string_split_regex(lower(trim({expr})), '\\s+')"
+
+
+def content_md5(col: Column) -> Column:
+    """Content address: md5 of the lowercased, trimmed text with each
+    whitespace run collapsed to one space."""
+    return F.md5(F.regexp_replace(F.lower(F.trim(col)), r"\s+", " "))
+
+
+def sql_content_md5(expr: str) -> str:
+    """DuckDB form of `content_md5`."""
+    return f"md5(regexp_replace(lower(trim({expr})), '\\s+', ' ', 'g'))"
+
+
+def hash48(col: Column) -> Column:
+    """First 48 bits of md5 as a non-negative bigint: bit-identical in
+    Spark (conv/substring) and DuckDB ('0x' cast). The engine's one
+    portable hash for sampling, bucketing and shingle keys."""
+    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("bigint")
+
+
+def sql_hash48(expr: str) -> str:
+    """DuckDB form of `hash48`."""
+    return f"CAST('0x' || substring(md5({expr}), 1, 12) AS BIGINT)"
+
+
+def word_ngrams(ws: Column, n: int) -> Column:
+    """Positional word n-grams: element i joins words i+1..i+n with one
+    space. NULL below n words (zero rows once exploded): concat_ws would
+    skip the missing elements and emit a short pseudo-gram where the
+    oracle's || propagates NULL. Pass a words column projected in its own
+    select — each of its n+2 references here would otherwise re-run the
+    regex split (CollapseProject keeps the two-step form; r19, sf0.1:
+    shingle stage 0.65 s -> 0.14 s)."""
+    return F.when(
+        F.size(ws) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(ws) - n),
+            lambda i: F.concat_ws(" ", *[F.element_at(ws, i + k) for k in range(1, n + 1)]),
+        ),
+    )
+
 
 # scale 6 covers every true decimal scale in the testdata (money = 2,
 # money products = 4-6, events.value = 6), so the double→decimal cast is

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..io import load
+from ._util import sql_words, words
 
 
 def tag_union(spark, sf_dir):
@@ -112,24 +113,24 @@ def hof_family(spark, sf_dir):
     from ..io import load
 
     docs = load(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    ws = words(F.col("text"))
     return docs.select(
         "doc_id",
-        F.size(F.filter(words, lambda w: w != "")).cast("bigint").alias("n_words"),
-        F.size(F.filter(words, lambda w: F.length(w) > 5))
+        F.size(F.filter(ws, lambda w: w != "")).cast("bigint").alias("n_words"),
+        F.size(F.filter(ws, lambda w: F.length(w) > 5))
         .cast("bigint")
         .alias("n_long"),
-        F.exists(words, lambda w: w.rlike("[0-9]")).alias("has_digit"),
-        F.forall(words, lambda w: F.length(w) <= 20).alias("all_short"),
+        F.exists(ws, lambda w: w.rlike("[0-9]")).alias("has_digit"),
+        F.forall(ws, lambda w: F.length(w) <= 20).alias("all_short"),
         F.aggregate(
-            words, F.lit(0).cast("bigint"), lambda acc, w: acc + F.length(w)
+            ws, F.lit(0).cast("bigint"), lambda acc, w: acc + F.length(w)
         ).alias("n_chars"),
     )
 
 
-_HOF_SQL = r"""
+_HOF_SQL = rf"""
 WITH ws AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents
+  SELECT doc_id, {sql_words('text')} AS w FROM documents
 )
 SELECT doc_id,
        CAST(len(list_filter(w, x -> x <> '')) AS BIGINT) AS n_words,

@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, StringType
 
+from ._util import WS_ASCII_RE, sql_words, words
+
 END_MARK = "</w>"  # word-end marker, per the original construction
 # Adjudicated round 6: interleaved A/B at sf0.1 (24 merges) showed no
 # consistent difference between checkpointing every 1/2/4/8 rounds
@@ -39,23 +41,17 @@ END_MARK = "</w>"  # word-end marker, per the original construction
 # costs about the same as a checkpoint write. 8 keeps lineage bounded.
 CHECKPOINT_EVERY = 8
 
-# Python-side tokenization MUST match the Spark plan's split(lower(trim(
-# text)), '\s+'): Java regex \s is ASCII-only ([ \t\n\x0B\f\r]), so the
-# encode path splits with re.ASCII — a unicode-aware str.split() would
-# break words at NBSP/ideographic spaces that training kept intact
-from ._util import WS_ASCII_RE as _WS_RE  # noqa: E402 — shared tokenizer rule
-
 
 def tokenize_words(text: str) -> list[str]:
-    return [w for w in _WS_RE.split((text or "").lower()) if w]
+    """The encode path's split: WS_ASCII_RE is the Python twin of the
+    training plan's `words`, so both split at the same ASCII whitespace
+    and keep NBSP/ideographic spaces inside a word."""
+    return [w for w in WS_ASCII_RE.split((text or "").lower()) if w]
 
 
 def _word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    words = F.explode(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    ).alias("word")
     return (
-        docs.select(words)
+        docs.select(F.explode(words(F.col(text_col))).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
@@ -258,7 +254,7 @@ def bpe_first_merge_pairs(spark, sf_dir):
 _FIRST_MERGE_SQL = rf"""
 WITH words AS (
   SELECT t.w AS word FROM (
-    SELECT string_split_regex(lower(trim(text)), '\s+') AS ws
+    SELECT {sql_words('text')} AS ws
     FROM documents) d, UNNEST(d.ws) AS t(w)
   WHERE len(t.w) > 0
 ),

@@ -15,7 +15,17 @@ from __future__ import annotations
 from pyspark.sql import Window as W, functions as F
 
 from ..io import load
-from ._util import corpus_checkpoint, rebalance_narrow_scan
+from ._util import (
+    content_md5,
+    corpus_checkpoint,
+    hash48,
+    rebalance_narrow_scan,
+    sql_content_md5,
+    sql_hash48,
+    sql_words,
+    word_ngrams,
+    words,
+)
 
 N_MINHASH = 8  # signature length
 SHINGLE_N = 3  # word n-gram size
@@ -47,47 +57,11 @@ def exact_hash_dedup(spark, sf_dir):
     keep first id per hash (ref: dedupe.py:31-43 streaming BLAKE2b; md5 here
     for oracle portability — same plan with any hash)."""
     docs = load(spark, sf_dir, "documents")
-    norm = F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "))
     return (
-        docs.select("doc_id", norm.alias("content_hash"))
+        docs.select("doc_id", content_md5(F.col("text")).alias("content_hash"))
         .groupBy("content_hash")
         .agg(F.min("doc_id").alias("keeper_id"))
     )
-
-
-def _split_words(text_col):
-    """The canonical whitespace word split shared by the shingle paths."""
-    return F.split(F.lower(F.trim(text_col)), r"\s+")
-
-
-def _shingles_from_words(words):
-    """Distinct word 3-gram shingles from a PRE-MATERIALIZED words array
-    column. r19 (guide §1.2 per-task work): call sites project the words
-    array in its OWN select first — in the single-projection form every
-    reference to `words` (the size guard, the sequence bound, 3
-    element_at per transform element) re-evaluates the regex split,
-    and CollapseProject's expensive-expression guard (SPARK-36718) is
-    what makes the two-step select keep it evaluated once. Measured at
-    sf0.1: shingle stage 0.65 s -> 0.14 s, full minhash signature
-    pipeline 0.94 s -> 0.41 s.
-
-    Docs with fewer than SHINGLE_N words yield NULL (→ zero rows after
-    explode). Without the guard, concat_ws would skip the NULL element_at
-    results and emit a short pseudo-shingle ('w1 w2') while the SQL
-    oracle's || propagates NULL and drops the row — a parity break for
-    1-2-word docs."""
-    shingles = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(words) - SHINGLE_N, F.lit(0))),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(words, i + 1),
-                F.element_at(words, i + 2),
-                F.element_at(words, i + 3),
-            ),
-        )
-    )
-    return F.when(F.size(words) >= SHINGLE_N, shingles)
 
 
 # affine-permutation constants for h_j(x) = (A_j * x + B_j) mod P — the
@@ -96,13 +70,6 @@ def _shingles_from_words(words):
 MINHASH_P = (1 << 61) - 1  # Mersenne prime
 MINHASH_A = tuple(2 * k + 1 for k in range(1, N_MINHASH + 1))  # odd, nonzero
 MINHASH_B = tuple(7919 * (k + 1) for k in range(N_MINHASH))
-
-
-def minhash_base48(col):
-    """48-bit md5 base hash (x < 2^48 << P, so no second mod) — THE
-    per-shingle hash minhash_signatures feeds the affine family; factored
-    out so parity tests exercise the production expression, not a copy."""
-    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("bigint")
 
 
 def minhash_affine(x, j: int):
@@ -120,14 +87,17 @@ def minhash_signatures(spark, sf_dir):
     a scan stage + one keyed exchange of fixed-width signatures."""
     docs = load(spark, sf_dir, "documents")
     docs = rebalance_narrow_scan(docs, spark)
+    # the words array gets its own select (see word_ngrams); the base
+    # hash x < 2^48 << P needs no second mod
     shingled = (
-        docs.select("doc_id", _split_words(F.col("text")).alias("w"))
-        .select("doc_id", F.explode(_shingles_from_words(F.col("w"))).alias("shingle"))
+        docs.select("doc_id", words(F.col("text")).alias("w"))
+        .select(
+            "doc_id",
+            F.explode(F.array_distinct(word_ngrams(F.col("w"), SHINGLE_N))).alias("shingle"),
+        )
         .filter(F.length("shingle") > 0)
     )
-    hashed = shingled.select(
-        "doc_id", minhash_base48(F.col("shingle")).alias("x")
-    )
+    hashed = shingled.select("doc_id", hash48(F.col("shingle")).alias("x"))
     wide = hashed.groupBy("doc_id").agg(
         *[
             F.min(minhash_affine(F.col("x"), j)).alias(f"h{j}")
@@ -253,11 +223,11 @@ def ngram_jaccard_pairs(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     docs = rebalance_narrow_scan(docs, spark)
     sh = (
-        docs.select("doc_id", "source", _split_words(F.col("text")).alias("w"))
+        docs.select("doc_id", "source", words(F.col("text")).alias("w"))
         .select(
             "doc_id",
             "source",
-            F.explode(_shingles_from_words(F.col("w"))).alias("shingle"),
+            F.explode(F.array_distinct(word_ngrams(F.col("w"), SHINGLE_N))).alias("shingle"),
         )
         .filter(F.length("shingle") > 0)
         .distinct()
@@ -318,11 +288,9 @@ def simhash_fingerprints(spark, sf_dir):
         F.col("doc_id").isNotNull()
     )
     docs = rebalance_narrow_scan(docs, spark)
-    words = docs.select(
+    word_rows = docs.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
-        ).alias("word"),
+        F.explode(F.array_distinct(words(F.col("text")))).alias("word"),
     ).filter(F.length("word") > 0)
     # ONE md5 per word, projected to two 32-bit halves BEFORE the groupBy —
     # the 64 vote aggregates then use integer shifts only (no reliance on
@@ -344,7 +312,7 @@ def simhash_fingerprints(spark, sf_dir):
     # word-key shuffle join (2 exchanges) costs more than it saves.
     # Inline per-occurrence md5 stays.
     h = F.md5(F.col("word"))
-    halved = words.select(
+    halved = word_rows.select(
         "doc_id",
         F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint").alias("hi"),
         F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint").alias("lo"),
@@ -441,18 +409,18 @@ def simhash_near_dup_pairs(spark, sf_dir):
 
 
 # ---- oracle SQL fragments shared by the minhash family
-# range(0, len-n+1) is empty for len < n, mirroring the size(words) >=
-# SHINGLE_N guard in _shingles_from_words — both engines emit zero shingles
-# for docs shorter than the n-gram
-_SHINGLE_SQL = """
+# range(0, len-n+1) is empty for len < n, mirroring the size(words) >= n
+# guard in word_ngrams — both engines emit zero shingles for docs shorter
+# than the n-gram
+_SHINGLE_SQL = f"""
 shingles AS (
   SELECT DISTINCT doc_id, source,
          words[i + 1] || ' ' || words[i + 2] || ' ' || words[i + 3] AS shingle
-  FROM (SELECT doc_id, source, string_split_regex(lower(trim(text)), '\\s+') AS words
+  FROM (SELECT doc_id, source, {sql_words('text')} AS words
         FROM documents) w,
-       UNNEST(range(0, len(words) - {n} + 1)) AS t(i)
+       UNNEST(range(0, len(words) - {SHINGLE_N} + 1)) AS t(i)
   WHERE words[i + 1] || ' ' || words[i + 2] || ' ' || words[i + 3] <> ''
-)""".format(n=SHINGLE_N)
+)"""
 # base hash x = md5[0:12 hex] as bigint; h_j = (A_j*x + B_j) % P
 _PERM_ROWS = ", ".join(
     f"({j}, {MINHASH_A[j]}, {MINHASH_B[j]})" for j in range(N_MINHASH)
@@ -460,7 +428,7 @@ _PERM_ROWS = ", ".join(
 _HASHED_SQL = f""",
 base AS (
   SELECT doc_id,
-         CAST('0x' || substring(md5(shingle), 1, 12) AS BIGINT) AS x
+         {sql_hash48('shingle')} AS x
   FROM shingles
 ),
 perms(j, a, b) AS (VALUES {_PERM_ROWS}),
@@ -673,14 +641,14 @@ def substring_dup_spans(spark, sf_dir):
     gram relaxation shards on the hash key."""
     docs = load(spark, sf_dir, "documents")
     docs = rebalance_narrow_scan(docs, spark)
-    words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    ws = words(F.col("text"))
     grams = F.when(
-        F.size(words) >= SPAN_W,
+        F.size(ws) >= SPAN_W,
         F.transform(
-            F.sequence(F.lit(0), F.size(words) - SPAN_W),
+            F.sequence(F.lit(0), F.size(ws) - SPAN_W),
             lambda i: F.struct(
                 i.alias("start"),
-                F.md5(F.concat_ws(" ", F.slice(words, i + 1, SPAN_W))).alias("gh"),
+                F.md5(F.concat_ws(" ", F.slice(ws, i + 1, SPAN_W))).alias("gh"),
             ),
         ),
     )
@@ -743,8 +711,7 @@ def incremental_dedup_vs_base(spark, sf_dir):
     hashes. Base/incoming split is synthesized from doc_id here; a real
     deployment passes two tables."""
     docs = load(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    fp = docs.select("doc_id", F.md5(norm).alias("fp"))
+    fp = docs.select("doc_id", content_md5(F.col("text")).alias("fp"))
     # r19 (guide §5/§2.4): fp fed FOUR consumers (base/incoming × the
     # semi + anti joins), so the scan + normalize + md5 ran 4×; and the
     # semi/anti PAIR over the same distinct base is one LEFT join with a
@@ -921,7 +888,7 @@ def register(reg):
     reg.add(
         "dedup_exact_hash",
         exact_hash_dedup,
-        r"SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS content_hash, "
+        f"SELECT {sql_content_md5('text')} AS content_hash, "
         "MIN(doc_id) AS keeper_id FROM documents GROUP BY 1",
     )
     shingle_sql, hashed_sql = _SHINGLE_SQL, _HASHED_SQL
@@ -992,9 +959,9 @@ WHERE ROUND(n_common / (sa.set_size + sb.set_size - n_common), 6) >= 0.2""",
         bit_exprs.append(
             f"(CASE WHEN {vote} > 0 THEN CAST({weight} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
         )
-    halved_sql = r"""words AS (
+    halved_sql = f"""words AS (
   SELECT DISTINCT doc_id, word
-  FROM (SELECT doc_id, UNNEST(string_split_regex(lower(trim(text)), '\s+')) AS word
+  FROM (SELECT doc_id, UNNEST({sql_words('text')}) AS word
         FROM documents WHERE doc_id IS NOT NULL) t
   WHERE LENGTH(word) > 0
 ),
@@ -1082,7 +1049,7 @@ SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node""",
         rf"""WITH pos AS (
   SELECT doc_id, i AS start,
          md5(array_to_string(ws[i + 1 : i + {SPAN_W}], ' ')) AS gh
-  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+  FROM (SELECT doc_id, {sql_words('text')} AS ws
         FROM documents) d,
        UNNEST(range(0, len(ws) - {SPAN_W} + 1)) AS t(i)
   WHERE len(ws) >= {SPAN_W}
@@ -1116,7 +1083,7 @@ FROM spans GROUP BY doc_id, span_id""",
         incremental_dedup_vs_base,
         rf"""WITH fp AS (
   SELECT doc_id,
-         md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+         {sql_content_md5('text')} AS fp
   FROM documents
 ),
 base AS (SELECT DISTINCT fp FROM fp WHERE doc_id < {INCREMENTAL_BASE_MAX}),

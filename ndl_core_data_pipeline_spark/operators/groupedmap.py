@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..io import load
+from ._util import sql_words
 
 
 def zscore_per_group(spark, sf_dir):
@@ -102,7 +103,7 @@ def register(reg):
         "udtf_word_chunks",
         udtf_word_chunks,
         rf"""WITH t AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'),
+  SELECT doc_id, list_filter({sql_words('text')},
                              w -> len(w) > 0) AS ws
   FROM documents WHERE trim(text) <> ''
 )

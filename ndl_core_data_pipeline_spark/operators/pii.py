@@ -19,12 +19,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..io import load
-
-EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-# UK mobile shapes the reference's tests pin: "07123 456 789", "+44 7123 456789"
-UK_PHONE_RE = r"(\+44[ -]?7[0-9]{3}|07[0-9]{3})[ -]?[0-9]{3}[ -]?[0-9]{3}"
-EMAIL_MASK = "xxx@xxx.xx"
-PHONE_MASK = "xx-xxxx-xxxx"
+from ._util import EMAIL_MASK, EMAIL_PATTERN, PHONE_MASK, UK_PHONE_PATTERN
 
 
 def _with_pii(docs):
@@ -41,17 +36,19 @@ def _with_pii(docs):
     return docs.select("doc_id", "lang", contact.alias("pii_text"))
 
 
+def _mask(col):
+    """Mask e-mails, then UK phone numbers (the reference's order)."""
+    return F.regexp_replace(
+        F.regexp_replace(col, EMAIL_PATTERN, EMAIL_MASK), UK_PHONE_PATTERN, PHONE_MASK
+    )
+
+
 def anonymize_regex(spark, sf_dir):
     """P1 regex tier: mask emails then UK phone numbers with the reference's
     literal replacements (ref: resources/refine/anonymizer.py:20-27 operators
     config)."""
     d = _with_pii(load(spark, sf_dir, "documents"))
-    masked = F.regexp_replace(
-        F.regexp_replace(F.col("pii_text"), EMAIL_RE, EMAIL_MASK),
-        UK_PHONE_RE,
-        PHONE_MASK,
-    )
-    return d.select("doc_id", "pii_text", masked.alias("anon_text"))
+    return d.select("doc_id", "pii_text", _mask(F.col("pii_text")).alias("anon_text"))
 
 
 def masked_update(spark, sf_dir):
@@ -59,11 +56,7 @@ def masked_update(spark, sf_dir):
     mask predicate, pass others through untouched (ref: anonymizer.py:47-71,
     format=='text' & notna gate; here the gate is lang=='en')."""
     d = _with_pii(load(spark, sf_dir, "documents"))
-    anon = F.regexp_replace(
-        F.regexp_replace(F.col("pii_text"), EMAIL_RE, EMAIL_MASK),
-        UK_PHONE_RE,
-        PHONE_MASK,
-    )
+    anon = _mask(F.col("pii_text"))
     return d.select(
         "doc_id",
         "lang",
@@ -79,10 +72,10 @@ def pii_density(spark, sf_dir):
     fused into the scan stage), no Python, no shuffle."""
     d = _with_pii(load(spark, sf_dir, "documents"))
     n_email = F.size(
-        F.regexp_extract_all(F.col("pii_text"), F.lit(EMAIL_RE), F.lit(0))
+        F.regexp_extract_all(F.col("pii_text"), F.lit(EMAIL_PATTERN), F.lit(0))
     )
     n_phone = F.size(
-        F.regexp_extract_all(F.col("pii_text"), F.lit(UK_PHONE_RE), F.lit(0))
+        F.regexp_extract_all(F.col("pii_text"), F.lit(UK_PHONE_PATTERN), F.lit(0))
     )
     per_kchar = F.round(
         (n_email + n_phone) * F.lit(1000.0) / F.length("pii_text"), 6
@@ -111,8 +104,8 @@ def _sql_with_pii() -> str:
 
 def _sql_mask(col: str) -> str:
     return (
-        f"regexp_replace(regexp_replace({col}, '{EMAIL_RE}', '{EMAIL_MASK}', 'g'), "
-        f"'{UK_PHONE_RE}', '{PHONE_MASK}', 'g')"
+        f"regexp_replace(regexp_replace({col}, '{EMAIL_PATTERN}', '{EMAIL_MASK}', 'g'), "
+        f"'{UK_PHONE_PATTERN}', '{PHONE_MASK}', 'g')"
     )
 
 
@@ -150,10 +143,10 @@ def register(reg):
         "pii_density",
         pii_density,
         "SELECT doc_id, "
-        f"CAST(len(regexp_extract_all(pii_text, '{EMAIL_RE}')) AS BIGINT) AS n_email, "
-        f"CAST(len(regexp_extract_all(pii_text, '{UK_PHONE_RE}')) AS BIGINT) AS n_phone, "
-        f"ROUND((len(regexp_extract_all(pii_text, '{EMAIL_RE}')) "
-        f"+ len(regexp_extract_all(pii_text, '{UK_PHONE_RE}'))) * 1000.0 "
+        f"CAST(len(regexp_extract_all(pii_text, '{EMAIL_PATTERN}')) AS BIGINT) AS n_email, "
+        f"CAST(len(regexp_extract_all(pii_text, '{UK_PHONE_PATTERN}')) AS BIGINT) AS n_phone, "
+        f"ROUND((len(regexp_extract_all(pii_text, '{EMAIL_PATTERN}')) "
+        f"+ len(regexp_extract_all(pii_text, '{UK_PHONE_PATTERN}'))) * 1000.0 "
         "/ length(pii_text), 6) AS pii_per_kchar "
         f"FROM ({_sql_with_pii()}) t",
     )

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..io import load
-from ._util import round6_det, sql_r6
+from ._util import hash48, round6_det, sql_hash48, sql_r6
 
 HLL_P = 8
 HLL_M = 1 << HLL_P  # 256 registers
@@ -159,8 +159,7 @@ CM_W = 64  # counters per row
 
 def _cm_col(depth: int, key):
     """Counter column for hash row `depth`: md5 over a depth-salted key."""
-    h = F.md5(F.concat(F.lit(f"{depth}|"), key.cast("string")))
-    return F.conv(F.substring(h, 1, 12), 16, 10).cast("bigint") % CM_W
+    return hash48(F.concat(F.lit(f"{depth}|"), key.cast("string"))) % CM_W
 
 
 def countmin_sketch(spark, sf_dir):
@@ -187,11 +186,16 @@ def countmin_sketch(spark, sf_dir):
     return cells.groupBy("depth", "col").agg(F.count("*").alias("cnt"))
 
 
+def _sql_cm_col(depth: int) -> str:
+    """DuckDB form of `_cm_col` over user_id."""
+    key = f"'{depth}|' || CAST(user_id AS VARCHAR)"
+    return f"{sql_hash48(key)} % {CM_W}"
+
+
 def _cm_cells_sql() -> str:
     rows = " UNION ALL ".join(
         f"SELECT CAST({d} AS BIGINT) AS depth, "
-        f"CAST('0x' || substring(md5('{d}|' || CAST(user_id AS VARCHAR)), 1, 12)"
-        f" AS BIGINT) % {CM_W} AS col "
+        f"{_sql_cm_col(d)} AS col "
         f"FROM events WHERE user_id IS NOT NULL"
         for d in range(CM_D)
     )
@@ -240,8 +244,7 @@ def countmin_estimates(spark, sf_dir):
 def _cm_est_sql() -> str:
     probe_rows = " UNION ALL ".join(
         f"SELECT user_id, CAST({d} AS BIGINT) AS depth, "
-        f"CAST('0x' || substring(md5('{d}|' || CAST(user_id AS VARCHAR)), 1, 12)"
-        f" AS BIGINT) % {CM_W} AS col FROM users"
+        f"{_sql_cm_col(d)} AS col FROM users"
         for d in range(CM_D)
     )
     return f"""
@@ -278,9 +281,7 @@ def bottomk_sample_quantiles(spark, sf_dir):
     o = load(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_orderkey", "o_totalprice"
     )
-    h = F.conv(
-        F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 12), 16, 10
-    ).cast("bigint")
+    h = hash48(F.col("o_orderkey").cast("string"))
     from pyspark.sql import Window
 
     # o_totalprice tiebreak: NULL o_orderkey hashes to NULL, so dirty

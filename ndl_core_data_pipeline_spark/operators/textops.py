@@ -10,15 +10,23 @@ as Arrow-batched pandas UDFs with these as their oracle-checkable tiers.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Column, functions as F
 
 from ..io import load
 from ._util import (
+    TOKEN_PATTERN,
+    content_md5,
     corpus_checkpoint,
     davg,
+    hash48,
     rebalance_narrow_scan,
+    sql_content_md5,
+    sql_hash48,
     sql_jackson_json,
     sql_str_to_bigint,
+    sql_words,
+    word_ngrams,
+    words,
 )
 
 # reference license map (assets/processing/assets.py:299-315): lowercase
@@ -39,6 +47,17 @@ LICENSE_MAP = {
 }
 LICENSE_DEFAULT = "OGL-UK-3.0"
 
+
+def normalize_license(col: Column) -> Column:
+    """X7 (assets/processing/assets.py:299-315): lowercase 12-entry map,
+    default OGL-UK-3.0 for unknown/missing keys."""
+    norm = F.lower(F.trim(col))
+    expr: Column = F.lit(LICENSE_DEFAULT)
+    for k in reversed(list(LICENSE_MAP)):
+        expr = F.when(norm == k, LICENSE_MAP[k]).otherwise(expr)
+    return expr
+
+
 EN_STOP = "the|and|of|to|a|in|is|it"
 DE_STOP = "der|die|und|das|ein|ist"
 ES_STOP = "el|la|de|los|que|es"
@@ -46,13 +65,12 @@ FR_STOP = "le|la|les|et|un|est"
 
 
 def _words(docs, distinct_per_doc: bool = False):
-    """The repo's canonical corpus tokenization: (doc_id, term) stream via
-    one explode of the ASCII-\\s+ split — MUST stay in lockstep with
-    bpe.tokenize_words (re.ASCII) and every DuckDB oracle's
-    string_split_regex(lower(trim(text)), '\\s+'). All term-level corpus
-    statistics (tf-idf, BM25, entropy, postings) derive from this one
-    expression so a tokenization change cannot desynchronize them."""
-    arr = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    """The (doc_id, term) stream of the corpus: one explode of
+    `_util.words`, the split every DuckDB oracle spells as
+    `_util.sql_words` and bpe.tokenize_words mirrors with
+    `_util.WS_ASCII_RE`. The term-level corpus statistics (tf-idf, BM25,
+    entropy, postings) all read this stream."""
+    arr = words(F.col("text"))
     if distinct_per_doc:
         arr = F.array_distinct(arr)
     return docs.select("doc_id", F.explode(arr).alias("term")).filter(
@@ -74,9 +92,9 @@ def token_count_regex(spark, sf_dir):
     and single punctuation marks each count as one token (the tiktoken tier
     is a pandas UDF; ref: resources/token_counter.py:12-37)."""
     docs = load(spark, sf_dir, "documents")
-    pat = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
     return docs.select(
-        "doc_id", F.regexp_count(F.col("text"), F.lit(pat)).cast("bigint").alias("token_count")
+        "doc_id",
+        F.regexp_count(F.col("text"), F.lit(TOKEN_PATTERN)).cast("bigint").alias("token_count"),
     )
 
 
@@ -199,8 +217,7 @@ def fingerprint(spark, sf_dir):
     """Document fingerprint: md5 over whitespace-normalized lowercase text
     (deterministic content address; the dedup family keys on this)."""
     docs = load(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    return docs.select("doc_id", F.md5(norm).alias("fingerprint"))
+    return docs.select("doc_id", content_md5(F.col("text")).alias("fingerprint"))
 
 
 WINNOW_W = 4  # winnowing window: hashes per selection window
@@ -224,26 +241,10 @@ def winnowing_fingerprints(spark, sf_dir):
     docs = load(spark, sf_dir, "documents").filter(
         F.col("doc_id").isNotNull()
     )
-    # r19 (guide §1.2): the words array gets its OWN projection — the
-    # shingle expression references it ~6× (guard, sequence bound, 3
-    # element_at per element), and each reference re-ran the regex split
-    # in the former inline form (same fix as dedup._shingles_from_words,
-    # measured 4.5× on the shingle stage there).
-    words = F.col("w")
-    # positional 3-gram shingles — winnowing needs the sequence, so no
-    # array_distinct here (contrast dedup._shingles_from_words)
-    shingles = F.when(
-        F.size(words) >= 3,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - 3),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(words, i + 1),
-                F.element_at(words, i + 2),
-                F.element_at(words, i + 3),
-            ),
-        ),
-    )
+    # positional 3-gram shingles over the words array's OWN projection
+    # (see word_ngrams) — winnowing needs the sequence, so no
+    # array_distinct here (contrast the dedup shingles)
+    shingles = word_ngrams(F.col("w"), 3)
     # the whole winnow folds into per-row array expressions: hash stream,
     # sliding-window minima, per-doc distinct — a pure map plan (an
     # explode → doc_id-window → distinct formulation costs a sort
@@ -255,14 +256,8 @@ def winnowing_fingerprints(spark, sf_dir):
     # O(n²) hashing. As a multiply-referenced non-cheap alias it survives
     # CollapseProject and is computed once per row.
     docs = rebalance_narrow_scan(docs, spark)
-    hashed = docs.select(
-        "doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("w")
-    ).select(
-        "doc_id",
-        F.transform(
-            shingles,
-            lambda s: F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("bigint"),
-        ).alias("hs"),
+    hashed = docs.select("doc_id", words(F.col("text")).alias("w")).select(
+        "doc_id", F.transform(shingles, hash48).alias("hs")
     )
     # size(NULL) is -1, and sequence(0, -2) DESCENDS — without the guard a
     # short doc's NULL hash array would explode into NULL fingerprints
@@ -303,7 +298,6 @@ def repetition_signals(spark, sf_dir):
     bit-identical. Plans: text_repetition_signals_{before,after}.txt."""
     docs = load(spark, sf_dir, "documents")
     docs = rebalance_narrow_scan(docs, spark)
-    words_arr = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     wa = F.col("wa")
     wstructs = F.transform(
         wa, lambda x: F.struct(F.lit(0).alias("k"), x.alias("term"))
@@ -327,7 +321,7 @@ def repetition_signals(spark, sf_dir):
     )
     merged = (
         docs.select(
-            "doc_id", F.length("text").alias("n_chars"), words_arr.alias("wa")
+            "doc_id", F.length("text").alias("n_chars"), words(F.col("text")).alias("wa")
         )
         .select(
             "doc_id", "n_chars", F.explode(F.concat(wstructs, bstructs)).alias("e")
@@ -521,11 +515,9 @@ def license_normalize(spark, sf_dir):
         .when(F.col("lang") == "es", "unknown-license")
         .otherwise(F.lit(None))
     )
-    norm = F.lower(raw_key)
-    expr = F.lit(LICENSE_DEFAULT)
-    for k in reversed(list(LICENSE_MAP)):
-        expr = F.when(norm == k, LICENSE_MAP[k]).otherwise(expr)
-    return docs.select("doc_id", raw_key.alias("raw_license"), expr.alias("license"))
+    return docs.select(
+        "doc_id", raw_key.alias("raw_license"), normalize_license(raw_key).alias("license")
+    )
 
 
 def date_format_iso(spark, sf_dir):
@@ -661,8 +653,7 @@ def bigram_nll(spark, sf_dir):
     decimal-cast average so sub-ulp libm differences between engines
     can't flip the order-independent sum."""
     docs = load(spark, sf_dir, "documents")
-    words_col = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    toks = docs.select("doc_id", words_col.alias("ws")).filter(F.size("ws") >= 2)
+    toks = docs.select("doc_id", words(F.col("text")).alias("ws")).filter(F.size("ws") >= 2)
     uni = toks.select(F.explode("ws").alias("w1")).groupBy("w1").agg(
         F.count("*").alias("c1")
     )
@@ -1125,7 +1116,7 @@ def cooccur_pmi(spark, sf_dir):
 _PMI_SQL = rf"""
 WITH words AS (
   SELECT DISTINCT doc_id, t.term FROM (
-    SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+    SELECT doc_id, {sql_words('text')} AS ws
     FROM documents WHERE doc_id IS NOT NULL) d, UNNEST(d.ws) AS t(term)
   WHERE len(t.term) > 0
 ),
@@ -1246,7 +1237,7 @@ def tfidf_doc_pairs(spark, sf_dir):
 _TFIDF_PAIRS_SQL = rf"""
 WITH words AS (
   SELECT doc_id, t.term FROM (
-    SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+    SELECT doc_id, {sql_words('text')} AS ws
     FROM documents) d, UNNEST(d.ws) AS t(term)
   WHERE len(t.term) > 0
 ),
@@ -1350,10 +1341,10 @@ def text_zipf_fit(spark, sf_dir):
     )
 
 
-_ZIPF_SQL = r"""
+_ZIPF_SQL = rf"""
 WITH words AS (
   SELECT t.term FROM (
-    SELECT string_split_regex(lower(trim(text)), '\s+') AS ws
+    SELECT {sql_words('text')} AS ws
     FROM documents) d, UNNEST(d.ws) AS t(term)
   WHERE len(t.term) > 0
 ),
@@ -1389,7 +1380,7 @@ def register(reg):
     reg.add(
         "text_token_count",
         token_count_regex,
-        r"SELECT doc_id, len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))"
+        f"SELECT doc_id, len(regexp_extract_all(text, '{TOKEN_PATTERN}'))"
         " AS token_count FROM documents",
     )
     reg.add(
@@ -1438,7 +1429,7 @@ FROM (
     reg.add(
         "text_fingerprint",
         fingerprint,
-        r"SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint FROM documents",
+        f"SELECT doc_id, {sql_content_md5('text')} AS fingerprint FROM documents",
     )
     reg.add(
         "text_search_compose",
@@ -1531,33 +1522,33 @@ FROM part""",
     reg.add(
         "text_winnowing_fingerprints",
         winnowing_fingerprints,
-        r"""WITH sh AS (
+        f"""WITH sh AS (
   SELECT doc_id, i AS pos,
          words[i + 1] || ' ' || words[i + 2] || ' ' || words[i + 3] AS shingle
-  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words
+  FROM (SELECT doc_id, {sql_words('text')} AS words
         FROM documents WHERE doc_id IS NOT NULL) w,
        UNNEST(range(0, len(words) - 2)) AS t(i)
   WHERE len(words) >= 3
 ),
 hashed AS (
   SELECT doc_id, pos,
-         CAST('0x' || substring(md5(shingle), 1, 12) AS BIGINT) AS h
+         {sql_hash48('shingle')} AS h
   FROM sh
 ),
 wins AS (
   SELECT doc_id,
          MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN CURRENT ROW AND %d FOLLOWING) AS fp
+                      ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING) AS fp
   FROM hashed
 )
-SELECT DISTINCT doc_id, fp FROM wins""" % (WINNOW_W - 1),
+SELECT DISTINCT doc_id, fp FROM wins""",
     )
     reg.add(
         "text_repetition_signals",
         repetition_signals,
-        r"""WITH words AS (
+        rf"""WITH words AS (
   SELECT doc_id, w FROM (
-    SELECT doc_id, UNNEST(string_split_regex(lower(trim(text)), '\s+')) AS w
+    SELECT doc_id, UNNEST({sql_words('text')}) AS w
     FROM documents) t
   WHERE LENGTH(w) > 0
 ),
@@ -1575,7 +1566,7 @@ topw AS (
 bg AS (
   SELECT doc_id, LENGTH(text) AS n_chars, ws[i + 1] || ' ' || ws[i + 2] AS bg
   FROM (SELECT doc_id, text,
-               string_split_regex(lower(trim(text)), '\s+') AS ws
+               {sql_words('text')} AS ws
         FROM documents) t,
        UNNEST(range(0, len(ws) - 1)) AS u(i)
   WHERE len(ws) >= 2),
@@ -1632,9 +1623,9 @@ FROM m""",
     reg.add(
         "text_tfidf_topk",
         tfidf_topk,
-        r"""WITH words AS (
+        rf"""WITH words AS (
   SELECT doc_id, t.term FROM (
-    SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+    SELECT doc_id, {sql_words('text')} AS ws
     FROM documents) d, UNNEST(d.ws) AS t(term)
   WHERE len(t.term) > 0
 ),
@@ -1659,9 +1650,9 @@ SELECT doc_id, rnk, term, tf, df, tfidf FROM ranked WHERE rnk <= 3""",
         "text_bigram_nll",
         bigram_nll,
         rf"""WITH toks AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+  SELECT doc_id, {sql_words('text')} AS ws
   FROM documents
-  WHERE len(string_split_regex(lower(trim(text)), '\s+')) >= 2
+  WHERE len({sql_words('text')}) >= 2
 ),
 uni AS (
   SELECT t.w1, COUNT(*) AS c1
@@ -1685,9 +1676,9 @@ FROM scored GROUP BY doc_id""",
     reg.add(
         "text_token_entropy",
         token_entropy,
-        r"""WITH words AS (
+        rf"""WITH words AS (
   SELECT doc_id, t.term FROM (
-    SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+    SELECT doc_id, {sql_words('text')} AS ws
     FROM documents) d, UNNEST(d.ws) AS t(term)
   WHERE len(t.term) > 0
 ),
@@ -1704,7 +1695,7 @@ FROM counts GROUP BY doc_id""",
         bm25_topk,
         rf"""WITH words AS (
   SELECT doc_id, t.term FROM (
-    SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+    SELECT doc_id, {sql_words('text')} AS ws
     FROM documents WHERE doc_id IS NOT NULL) d, UNNEST(d.ws) AS t(term)
   WHERE len(t.term) > 0
 ),
@@ -1732,7 +1723,7 @@ ORDER BY bm25 DESC, doc_id LIMIT {BM25_TOPK}""",
         inverted_postings,
         rf"""WITH words AS (
   SELECT DISTINCT doc_id, t.term FROM (
-    SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+    SELECT doc_id, {sql_words('text')} AS ws
     FROM documents WHERE doc_id IS NOT NULL) d, UNNEST(d.ws) AS t(term)
   WHERE len(t.term) > 0
 )

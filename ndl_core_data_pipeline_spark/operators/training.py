@@ -21,8 +21,8 @@ beyond the dedup/similarity/text-analysis families already registered:
 
 Every operator is JVM-side expression work except the two inherently
 sequential-per-group packers, which use grouped-map pandas (bounded
-groups, parallel across groups). All hashes are md5-prefix→bigint, the
-same cross-engine-stable construction textops.winnowing uses.
+groups, parallel across groups). All hashes are `_util.hash48`, the
+cross-engine-stable md5 prefix the dedup and winnowing operators use.
 """
 
 from __future__ import annotations
@@ -32,7 +32,16 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..io import load
-from ._util import rebalance_narrow_scan
+from ._util import (
+    content_md5,
+    hash48,
+    rebalance_narrow_scan,
+    sql_content_md5,
+    sql_hash48,
+    sql_words,
+    word_ngrams,
+    words,
+)
 
 # deterministic-sampling modulus and default keep-rate (percent)
 SAMPLE_MOD = 100
@@ -58,17 +67,6 @@ SPLIT_TRAIN_PCT = 90
 SPLIT_VAL_PCT = 5
 
 
-def _hash48(col):
-    """First 48 bits of md5 as a non-negative bigint — bit-identical in
-    Spark (conv/substring) and DuckDB ('0x' cast), used as the engine's
-    deterministic sampling/bucketing key."""
-    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("bigint")
-
-
-def _sql_hash48(expr: str) -> str:
-    return f"CAST('0x' || substring(md5({expr}), 1, 12) AS BIGINT)"
-
-
 # ---------------------------------------------------------------- sampling
 
 
@@ -78,7 +76,7 @@ def sample_hash_bucket(spark, sf_dir):
     cluster size (contrast df.sample, whose RNG is partition-dependent),
     and a pure map-side filter — pushes to the scan, no shuffle."""
     docs = load(spark, sf_dir, "documents")
-    bucket = _hash48(F.col("doc_id").cast("string")) % SAMPLE_MOD
+    bucket = hash48(F.col("doc_id").cast("string")) % SAMPLE_MOD
     return docs.filter(bucket < SAMPLE_PCT).select(
         "doc_id", "source", "lang", "n_chars"
     )
@@ -90,7 +88,7 @@ def sample_stratified(spark, sf_dir):
     totals so the allocation itself is the checked result. Map-side
     filter + one tiny keyed aggregation."""
     docs = load(spark, sf_dir, "documents")
-    bucket = _hash48(F.col("doc_id").cast("string")) % SAMPLE_MOD
+    bucket = hash48(F.col("doc_id").cast("string")) % SAMPLE_MOD
     rate = F.when(F.col("lang") == "en", F.lit(STRAT_PCT_EN)).otherwise(
         F.lit(STRAT_PCT_OTHER)
     )
@@ -122,7 +120,7 @@ def sample_topk_per_source(spark, sf_dir):
     from pyspark.sql.window import Window
 
     docs = load(spark, sf_dir, "documents")
-    h = _hash48(F.col("doc_id").cast("string"))
+    h = hash48(F.col("doc_id").cast("string"))
     w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
     return (
         docs.select("doc_id", "source", h.alias("sample_key"))
@@ -227,20 +225,20 @@ def dedup_block_exact(spark, sf_dir):
     scale."""
     docs = load(spark, sf_dir, "documents")
     docs = rebalance_narrow_scan(docs, spark)
-    words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    n_blocks = F.floor(F.size(words) / BLOCK_W).cast("int")
+    ws = words(F.col("text"))
+    n_blocks = F.floor(F.size(ws) / BLOCK_W).cast("int")
     blocks = F.when(
         n_blocks > 0,
         F.transform(
             F.sequence(F.lit(0), n_blocks - 1),
             lambda i: F.concat_ws(
-                " ", F.slice(words, i * BLOCK_W + 1, BLOCK_W)
+                " ", F.slice(ws, i * BLOCK_W + 1, BLOCK_W)
             ),
         ),
     )
     exploded = docs.select(
         "doc_id", F.explode(blocks).alias("block")
-    ).select("doc_id", _hash48(F.col("block")).alias("block_hash"))
+    ).select("doc_id", hash48(F.col("block")).alias("block_hash"))
     return (
         exploded.groupBy("block_hash")
         .agg(
@@ -254,7 +252,7 @@ def dedup_block_exact(spark, sf_dir):
 
 def _sql_block_dedup() -> str:
     return rf"""WITH w AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+  SELECT doc_id, {sql_words('text')} AS ws
   FROM documents
 ),
 blocks AS (
@@ -263,7 +261,7 @@ blocks AS (
   FROM w, UNNEST(range(0, CAST(floor(len(ws) / {BLOCK_W}) AS BIGINT))) AS t(i)
 ),
 hashed AS (
-  SELECT doc_id, {_sql_hash48('block')} AS block_hash FROM blocks
+  SELECT doc_id, {sql_hash48('block')} AS block_hash FROM blocks
 )
 SELECT block_hash,
        COUNT(DISTINCT doc_id) AS n_docs,
@@ -295,27 +293,16 @@ def contamination_ngram(spark, sf_dir):
     per-doc scores stay in lockstep."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
     docs = rebalance_narrow_scan(docs, spark)
-    words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    # hash each gram inside the transform and dedup the HASHES (not the gram
-    # strings) so the per-doc distinct matches the oracle's post-hash DISTINCT
-    # exactly even under a 48-bit collision within one doc; still map-side
-    grams = F.when(
-        F.size(words) >= CONTAM_N,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(words) - CONTAM_N),
-                lambda i: _hash48(
-                    F.concat_ws(
-                        " ",
-                        F.element_at(words, i + 1),
-                        F.element_at(words, i + 2),
-                        F.element_at(words, i + 3),
-                    )
-                ),
-            )
-        ),
+    # hash each gram and dedup the HASHES (not the gram strings) so the
+    # per-doc distinct matches the oracle's post-hash DISTINCT exactly even
+    # under a 48-bit collision within one doc; still map-side. The words
+    # array gets its own select (see word_ngrams).
+    grams = F.array_distinct(
+        F.transform(word_ngrams(F.col("w"), CONTAM_N), hash48)
     )
-    g = docs.select("doc_id", "source", F.explode(grams).alias("gh"))
+    g = docs.select("doc_id", "source", words(F.col("text")).alias("w")).select(
+        "doc_id", "source", F.explode(grams).alias("gh")
+    )
     eval_grams = (
         g.filter(F.col("source") == "src0").select("gh").distinct()
     ).withColumn("in_eval", F.lit(1))
@@ -335,12 +322,12 @@ def contamination_ngram(spark, sf_dir):
 
 def _sql_contamination() -> str:
     return rf"""WITH w AS (
-  SELECT doc_id, source, string_split_regex(lower(trim(text)), '\s+') AS ws
+  SELECT doc_id, source, {sql_words('text')} AS ws
   FROM documents WHERE doc_id IS NOT NULL
 ),
 grams AS (
   SELECT DISTINCT doc_id, source,
-         {_sql_hash48(f"ws[i + 1] || ' ' || ws[i + 2] || ' ' || ws[i + 3]")} AS gh
+         {sql_hash48(f"ws[i + 1] || ' ' || ws[i + 2] || ' ' || ws[i + 3]")} AS gh
   FROM w, UNNEST(range(0, len(ws) - {CONTAM_N - 1})) AS t(i)
   WHERE len(ws) >= {CONTAM_N}
 ),
@@ -481,7 +468,7 @@ def split_train_val_test(spark, sf_dir):
     counts so the whole allocation is the checked result; the assignment
     itself is a pure map expression that fuses into the scan."""
     docs = load(spark, sf_dir, "documents")
-    bucket = _hash48(F.col("doc_id").cast("string")) % 100
+    bucket = hash48(F.col("doc_id").cast("string")) % 100
     split = (
         F.when(bucket < SPLIT_TRAIN_PCT, F.lit("train"))
         .when(bucket < SPLIT_TRAIN_PCT + SPLIT_VAL_PCT, F.lit("val"))
@@ -495,7 +482,7 @@ def split_train_val_test(spark, sf_dir):
 
 
 def _sql_split() -> str:
-    bucket = f"{_sql_hash48('CAST(doc_id AS VARCHAR)')} % 100"
+    bucket = f"{sql_hash48('CAST(doc_id AS VARCHAR)')} % 100"
     return f"""SELECT source,
        CASE WHEN {bucket} < {SPLIT_TRAIN_PCT} THEN 'train'
             WHEN {bucket} < {SPLIT_TRAIN_PCT + SPLIT_VAL_PCT} THEN 'val'
@@ -523,15 +510,14 @@ def text_embed_hash(spark, sf_dir):
 
     docs = load(spark, sf_dir, "documents")
     docs = rebalance_narrow_scan(docs, spark)
-    words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    w = docs.select("doc_id", F.explode(words).alias("w")).filter(
+    w = docs.select("doc_id", F.explode(words(F.col("text"))).alias("w")).filter(
         F.col("w") != ""
     )
     feat = w.select(
         "doc_id",
-        (_hash48(F.col("w")) % EMBED_DIM).alias("bucket"),
+        (hash48(F.col("w")) % EMBED_DIM).alias("bucket"),
         F.when(
-            _hash48(F.concat(F.lit("#"), F.col("w"))) % 2 == 0, F.lit(1)
+            hash48(F.concat(F.lit("#"), F.col("w"))) % 2 == 0, F.lit(1)
         )
         .otherwise(F.lit(-1))
         .alias("sgn"),
@@ -552,11 +538,11 @@ def text_embed_hash(spark, sf_dir):
 
 
 def _sql_embed_hash() -> str:
-    word_hash = _sql_hash48("w")
-    sign_hash = _sql_hash48("'#' || w")
+    word_hash = sql_hash48("w")
+    sign_hash = sql_hash48("'#' || w")
     return rf"""WITH w AS (
   SELECT doc_id, w FROM (
-    SELECT doc_id, UNNEST(string_split_regex(lower(trim(text)), '\s+')) AS w
+    SELECT doc_id, UNNEST({sql_words('text')}) AS w
     FROM documents)
   WHERE w <> ''
 ),
@@ -657,13 +643,13 @@ def dedup_block_rewrite(spark, sf_dir):
     from pyspark.sql import Window as W
 
     docs = load(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    n_blocks = F.floor(F.size(words) / BLOCK_W).cast("int")
+    ws = words(F.col("text"))
+    n_blocks = F.floor(F.size(ws) / BLOCK_W).cast("int")
     tail = F.concat_ws(
-        " ", F.slice(words, n_blocks * BLOCK_W + 1, F.size(words) - n_blocks * BLOCK_W)
+        " ", F.slice(ws, n_blocks * BLOCK_W + 1, F.size(ws) - n_blocks * BLOCK_W)
     )
     base = docs.select(
-        "doc_id", words.alias("ws"), n_blocks.alias("nb"), tail.alias("tail")
+        "doc_id", ws.alias("ws"), n_blocks.alias("nb"), tail.alias("tail")
     )
     blocks = base.filter(F.col("nb") > 0).select(
         "doc_id",
@@ -673,7 +659,7 @@ def dedup_block_rewrite(spark, sf_dir):
                 lambda i: F.concat_ws(" ", F.slice(F.col("ws"), i * BLOCK_W + 1, BLOCK_W)),
             )
         ).alias("idx", "block"),
-    ).withColumn("block_hash", _hash48(F.col("block")))
+    ).withColumn("block_hash", hash48(F.col("block")))
     w = W.partitionBy("block_hash").orderBy("doc_id", "idx")
     kept = (
         blocks.withColumn("rn", F.row_number().over(w))
@@ -720,17 +706,16 @@ def corpus_pipeline_summary(spark, sf_dir):
     100 TB curation run actually executes: content hashes and doc ids
     shuffle, text never moves after the scan."""
     docs = load(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     with_fp = docs.select(
         "doc_id",
         "n_chars",
         F.regexp_count(F.col("text"), F.lit(r"\S+")).cast("bigint").alias("n_words"),
-        F.md5(norm).alias("fp"),
+        content_md5(F.col("text")).alias("fp"),
     )
     keep_first = with_fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
     deduped = with_fp.join(keep_first, ["fp", "doc_id"], "left_semi")
     kept = deduped.filter(F.col("n_chars") >= MIN_KEEP_CHARS)
-    bucket = _hash48(F.col("doc_id").cast("string")) % 100
+    bucket = hash48(F.col("doc_id").cast("string")) % 100
     split = (
         F.when(bucket < SPLIT_TRAIN_PCT, F.lit("train"))
         .when(bucket < SPLIT_TRAIN_PCT + SPLIT_VAL_PCT, F.lit("val"))
@@ -766,16 +751,16 @@ def register(reg):
         "sample_hash_bucket",
         sample_hash_bucket,
         f"SELECT doc_id, source, lang, n_chars FROM documents "
-        f"WHERE {_sql_hash48('CAST(doc_id AS VARCHAR)')} % {SAMPLE_MOD} < {SAMPLE_PCT}",
+        f"WHERE {sql_hash48('CAST(doc_id AS VARCHAR)')} % {SAMPLE_MOD} < {SAMPLE_PCT}",
     )
     reg.add(
         "sample_stratified",
         sample_stratified,
         f"""SELECT lang, COUNT(*) AS n_total,
-       CAST(SUM(CASE WHEN {_sql_hash48('CAST(doc_id AS VARCHAR)')} % {SAMPLE_MOD}
+       CAST(SUM(CASE WHEN {sql_hash48('CAST(doc_id AS VARCHAR)')} % {SAMPLE_MOD}
                      < CASE WHEN lang = 'en' THEN {STRAT_PCT_EN} ELSE {STRAT_PCT_OTHER} END
                 THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
-       ROUND(SUM(CASE WHEN {_sql_hash48('CAST(doc_id AS VARCHAR)')} % {SAMPLE_MOD}
+       ROUND(SUM(CASE WHEN {sql_hash48('CAST(doc_id AS VARCHAR)')} % {SAMPLE_MOD}
                      < CASE WHEN lang = 'en' THEN {STRAT_PCT_EN} ELSE {STRAT_PCT_OTHER} END
                 THEN 1 ELSE 0 END) / COUNT(*), 6) AS sample_frac
 FROM documents GROUP BY lang ORDER BY lang""",
@@ -785,9 +770,9 @@ FROM documents GROUP BY lang ORDER BY lang""",
         sample_topk_per_source,
         f"""SELECT doc_id, source, sample_key, rk FROM (
   SELECT doc_id, source,
-         {_sql_hash48('CAST(doc_id AS VARCHAR)')} AS sample_key,
+         {sql_hash48('CAST(doc_id AS VARCHAR)')} AS sample_key,
          ROW_NUMBER() OVER (PARTITION BY source
-                            ORDER BY {_sql_hash48('CAST(doc_id AS VARCHAR)')}, doc_id)
+                            ORDER BY {sql_hash48('CAST(doc_id AS VARCHAR)')}, doc_id)
            AS rk
   FROM documents) t WHERE rk <= {RESERVOIR_K}""",
     )
@@ -861,8 +846,8 @@ FROM documents GROUP BY 1 ORDER BY bucket""",
         "dedup_block_rewrite",
         dedup_block_rewrite,
         rf"""WITH base AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws,
-         CAST(floor(len(string_split_regex(lower(trim(text)), '\s+'))
+  SELECT doc_id, {sql_words('text')} AS ws,
+         CAST(floor(len({sql_words('text')})
               / {BLOCK_W}) AS INT) AS nb
   FROM documents
 ),
@@ -878,7 +863,7 @@ blocks AS (
 ),
 ranked AS (
   SELECT doc_id, idx, block,
-         ROW_NUMBER() OVER (PARTITION BY {_sql_hash48('block')}
+         ROW_NUMBER() OVER (PARTITION BY {sql_hash48('block')}
                             ORDER BY doc_id, idx) AS rn
   FROM blocks
 ),
@@ -898,14 +883,14 @@ SELECT b.doc_id, CAST(b.nb AS BIGINT) AS n_blocks,
 FROM based b LEFT JOIN kept k ON b.doc_id = k.doc_id""",
     )
     # composed pipeline
-    bucket = f"{_sql_hash48('CAST(doc_id AS VARCHAR)')} % 100"
+    bucket = f"{sql_hash48('CAST(doc_id AS VARCHAR)')} % 100"
     reg.add(
         "pipeline_corpus_summary",
         corpus_pipeline_summary,
         rf"""WITH with_fp AS (
   SELECT doc_id, n_chars,
          len(regexp_extract_all(text, '\S+')) AS n_words,
-         md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+         {sql_content_md5('text')} AS fp
   FROM documents
 ),
 keep_first AS (SELECT fp, MIN(doc_id) AS doc_id FROM with_fp GROUP BY fp),

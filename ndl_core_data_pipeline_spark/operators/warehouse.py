@@ -49,6 +49,8 @@ from ._util import (
     sql_dsum,
     sql_finite,
     sql_r6,
+    sql_words,
+    words,
 )
 
 # ---------------------------------------------------------------------------
@@ -324,7 +326,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = docs.mapInPandas(_mg_candidates, "token string").distinct()
     toks = docs.select(
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token")
+        F.explode(words(F.col("text"))).alias("token")
     ).filter(F.col("token") != "")
     # r20 (guide §2.4 — one pass instead of two): the exact recount used
     # to tokenize the corpus TWICE — once for the global token count and
@@ -356,7 +358,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _HH_SQL = f"""
 WITH toks AS (
-  SELECT UNNEST(string_split_regex(lower(trim(text)), '\\s+')) AS token
+  SELECT UNNEST({sql_words('text')}) AS token
   FROM documents
 ), nz AS (SELECT token FROM toks WHERE token <> '')
 SELECT token, COUNT(*) AS cnt FROM nz GROUP BY token

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .functions.udfs import anonymize_text_udf, refine_text_udf
-from .operators.textops import LICENSE_DEFAULT, LICENSE_MAP
+from .operators.textops import normalize_license
 from .schema import (
     CANONICAL_SCHEMA,
     COMMON_FIELDS,
@@ -34,16 +34,6 @@ from .schema import (
 )
 
 _RAW_LICENSE_KEY = "license"  # the canonical builder reads this exact key
-
-
-def normalize_license(col: Column) -> Column:
-    """X7 (assets/processing/assets.py:299-315): lowercase 12-entry map,
-    default OGL-UK-3.0 for unknown/missing keys."""
-    norm = F.lower(F.trim(col))
-    expr: Column = F.lit(LICENSE_DEFAULT)
-    for k in reversed(list(LICENSE_MAP)):
-        expr = F.when(norm == k, LICENSE_MAP[k]).otherwise(expr)
-    return expr
 
 
 def canonicalize(raw: DataFrame, parse_ts=None) -> DataFrame:

@@ -3,8 +3,9 @@
 Each function here is an older, slower form of an engine operator — the
 Spark SQL higher-order-function (HOF) LSH signature and band values, the
 broadcast-row nearest-centroid and codeword argmins, the K-way scored PQ
-expansion, the one-expression shingle builder and the naive triangle
-wedge join. The engine runs the newer form; the tests pin the two equal,
+expansion, the one-expression shingle form, the inline word 3-gram
+expressions the shingle callers used before `word_ngrams`, and the naive
+triangle wedge join. The engine runs the newer form; the tests pin the two equal,
 so the older form lives here as the oracle instead of in the package.
 """
 
@@ -13,6 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ndl_core_data_pipeline_spark.operators import dedup
+from ndl_core_data_pipeline_spark.operators._util import (
+    word_ngrams,
+    words as split_words,
+)
 from ndl_core_data_pipeline_spark.operators.vector import (
     _pq_codebooks,
     _pq_filtered,
@@ -134,8 +139,74 @@ def pq_scored(emb: DataFrame) -> DataFrame:
 
 def shingles_spark(text_col):
     """Single-expression shingle construction; the engine splits it into
-    the _split_words + _shingles_from_words projection pair."""
-    return dedup._shingles_from_words(dedup._split_words(text_col))
+    a `words` projection followed by `word_ngrams`."""
+    return F.array_distinct(word_ngrams(split_words(text_col), dedup.SHINGLE_N))
+
+
+# The word 3-gram expressions the dedup, winnowing and contamination
+# callers spelled inline before `_util.word_ngrams`, kept verbatim so a
+# test can pin each caller's current expression equal to its old one.
+# Each takes a pre-materialized words array column.
+
+
+def dedup_shingles_old(words):
+    """dedup's distinct shingles (the former `_shingles_from_words`)."""
+    shingles = F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(0), F.greatest(F.size(words) - 3, F.lit(0))),
+            lambda i: F.concat_ws(
+                " ",
+                F.element_at(words, i + 1),
+                F.element_at(words, i + 2),
+                F.element_at(words, i + 3),
+            ),
+        )
+    )
+    return F.when(F.size(words) >= 3, shingles)
+
+
+def winnowing_shingles_old(words):
+    """textops.winnowing_fingerprints' positional shingles."""
+    return F.when(
+        F.size(words) >= 3,
+        F.transform(
+            F.sequence(F.lit(0), F.size(words) - 3),
+            lambda i: F.concat_ws(
+                " ",
+                F.element_at(words, i + 1),
+                F.element_at(words, i + 2),
+                F.element_at(words, i + 3),
+            ),
+        ),
+    )
+
+
+def contamination_grams_old(words):
+    """training.contamination_ngram's distinct per-doc gram hashes."""
+    return F.when(
+        F.size(words) >= 3,
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(0), F.size(words) - 3),
+                lambda i: F.conv(
+                    F.substring(
+                        F.md5(
+                            F.concat_ws(
+                                " ",
+                                F.element_at(words, i + 1),
+                                F.element_at(words, i + 2),
+                                F.element_at(words, i + 3),
+                            )
+                        ),
+                        1,
+                        12,
+                    ),
+                    16,
+                    10,
+                ).cast("bigint"),
+            )
+        ),
+    )
 
 
 def triangle_count_naive(e: DataFrame) -> DataFrame:

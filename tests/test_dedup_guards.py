@@ -10,12 +10,14 @@ from pyspark.sql.observation import Observation
 
 from ndl_core_data_pipeline_spark import skew
 from ndl_core_data_pipeline_spark.operators import dedup
+from ndl_core_data_pipeline_spark.operators._util import hash48, word_ngrams, words
 from ndl_core_data_pipeline_spark.operators.vector import (
     embedding_dim,
     hyperplane_matrix,
     lsh_bucket_assignment,
 )
 
+from . import reference_forms as R
 from .reference_forms import shingles_spark
 
 
@@ -36,6 +38,44 @@ def test_short_docs_emit_no_shingles(spark):
     counts = {r["doc_id"]: r["count"] for r in out}
     assert 1 not in counts and 2 not in counts
     assert counts[3] == 1 and counts[4] == 2
+
+
+NGRAM_DOCS = [
+    None,
+    "",
+    "   ",
+    "one",
+    "one two",
+    "one two three",
+    "one two three four",
+    "a b c a b c a b c",
+    "\tlead tab then words",
+    "a\tb\tc\td",
+    "a\x0bb\x0bc\x0bd",
+    "a\xa0b c d e",
+]
+
+
+@pytest.mark.parametrize("text", NGRAM_DOCS)
+def test_word_ngrams_match_the_inline_forms(spark, text):
+    """Each word 3-gram caller's expression equals the one it spelled
+    inline before `word_ngrams`: dedup's distinct shingles, winnowing's
+    positional shingles, contamination's distinct gram hashes."""
+    ws = spark.createDataFrame([(text,)], "text string").select(
+        words(F.col("text")).alias("w")
+    )
+    w = F.col("w")
+    grams = word_ngrams(w, 3)
+    row = ws.select(
+        F.array_distinct(grams).alias("dedup"),
+        R.dedup_shingles_old(w).alias("dedup_old"),
+        grams.alias("winnow"),
+        R.winnowing_shingles_old(w).alias("winnow_old"),
+        F.array_distinct(F.transform(grams, hash48)).alias("contam"),
+        R.contamination_grams_old(w).alias("contam_old"),
+    ).first()
+    for caller in ("dedup", "winnow", "contam"):
+        assert row[caller] == row[f"{caller}_old"], caller
 
 
 def test_bucket_pairs_drops_degenerate_buckets(spark):

@@ -1,8 +1,14 @@
 """Differential test: every registered query vs its DuckDB oracle.
 
-Default scale is sf0.001 (fast suite). Set SPARK_GRAFT_PARITY_SF_DIR=
-/root/testdata/sf0.01 to sweep the whole registry at the DRIVER's scale
-— the form of the sweep run before each round's registry reorder."""
+Default scale is sf0.001 (fast suite). Set SPARK_GRAFT_PARITY_SF_DIR to a
+fixture directory (for example the sf0.01 one) to sweep the whole registry
+there, or to several directories joined by os.pathsep to sweep each; with
+more than one directory the test ids gain the directory's base name.
+`-k NAME` selects one query:
+
+    SPARK_GRAFT_PARITY_SF_DIR=DIR_A:DIR_B \
+        python -m pytest tests/test_oracle_parity.py -k text_fingerprint
+"""
 
 from __future__ import annotations
 
@@ -17,11 +23,22 @@ from .oracle import run_compare
 
 QUERIES = contract.queries()
 ORACLES = contract.oracle_sql()
+# None stands for the sf_small fixture
+SF_DIRS = [
+    d for d in os.environ.get("SPARK_GRAFT_PARITY_SF_DIR", "").split(os.pathsep) if d
+] or [None]
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(spark, sf_small, name):
-    sf_dir = os.environ.get("SPARK_GRAFT_PARITY_SF_DIR", sf_small)
+def _parity_cases():
+    for sf_dir in SF_DIRS:
+        for name in sorted(QUERIES):
+            tag = name if len(SF_DIRS) == 1 else f"{os.path.basename(sf_dir)}-{name}"
+            yield pytest.param(sf_dir, name, id=tag)
+
+
+@pytest.mark.parametrize("sf_dir, name", _parity_cases())
+def test_query_matches_oracle(spark, sf_small, sf_dir, name):
+    sf_dir = sf_dir or sf_small
     problems = run_compare(spark, name, QUERIES[name], ORACLES.get(name), sf_dir)
     assert not problems, f"{name}: " + "; ".join(problems)
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 
 PKG = "ndl_core_data_pipeline_spark"
 ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), PKG)
@@ -147,3 +148,70 @@ def test_optional_imports_live_in_the_tier_loader():
         f"{mod}:{line}" for mod, _, line in bad
     )
     assert found, "udfs._tier no longer handles ImportError"
+
+
+# the text vocabulary's spellings, matched on whitespace-collapsed source
+_TEXT_VOCABULARY = {
+    "Spark word split (use _util.words)": re.compile(r"F\.split\( ?F\.lower\( ?F\.trim\("),
+    "DuckDB word split (use _util.sql_words)": re.compile(
+        r"string_split_regex\( ?lower\( ?trim\("
+    ),
+    "normalized-text md5 (use _util.content_md5 / sql_content_md5)": re.compile(
+        r"regexp_replace\( ?(F\.)?lower\( ?(F\.)?trim\("
+    ),
+    "48-bit md5 prefix (use _util.hash48 / sql_hash48)": re.compile(
+        r"substring\( ?(F\.)?md5\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\) ?, ?1 ?, ?12 ?\)"
+    ),
+}
+# (module, top-level name) -> why it may keep a spelling
+_VOCABULARY_PINNED = {
+    (f"{PKG}.operators.sketches", "_BK_SQL"): (
+        "the agg_bottomk_sample_quantiles oracle breaks its 48-bit hash "
+        "across two lines; sql_hash48's one-line form would change the "
+        "oracle's bytes"
+    ),
+}
+
+
+def _top_level_sources():
+    for mod, is_pkg, tree in _modules():
+        parts = mod.split(".") + (["__init__"] if is_pkg else [])
+        with open(os.path.join(os.path.dirname(ROOT), *parts) + ".py", encoding="utf-8") as fh:
+            src = fh.read()
+        for top in tree.body:
+            name = getattr(top, "name", None)
+            if name is None and isinstance(top, (ast.Assign, ast.AnnAssign)):
+                targets = top.targets if isinstance(top, ast.Assign) else [top.target]
+                name = ",".join(t.id for t in targets if isinstance(t, ast.Name))
+            yield mod, name or f"line {top.lineno}", top, ast.get_source_segment(src, top)
+
+
+def test_text_vocabulary_is_spelled_once():
+    """The word split, the normalized-text md5 and the 48-bit md5 prefix
+    are spelled only in `operators/_util.py` (`words`, `content_md5`,
+    `hash48` and their `sql_*` twins); every operator and oracle calls
+    those functions."""
+    found = set()
+    for mod, name, _, seg in _top_level_sources():
+        if mod == f"{PKG}.operators._util":
+            continue
+        flat = re.sub(r"\s+", " ", seg)
+        found |= {(mod, name, what) for what, pat in _TEXT_VOCABULARY.items() if pat.search(flat)}
+    bad = sorted(f for f in found if f[:2] not in _VOCABULARY_PINNED)
+    assert not bad, "text vocabulary spelled outside _util: " + "; ".join(
+        f"{mod}.{name}: {what}" for mod, name, what in bad
+    )
+    assert {f[:2] for f in found} == set(_VOCABULARY_PINNED)
+
+
+def test_license_map_is_folded_once():
+    """The Spark fold of LICENSE_MAP into a when-chain lives in
+    `textops.normalize_license`; every other license column calls it."""
+    found = [
+        (mod, name)
+        for mod, name, top, _ in _top_level_sources()
+        for node in ast.walk(top)
+        if isinstance(node, ast.For)
+        and any(isinstance(n, ast.Name) and n.id == "LICENSE_MAP" for n in ast.walk(node.iter))
+    ]
+    assert found == [(f"{PKG}.operators.textops", "normalize_license")], found

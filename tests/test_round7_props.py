@@ -170,7 +170,7 @@ def _py_hash48(s: str) -> int:
 
 
 def test_hash48_spark_matches_python(spark):
-    from ndl_core_data_pipeline_spark.operators.training import _hash48
+    from ndl_core_data_pipeline_spark.operators._util import hash48 as _hash48
 
     vals = [str(i) for i in range(0, 3000, 11)] + ["", "a b", "ünïcode"]
     df = spark.createDataFrame([(v,) for v in vals], "s string")
@@ -184,13 +184,13 @@ def test_hash48_spark_matches_python(spark):
 def test_minhash_permutations_spark_match_python(spark):
     """The affine MinHash family h_j(x) = (A_j x + B_j) mod P over the
     48-bit md5 base hash, against a pure-Python reference."""
+    from ndl_core_data_pipeline_spark.operators._util import hash48 as minhash_base48
     from ndl_core_data_pipeline_spark.operators.dedup import (
         MINHASH_A,
         MINHASH_B,
         MINHASH_P,
         N_MINHASH,
         minhash_affine,
-        minhash_base48,
     )
 
     shingles = [f"tok{i} tok{i+1} tok{i+2}" for i in range(50)]

@@ -161,3 +161,44 @@ def test_absent_tier_import_attempted_once(monkeypatch):
     long_text = "the cat and the dog sat on the mat " * 10  # > 200 chars
     assert [udfs.detect_language(long_text) for _ in range(50)] == ["en"] * 50
     assert attempts == ["langdetect"]
+
+
+# NBSP, ideographic space, vertical tab, Arabic-Indic digits: the JVM reads
+# \s and [0-9] as ASCII, so these are word characters / non-digits there
+HOSTILE_TEXTS = [
+    "a\xa0b",
+    "x\u3000y z",
+    "p\x0bq r",
+    "call 07٩١١ ١٢٣ ٤٥٦ now",
+    "mix ١٢٣ and 123\xa0and\u3000more",
+    "phone 07911 123 456, mail a.b@example.co.uk",
+    "tab\tsep\x0cform\rfeed",
+]
+
+
+def test_python_regex_tiers_agree_with_spark(spark, tmp_path, monkeypatch):
+    """The Python fallback tiers (no tiktoken, no presidio) give the
+    token counts and masked text the JVM regex tiers give on the same
+    rows: the X5 count of `text_token_count_regex` and the P1 masks of
+    `pii_anonymize_regex`."""
+    from ndl_core_data_pipeline_spark.operators import pii, textops
+
+    monkeypatch.setattr(udfs, "_tiktoken_encoder", lambda: None)
+    monkeypatch.setattr(udfs, "_presidio_engines", lambda: None)
+    spark.createDataFrame(
+        [(i, t, "en") for i, t in enumerate(HOSTILE_TEXTS)],
+        "doc_id bigint, text string, lang string",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    sf_dir = str(tmp_path)
+
+    counts = {
+        r["doc_id"]: r["token_count"]
+        for r in textops.token_count_regex(spark, sf_dir).collect()
+    }
+    assert counts == {
+        i: udfs.count_tokens(t) for i, t in enumerate(HOSTILE_TEXTS)
+    }
+    masked = pii.anonymize_regex(spark, sf_dir).collect()
+    assert len(masked) == len(HOSTILE_TEXTS)
+    for r in masked:
+        assert udfs.anonymize_text(r["pii_text"]) == r["anon_text"], r["pii_text"]
