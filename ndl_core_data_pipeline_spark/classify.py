@@ -82,6 +82,13 @@ def embed_texts(texts: list[str]) -> np.ndarray:
     return np.stack([featurize(t) for t in texts])
 
 
+def embedding_width() -> int:
+    """Width of the vectors embed_texts returns, known without running it:
+    the model's when sentence-transformers loads, DIM otherwise."""
+    model = _sentence_transformer()
+    return model.get_sentence_embedding_dimension() if model is not None else DIM
+
+
 def theme_matrix(themes: dict[str, str] | None = None) -> tuple[list[str], np.ndarray]:
     themes = themes or EU_THEMES
     labels = list(themes)

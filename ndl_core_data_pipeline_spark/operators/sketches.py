@@ -334,8 +334,7 @@ _FINP = "CASE WHEN isfinite(o_totalprice) THEN o_totalprice END"
 _BK_SQL = f"""
 WITH h AS (
   SELECT o_orderpriority, o_orderkey, o_totalprice,
-         CAST('0x' || substring(md5(CAST(o_orderkey AS VARCHAR)), 1, 12)
-              AS BIGINT) AS hv
+         {sql_hash48("CAST(o_orderkey AS VARCHAR)")} AS hv
   FROM orders
 ),
 sample AS (

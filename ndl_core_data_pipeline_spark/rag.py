@@ -26,7 +26,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-from .classify import embed_texts
+from .classify import embed_texts, embedding_width
 from .functions.udfs import chunk_text_udf
 
 CHUNK_SCHEMA_SUFFIX = "chunk_index INT, chunk STRING"
@@ -68,7 +68,8 @@ def embed_chunks(chunks: DataFrame, text_col: str = "chunk") -> DataFrame:
 def build_index(docs: DataFrame, approximate: bool = False) -> DataFrame:
     """Full build: chunk → embed (→ LSH bucket when approximate). The
     result is the searchable table search.search()/ann_topk consume;
-    chunk ids are (origin_identifier, chunk_index)."""
+    chunk ids are (origin_identifier, chunk_index). Launches no job: the
+    LSH planes are sized by the embedder's known width, not by a sniff."""
     chunks = build_chunks(docs)
     embedded = embed_chunks(chunks)
     embedded = embedded.withColumn(
@@ -78,5 +79,5 @@ def build_index(docs: DataFrame, approximate: bool = False) -> DataFrame:
     if approximate:
         from .search import lsh_index
 
-        embedded = lsh_index(embedded)
+        embedded = lsh_index(embedded, dim=embedding_width())
     return embedded

@@ -4,6 +4,18 @@ Defaults chosen for correctness-first determinism and scale-readiness:
 UTC session timezone (oracle parity), Arrow-accelerated pandas interchange,
 AQE on (runtime coalesce + skew-join handling — the 100 TB posture), shuffle
 partitions sized to the local core count rather than the 200 default.
+
+Python workers: Spark starts every Python worker with its own
+``pyspark.zip``, py4j zip and spark-core jar at the head of ``sys.path``;
+importing PySpark from there, and re-reading those archives' directories
+at every task, costs about 0.12 s per task. ``spark.python.daemon.module``
+names ``pydaemon``, which drops those archives from the daemon's path
+before it forks any worker when the installed PySpark is the same version
+(see its docstring). The daemon is started as ``python -m`` from the JVM's
+working directory, so ``spark.executorEnv.PYTHONPATH`` puts this package's
+parent directory on the workers' path; Spark merges it with its own
+entries and the environment's PYTHONPATH. Without it no Python stage can
+start when the JVM runs outside the checkout.
 """
 
 from __future__ import annotations
@@ -11,6 +23,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -45,6 +59,8 @@ def get_spark(
         # are identical. Must be set at build: the flag is cached
         # process-wide on first Column op.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.daemon.module", f"{__package__}.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -163,14 +163,6 @@ _TEXT_VOCABULARY = {
         r"substring\( ?(F\.)?md5\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\) ?, ?1 ?, ?12 ?\)"
     ),
 }
-# (module, top-level name) -> why it may keep a spelling
-_VOCABULARY_PINNED = {
-    (f"{PKG}.operators.sketches", "_BK_SQL"): (
-        "the agg_bottomk_sample_quantiles oracle breaks its 48-bit hash "
-        "across two lines; sql_hash48's one-line form would change the "
-        "oracle's bytes"
-    ),
-}
 
 
 def _top_level_sources():
@@ -197,11 +189,9 @@ def test_text_vocabulary_is_spelled_once():
             continue
         flat = re.sub(r"\s+", " ", seg)
         found |= {(mod, name, what) for what, pat in _TEXT_VOCABULARY.items() if pat.search(flat)}
-    bad = sorted(f for f in found if f[:2] not in _VOCABULARY_PINNED)
-    assert not bad, "text vocabulary spelled outside _util: " + "; ".join(
-        f"{mod}.{name}: {what}" for mod, name, what in bad
+    assert not found, "text vocabulary spelled outside _util: " + "; ".join(
+        f"{mod}.{name}: {what}" for mod, name, what in sorted(found)
     )
-    assert {f[:2] for f in found} == set(_VOCABULARY_PINNED)
 
 
 def test_license_map_is_folded_once():

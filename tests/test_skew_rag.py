@@ -103,6 +103,24 @@ def test_ann_query_bucket_equals_indexed_bucket(spark, doc_frame):
         assert search._query_bucket(q) == r["lsh_bucket"]
 
 
+def test_build_index_launches_no_job(spark, doc_frame):
+    """The LSH planes are sized by the embedder's known width: building the
+    approximate index runs no limit-1 sniff through the chunk and embed
+    UDFs, and every chunk keeps the bucket the sniffed width gave it."""
+    sc = spark.sparkContext
+    sc.setJobGroup("rag-build-index", "build_index")
+    try:
+        index = rag.build_index(doc_frame, approximate=True)
+        assert sc.statusTracker().getJobIdsForGroup("rag-build-index") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sniffed = search.lsh_index(rag.build_index(doc_frame))
+    got = {r["chunk_id"]: r["lsh_bucket"] for r in index.select("chunk_id", "lsh_bucket").collect()}
+    want = {r["chunk_id"]: r["lsh_bucket"] for r in sniffed.select("chunk_id", "lsh_bucket").collect()}
+    assert len(got) > 1 and got == want
+
+
 # ------------------------------------------------- hypothesis properties
 
 
