@@ -49,36 +49,23 @@ def _installed_dir(name: str, path: list[str]) -> str | None:
     return os.path.dirname(origin) if origin and os.path.isfile(origin) else None
 
 
-def _read(path: str) -> bytes | None:
-    try:
-        with open(path, "rb") as fh:
-            return fh.read()
-    except OSError:
-        return None
-
-
-def _zip_member(archive: str, member: str) -> bytes | None:
-    try:
-        with zipfile.ZipFile(archive) as zf:
-            return zf.read(member)
-    except (OSError, KeyError, zipfile.BadZipFile):
-        return None
-
-
 def clean_path(path: list[str]) -> list[str]:
     """`path` without Spark's archives, or `path` itself when the installed
     PySpark cannot stand in for the zipped one."""
     kept = [p for p in path if not spark_archive(p)]
     zips = [p for p in path if os.path.basename(p) == "pyspark.zip"]
-    if len(kept) == len(path) or not zips:
+    if not zips:
         return path
     pyspark_dir = _installed_dir("pyspark", kept)
     if pyspark_dir is None or _installed_dir("py4j", kept) is None:
         return path
-    installed = _read(os.path.join(pyspark_dir, "version.py"))
-    if installed is None or installed != _zip_member(zips[0], "pyspark/version.py"):
+    version = os.path.join(pyspark_dir, "version.py")
+    try:
+        with open(version, "rb") as fh, zipfile.ZipFile(zips[0]) as zf:
+            same = fh.read() == zf.read("pyspark/version.py")
+    except (OSError, KeyError, zipfile.BadZipFile):
         return path
-    return kept
+    return kept if same else path
 
 
 def main() -> None:

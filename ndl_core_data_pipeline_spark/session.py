@@ -5,17 +5,14 @@ UTC session timezone (oracle parity), Arrow-accelerated pandas interchange,
 AQE on (runtime coalesce + skew-join handling — the 100 TB posture), shuffle
 partitions sized to the local core count rather than the 200 default.
 
-Python workers: Spark starts every Python worker with its own
-``pyspark.zip``, py4j zip and spark-core jar at the head of ``sys.path``;
-importing PySpark from there, and re-reading those archives' directories
-at every task, costs about 0.12 s per task. ``spark.python.daemon.module``
-names ``pydaemon``, which drops those archives from the daemon's path
-before it forks any worker when the installed PySpark is the same version
-(see its docstring). The daemon is started as ``python -m`` from the JVM's
-working directory, so ``spark.executorEnv.PYTHONPATH`` puts this package's
-parent directory on the workers' path; Spark merges it with its own
-entries and the environment's PYTHONPATH. Without it no Python stage can
-start when the JVM runs outside the checkout.
+Python workers start through ``pydaemon`` (``spark.python.daemon.module``),
+which runs them on the installed PySpark instead of Spark's ``pyspark.zip``
+when the versions match: about 0.12 s less per Python task (see its
+docstring). The daemon starts as ``python -m`` in the JVM's working
+directory, so ``spark.executorEnv.PYTHONPATH`` adds this package's parent
+directory to the workers' path; Spark merges it with its own entries and
+the environment's PYTHONPATH. Without it no Python stage can start when
+the JVM runs outside the checkout.
 """
 
 from __future__ import annotations
