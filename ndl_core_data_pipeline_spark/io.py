@@ -48,9 +48,10 @@ def ensure_session_defaults(spark: SparkSession) -> None:
 # rewritten in-place within one session (every repo fixture is one
 # .parquet file); for a directory-style table, rewriting a part file in
 # place would NOT bump the directory stat — callers that mutate a
-# directory dataset mid-session must use a new path. Entries from prior
-# Spark applications are evicted on insert (r20, ADVICE r19: the cache
-# otherwise grows without bound in a long-lived multi-session driver).
+# directory dataset mid-session must use a new path. On insert, entries
+# from prior Spark applications and entries for the same path under an
+# older signature are evicted, so the cache keeps one plan per live path
+# (it would otherwise grow without bound in a long-lived driver).
 _SCAN_CACHE: dict = {}
 
 
@@ -90,7 +91,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif dtype != "timestamp":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     app_id = key[0]
-    for k in [k for k in _SCAN_CACHE if k[0] != app_id]:
+    for k in [k for k in _SCAN_CACHE if k[0] != app_id or k[1] == path]:
         del _SCAN_CACHE[k]
     _SCAN_CACHE[key] = df
     return df

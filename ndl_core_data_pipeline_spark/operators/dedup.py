@@ -192,8 +192,8 @@ def minhash_near_dup_pairs(spark, sf_dir, *, observation=None):
 
     The pair stream is the one quantity here that is inherently
     output-bound (~density² per bucket; measured 8.9× pairs per 3× rows
-    at sf3, SCALE_r10.json) — pass a pyspark.sql.Observation as
-    `observation` to receive `n_candidate_pairs` when the query
+    at sf3, artifacts/SCALE_r10.json) — pass a pyspark.sql.Observation
+    as `observation` to receive `n_candidate_pairs` when the query
     finishes, so a production run sees the blow-up as a counter before
     it sees a straining shuffle."""
     sigs = minhash_signatures(spark, sf_dir)
@@ -470,8 +470,7 @@ def _union_find_labels(a, b):
     sweeps). Same fixpoint: labels only ever decrease toward the min
     reachable id, and termination is the exact no-change test.
     tests/test_dedup_guards.py pins equality against the distributed
-    loop; tests/test_round20_caches.py pins it against the per-edge
-    reference."""
+    loop and against the per-edge reference."""
     import numpy as np
 
     nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)

@@ -180,7 +180,7 @@ def mad_outliers_approx(spark, sf_dir):
     error ≤ 1/MAD_APPROX_ACC. Bench/tests-only (no oracle): DuckDB's
     approx_quantile uses a different sketch, so cross-engine hashes
     can't pin approximate medians; correctness is pinned locally by
-    comparing fences against the exact form (tests/test_round7_ops.py)."""
+    comparing fences against the exact form (tests/test_filters.py)."""
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
     med = ev.groupBy("event_type").agg(
         F.percentile_approx("value", 0.5, MAD_APPROX_ACC).alias("med")

@@ -103,9 +103,9 @@ def theta_range_join(spark, sf_dir, *, observation=None):
     """Theta (non-equi range) join: parts priced within a supplier-derived
     band (engine surface; kept dim×dim sized — nested-loop is O(n·m)).
 
-    Output is inherently ~density² of the band predicate (measured 99.5×
-    output per 10× rows at sf1, SCALE_r10.json — adjudicated
-    output-bound, per-output-row throughput improved): pass a
+    Output is inherently ~density² of the band predicate (measured
+    99.5× output per 10× rows at sf1, artifacts/SCALE_r10.json —
+    adjudicated output-bound, per-output-row throughput improved): pass a
     pyspark.sql.Observation as `observation` to receive `n_output_rows`
     when the query finishes, so a 100-TB run surfaces the blow-up as a
     metric instead of an executor OOM downstream."""

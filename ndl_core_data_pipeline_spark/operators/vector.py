@@ -583,7 +583,7 @@ def _lsh_bands_arrow(df, planes, n_bands: int, *, keep, v_name="embedding"):
     `bvals` (array<bigint>, one value per band) — replaces n_planes
     interpreted zip_with/aggregate dot-product folds per row.
 
-    Exactness contract (pinned in tests/test_round20_argmin.py):
+    Exactness contract (pinned in tests/test_vector.py):
     - each plane's dot is the left fold of CAST(x AS DOUBLE) * hv and
       bit k of band b is Spark's (dot > 0), NaN included — both in
       _lsh_band_values, so finite/NaN/Inf arithmetic is bit-identical
@@ -1022,7 +1022,7 @@ _KM_DEC = "decimal(27,10)"  # exact partial sums for unit-magnitude dims
 #   NaN greatest among non-NULLs (probed: array_min(struct(NULL,5),
 #   struct(1.0,3)) -> the NULL struct). d2 is a sum of squares, so -0.0
 #   can never arise; cell ids are unique per cents row, so ties resolve
-#   by id (NULL id first). tests/test_round20_argmin.py pins every one
+#   by id (NULL id first). tests/test_vector.py pins every one
 #   of these cases against the HOF form.
 
 
@@ -1108,7 +1108,7 @@ def _nearest_arrow(df, cents, *, keep, v_name, v_sql_type, id_sql_type,
     — the same table the former plan broadcast). `keep` lists
     (name, sql_type) passthrough columns; only keep + v cross the Python
     boundary (guide §4.1). Bit-exactness argument + hostile-case pins:
-    block comment above / tests/test_round20_argmin.py."""
+    block comment above / tests/test_vector.py."""
     cents = list(cents)
     dim = len(cents[0][1]) if cents and cents[0][1] is not None else None
     # the vectorized path only runs when EVERY cell is clean and
@@ -1160,7 +1160,7 @@ def _pq_encode_arrow(df, cw, *, keep, v_name, with_d2=False):
     math runs vectorized in numpy; §2.3 — only `keep` + the vector cross
     the Python boundary, and the M-way row expansion happens after it).
 
-    Exact-equivalence contract (pinned in tests/test_round20_argmin.py):
+    Exact-equivalence contract (pinned in tests/test_vector.py):
     - the JVM form explodes ALL m in 0..PQ_M-1 and the inner join drops
       m values absent from the codebook -> emit only m in sorted(cw);
     - subvec = slice(v, m*8+1, 8): shorter/empty past the vector's end,
@@ -1342,7 +1342,7 @@ def _kmeans_rows(emb, cents=None, rounds: int = KMEANS_ITERS):
     by the algorithm constant, never by data size. Values round-trip
     bit-exactly (collect -> Python float -> repr literal is the IEEE
     shortest-roundtrip path), so the trained table is byte-identical to
-    the r19 plan's — pinned by tests/test_round20_argmin.py.
+    the r19 plan's — pinned by tests/test_vector.py.
 
     `cents` is the caller's seed [(cell_id, centroid)] rows; the default
     is the registry's seeding, the rows with vec_id < KMEANS_K, which

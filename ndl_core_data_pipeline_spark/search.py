@@ -72,13 +72,16 @@ def cosine_topk(
 
 def elbow_cut(hits: DataFrame, distance_col: str = "distance") -> DataFrame:
     """O4 adaptive elbow: ascending-distance diffs; cut at the first diff >
-    max(SENSITIVITY × median(diff), MIN_STEP). Operates on ≤ k rows, so the
-    single-partition window is bounded by construction."""
+    max(SENSITIVITY × median(diff), MIN_STEP). The median is the
+    interpolated one (`percentile`), as in `operators/sorts.elbow_cut` and
+    numpy; k = 15 gives an even count of diffs, where the lower middle
+    value would cut more. Operates on ≤ k rows, so the single-partition
+    window is bounded by construction."""
     w = W.orderBy(F.asc(distance_col))
     d = hits.withColumn("_diff", F.col(distance_col) - F.lag(distance_col, 1).over(w))
     d = d.withColumn(
         "_median_diff",
-        F.expr("percentile_approx(_diff, 0.5) over ()"),
+        F.expr("percentile(_diff, 0.5) over ()"),
     )
     threshold = F.greatest(
         F.col("_median_diff") * ELBOW_SENSITIVITY, F.lit(ELBOW_MIN_STEP)

@@ -808,8 +808,8 @@ def inject_timestamp_extremes(
 
 # Extreme FINITE double magnitudes (round-16 post-close probe, rebuilt
 # round-17 as a committed generator — the r16 run was ad-hoc and only
-# its artifact survived, EXTREME_r16.json). The failure field: decimal
-# capacity (DuckDB CAST raises past DECIMAL(25,6) where Spark's
+# its artifact survived, artifacts/EXTREME_r16.json). The failure
+# field: decimal capacity (DuckDB CAST raises past DECIMAL(25,6) where Spark's
 # non-ANSI cast NULLs), shortest-repr double→decimal conversion drift,
 # INT32/INT64 casts of huge FLOOR results, and — once those are fixed —
 # the comparator's own tolerance semantics at magnitudes where 1 ULP
@@ -827,8 +827,8 @@ def inject_double_extremes(
     """Copy every driver table from `base` with ~frac of every plain
     DOUBLE column replaced by extreme finite magnitudes
     (DOUBLE_EXTREMES; same recipe/seed as the r16 ad-hoc probe so the
-    fixture reproduces EXTREME_r16.json's). Array<float> embedding
-    columns are left alone — vector_elements_valid owns corrupt-vector
+    fixture reproduces artifacts/EXTREME_r16.json's). Array<float>
+    embedding columns are left alone — vector_elements_valid owns corrupt-vector
     policy and ANN math at 1e300 overflows by design. Deterministic;
     schema preserved."""
     rng = np.random.default_rng(seed)

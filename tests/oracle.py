@@ -24,14 +24,14 @@ FLOAT_TOL = 1e-9
 # pass ~1e15 — float64 carries 15.95 significant digits, so 1 ULP at 1e19
 # is ≈ 2048 and two decimal-exact engines that agree to the last
 # representable bit still differ by thousands in absolute terms. The
-# recorded residual bands (PARITY_SF1_r16.json: relative 1.2–1.6e-16;
-# EXTREME_r16.json: 24 queries, all ≤ a few ULP at 1e18–1e19) motivate a
-# 2-ULP relative acceptance. ULP(m) relative to m ranges over
-# (2^-53, 2^-52] across a binade, so "2 ULP anywhere" is exactly
-# 2·2^-52 ≈ 4.441e-16 — agreement to the last 1–2 bits and nothing
-# looser. The branch applies ONLY when both values are finite (inf vs
-# finite would otherwise pass `inf <= inf`); equal infinities are already
-# accepted by the IEEE-equality test above it.
+# recorded residual bands (artifacts/PARITY_SF1_r16.json: relative
+# 1.2–1.6e-16; artifacts/EXTREME_r16.json: 24 queries, all ≤ a few ULP
+# at 1e18–1e19) motivate a 2-ULP relative acceptance. ULP(m) relative
+# to m ranges over (2^-53, 2^-52] across a binade, so "2 ULP anywhere"
+# is exactly 2·2^-52 ≈ 4.441e-16 — agreement to the last 1–2 bits and
+# nothing looser. The branch applies ONLY when both values are finite
+# (inf vs finite would otherwise pass `inf <= inf`); equal infinities are
+# already accepted by the IEEE-equality test above it.
 REL_TOL = 2 * 2.0**-52  # = 4.440892098500626e-16
 
 _EPOCH = datetime.datetime(1970, 1, 1)

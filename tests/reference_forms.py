@@ -1,15 +1,19 @@
 """Reference implementations that only the equivalence tests use.
 
-Each function here is an older, slower form of an engine operator — the
-Spark SQL higher-order-function (HOF) LSH signature and band values, the
-broadcast-row nearest-centroid and codeword argmins, the K-way scored PQ
-expansion, the one-expression shingle form, the inline word 3-gram
-expressions the shingle callers used before `word_ngrams`, and the naive
-triangle wedge join. The engine runs the newer form; the tests pin the two equal,
-so the older form lives here as the oracle instead of in the package.
+Most functions here are an older, slower form of an engine operator —
+the Spark SQL higher-order-function (HOF) LSH signature and band values,
+the broadcast-row nearest-centroid and codeword argmins, the K-way
+scored PQ expansion, the one-expression shingle form, the inline word
+3-gram expressions the shingle callers used before `word_ngrams`, and
+the naive triangle wedge join. The engine runs the newer form; the tests
+pin the two equal, so the older form lives here as the oracle instead of
+in the package. `_py_hash48` is the pure-Python model of `hash48` that
+the hash and MinHash tests share.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -224,3 +228,10 @@ def triangle_count_naive(e: DataFrame) -> DataFrame:
     n_tri = tri.groupBy().agg(F.count("*").alias("n_triangles"))
     n_edges = e.groupBy().agg(F.count("*").alias("n_edges"))
     return n_edges.crossJoin(F.broadcast(n_tri))
+
+
+# ------------------------------------------------------------------ hash
+
+
+def _py_hash48(s: str) -> int:
+    return int(hashlib.md5(s.encode()).hexdigest()[:12], 16)

@@ -1,4 +1,5 @@
-"""Pin tests for the round-16 extreme-BIGINT handoff (BIGINT_r16.json).
+"""Pin tests for the round-16 extreme-BIGINT handoff
+(artifacts/BIGINT_r16.json).
 
 The post-close probe planted ±2^62-class values into every int column
 and left two real defect classes (the other eight "divergences" were

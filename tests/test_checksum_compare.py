@@ -73,3 +73,23 @@ def test_checksum_catches_column_mismatch(spark, sf_small):
     sql = THETA_SQL.replace("s_acctbal FROM", "s_acctbal AS balance FROM")
     problems = checksum_compare(spark, "join_theta_range", _theta, sql, sf_small)
     assert problems and "column mismatch" in problems[0]
+
+
+def test_checksum_digest_columns_are_exact_strings(spark, sf_small):
+    """The cnt/xx_sum/mm_sum digests must compare exactly (string path),
+    not through float(Decimal) + REL_TOL — at sum magnitudes ~1e22 the
+    float path discards the low ~6 digits (ADVICE r17 low)."""
+    from tests.oracle import checksum_compare
+
+    def q(s, d):
+        return s.read.parquet(f"{d}/nation.parquet").selectExpr(
+            "n_nationkey", "n_name"
+        )
+
+    sql = "SELECT n_nationkey, n_name FROM nation"
+    assert checksum_compare(spark, "digest_pin", q, sql, sf_small) == []
+    # a single-row value edit at the bottom digits MUST be caught: with
+    # the r17 float compare a sub-1e-16-relative digest perturbation
+    # would have slipped through REL_TOL
+    bad = sql + " WHERE n_nationkey != 0 UNION ALL SELECT 0, 'XX'"
+    assert checksum_compare(spark, "digest_pin_bad", q, bad, sf_small) != []

@@ -8,10 +8,10 @@ finite-only relative branch (REL_TOL = 4e-16 ≈ 2 ULP).
 
 These pins are built FROM the recorded residuals so the acceptance band
 is anchored to real engine-vs-oracle evidence, not invented numbers:
-  - PARITY_SF1_r16.json q1 sum epsilon: 161648331529.85 vs
+  - artifacts/PARITY_SF1_r16.json q1 sum epsilon: 161648331529.85 vs
     161648331529.84998 (relative 1.2e-16)
-  - EXTREME_r16.json band: decimal-vs-binary summation at 1e18–1e19,
-    agreeing to ≤ a few ULP.
+  - artifacts/EXTREME_r16.json band: decimal-vs-binary summation at
+    1e18–1e19, agreeing to ≤ a few ULP.
 And the NEGATIVE pins guarantee the new branch cannot mask a real bug:
 anything past ~2 ULP still fails, infinities never take the branch, and
 small-magnitude semantics are byte-identical to the old comparator.
@@ -34,7 +34,7 @@ def _cmp(a, b):
 
 
 def test_sf1_parity_residual_q1_sum_epsilon_passes():
-    # PARITY_SF1_r16.json: the q1 sum pair, relative diff 1.2e-16
+    # artifacts/PARITY_SF1_r16.json: the q1 sum pair, relative diff 1.2e-16
     assert _cmp([161648331529.85], [161648331529.84998]) == []
 
 

@@ -187,9 +187,9 @@ def test_stratified_all_null_id_stratum_samples_zero(spark, tmp_path):
 )
 def test_all_null_payload_group_aggregates_to_null(spark, tmp_path_factory, name):
     """The compound-MAX probe's find (80% hot x 50% unicode x 30% NULL,
-    COMPOUNDMAX_r16.json): a user whose event_types are ALL NULL must
-    aggregate to a NULL string like SQL string_agg — array_join silently
-    skips NULL elements, so every array_join-over-collect site emitted
+    artifacts/COMPOUNDMAX_r16.json): a user whose event_types are ALL
+    NULL must aggregate to a NULL string like SQL string_agg —
+    array_join silently skips NULL elements, so every array_join-over-collect site emitted
     '' instead (the agg_ordered_string_concat class recurring). User 5
     is the all-NULL-payload group; user 6 mixes a NULL with a real type
     (must keep aggregating the real one); user 7 carries a real EMPTY

@@ -1,5 +1,7 @@
-"""Dedup guard rails: short-doc shingle parity, degenerate-bucket cap,
-salted-join type restriction, LSH literal-hyperplane plan shape."""
+"""Tests for operators/dedup.py: short-doc shingle parity, the
+degenerate-bucket cap, salted-join type restriction, LSH plan shape,
+substring spans, the Jaccard prefix join, MinHash permutations and the
+driver union-find."""
 
 from __future__ import annotations
 
@@ -18,7 +20,7 @@ from ndl_core_data_pipeline_spark.operators.vector import (
 )
 
 from . import reference_forms as R
-from .reference_forms import shingles_spark
+from .reference_forms import _py_hash48, shingles_spark
 
 
 def test_short_docs_emit_no_shingles(spark):
@@ -342,3 +344,205 @@ def test_embedding_dim_column_lookup_is_case_insensitive(spark):
     )
     assert embedding_dim(df, "embedding") == 2
     assert embedding_dim(df, "EMBEDDING") == 2
+
+
+def test_substring_spans_crafted(spark, tmp_path):
+    """Two docs sharing an exact 15-word run → ONE merged span in each
+    covering exactly that run; a doc with no duplicated gram → no rows."""
+    import os
+
+    from ndl_core_data_pipeline_spark.operators.dedup import (
+        SPAN_W,
+        substring_dup_spans,
+    )
+
+    shared = " ".join(f"dup{i}" for i in range(15))  # 15 words, positions vary
+    docs = spark.createDataFrame(
+        [
+            (1, f"alpha beta {shared} gamma delta", "en", "s", 0),
+            (2, f"{shared} omega", "en", "s", 0),
+            (3, "unique words only here nothing repeats at all in this document ever", "en", "s", 0),
+        ],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    docs.write.parquet(os.path.join(str(tmp_path), "documents.parquet"))
+    rows = substring_dup_spans(spark, str(tmp_path)).collect()
+    by_doc = {}
+    for r in rows:
+        by_doc.setdefault(r["doc_id"], []).append(r)
+    assert 3 not in by_doc
+    # doc 1: shared run occupies words 2..16 → grams start 2..7 (15-10+1=6
+    # grams), merged into one span [2, 16]
+    (s1,) = by_doc[1]
+    assert (s1["span_start"], s1["span_end"], s1["n_dup_grams"]) == (2, 16, 15 - SPAN_W + 1)
+    # doc 2: same run at offset 0 → span [0, 14]
+    (s2,) = by_doc[2]
+    assert (s2["span_start"], s2["span_end"], s2["n_dup_grams"]) == (0, 14, 15 - SPAN_W + 1)
+
+
+def test_substring_spans_property_random_corpora(spark, tmp_path):
+    """Randomized corpora vs a pure-Python reference implementation of
+    gram-count → interval-merge (fixed seed; tiny alphabet forces heavy
+    duplication so the merge logic is actually exercised)."""
+    import os
+    import random
+    from collections import Counter
+
+    from ndl_core_data_pipeline_spark.operators.dedup import (
+        SPAN_W,
+        substring_dup_spans,
+    )
+
+    rng = random.Random(0xC0FFEE)
+    alphabet = [f"w{i}" for i in range(6)]
+    corpora = []
+    for doc_id in range(12):
+        n = rng.randint(0, 40)
+        corpora.append((doc_id, " ".join(rng.choice(alphabet) for _ in range(n))))
+
+    # pure-Python reference
+    grams: Counter = Counter()
+    doc_grams = {}
+    for doc_id, text in corpora:
+        ws = [w for w in text.lower().strip().split() if w]
+        gs = [
+            (i, tuple(ws[i : i + SPAN_W]))
+            for i in range(max(0, len(ws) - SPAN_W + 1))
+        ]
+        doc_grams[doc_id] = gs
+        grams.update(g for _, g in gs)
+    expect = {}
+    for doc_id, gs in doc_grams.items():
+        hits = sorted(i for i, g in gs if grams[g] > 1)
+        spans = []
+        for i in hits:
+            s, e = i, i + SPAN_W - 1
+            if spans and s <= spans[-1][1]:
+                spans[-1][1] = max(spans[-1][1], e)
+                spans[-1][2] += 1
+            else:
+                spans.append([s, e, 1])
+        if spans:
+            expect[doc_id] = [tuple(s) for s in spans]
+
+    docs = spark.createDataFrame(
+        [(d, t, "en", "s", len(t)) for d, t in corpora],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    docs.write.parquet(os.path.join(str(tmp_path), "documents.parquet"))
+    got = {}
+    for r in substring_dup_spans(spark, str(tmp_path)).collect():
+        got.setdefault(r["doc_id"], []).append(
+            (r["span_start"], r["span_end"], r["n_dup_grams"])
+        )
+    got = {d: sorted(v) for d, v in got.items()}
+    assert got == expect
+
+
+def test_jaccard_prefix_join_is_complete(spark, sf_small):
+    """The prefix filter must not MISS pairs: compare against a
+    brute-force exact Jaccard join over the (small) distinct-name set."""
+    from ndl_core_data_pipeline_spark.io import load
+    from ndl_core_data_pipeline_spark.operators.dedup import (
+        JACC_TAU_DEN,
+        JACC_TAU_NUM,
+        jaccard_prefix_join,
+    )
+
+    got = {
+        (r["name_a"], r["name_b"]): (r["n_common"], r["n_union"])
+        for r in jaccard_prefix_join(spark, sf_small).collect()
+    }
+    names = sorted(
+        r["p_name"]
+        for r in load(spark, sf_small, "part").select("p_name").distinct().collect()
+    )
+    expect = {}
+    sets = {n: frozenset(t for t in n.split(" ") if t) for n in names}
+    for i, a in enumerate(names):
+        for b in names[i + 1 :]:
+            inter = len(sets[a] & sets[b])
+            uni = len(sets[a] | sets[b])
+            if inter * JACC_TAU_DEN >= uni * JACC_TAU_NUM:
+                expect[(a, b)] = (inter, uni)
+    assert got == expect
+
+
+def test_minhash_permutations_spark_match_python(spark):
+    """The affine MinHash family h_j(x) = (A_j x + B_j) mod P over the
+    48-bit md5 base hash, against a pure-Python reference."""
+    from ndl_core_data_pipeline_spark.operators._util import hash48 as minhash_base48
+    from ndl_core_data_pipeline_spark.operators.dedup import (
+        MINHASH_A,
+        MINHASH_B,
+        MINHASH_P,
+        N_MINHASH,
+        minhash_affine,
+    )
+
+    shingles = [f"tok{i} tok{i+1} tok{i+2}" for i in range(50)]
+    df = spark.createDataFrame([(s,) for s in shingles], "shingle string")
+    # the PRODUCTION expressions, not a copy — drift in minhash_signatures
+    # now fails here
+    x = minhash_base48(F.col("shingle"))
+    cols = [minhash_affine(x, j).alias(f"h{j}") for j in range(N_MINHASH)]
+    got = {
+        r["shingle"]: tuple(r[f"h{j}"] for j in range(N_MINHASH))
+        for r in df.select("shingle", *cols).collect()
+    }
+    for s in shingles:
+        base = _py_hash48(s)
+        expect = tuple(
+            (MINHASH_A[j] * base + MINHASH_B[j]) % MINHASH_P
+            for j in range(N_MINHASH)
+        )
+        assert got[s] == expect
+
+
+def test_union_find_numpy_matches_per_edge_reference():
+    """The vectorized min-label propagation must match the classic
+    per-edge union-find on random and structured graphs (chains, stars,
+    singleton self-loops, duplicate edges, negative ids)."""
+    import random
+
+    import numpy as np
+
+    from ndl_core_data_pipeline_spark.operators.dedup import _union_find_labels
+
+    def reference(edge_rows):
+        parent = {}
+
+        def find(x):
+            root = x
+            while parent[root] != root:
+                root = parent[root]
+            while parent[x] != root:
+                parent[x], x = root, parent[x]
+            return root
+
+        for a, b in edge_rows:
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        return sorted((n, find(n)) for n in parent)
+
+    rng = random.Random(7)
+    cases = [
+        [],
+        [(5, 5)],
+        [(1, 2), (2, 3), (3, 4)],                      # chain
+        [(10, k) for k in range(11, 30)],              # star
+        [(-3, -9), (-9, 40), (7, 7)],                  # negative ids
+        [(1, 2), (1, 2), (2, 1)],                      # duplicates
+        [(k, k + 1) for k in range(0, 2000)],          # long path (doubling)
+        [(rng.randrange(500), rng.randrange(500)) for _ in range(3000)],
+        [(rng.randrange(10**12), rng.randrange(10**12)) for _ in range(2000)],
+    ]
+    for edges in cases:
+        a = np.array([e[0] for e in edges], dtype=np.int64)
+        b = np.array([e[1] for e in edges], dtype=np.int64)
+        nodes, labels = _union_find_labels(a, b)
+        got = list(zip(nodes.tolist(), labels.tolist()))
+        assert got == reference(edges), edges[:5]

@@ -6,7 +6,7 @@ declared id contract (checks.enforce_unique_key) excludes because
 per-id and trained operators have no defined multiplicity semantics in
 ANY engine. The shipped form appends identical payloads under FRESH
 ids (the retry/re-crawl shape), which is fully defined: the re-keyed
-sweep is 221/221 (DUPROW_r16.json). These pins hold the generator's
+sweep is 221/221 (artifacts/DUPROW_r17.json). These pins hold the generator's
 two load-bearing properties so a future edit cannot silently recreate
 the undefined form.
 """

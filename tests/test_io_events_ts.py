@@ -1,4 +1,4 @@
-"""Regression tests for io.load's events ts handling.
+"""Regression tests for io.load: events ts handling and the scan cache.
 
 events.parquet stores ts as TIMESTAMP(NANOS). Depending on the Spark
 version / conf state the column arrives either as BIGINT nanoseconds
@@ -17,6 +17,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from ndl_core_data_pipeline_spark import io as nio
 from ndl_core_data_pipeline_spark.io import load
 
 # nanosecond-precision instants whose sub-microsecond tail exercises the
@@ -94,3 +95,25 @@ def test_real_testdata_loads(spark, sf_small):
     df = load(spark, sf_small, "events")
     assert dict(df.dtypes)["ts"] == "timestamp"
     assert df.limit(5).count() == 5
+
+
+def test_scan_cache_evicts_prior_application_entries(spark, sf_small):
+    nio._SCAN_CACHE.clear()
+    stale = ("app-from-a-previous-session", "/nowhere.parquet", (0, 0))
+    nio._SCAN_CACHE[stale] = "stale-plan-object"
+    nio.load(spark, sf_small, "events")
+    assert stale not in nio._SCAN_CACHE
+    assert all(
+        k[0] == spark.sparkContext.applicationId for k in nio._SCAN_CACHE
+    )
+
+
+def test_scan_cache_keeps_one_entry_per_path(spark, tmp_path):
+    """A fixture rewritten within one application replaces its cached
+    scan instead of adding a second entry beside the stale plan."""
+    path = str(tmp_path / "nation.parquet")
+    pq.write_table(pa.table({"n_nationkey": [0]}), path)
+    nio.load(spark, str(tmp_path), "nation")
+    pq.write_table(pa.table({"n_nationkey": [0, 1, 2]}), path)
+    assert nio.load(spark, str(tmp_path), "nation").count() == 3
+    assert [k[1] for k in nio._SCAN_CACHE].count(path) == 1

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 import __spark_entry__ as contract
 
 # SUM(bare_identifier) OVER ( ... )  — flags are bare 0/1 columns;
@@ -93,3 +95,76 @@ def test_allowlist_entries_exist():
         assert re.search(
             rf"SUM\(\s*{re.escape(flag)}\s*\)\s*OVER", oracles[name], re.IGNORECASE
         ), f"allowlist ({name}, {flag}) matches no site"
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["events_debounce", "window_sessionize", "events_session_window",
+     "events_session_paths"],
+)
+def test_flag_resort_tiebreak_present(name):
+    """The lag-flag→running-sum oracles re-sort between passes; a tie
+    group of key-identical rows carries DIFFERENT positional flags
+    (head 1, rest 0) and the re-sort can move the 1 mid-group, splitting
+    a burst/session (duprow-interaction find: events_debounce split a
+    3-row burst 2+1). The second pass must order flag-first within
+    ties, reconstructing pass 1 (which is how Spark's single Window
+    operator evaluates both)."""
+    import __spark_entry__ as contract
+
+    sql = contract.oracle_sql()[name]
+    assert (", is_start DESC" in sql) or (", brk DESC" in sql), name
+
+
+def test_debounce_flag_resort_fixture(spark, tmp_path):
+    """The exact (25, 'signup') shape from the interaction fixture:
+    one early event, then three payload-copies at one instant with
+    NULLed event_ids (two of them value-NULLed) — one burst of 3, not
+    2+1. Verified engine-vs-oracle value-for-value."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import datetime
+
+    from tests.oracle import run_compare
+    import __spark_entry__ as contract
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    t0 = datetime.datetime(2024, 1, 8, 4, 16, 44, 140250)
+    t1 = datetime.datetime(2024, 1, 30, 21, 42, 34, 314270)
+    rows = {
+        "event_id": [2399, None, None, None, None],
+        "ts": [t0, t1, t1, t1, None],
+        "user_id": [25, 25, 25, 25, 25],
+        "event_type": ["signup"] * 5,
+        "value": [3.86, None, None, 27.0, 44.67],
+        "props": [None] * 5,
+    }
+    schema = pa.schema(
+        [
+            ("event_id", pa.int64()),
+            ("ts", pa.timestamp("us")),
+            ("user_id", pa.int64()),
+            ("event_type", pa.string()),
+            ("value", pa.float64()),
+            ("props", pa.string()),
+        ]
+    )
+    pq.write_table(pa.table(rows, schema=schema), d / "events.parquet")
+    # duckdb_conn registers views over EVERY driver table eagerly —
+    # link the other tables from the small fixture dir
+    import os
+
+    from tests.conftest import SF_SMALL
+
+    for f in os.listdir(SF_SMALL):
+        if f.endswith(".parquet") and f != "events.parquet":
+            os.symlink(os.path.join(SF_SMALL, f), d / f)
+    name = "events_debounce"
+    problems = run_compare(
+        spark, name, contract.queries()[name], contract.oracle_sql()[name], str(d)
+    )
+    assert problems == []
+    out = contract.queries()[name](spark, str(d)).collect()
+    bursts = sorted((r["burst_n"], r["burst_value"]) for r in out)
+    assert bursts == [(1, 3.86), (1, 44.67), (3, 27.0)]

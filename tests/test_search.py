@@ -44,6 +44,18 @@ def test_elbow_cut_keeps_uniform(spark):
     assert search.elbow_cut(hits).count() == 4
 
 
+def test_elbow_cut_uses_the_interpolated_median(spark):
+    # diffs 0.02, 0.04, 0.08, 0.12: the interpolated median 0.06 puts the
+    # threshold at 0.15 and keeps every row (as np.median and
+    # operators/sorts.elbow_cut do); the lower middle diff, 0.04, would put
+    # it at 0.10 and cut the last row
+    dists = [0.0, 0.02, 0.06, 0.14, 0.26]
+    rows = [(i, 1.0 - d, d) for i, d in enumerate(dists)]
+    hits = spark.createDataFrame(rows, "vec_id BIGINT, cos_sim DOUBLE, distance DOUBLE")
+    assert 0.12 < search.ELBOW_SENSITIVITY * float(np.median(np.diff(dists)))
+    assert search.elbow_cut(hits).count() == 5
+
+
 def test_neighbor_merge(spark):
     chunks = spark.createDataFrame(
         [

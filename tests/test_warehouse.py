@@ -305,3 +305,144 @@ def test_zordered_write_prunes_better_than_single_dim_sort(spark, tmp_path):
 
     z_touch, k_touch = files_touched(zpath), files_touched(kpath)
     assert z_touch < k_touch, (z_touch, k_touch)
+
+
+def test_pit_join_exactly_one_state_per_purchase(spark, sf_small):
+    """Intervals partition each user's timeline from their first event, so
+    every purchase matches exactly one dimension row."""
+    from ndl_core_data_pipeline_spark.io import load
+    from ndl_core_data_pipeline_spark.operators.warehouse import (
+        join_point_in_time_scd2,
+    )
+
+    out = join_point_in_time_scd2(spark, sf_small).collect()
+    n_purchases = (
+        load(spark, sf_small, "events").filter("event_type = 'purchase'").count()
+    )
+    assert len(out) == n_purchases
+    assert len({r["event_id"] for r in out}) == n_purchases
+    for r in out:
+        assert r["valid_from"] <= r["ts"]
+
+
+def test_winsorize_clamps_to_fences(spark, sf_small):
+    from ndl_core_data_pipeline_spark.operators.warehouse import feature_winsorize
+
+    rows = feature_winsorize(spark, sf_small).collect()
+    assert rows
+    by_flag = {}
+    for r in rows:
+        by_flag.setdefault(r["l_returnflag"], []).append(r)
+    for flag, rs in by_flag.items():
+        clipped = [r for r in rs if r["was_clipped"]]
+        kept = [r for r in rs if not r["was_clipped"]]
+        assert clipped and kept
+        for r in kept:
+            assert r["price_w"] == r["price"]
+        lo = min(r["price_w"] for r in rs)
+        hi = max(r["price_w"] for r in rs)
+        for r in clipped:
+            assert r["price_w"] in (lo, hi)
+            assert r["price"] < lo or r["price"] > hi
+
+
+def test_profile_columns_nulls_and_entropy_exact(spark):
+    """Pin the melted profile shape against hand-computed truth on a
+    frame WITH nulls (the registered orders profile has none, so the
+    null-count path was previously untested): null cells count into
+    n_rows and n_null, stay out of n_distinct, and contribute no
+    entropy term — entropy is over the full-row distribution including
+    the null bucket's complement, i.e. -(c/N)ln(c/N) summed over
+    non-null values only."""
+    import math
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from ndl_core_data_pipeline_spark.operators.warehouse import profile_columns
+
+    df = spark.createDataFrame(
+        [("a", None), ("a", "x"), ("b", "x"), (None, "x"), (None, None)],
+        "c1 string, c2 string",
+    )
+    got = {
+        r["column_name"]: r
+        for r in profile_columns(
+            df, {"c1": F.col("c1"), "c2": F.col("c2")}
+        ).collect()
+    }
+
+    def entropy(counts, n):
+        return sum(-(c / n) * math.log(c / n) for c in counts)
+
+    assert (got["c1"]["n_rows"], got["c1"]["n_null"], got["c1"]["n_distinct"]) == (5, 2, 2)
+    assert got["c1"]["entropy_nats"] == pytest.approx(entropy([2, 1], 5), abs=1e-6)
+    assert (got["c2"]["n_rows"], got["c2"]["n_null"], got["c2"]["n_distinct"]) == (5, 2, 1)
+    assert got["c2"]["entropy_nats"] == pytest.approx(entropy([3], 5), abs=1e-6)
+
+    # an EMPTY input still profiles to one all-zero row per column (the
+    # melt produces no rows; the literal column-name anchor fills them in)
+    empty = spark.createDataFrame([], "c1 string, c2 string")
+    rows = profile_columns(empty, {"c1": F.col("c1"), "c2": F.col("c2")}).collect()
+    assert [tuple(r) for r in rows] == [("c1", 0, 0, 0, 0.0), ("c2", 0, 0, 0, 0.0)]
+
+
+def test_profile_entropy_bounded_by_log_ndv(spark, sf_small):
+    import math
+
+    from ndl_core_data_pipeline_spark.operators.warehouse import profile_table_stats
+
+    rows = profile_table_stats(spark, sf_small).collect()
+    assert {r["column_name"] for r in rows} == {
+        "o_orderstatus", "o_orderpriority", "o_custkey", "order_dow",
+    }
+    for r in rows:
+        assert r["n_null"] == 0
+        assert 0.0 <= r["entropy_nats"] <= math.log(r["n_distinct"]) + 1e-6
+
+
+def test_diff_snapshots_tags_all_ops(spark):
+    from ndl_core_data_pipeline_spark.operators.warehouse import diff_snapshots
+
+    old = spark.createDataFrame(
+        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", None)],
+        "k bigint, s string, v double",
+    )
+    new = spark.createDataFrame(
+        [(2, "b", 20.0), (3, "c", 30.0), (4, "d", 40.0)],
+        "k bigint, s string, v double",
+    )
+    got = {
+        r["k"]: (r["op"], sorted(r["changed_cols"]))
+        for r in diff_snapshots(old, new, "k", ["s", "v"]).collect()
+    }
+    assert got == {
+        1: ("removed", []),
+        2: ("unchanged", []),
+        3: ("changed", ["v"]),  # NULL -> 30.0 counts as a change
+        4: ("added", []),
+    }
+
+
+def test_diff_snapshots_null_key_and_dotted_columns(spark):
+    """Review findings: NULL-keyed rows must tag by PRESENCE (a NULL key
+    never matches across sides, so an old-only NULL row is 'removed',
+    not 'added'), and dotted column names must resolve literally."""
+    from ndl_core_data_pipeline_spark.operators.warehouse import diff_snapshots
+
+    old = spark.createDataFrame(
+        [(None, "gone")], "k string, s string"
+    )
+    new = spark.createDataFrame(
+        [(None, "fresh")], "k string, s string"
+    )
+    got = sorted(
+        (r["op"],) for r in diff_snapshots(old, new, "k", ["s"]).collect()
+    )
+    assert got == [("added",), ("removed",)]
+
+    old2 = spark.createDataFrame([(1, 5.0)]).toDF("the.key", "a.b")
+    new2 = spark.createDataFrame([(1, 6.0)]).toDF("the.key", "a.b")
+    out = diff_snapshots(old2, new2, "the.key", ["a.b"]).collect()
+    assert len(out) == 1
+    assert out[0]["op"] == "changed" and out[0]["changed_cols"] == ["a.b"]
