@@ -1,57 +1,11 @@
-"""Tests for operators/aggregates.py beyond oracle parity: NULL-key
-semantics, bucket and mode invariants, and the two-level cube shape."""
+"""Tests for operators/aggregates.py beyond oracle parity: the weekly
+trend, the two-level cube shape with NULL keys and the int128-safe
+correlation oracle. NULL-key distinct counts and the histogram and mode
+invariants are pinned in tests/test_round6_ops.py."""
 
 from __future__ import annotations
 
 import __spark_entry__ as contract
-
-QUERIES = contract.queries()
-
-
-def test_approx_distinct_excludes_null_keys(spark, tmp_path):
-    """The dedupe-first rewrite must keep COUNT(DISTINCT l_partkey)'s
-    NULL semantics: a NULL key survives the keys-only distinct as its
-    own row, but the exact count (and the oracle's COUNT(DISTINCT))
-    excludes it — the second review caught the rewrite counting rows
-    instead of keys."""
-    rows = [("A", 1), ("A", 1), ("A", 2), ("A", None), ("R", None), ("R", 7)]
-    spark.createDataFrame(
-        rows, "l_returnflag STRING, l_partkey BIGINT"
-    ).write.parquet(str(tmp_path / "lineitem.parquet"))
-    got = {
-        r["l_returnflag"]: (r["exact_parts"], r["approx_within_bound"])
-        for r in QUERIES["agg_approx_distinct"](spark, str(tmp_path)).collect()
-    }
-    assert got == {"A": (2, True), "R": (1, True)}
-
-
-def test_histogram_partitions_all_rows(spark, sf_small):
-    from ndl_core_data_pipeline_spark.io import load
-
-    hist = QUERIES["agg_value_histogram"](spark, sf_small).collect()
-    total = load(spark, sf_small, "events").count()
-    assert sum(r["n"] for r in hist) == total
-    for r in hist:
-        assert 0 <= r["bucket"] <= 19
-        assert r["hi"] - r["lo"] == 25.0
-
-
-def test_mode_matches_collected_counts(spark, sf_small):
-    from collections import Counter
-
-    from ndl_core_data_pipeline_spark.io import load
-
-    got = {
-        r["c_mktsegment"]: (r["mode_nationkey"], r["mode_count"])
-        for r in QUERIES["agg_mode_per_group"](spark, sf_small).collect()
-    }
-    rows = load(spark, sf_small, "customer").select("c_mktsegment", "c_nationkey").collect()
-    by_seg: dict[str, Counter] = {}
-    for r in rows:
-        by_seg.setdefault(r["c_mktsegment"], Counter())[r["c_nationkey"]] += 1
-    for seg, counts in by_seg.items():
-        best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        assert got[seg] == best
 
 
 def test_trend_first_week_has_no_wow(spark, sf_small):

@@ -1,7 +1,7 @@
 """Tests for operators/dedup.py: short-doc shingle parity, the
 degenerate-bucket cap, salted-join type restriction, LSH plan shape,
-substring spans, the Jaccard prefix join, MinHash permutations and the
-driver union-find."""
+the Jaccard prefix join, MinHash permutations and the driver
+union-find. Substring spans are pinned in tests/test_round6_ops.py."""
 
 from __future__ import annotations
 
@@ -344,99 +344,6 @@ def test_embedding_dim_column_lookup_is_case_insensitive(spark):
     )
     assert embedding_dim(df, "embedding") == 2
     assert embedding_dim(df, "EMBEDDING") == 2
-
-
-def test_substring_spans_crafted(spark, tmp_path):
-    """Two docs sharing an exact 15-word run → ONE merged span in each
-    covering exactly that run; a doc with no duplicated gram → no rows."""
-    import os
-
-    from ndl_core_data_pipeline_spark.operators.dedup import (
-        SPAN_W,
-        substring_dup_spans,
-    )
-
-    shared = " ".join(f"dup{i}" for i in range(15))  # 15 words, positions vary
-    docs = spark.createDataFrame(
-        [
-            (1, f"alpha beta {shared} gamma delta", "en", "s", 0),
-            (2, f"{shared} omega", "en", "s", 0),
-            (3, "unique words only here nothing repeats at all in this document ever", "en", "s", 0),
-        ],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    docs.write.parquet(os.path.join(str(tmp_path), "documents.parquet"))
-    rows = substring_dup_spans(spark, str(tmp_path)).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert 3 not in by_doc
-    # doc 1: shared run occupies words 2..16 → grams start 2..7 (15-10+1=6
-    # grams), merged into one span [2, 16]
-    (s1,) = by_doc[1]
-    assert (s1["span_start"], s1["span_end"], s1["n_dup_grams"]) == (2, 16, 15 - SPAN_W + 1)
-    # doc 2: same run at offset 0 → span [0, 14]
-    (s2,) = by_doc[2]
-    assert (s2["span_start"], s2["span_end"], s2["n_dup_grams"]) == (0, 14, 15 - SPAN_W + 1)
-
-
-def test_substring_spans_property_random_corpora(spark, tmp_path):
-    """Randomized corpora vs a pure-Python reference implementation of
-    gram-count → interval-merge (fixed seed; tiny alphabet forces heavy
-    duplication so the merge logic is actually exercised)."""
-    import os
-    import random
-    from collections import Counter
-
-    from ndl_core_data_pipeline_spark.operators.dedup import (
-        SPAN_W,
-        substring_dup_spans,
-    )
-
-    rng = random.Random(0xC0FFEE)
-    alphabet = [f"w{i}" for i in range(6)]
-    corpora = []
-    for doc_id in range(12):
-        n = rng.randint(0, 40)
-        corpora.append((doc_id, " ".join(rng.choice(alphabet) for _ in range(n))))
-
-    # pure-Python reference
-    grams: Counter = Counter()
-    doc_grams = {}
-    for doc_id, text in corpora:
-        ws = [w for w in text.lower().strip().split() if w]
-        gs = [
-            (i, tuple(ws[i : i + SPAN_W]))
-            for i in range(max(0, len(ws) - SPAN_W + 1))
-        ]
-        doc_grams[doc_id] = gs
-        grams.update(g for _, g in gs)
-    expect = {}
-    for doc_id, gs in doc_grams.items():
-        hits = sorted(i for i, g in gs if grams[g] > 1)
-        spans = []
-        for i in hits:
-            s, e = i, i + SPAN_W - 1
-            if spans and s <= spans[-1][1]:
-                spans[-1][1] = max(spans[-1][1], e)
-                spans[-1][2] += 1
-            else:
-                spans.append([s, e, 1])
-        if spans:
-            expect[doc_id] = [tuple(s) for s in spans]
-
-    docs = spark.createDataFrame(
-        [(d, t, "en", "s", len(t)) for d, t in corpora],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    docs.write.parquet(os.path.join(str(tmp_path), "documents.parquet"))
-    got = {}
-    for r in substring_dup_spans(spark, str(tmp_path)).collect():
-        got.setdefault(r["doc_id"], []).append(
-            (r["span_start"], r["span_end"], r["n_dup_grams"])
-        )
-    got = {d: sorted(v) for d, v in got.items()}
-    assert got == expect
 
 
 def test_jaccard_prefix_join_is_complete(spark, sf_small):

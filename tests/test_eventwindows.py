@@ -1,6 +1,7 @@
-"""Tests for operators/eventwindows.py: RFM ranks against ntile, funnel
-and cohort invariants, debounce bursts against a pure-Python reference,
-Markov rows and CUSUM drift."""
+"""Tests for operators/eventwindows.py: debounce bursts against a
+pure-Python reference, funnel checkpoints, Markov rows and CUSUM drift.
+RFM ranks and the funnel and cohort invariants are pinned in
+tests/test_round6_ops.py."""
 
 from __future__ import annotations
 
@@ -9,144 +10,6 @@ import random
 from pyspark.sql import functions as F
 
 import __spark_entry__ as contract
-
-QUERIES = contract.queries()
-
-
-def test_rfm_keyed_ranks_equal_ntile_with_null_keys(spark, tmp_path):
-    """The keyed two-level-rank RFM must stay bit-identical to the global
-    ntile(5) windows it replaced, INCLUDING users whose total_value or
-    last_ts aggregates to NULL (all values / all ts NULL — absent from
-    shipped testdata, real on cluster data). The round-close review
-    caught the rank's broadcast-offset equi-join silently dropping those
-    users; the lookup is now null-safe and NULL groups rank where desc
-    NULLS LAST puts them in both engines."""
-    rows = []
-    for u in range(1, 21):
-        for j in range(u % 3 + 1):
-            rows.append(
-                (
-                    u * 100 + j,
-                    None if u % 7 == 0 else f"2024-01-{u:02d} 00:00:{j:02d}",
-                    u,
-                    "view",
-                    None if u % 5 == 0 else float(u * 10 + j),
-                )
-            )
-    df = spark.createDataFrame(
-        rows, "event_id BIGINT, ts STRING, user_id BIGINT, "
-        "event_type STRING, value DOUBLE"
-    ).selectExpr(
-        "event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id",
-        "event_type", "value", "CAST(NULL AS STRING) AS props"
-    )
-    df.write.parquet(str(tmp_path / "events.parquet"))
-    got = {
-        r["user_id"]: (r["n_events"], r["total_value"], r["r_score"],
-                       r["f_score"], r["m_score"])
-        for r in QUERIES["events_rfm_scores"](spark, str(tmp_path)).collect()
-    }
-    want = {
-        r["user_id"]: (r["n_events"], r["total_value"], r["r_score"],
-                       r["f_score"], r["m_score"])
-        for r in spark.sql(
-            """WITH s AS (
-                 SELECT user_id, MAX(ts) AS last_ts, COUNT(*) AS n_events,
-                        CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE)
-                          AS total_value
-                 FROM {ev} GROUP BY user_id)
-               SELECT user_id, n_events, total_value,
-                 CAST(ntile(5) OVER (ORDER BY last_ts DESC, user_id) AS BIGINT)
-                   AS r_score,
-                 CAST(ntile(5) OVER (ORDER BY n_events DESC, user_id) AS BIGINT)
-                   AS f_score,
-                 CAST(ntile(5) OVER (ORDER BY total_value DESC, user_id) AS BIGINT)
-                   AS m_score
-               FROM s""",
-            ev=df,
-        ).collect()
-    }
-    assert len(got) == 20 and got == want
-
-
-def test_rfm_adaptive_monetary_buckets_continuous_totals(spark, tmp_path):
-    """ADVICE r10: floor(total_value) groups can approach user count on
-    wide/continuous totals, regressing the monetary histogram scan
-    toward a users-scale global window. The bucket width now adapts to
-    the observed range (floor(total / B), B from a broadcast min/max
-    probe, <= ~64Ki buckets for any distribution); any positive B is a
-    monotone coarsening, so scores stay bit-identical to ntile(5) even
-    with continuous values, exact-tie clusters, a huge range outlier,
-    and NULL totals."""
-    rows = []
-    for u in range(1, 41):
-        val = {
-            0: None,             # NULL total user
-            1: 7.25,             # exact-tie cluster across users
-            2: u * 0.000123 + 0.5,   # continuous sub-unit totals
-            3: u * 9876.54321,       # continuous wide totals
-        }[u % 4]
-        rows.append((u * 100, f"2024-01-01 00:00:{u % 60:02d}", u, "view", val))
-    rows.append((9999, "2024-01-02 00:00:00", 999, "view", 1.0e9))  # outlier
-    df = spark.createDataFrame(
-        rows, "event_id BIGINT, ts STRING, user_id BIGINT, "
-        "event_type STRING, value DOUBLE"
-    ).selectExpr(
-        "event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id",
-        "event_type", "value", "CAST(NULL AS STRING) AS props"
-    )
-    df.write.parquet(str(tmp_path / "events.parquet"))
-    got = {
-        r["user_id"]: (r["r_score"], r["f_score"], r["m_score"])
-        for r in QUERIES["events_rfm_scores"](spark, str(tmp_path)).collect()
-    }
-    want = {
-        r["user_id"]: (r["r_score"], r["f_score"], r["m_score"])
-        for r in spark.sql(
-            """WITH s AS (
-                 SELECT user_id, MAX(ts) AS last_ts, COUNT(*) AS n_events,
-                        CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE)
-                          AS total_value
-                 FROM {ev} GROUP BY user_id)
-               SELECT user_id,
-                 CAST(ntile(5) OVER (ORDER BY last_ts DESC, user_id) AS BIGINT)
-                   AS r_score,
-                 CAST(ntile(5) OVER (ORDER BY n_events DESC, user_id) AS BIGINT)
-                   AS f_score,
-                 CAST(ntile(5) OVER (ORDER BY total_value DESC, user_id) AS BIGINT)
-                   AS m_score
-               FROM s""",
-            ev=df,
-        ).collect()
-    }
-    assert len(got) == 41 and got == want
-
-
-def test_funnel_ordering_invariants(spark, sf_small):
-    rows = QUERIES["events_funnel_steps"](spark, sf_small).collect()
-    assert rows
-    stages = {1: 0, 2: 0, 3: 0}
-    for r in rows:
-        stages[r["funnel_stage"]] += 1
-        if r["click_ts"] is not None:
-            assert r["click_ts"] > r["view_ts"]
-        if r["purchase_ts"] is not None:
-            assert r["click_ts"] is not None
-            assert r["purchase_ts"] > r["click_ts"]
-        assert r["funnel_stage"] == 1 + (r["click_ts"] is not None) + (
-            r["purchase_ts"] is not None
-        )
-    assert stages[3] > 0  # at sf0.001 some user completes the funnel
-
-
-def test_cohort_day_zero_counts_all_users(spark, sf_small):
-    from ndl_core_data_pipeline_spark.io import load
-
-    rows = QUERIES["events_cohort_retention"](spark, sf_small).collect()
-    day0 = sum(r["n_users"] for r in rows if r["day_offset"] == 0)
-    n_users = load(spark, sf_small, "events").select("user_id").distinct().count()
-    assert day0 == n_users  # every user is active on their cohort day
-    assert all(r["day_offset"] >= 0 for r in rows)
 
 
 def test_debounce_bursts_partition_events(spark, sf_small):
