@@ -11,10 +11,6 @@ reference's per-file loops have per-process.
 
 from __future__ import annotations
 
-import pandas as pd
-
-from pyspark.sql import functions as F
-
 from ..io import load
 from ._util import sql_words
 

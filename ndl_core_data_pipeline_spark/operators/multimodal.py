@@ -23,7 +23,6 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,

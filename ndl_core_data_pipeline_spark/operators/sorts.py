@@ -11,7 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Window as W, functions as F
 
 from ..io import load
-from ._util import sql_dsum
 
 
 def topk_by_value(spark, sf_dir):

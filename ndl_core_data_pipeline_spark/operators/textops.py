@@ -394,14 +394,6 @@ GOPHER_METRICS_SQL = f"""
          ROUND({_NELLIP} / {_NLINES}, 6) AS ellipsis_frac,
          ROUND({_NALPHA} / GREATEST({_NW}, 1), 6) AS alpha_word_frac
   FROM documents"""
-GOPHER_KEEP_SQL = (
-    f"(n_words BETWEEN {GOPHER_MIN_WORDS} AND {GOPHER_MAX_WORDS} "
-    f"AND mean_word_len BETWEEN {GOPHER_MIN_MEAN_WLEN} AND {GOPHER_MAX_MEAN_WLEN} "
-    f"AND symbol_ratio <= {GOPHER_MAX_SYMBOL_RATIO} "
-    f"AND bullet_frac <= {GOPHER_MAX_BULLET_FRAC} "
-    f"AND ellipsis_frac <= {GOPHER_MAX_ELLIPSIS_FRAC} "
-    f"AND alpha_word_frac >= {GOPHER_MIN_ALPHA_WORD_FRAC})"
-)
 
 
 def gopher_metrics(text):

@@ -29,8 +29,6 @@ from pyspark.sql import DataFrame, functions as F
 from .classify import embed_texts, embedding_width
 from .functions.udfs import chunk_text_udf
 
-CHUNK_SCHEMA_SUFFIX = "chunk_index INT, chunk STRING"
-
 
 def build_chunks(
     docs: DataFrame, id_col: str = "identifier", text_col: str = "text"

@@ -41,7 +41,6 @@ COMMON_FIELDS = tuple(f.name for f in CANONICAL_SCHEMA.fields)
 
 # reference defaults (assets/processing/assets.py:286,314)
 DEFAULT_OPEN_TYPE = "Open Government"
-DEFAULT_LICENSE_KEY = "ogl-uk-3.0"
 
 MIN_TEXT_LENGTH = 200  # assets/processing/assets.py:38
 SUPPORTED_FORMATS = (  # assets/processing/assets.py:39

@@ -1,7 +1,10 @@
 """Spreadsheet ingestion (SURVEY §2.1 S4) — XLSX/XLS/ODS multi-sheet
 scan, all cells as strings, one output table per sheet
 (resources/convertors/spreadsheet_to_parquet.py:108-187; sheet-name
-sanitizer :46-61; 60 s read timeout :43,123-139).
+sanitizer :46-61). The reference's 60 s SIGALRM read timeout
+(:43,123-139) is not reproduced: no per-file time limit is applied,
+so a workbook whose parse hangs holds its task. One that fails to
+parse yields an ERROR_SHEET row (``scan_workbooks``).
 
 Both formats read through pure-stdlib parsers — XLSX via the
 SpreadsheetML tier in ``sources/xlsx.py`` (zip + XML per the public
@@ -20,8 +23,6 @@ from pyspark.sql import functions as F
 
 from ..ingest.infer import infer_and_cast
 from .files import fan_out, list_files
-
-FILE_READ_TIMEOUT_S = 60  # spreadsheet_to_parquet.py:43
 
 
 def sanitize_sheet_name(name: str) -> str:

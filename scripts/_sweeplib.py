@@ -1,12 +1,13 @@
-"""Shared checkpoint plumbing for the determinism-sweep runners.
+"""Shared plumbing for the determinism-sweep runners: the one resumable
+per-name loop (`run_checks`), the one local session (`session`), the
+oracle-parity check every fixture axis runs (`parity_check`,
+`parity_sweep`) and the tree-stamped checkpoints they write.
 
-Round-14 ADVICE (medium): every sweep is resumable and skips
-already-completed queries, so after an engine change certification
-could print ALL GREEN from sweep results computed on an OLDER tree.
-The fix is a content hash of the engine-relevant sources stamped into
-each checkpoint at write time; a loader that finds a different stamp
-discards the stale results (same pattern as empty_sweep's
-manifest-staleness fixture rebuild), and certify_round.step_sweeps
+Every sweep is resumable and skips already-completed names, so after an
+engine change certification could print ALL GREEN from results computed
+on an OLDER tree. A content hash of the engine-relevant sources is
+stamped into each checkpoint at write time; the loader discards a
+checkpoint with a different stamp, and certify_round.step_sweeps
 independently refuses to count a mismatched checkpoint as evidence.
 
 The hash covers exactly what determines sweep outcomes: the engine
@@ -22,6 +23,8 @@ import glob
 import hashlib
 import json
 import os
+import time
+import traceback
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -31,14 +34,9 @@ _HASH_INPUTS = (
     "ndl_core_data_pipeline_spark/**/*.py",
     "__spark_entry__.py",
     "tests/oracle.py",
-    # sweep-outcome-determining tooling (review finding: the docstring
-    # claimed the hash covered "exactly what determines sweep outcomes"
-    # while fixture generators and the sweep-side comparator were
-    # outside it — an inject_unicode/snippet edit would have left old
-    # fixtures AND old checkpoints counting as live evidence).
-    # certify_round.py and bench tooling only READ results, so they are
-    # deliberately excluded: a reporting edit must not invalidate hours
-    # of completed sweep work.
+    # the tooling that decides sweep outcomes: fixture generators and
+    # runners. certify_round.py and bench tooling only READ results, so
+    # a reporting edit does not invalidate completed sweep work.
     "scripts/_sweeplib.py",
     "scripts/gen_scale.py",
     "scripts/sweep.py",
@@ -53,11 +51,16 @@ _HASH_INPUTS = (
 
 
 def engine_tree_hash() -> str:
-    """sha256 over (relative path, content hash) of every engine-relevant
-    source file. Content-based, so it is correct on a dirty working tree
+    """Tree hash of every engine-relevant source file (`_HASH_INPUTS`)."""
+    return tree_hash(_HASH_INPUTS)
+
+
+def tree_hash(patterns) -> str:
+    """sha256 over (relative path, content hash) of the files matching
+    `patterns`. Content-based, so it is correct on a dirty working tree
     (unlike `git rev-parse HEAD`, which misses uncommitted edits)."""
     h = hashlib.sha256()
-    for pattern in _HASH_INPUTS:
+    for pattern in patterns:
         for path in sorted(glob.glob(os.path.join(REPO, pattern), recursive=True)):
             rel = os.path.relpath(path, REPO)
             with open(path, "rb") as fh:
@@ -67,17 +70,11 @@ def engine_tree_hash() -> str:
     return h.hexdigest()
 
 
-def load_results(path: str, valid_keys=None, nested_valid_keys=None) -> dict:
-    """Load a sweep checkpoint, enforcing the three freshness rules:
-
-    1. tree staleness — a checkpoint stamped with a different engine
-       tree hash (or none: pre-round-14 format) is DISCARDED entirely;
-       its results are evidence about an older tree, not this one.
-    2. registry pruning — entries for queries renamed/removed from the
-       registry are dropped (``valid_keys``); for nested {config:
-       {query: ...}} files pass ``nested_valid_keys`` instead.
-    3. the reserved META_KEY never reaches the caller's result dict.
-    """
+def load_results(path: str) -> dict:
+    """Load a sweep checkpoint. A checkpoint stamped with a different
+    engine tree hash (or none: pre-round-14 format) is DISCARDED
+    entirely: its results are evidence about an older tree, not this
+    one. The reserved META_KEY never reaches the caller."""
     if not os.path.exists(path):
         return {}
     with open(path) as fh:
@@ -92,13 +89,6 @@ def load_results(path: str, valid_keys=None, nested_valid_keys=None) -> dict:
             flush=True,
         )
         return {}
-    if valid_keys is not None:
-        data = {k: v for k, v in data.items() if k in valid_keys}
-    if nested_valid_keys is not None:
-        data = {
-            cfg: {k: v for k, v in res.items() if k in nested_valid_keys}
-            for cfg, res in data.items()
-        }
     return data
 
 
@@ -115,154 +105,175 @@ def save_results(path: str, results: dict) -> None:
         json.dump(out, fh, indent=1)
 
 
+def passed(record: dict) -> bool:
+    """A checkpoint record passes when its `ok` is true; the oracle
+    stability sweep's records say `stable` instead."""
+    return bool(record.get("ok", record.get("stable")))
+
+
+def select(only, names) -> frozenset | None:
+    """The `--only` names as a selection, or None when there are none. A
+    name that is not in `names` exits before anything is built or
+    written: a typo must fail loudly, not re-print a stale checkpoint's
+    summary."""
+    only = frozenset(n for n in only if n)
+    unknown = only - set(names)
+    if unknown:
+        raise SystemExit(f"--only names not in the registry: {sorted(unknown)}")
+    return only or None
+
+
+def run_checks(
+    path: str,
+    names,
+    check,
+    only: frozenset | None = None,
+    redo: bool = False,
+    outer: str | None = None,
+    done=None,
+    extra: dict | None = None,
+) -> int:
+    """The one resumable per-name loop every sweep runner uses.
+
+    Loads the tree-stamped checkpoint at `path` and prunes its entries
+    to `names` (queries renamed or removed from the registry drop out);
+    with `outer`, the entries live in the nested section
+    ``{outer: {name: record}}`` and other sections are left as they
+    are. Then runs ``check(name) -> record`` for every name that has no
+    record yet (all of them with `redo`, only the `only` selection when
+    one is given, always re-run), turns an exception into an
+    ``{"ok": False, "error", "trace"}`` record and keeps going, stamps
+    each record with its wall `secs`, prints ``[i/n] name: ok|FAIL`` and
+    saves after every name. A finished record for which `done(record)`
+    is false is run again; `extra` holds top-level entries (an audit
+    map) written with every save. Returns the number of failing records
+    in the section, selected or not."""
+    names = list(names)
+    if only is not None:
+        select(only, names)
+    data = load_results(path)
+    res = {n: r for n, r in (data.get(outer, {}) if outer else data).items() if n in names}
+    data = {**data, outer: res} if outer else res
+    todo = names if only is None else [n for n in names if n in only]
+    tag = f"{outer} " if outer else ""
+    for i, name in enumerate(todo, 1):
+        fresh = name in res and (done is None or done(res[name]))
+        if only is None and not redo and fresh:
+            continue
+        t0 = time.monotonic()
+        try:
+            record = check(name)
+        except Exception as e:
+            record = {
+                "ok": False,
+                "error": f"{type(e).__name__}: {str(e)[:400]}",
+                "trace": traceback.format_exc()[-1500:],
+            }
+        record["secs"] = round(time.monotonic() - t0, 3)
+        res[name] = record
+        print(f"[{i}/{len(todo)}] {tag}{name}: {'ok' if passed(record) else 'FAIL'}", flush=True)
+        save_results(path, {**data, **(extra or {})})
+    bad = sorted(n for n, r in res.items() if not passed(r))
+    print(
+        f"{outer or 'done'}: {len(res) - len(bad)}/{len(res)} ok"
+        + (f" FAIL={bad}" if bad else ""),
+        flush=True,
+    )
+    return len(bad)
+
+
+def session(cores: int, conf: dict | None = None):
+    """The sweep runners' local SparkSession: `cores` task slots and as
+    many shuffle partitions, no UI, an 8 GB driver, plus `conf` (the
+    config sweep's adversarial settings)."""
+    from pyspark.sql import SparkSession
+
+    conf = {
+        "spark.sql.shuffle.partitions": str(cores),
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": "8g",
+        **(conf or {}),
+    }
+    return SparkSession.builder.master(f"local[{cores}]").config(map=conf).getOrCreate()
+
+
 # Queries whose result multiset is too large to driver-collect at
-# volumetric scales (sf1+): routed through tests.oracle.checksum_compare
-# (per-key count + dual order-insensitive hash sums, oracle side streamed
-# to parquet — nothing collected but the digest frames) instead of
-# run_compare. Value = the digest key columns. join_theta_range's band
-# predicate emits O(n²) rows (~99.5× output per 10× rows, SCALE_r10);
-# collecting it at sf1 crashed collectToPython in r16.
+# volumetric scales (sf1+), compared through tests.oracle.checksum_compare
+# (per-key count + dual order-insensitive hash sums; nothing collected
+# but the digest frames). Value = the digest key columns.
+# join_theta_range's band predicate emits O(n²) rows (its collect
+# crashed collectToPython at sf1); join_interval_overlap exceeded
+# spark.driver.maxResultSize=1g at sf3; join_range_binned has the
+# registry's largest output (an 1808 s collect-compare at sf1).
 CHECKSUM_QUERIES = {
     "join_theta_range": ["p_partkey"],
-    # r18 sf3 residuals (PARITY_SF3_r18 _residuals): both queries'
-    # full multisets are collect-infeasible at volumetric scale —
-    # join_interval_overlap blew spark.driver.maxResultSize=1g at sf3
-    # and join_range_binned's sf1 collect-compare already took 1808 s
-    # (largest output in the registry). Digest keys are the join's
-    # left-side key column.
     "join_interval_overlap": ["l_orderkey"],
     "join_range_binned": ["user_id"],
 }
 
 
+def parity_check(spark, data_dir: str, checksum: dict | None = None,
+                 sql_overrides: dict | None = None):
+    """``check(name) -> record`` comparing one registry query on
+    `data_dir` with its DuckDB oracle (tests.oracle.run_compare). The
+    record says whether an oracle exists (without one, a pass means the
+    query ran). ``checksum`` maps query names to digest-key column lists:
+    those queries compare via tests.oracle.checksum_compare (aggregate
+    digest, nothing driver-collected) instead, and the record carries
+    ``checksum_digest`` so certification shows which comparison tier
+    ran. ``sql_overrides`` maps names to a harness-only oracle variant
+    (e.g. the code-point levenshtein UDF registered by duckdb_conn),
+    recorded as ``oracle_override``."""
+    import __spark_entry__ as contract
+
+    from tests.oracle import checksum_compare, run_compare
+
+    queries, oracles = contract.queries(), contract.oracle_sql()
+    checksum = checksum or {}
+    sql_overrides = sql_overrides or {}
+
+    def check(name: str) -> dict:
+        tm: dict = {}
+        if name in checksum and oracles.get(name) is not None:
+            problems = checksum_compare(
+                spark, name, queries[name], oracles[name], data_dir,
+                key=checksum[name], timings=tm,
+            )
+            tier = {"checksum_digest": checksum[name]}
+        else:
+            problems = run_compare(
+                spark, name, queries[name],
+                sql_overrides.get(name, oracles.get(name)), data_dir, timings=tm,
+            )
+            tier = {"oracle_override": "harness-udf"} if name in sql_overrides else {}
+        record = {"ok": not problems, "problems": problems,
+                  "oracle": name in oracles, **tier}
+        if tm:
+            # engine / oracle / compare seconds, so volumetric runs give
+            # a per-query sf-scaling table
+            record["secs_split"] = tm
+        return record
+
+    return check
+
+
 def parity_sweep(
     data_dir: str,
     out: str,
-    only=frozenset(),
+    only: frozenset | None = None,
     redo: bool = False,
     checksum: dict | None = None,
     sql_overrides: dict | None = None,
 ) -> int:
     """Full-registry Spark-vs-DuckDB parity run against `data_dir`,
     checkpointed per query into `out` (tree-stamped, resumable). Every
-    fixture axis in sweep.py runs through this one loop; only the
-    fixture and the extras differ. Returns the number of failing
-    queries.
-
-    ``checksum`` maps query names to digest-key column lists: those
-    queries compare via tests.oracle.checksum_compare (aggregate digest,
-    nothing driver-collected) instead of run_compare — pass
-    CHECKSUM_QUERIES for volumetric (sf1+) runs where O(n²) outputs
-    cannot be materialized. The entry records ``checksum_digest`` so
-    certification shows which comparison tier ran."""
-    import time
-    import traceback
-
+    fixture axis in sweep.py and the empty-input sweep run through this
+    one call; only the fixture and the `parity_check` extras differ.
+    Returns the number of failing queries."""
     import __spark_entry__ as contract
-    from pyspark.sql import SparkSession
 
-    from tests.oracle import checksum_compare, run_compare
-
-    checksum = checksum or {}
-    sql_overrides = sql_overrides or {}
-
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
+    return run_checks(
+        out, sorted(contract.queries()),
+        parity_check(session(16), data_dir, checksum, sql_overrides),
+        only=only, redo=redo,
     )
-    queries, oracles = contract.queries(), contract.oracle_sql()
-    results: dict[str, dict] = load_results(out, valid_keys=queries)
-    names = [n for n in sorted(queries) if not only or n in only]
-    for i, name in enumerate(names):
-        if name in results and not (only or redo):
-            continue
-        t0 = time.monotonic()
-        try:
-            if name in checksum and oracles.get(name) is not None:
-                tm: dict = {}
-                problems = checksum_compare(
-                    spark, name, queries[name], oracles[name], data_dir,
-                    key=checksum[name], timings=tm,
-                )
-                results[name] = {
-                    "ok": not problems,
-                    "problems": problems,
-                    "checksum_digest": checksum[name],
-                }
-                if tm:
-                    results[name]["secs_split"] = tm
-            elif name in sql_overrides:
-                # harness-only oracle variant (e.g. the code-point
-                # levenshtein UDF registered by duckdb_conn) — records
-                # the tier so certification shows which oracle ran
-                tm = {}
-                problems = run_compare(
-                    spark, name, queries[name], sql_overrides[name], data_dir,
-                    timings=tm,
-                )
-                results[name] = {
-                    "ok": not problems,
-                    "problems": problems,
-                    "oracle_override": "harness-udf",
-                }
-                if tm:
-                    results[name]["secs_split"] = tm
-            else:
-                tm = {}
-                problems = run_compare(
-                    spark, name, queries[name], oracles.get(name), data_dir,
-                    timings=tm,
-                )
-                results[name] = {"ok": not problems, "problems": problems}
-                if tm:
-                    results[name]["secs_split"] = tm
-        except Exception as e:
-            results[name] = {
-                "ok": False,
-                "error": f"{type(e).__name__}: {str(e)[:400]}",
-                "trace": traceback.format_exc()[-1500:],
-            }
-        # wall seconds per query (round 18: the volumetric sweeps owe a
-        # per-query sf-scaling ratio table; recording it here gives every
-        # sweep the column for free)
-        results[name]["secs"] = round(time.monotonic() - t0, 3)
-        status = "ok" if results[name]["ok"] else "FAIL"
-        print(f"[{i + 1}/{len(names)}] {name}: {status}", flush=True)
-        save_results(out, results)
-    n_ok = sum(1 for r in results.values() if r["ok"])
-    print(f"done: {n_ok}/{len(results)} ok")
-    return len(results) - n_ok
-
-
-def ensure_fresh_ckpt_dir(path: str) -> None:
-    """config_sweep's phase-A pickle directory has the same staleness
-    class (round-14 ADVICE, low): a resumed run would compare new-code
-    phase-B results against old-code baselines. Record the engine tree
-    in a manifest next to the pickles and wipe them when it no longer
-    matches."""
-    os.makedirs(path, exist_ok=True)
-    manifest = os.path.join(path, "_MANIFEST.json")
-    current = engine_tree_hash()
-    if os.path.exists(manifest):
-        with open(manifest) as fh:
-            if json.load(fh).get("tree") == current:
-                return
-    # a mismatched OR MISSING manifest means the pickles' provenance is
-    # unknown/stale — wipe them (review finding: the missing-manifest
-    # case, i.e. every pre-round-14 checkpoint dir, previously kept old
-    # pickles and stamped them as current: the exact stale-evidence
-    # class this module exists to close)
-    stale = glob.glob(os.path.join(path, "*.pkl"))
-    if stale:
-        print(
-            f"INVALIDATING {len(stale)} phase-A baselines in {path}: "
-            "manifest tree stamp missing or != current engine tree",
-            flush=True,
-        )
-        for p in stale:
-            os.remove(p)
-    with open(manifest, "w") as fh:
-        json.dump({"tree": current}, fh)

@@ -9,11 +9,9 @@ fixture, ~20k vectors) and asserts the measured quality against pinned
 floors, so ANN quality — not just report correctness — is certified as
 data grows.
 
-Floors (pinned from the round-17 measurement, mean 0.46 / min 0.20 at
-sf1; everything upstream is seeded and the IVF is label-derived
-deterministic, so drift means a code change, not noise):
-  mean recall@10 >= 0.40, min recall@10 >= 0.15, and every query must
-  scan a non-empty candidate set.
+The floors are `FLOORS` (mean and min recall@10), and every query must
+scan a non-empty candidate set. Everything upstream is seeded and the
+IVF is label-derived deterministic, so drift means a code change.
 
 Usage: python scripts/ann_recall_floor.py [--out .scale/ann_recall_sf1.json]
 """
@@ -44,17 +42,11 @@ def main() -> None:
     sf_dir = ensure("sf1")
 
     import __spark_entry__ as contract
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    from _sweeplib import save_results
+    from _sweeplib import save_results, session
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    df = contract.queries()["vector_ann_recall_report"](spark, sf_dir)
+    df = contract.queries()["vector_ann_recall_report"](session(16), sf_dir)
     row = df.agg(
         F.avg("recall_at_k").alias("mean_recall"),
         F.min("recall_at_k").alias("min_recall"),

@@ -36,10 +36,10 @@ import argparse
 import json
 import os
 import sys
-import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from empty_sweep import build_empty  # noqa: E402
 from ndl_core_data_pipeline_spark.io import TABLES  # noqa: E402
 
 
@@ -47,12 +47,9 @@ def build_asym_datasets(base: str, root: str) -> dict[str, str]:
     """One dir per table: all tables copied from base, that table
     zero-rowed. Rebuilds a dir when its manifest is missing or differs
     from the wanted one (sweep.ensure's rule)."""
-    import pyarrow.parquet as pq
-
     dirs = {}
     for empty_t in TABLES:
-        out = os.path.join(root, empty_t)
-        dirs[empty_t] = out
+        out = dirs[empty_t] = os.path.join(root, empty_t)
         manifest = os.path.join(out, "MANIFEST.json")
         want = {"base": base, "mode": "asym-empty", "empty": empty_t,
                 "tables": list(TABLES)}
@@ -61,12 +58,7 @@ def build_asym_datasets(base: str, root: str) -> dict[str, str]:
                 if json.load(fh) == want:
                     continue
             print(f"rebuilding {out}: manifest is stale", flush=True)
-        os.makedirs(out, exist_ok=True)
-        for t in TABLES:
-            src = pq.read_table(os.path.join(base, f"{t}.parquet"))
-            if t == empty_t:
-                src = src.slice(0, 0)
-            pq.write_table(src, os.path.join(out, f"{t}.parquet"))
+        build_empty(base, out, empty=(empty_t,))
         with open(manifest, "w") as fh:
             json.dump(want, fh)
     return dirs
@@ -78,8 +70,12 @@ def table_membership(spark, queries: dict, probe_dir: str) -> dict[str, list[str
     tables through spark.read.parquet(f"{dir}/{name}.parquet"), so the
     observed basenames are exactly the query's input tables. (Grepping
     oracle text would miss engine-only reads and count commented
-    mentions; the spy observes the real plan being built.)"""
+    mentions; the spy observes the real plan being built.) io.load's
+    scan cache is emptied before each query: a cached scan is a read the
+    spy would not see."""
     from pyspark.sql.readwriter import DataFrameReader
+
+    from ndl_core_data_pipeline_spark import io
 
     orig = DataFrameReader.parquet
     seen: set[str] = set()
@@ -96,6 +92,7 @@ def table_membership(spark, queries: dict, probe_dir: str) -> dict[str, list[str
     try:
         for name, fn in queries.items():
             seen.clear()
+            io._SCAN_CACHE.clear()
             try:
                 fn(spark, probe_dir)
             except Exception:
@@ -119,80 +116,35 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as contract
-    from pyspark.sql import SparkSession
+    from _sweeplib import parity_check, run_checks, select, session
 
-    from _sweeplib import load_results, save_results
-    from tests.oracle import run_compare
-
-    dirs = build_asym_datasets(args.base, args.root)
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    reg = contract.build_registry()
-    only = {n for n in args.only.split(",") if n}
-    unknown = only - set(reg.queries)
-    if unknown:
-        raise SystemExit(f"--only names not in the registry: {sorted(unknown)}")
+    queries = contract.queries()
+    only = select(args.only.split(","), queries)
     table_sel = {t for t in args.tables.split(",") if t}
     unknown_t = table_sel - set(TABLES)
     if unknown_t:
         raise SystemExit(f"--tables not in io.TABLES: {sorted(unknown_t)}")
 
-    membership = table_membership(spark, reg.queries, args.base)
+    dirs = build_asym_datasets(args.base, args.root)
+    spark = session(8)
+    membership = table_membership(spark, queries, args.base)
 
-    results: dict[str, dict] = load_results(args.out, nested_valid_keys=reg.queries)
-    total = sum(
-        1
-        for name, tabs in membership.items()
-        for t in tabs
-        if (not only or name in only) and (not table_sel or t in table_sel)
-    )
-    i = 0
+    # one section per table, holding the queries that read it; every
+    # section is visited so the exit status covers the whole checkpoint.
+    # Choosing tables re-runs their queries (or the --only ones), and an
+    # unchosen table runs nothing.
+    bad = 0
     for t in TABLES:
-        if table_sel and t not in table_sel:
-            continue
-        res = results.setdefault(t, {})
-        for name in sorted(reg.queries):
-            if only and name not in only:
-                continue
-            if t not in membership.get(name, []):
-                continue
-            i += 1
-            if name in res and not (only or table_sel or args.redo):
-                continue
-            try:
-                problems = run_compare(
-                    spark, name, reg.queries[name], reg.oracles.get(name), dirs[t]
-                )
-                res[name] = {
-                    "ok": not problems,
-                    "problems": problems,
-                    "oracle": name in reg.oracles,
-                }
-            except Exception as e:
-                res[name] = {
-                    "ok": False,
-                    "error": f"{type(e).__name__}: {str(e)[:400]}",
-                    "trace": traceback.format_exc()[-1500:],
-                }
-            status = "ok" if res[name]["ok"] else "FAIL"
-            print(f"[{i}/{total}] empty={t} {name}: {status}", flush=True)
-            results["_membership"] = membership
-            save_results(args.out, results)
-    n_ok = n_all = 0
-    for t in TABLES:
-        res = results.get(t, {})
-        n_ok += sum(1 for r in res.values() if r["ok"])
-        n_all += len(res)
-        bad = sorted(n for n, r in res.items() if not r["ok"])
-        if bad:
-            print(f"empty={t}: FAIL {bad}")
-    print(f"done: {n_ok}/{n_all} ok")
+        names = [n for n in sorted(queries) if t in membership[n]]
+        sel = None
+        if table_sel or only:
+            chosen = names if not table_sel or t in table_sel else ()
+            sel = frozenset(n for n in chosen if only is None or n in only)
+        bad += run_checks(
+            args.out, names, parity_check(spark, dirs[t]), only=sel,
+            redo=args.redo, outer=t, extra={"_membership": membership},
+        )
+    sys.exit(1 if bad else 0)
 
 
 if __name__ == "__main__":

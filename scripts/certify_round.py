@@ -80,6 +80,9 @@ SWEEP_FILES = {
     "hostile streaming twins": ".scale/hostile_twins.json",
 }
 
+# the tests' tree stamp in a certify report
+TESTS_TREE = ("tests/**/*.py",)
+
 # nested {outer: {inner: {ok: ...}}} checkpoint shapes
 NESTED_SWEEPS = {"config invariance", "asymmetric-empty totality"}
 
@@ -241,45 +244,44 @@ def step_pins(report: dict) -> bool:
     return all(n in window for n in active)
 
 
+def _checkpoint(path: str, tree: str) -> tuple[dict | None, str]:
+    """A standing checkpoint's records, or None and why they do not
+    count: absent evidence fails (the sweep never ran here), and so does
+    a checkpoint stamped with another tree (evidence about that tree)."""
+    from _sweeplib import META_KEY
+
+    full = os.path.join(REPO, path)
+    if not os.path.exists(full):
+        return None, "ABSENT (run the harness)"
+    with open(full) as fh:
+        data = json.load(fh)
+    meta = data.pop(META_KEY, None)
+    if not isinstance(meta, dict) or meta.get("tree") != tree:
+        return None, "STALE (tree stamp != current engine tree — rerun)"
+    return data, ""
+
+
 def step_sweeps(report: dict) -> bool:
-    from _sweeplib import META_KEY, engine_tree_hash
+    from _sweeplib import engine_tree_hash, passed
 
     current_tree = engine_tree_hash()
     out = {}
     ok = True
     for label, path in SWEEP_FILES.items():
-        full = os.path.join(REPO, path)
-        if not os.path.exists(full):
-            # absent evidence is FAILED evidence: certification must not
-            # print ALL GREEN on a tree whose standing sweeps never ran
-            # (fresh clone, cleaned .scale/) — run the harnesses first
-            out[label] = "ABSENT (run the harness)"
-            ok = False
-            continue
-        with open(full) as fh:
-            data = json.load(fh)
-        # resumable sweeps skip completed queries, so a checkpoint can
-        # survive an engine change untouched; without the tree-stamp
-        # check, certification would count results computed on an OLDER
-        # tree as live evidence (round-14 ADVICE, medium)
-        meta = data.pop(META_KEY, None)
-        if not isinstance(meta, dict) or meta.get("tree") != current_tree:
-            out[label] = "STALE (tree stamp != current engine tree — rerun)"
+        data, why = _checkpoint(path, current_tree)
+        if data is None:
+            out[label] = why
             ok = False
             continue
         if label in NESTED_SWEEPS:  # nested {outer: {query: {...}}} maps
             for outer, res in data.items():
                 if outer.startswith("_"):  # audit maps (e.g. _membership)
                     continue
-                n_ok = sum(1 for r in res.values() if r.get("ok"))
+                n_ok = sum(1 for r in res.values() if passed(r))
                 out[f"{label} [{outer}]"] = f"{n_ok}/{len(res)}"
                 ok = ok and n_ok == len(res)
-        elif label == "oracle stability":
-            n_ok = sum(1 for r in data.values() if r.get("stable", r.get("ok")))
-            out[label] = f"{n_ok}/{len(data)}"
-            ok = ok and n_ok == len(data)
         else:
-            n_ok = sum(1 for r in data.values() if r.get("ok"))
+            n_ok = sum(1 for r in data.values() if passed(r))
             out[label] = f"{n_ok}/{len(data)}"
             ok = ok and n_ok == len(data)
     report["sweeps"] = out
@@ -310,30 +312,25 @@ def verify_stamp(round_no: int, out_path: str) -> None:
     Run as the FINAL action of a round, after the last commit:
       python scripts/certify_round.py --round N --verify-stamp
     """
-    from _sweeplib import META_KEY, engine_tree_hash
+    from _sweeplib import engine_tree_hash, tree_hash
 
     if not os.path.exists(out_path):
         raise SystemExit(f"no certify report at {out_path} — run certification first")
     with open(out_path) as fh:
         report = json.load(fh)
     current = engine_tree_hash()
-    tests_now = _tests_tree_hash()
+    tests_now = tree_hash(TESTS_TREE)
     problems = []
     if report.get("engine_tree") != current:
         problems.append(
             f"engine tree drifted since certification: report stamps "
             f"{str(report.get('engine_tree'))[:12]}, HEAD is {current[:12]}"
         )
-        stale = []
-        for label, path in SWEEP_FILES.items():
-            full = os.path.join(REPO, path)
-            if not os.path.exists(full):
-                stale.append(f"{label} (ABSENT)")
-                continue
-            with open(full) as fh:
-                meta = json.load(fh).get(META_KEY) or {}
-            if meta.get("tree") != current:
-                stale.append(label)
+        stale = [
+            f"{label} ({why.split()[0]})"
+            for label, path in SWEEP_FILES.items()
+            if (why := _checkpoint(path, current)[1])
+        ]
         problems.append(
             "stale-stamped checkpoints to re-run: " + (", ".join(stale) or "none")
         )
@@ -351,20 +348,6 @@ def verify_stamp(round_no: int, out_path: str) -> None:
         f"tests_tree {tests_now[:12]} both match the current tree"
     )
     sys.exit(0)
-
-
-def _tests_tree_hash() -> str:
-    import glob as _glob
-    import hashlib as _hashlib
-
-    th = _hashlib.sha256()
-    for p in sorted(_glob.glob(os.path.join(REPO, "tests", "**", "*.py"),
-                               recursive=True)):
-        with open(p, "rb") as fh:
-            th.update(os.path.relpath(p, REPO).encode())
-            th.update(b"\0")
-            th.update(_hashlib.sha256(fh.read()).digest())
-    return th.hexdigest()
 
 
 def main() -> None:
@@ -396,10 +379,10 @@ def main() -> None:
     # certification is visible as a stamp mismatch instead of silently
     # post-dating the "frozen tree" (the r15
     # test_turkish_i_casing_agrees_without_locale case)
-    from _sweeplib import engine_tree_hash
+    from _sweeplib import engine_tree_hash, tree_hash
 
     report["engine_tree"] = engine_tree_hash()
-    report["tests_tree"] = _tests_tree_hash()
+    report["tests_tree"] = tree_hash(TESTS_TREE)
     failures: list[str] = []
     for name, fn in STEPS.items():
         if name in skip:
@@ -422,9 +405,9 @@ def main() -> None:
     # (a sweep finishing in a parallel shell, a stray editor save) makes
     # the start-of-run stamps a lie — recompute both at the end and fail
     # on mismatch (the --verify-stamp mode covers post-certify commits)
-    if report["engine_tree"] != engine_tree_hash() or report[
-        "tests_tree"
-    ] != _tests_tree_hash():
+    if (report["engine_tree"], report["tests_tree"]) != (
+        engine_tree_hash(), tree_hash(TESTS_TREE)
+    ):
         report["tree_drift_during_certification"] = True
         failures.append("tree-drift")
         print("FAIL: engine/tests tree changed during certification — "

@@ -29,25 +29,26 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# the engine's table list is the source of truth — a locally hardcoded
-# copy would silently go stale when a table is added (review finding)
+# the engine's table list: a local copy would miss a table added there
 from ndl_core_data_pipeline_spark.io import TABLES  # noqa: E402
 
 
-def build_empty(base: str, out: str) -> None:
-    """Zero-row copy of every engine table. Rebuilt on every run (ten
-    schema-only files), so a table added to the engine never meets a
-    stale fixture and fails as a false totality defect."""
+def build_empty(base: str, out: str, empty=TABLES) -> None:
+    """Copy of every engine table in `base` with the `empty` ones
+    zero-rowed, schema kept. The all-empty fixture is rebuilt on every
+    run (ten schema-only files), so a table added to the engine never
+    meets a stale fixture and fails as a false totality defect."""
     import pyarrow.parquet as pq
 
     os.makedirs(out, exist_ok=True)
     for t in TABLES:
         src = pq.read_table(os.path.join(base, f"{t}.parquet"))
-        pq.write_table(src.slice(0, 0), os.path.join(out, f"{t}.parquet"))
+        if t in empty:
+            src = src.slice(0, 0)
+        pq.write_table(src, os.path.join(out, f"{t}.parquet"))
 
 
 def main() -> None:
@@ -59,52 +60,12 @@ def main() -> None:
     ap.add_argument("--redo", action="store_true")
     args = ap.parse_args()
 
-    build_empty(args.base, args.dir)
-
     import __spark_entry__ as contract
-    from pyspark.sql import SparkSession
+    from _sweeplib import parity_sweep, select
 
-    from tests.oracle import run_compare
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    from _sweeplib import load_results, save_results
-
-    reg = contract.build_registry()
-    # load_results discards the whole checkpoint when its engine-tree
-    # stamp is stale and prunes queries renamed/removed from the registry
-    results: dict[str, dict] = load_results(args.out, valid_keys=reg.queries)
-    only = {n for n in args.only.split(",") if n}
-    names = [n for n in sorted(reg.queries) if not only or n in only]
-    for i, name in enumerate(names):
-        if name in results and not (only or args.redo):
-            continue
-        try:
-            problems = run_compare(
-                spark, name, reg.queries[name], reg.oracles.get(name), args.dir
-            )
-            results[name] = {
-                "ok": not problems,
-                "problems": problems,
-                "oracle": name in reg.oracles,
-            }
-        except Exception as e:
-            results[name] = {
-                "ok": False,
-                "error": f"{type(e).__name__}: {str(e)[:400]}",
-                "trace": traceback.format_exc()[-1500:],
-            }
-        status = "ok" if results[name]["ok"] else "FAIL"
-        print(f"[{i + 1}/{len(names)}] {name}: {status}", flush=True)
-        save_results(args.out, results)
-    n_ok = sum(1 for r in results.values() if r["ok"])
-    bad = sorted(n for n, r in results.items() if not r["ok"])
-    print(f"done: {n_ok}/{len(results)} ok" + (f" FAIL={bad}" if bad else ""))
+    only = select(args.only.split(","), contract.queries())
+    build_empty(args.base, args.dir)
+    sys.exit(1 if parity_sweep(args.dir, args.out, only=only, redo=args.redo) else 0)
 
 
 if __name__ == "__main__":

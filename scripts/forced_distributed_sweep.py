@@ -7,8 +7,9 @@ limit(MAX+1) probe; at sf0.01 the probe always lands driver-sized, so
 every oracle green row ever recorded attests the DRIVER branch only.
 At 100 TB the DISTRIBUTED branches are the only ones that run, and
 until this sweep they were attested solely by pin tests
-(tests/test_dedup_guards.py:233, tests/test_bpe.py:134) — the DuckDB
-oracle had never seen their output.
+(tests/test_dedup_guards.py::test_connected_components_distributed_path_matches_driver,
+tests/test_bpe.py::test_distributed_loop_matches_reference) — the
+DuckDB oracle had never seen their output.
 
 This sweep forces the distributed branches (thresholds -> 0) and
 re-runs the standard run_compare at sf0.01 for every registry query
@@ -36,11 +37,9 @@ from __future__ import annotations
 
 import argparse
 import inspect
-import json
 import os
 import re
 import sys
-import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -103,14 +102,10 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as contract
-    from pyspark.sql import SparkSession
-
-    from _sweeplib import load_results, save_results
+    from _sweeplib import parity_check, run_checks, session
     from ndl_core_data_pipeline_spark.operators import bpe, dedup
-    from tests.oracle import run_compare
 
-    queries, oracles = contract.queries(), contract.oracle_sql()
-    members = discover_members(queries)
+    members = discover_members(contract.queries())
     if not members:
         raise SystemExit("no size-adaptive members discovered — scan broken?")
 
@@ -123,64 +118,31 @@ def main() -> None:
 
     # guard 2: adaptive entry points count calls
     calls = {"n": 0}
-    orig_cc, orig_bpe = dedup.connected_components, bpe.train_bpe_merges
 
-    def cc(*a, **k):
-        calls["n"] += 1
-        return orig_cc(*a, **k)
+    def counted(fn):
+        def wrapper(*a, **k):
+            calls["n"] += 1
+            return fn(*a, **k)
 
-    def tb(*a, **k):
-        calls["n"] += 1
-        return orig_bpe(*a, **k)
+        return wrapper
 
-    dedup.connected_components = cc
-    bpe.train_bpe_merges = tb
+    dedup.connected_components = counted(dedup.connected_components)
+    bpe.train_bpe_merges = counted(bpe.train_bpe_merges)
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    # prune by the CURRENT member set, not the full registry: a stale
-    # row for a query that left the membership would otherwise survive
-    # the load and keep counting as a live attestation in both this
-    # summary and certify_round's sweep count (round-15 ADVICE, low)
-    results: dict[str, dict] = load_results(args.out, valid_keys=set(members))
-    for i, name in enumerate(members):
-        if name in results and not args.redo:
-            continue
+    parity = parity_check(session(16), args.sf_dir)
+
+    def check(name: str) -> dict:
         before = calls["n"]
-        try:
-            problems = run_compare(
-                spark, name, queries[name], oracles.get(name), args.sf_dir
-            )
-            entered = calls["n"] > before
-            results[name] = {
-                "ok": (not problems) and entered,
-                "problems": problems
-                + ([] if entered else ["never reached an adaptive operator"]),
-                "oracle": name in oracles,
-                "forced_distributed": True,
-            }
-        except Exception as e:
-            results[name] = {
-                "ok": False,
-                "error": f"{type(e).__name__}: {str(e)[:400]}",
-                "trace": traceback.format_exc()[-1500:],
-            }
-        status = "ok" if results[name]["ok"] else "FAIL"
-        print(f"[{i + 1}/{len(members)}] {name}: {status}", flush=True)
-        save_results(args.out, results)
-    n_ok = sum(1 for r in results.values() if r["ok"])
-    bad = sorted(n for n, r in results.items() if not r["ok"])
-    print(
-        f"done: {n_ok}/{len(results)} ok, members={members}"
-        + (f" FAIL={bad}" if bad else "")
-    )
-    if bad:
-        raise SystemExit(1)
+        record = parity(name)
+        if calls["n"] == before:
+            record["ok"] = False
+            record["problems"].append("never reached an adaptive operator")
+        record["forced_distributed"] = True
+        return record
+
+    # the names are the CURRENT members, so a row for a query that left
+    # the membership is pruned, not counted as a live attestation
+    sys.exit(1 if run_checks(args.out, members, check, redo=args.redo) else 0)
 
 
 if __name__ == "__main__":

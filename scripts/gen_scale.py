@@ -949,19 +949,9 @@ if __name__ == "__main__":
     ap.add_argument("--mult", type=int, default=10, help="row multiplier vs sf0.1")
     ap.add_argument("--out", default=".scale/sf1")
     ap.add_argument("--seed", type=int, default=4242)
-    ap.add_argument(
-        "--nulls",
-        action="store_true",
-        help="instead of scaling, copy --base with NULL/NaN/'' cells injected",
-    )
-    ap.add_argument("--base", default="/root/testdata/sf0.01")
     ap.add_argument("--skew", action="store_true",
                     help="hot-user events + Zipfian part/supp/cust keys")
     ap.add_argument("--dup-heavy", dest="dup_heavy", action="store_true",
                     help="~50%% near-duplicate documents and embeddings")
     args = ap.parse_args()
-    if args.nulls:
-        inject_nulls(args.base, args.out, args.seed if args.seed != 4242 else 7117)
-    else:
-        gen(args.mult, args.out, args.seed, skew=args.skew,
-            dup_heavy=args.dup_heavy)
+    gen(args.mult, args.out, args.seed, skew=args.skew, dup_heavy=args.dup_heavy)

@@ -39,61 +39,36 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as contract
-
+    from _sweeplib import run_checks, select
     from tests.oracle import _canon, duckdb_conn
 
-    from _sweeplib import load_results, save_results
-
     oracles = contract.oracle_sql()
-    # ALWAYS load the checkpoint: --redo re-runs the selected names but
-    # must not discard results outside the selection (a subset
-    # `--only x --redo` used to rewrite the file with only x).
-    # load_results additionally discards the whole checkpoint when its
-    # engine-tree stamp is stale and prunes renamed/removed queries.
-    results: dict[str, dict] = load_results(args.out, valid_keys=oracles)
-    only = {n for n in args.only.split(",") if n}
-    unknown = only - set(oracles)
-    if unknown:  # a typo must fail loudly, not print a stale success line
-        raise SystemExit(f"--only names not in the registry: {sorted(unknown)}")
-    out_dir = os.path.dirname(os.path.abspath(args.out))
-    os.makedirs(out_dir, exist_ok=True)
-    names = [n for n in sorted(oracles) if not only or n in only]
-    for i, name in enumerate(names):
-        # a cached entry only counts if it was produced with AT LEAST the
-        # requested rep count (rerunning at higher reps must re-execute,
-        # not re-report 6-rep results as a 10-rep certification)
-        cached = results.get(name)
-        if (
-            cached is not None
-            and cached.get("reps", 0) >= args.reps
-            and not (only or args.redo)
-        ):
-            continue
+    only = select(args.only.split(","), oracles)
+
+    def check(name: str) -> dict:
         hashes = set()
-        err = None
-        try:
-            for _ in range(args.reps):
-                con = duckdb_conn(args.dir)
-                try:
-                    df = con.execute(oracles[name]).df()
-                finally:
-                    con.close()
-                hashes.add(
-                    hash(tuple(map(tuple, _canon(df).astype(str).values)))
-                )
-        except Exception as e:
-            err = f"{type(e).__name__}: {str(e)[:300]}"
-        results[name] = {
-            "stable": err is None and len(hashes) == 1,
+        for _ in range(args.reps):
+            con = duckdb_conn(args.dir)
+            try:
+                df = con.execute(oracles[name]).df()
+            finally:
+                con.close()
+            hashes.add(hash(tuple(map(tuple, _canon(df).astype(str).values))))
+        return {
+            "stable": len(hashes) == 1,
             "n_distinct_outcomes": len(hashes),
             "reps": args.reps,
-            "error": err,
+            "error": None,
         }
-        status = "ok" if results[name]["stable"] else "UNSTABLE"
-        print(f"[{i + 1}/{len(names)}] {name}: {status}", flush=True)
-        save_results(args.out, results)
-    n_ok = sum(1 for r in results.values() if r["stable"])
-    print(f"done: {n_ok}/{len(results)} stable")
+
+    # a cached entry only counts if it was produced with AT LEAST the
+    # requested rep count (rerunning at higher reps must re-execute, not
+    # re-report 6-rep results as a 10-rep certification)
+    bad = run_checks(
+        args.out, sorted(oracles), check, only=only, redo=args.redo,
+        done=lambda r: r.get("reps", 0) >= args.reps,
+    )
+    sys.exit(1 if bad else 0)
 
 
 if __name__ == "__main__":

@@ -26,12 +26,10 @@ import argparse
 import json
 import os
 import sys
-import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# the engine's table list is the source of truth (same review finding
-# as empty_sweep: a local copy silently goes stale when a table lands)
+# the engine's table list: a local copy would miss a table added there
 from ndl_core_data_pipeline_spark.io import TABLES  # noqa: E402
 
 
@@ -54,7 +52,11 @@ def build_shuffled(base: str, out: str, seed: int = 20240815) -> None:
             row_group_size=max(1, len(tbl) // 7),
         )
     with open(os.path.join(out, "MANIFEST.json"), "w") as fh:
-        json.dump({"base": base, "seed": seed, "mode": "row-shuffle"}, fh)
+        json.dump(shuffle_manifest(base, seed), fh)
+
+
+def shuffle_manifest(base: str, seed: int) -> dict:
+    return {"base": base, "seed": seed, "mode": "row-shuffle"}
 
 
 def main() -> None:
@@ -72,65 +74,35 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    # rebuild if missing OR if the existing directory was built with a
-    # DIFFERENT seed than requested (review finding: the second-seed
-    # evidence must be reproducible by the named harness, not silently
-    # replaced by a default-seed rebuild)
-    manifest_path = os.path.join(args.shuffled, "MANIFEST.json")
-    needs_build = True
-    if os.path.exists(manifest_path):
-        with open(manifest_path) as fh:
-            needs_build = json.load(fh).get("seed") != args.seed
-        if needs_build:
-            print(
-                f"rebuilding {args.shuffled}: manifest seed != {args.seed}",
-                flush=True,
-            )
-    if needs_build:
-        build_shuffled(args.base, args.shuffled, seed=args.seed)
-
     import __spark_entry__ as contract
-    from pyspark.sql import SparkSession
 
+    from _sweeplib import run_checks, select, session
     from tests.oracle import compare
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    from _sweeplib import load_results, save_results
-
     queries = contract.queries()
-    # ALWAYS load the checkpoint: --redo re-runs the selected names but
-    # must not discard results outside the selection (a subset
-    # `--only x --redo` used to rewrite the file with only x).
-    # load_results additionally discards the whole checkpoint when its
-    # engine-tree stamp is stale and prunes renamed/removed queries.
-    results: dict[str, dict] = load_results(args.out, valid_keys=queries)
-    only = {n for n in args.only.split(",") if n}
-    names = [n for n in sorted(queries) if not only or n in only]
-    for i, name in enumerate(names):
-        if name in results and not (only or args.redo):
-            continue
-        try:
-            a = queries[name](spark, args.base).toPandas()
-            b = queries[name](spark, args.shuffled).toPandas()
-            problems = compare(a, b)
-            results[name] = {"ok": not problems, "problems": problems}
-        except Exception as e:
-            results[name] = {
-                "ok": False,
-                "error": f"{type(e).__name__}: {str(e)[:400]}",
-                "trace": traceback.format_exc()[-1500:],
-            }
-        status = "ok" if results[name]["ok"] else "FAIL"
-        print(f"[{i + 1}/{len(names)}] {name}: {status}", flush=True)
-        save_results(args.out, results)
-    n_ok = sum(1 for r in results.values() if r["ok"])
-    print(f"done: {n_ok}/{len(results)} ok")
+    only = select(args.only.split(","), queries)
+
+    # rebuild unless the copy was shuffled from this base with this seed:
+    # the second-seed and compound-base runs must not reuse another copy
+    manifest = os.path.join(args.shuffled, "MANIFEST.json")
+    stale = True
+    if os.path.exists(manifest):
+        with open(manifest) as fh:
+            stale = json.load(fh) != shuffle_manifest(args.base, args.seed)
+    if stale:
+        print(f"building {args.shuffled} (seed {args.seed})", flush=True)
+        build_shuffled(args.base, args.shuffled, seed=args.seed)
+
+    spark = session(16)
+
+    def check(name: str) -> dict:
+        a = queries[name](spark, args.base).toPandas()
+        b = queries[name](spark, args.shuffled).toPandas()
+        problems = compare(a, b)
+        return {"ok": not problems, "problems": problems}
+
+    bad = run_checks(args.out, sorted(queries), check, only=only, redo=args.redo)
+    sys.exit(1 if bad else 0)
 
 
 if __name__ == "__main__":

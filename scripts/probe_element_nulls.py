@@ -98,14 +98,9 @@ def main() -> None:
     if not os.path.exists(os.path.join(out, "embeddings.parquet")):
         build(out)
     import __spark_entry__ as contract
-    from pyspark.sql import SparkSession
+    from _sweeplib import session
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = session(16)
     queries = contract.queries()
     for name in VECTOR_QUERIES:
         try:

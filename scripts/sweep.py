@@ -44,7 +44,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import gen_scale  # noqa: E402
-from _sweeplib import CHECKSUM_QUERIES, parity_sweep  # noqa: E402
+from _sweeplib import CHECKSUM_QUERIES, parity_sweep, select  # noqa: E402
 from gen_scale import (  # noqa: E402
     inject_bigint_extremes,
     inject_double_extremes,
@@ -228,8 +228,10 @@ def main() -> None:
     ap.add_argument("--redo", action="store_true")
     args = ap.parse_args()
 
+    import __spark_entry__ as contract
+
     row = AXES[args.axis]
-    only = frozenset(n for n in args.only.split(",") if n)
+    only = select(args.only.split(","), contract.queries())
     n_bad = parity_sweep(
         ensure(args.axis), os.path.join(REPO, row.checkpoint),
         only=only, redo=args.redo, **row.extras,

@@ -9,7 +9,6 @@ queries are engineered so even floats match exactly; any diff > 1e-9 fails).
 from __future__ import annotations
 
 import datetime
-import math
 import time
 
 import duckdb

@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import functions as F
-
 from ndl_core_data_pipeline_spark import classify
 
 

@@ -11,8 +11,6 @@ here before it fails on a cluster.
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 import __spark_entry__ as contract

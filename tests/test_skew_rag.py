@@ -10,7 +10,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from ndl_core_data_pipeline_spark import rag, search, skew
-from ndl_core_data_pipeline_spark.functions.udfs import CHUNK_OVERLAP, CHUNK_SIZE, chunk_text
+from ndl_core_data_pipeline_spark.functions.udfs import CHUNK_SIZE, chunk_text
 
 
 # ------------------------------------------------------------------ skew
@@ -154,7 +154,6 @@ def test_numeric_inference_property(vals):
 
     from ndl_core_data_pipeline_spark.ingest.infer import (
         NULL_TOKENS,
-        NUMERIC_THRESHOLD,
     )
 
     nonnull = [v for v in vals if v.strip() not in NULL_TOKENS]

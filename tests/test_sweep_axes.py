@@ -1,7 +1,9 @@
-"""The fixture-axis table (scripts/sweep.py) without Spark: every recipe
-stage binds to its injector, `ensure` builds stages in order and
-rebuilds exactly when the recipe changes, and certify_round reads its
-parity checkpoints from the same table."""
+"""The sweep tooling without Spark: every recipe stage of the
+fixture-axis table (scripts/sweep.py) binds to its injector, `ensure`
+builds stages in order and rebuilds exactly when the recipe changes,
+certify_round reads its parity checkpoints from the same table, and the
+one resumable loop (`_sweeplib.run_checks`) resumes, re-runs a
+selection, records errors and keeps nested sections apart."""
 
 from __future__ import annotations
 
@@ -11,6 +13,7 @@ import os
 
 import pytest
 
+import _sweeplib
 import certify_round
 import sweep
 
@@ -91,3 +94,99 @@ def test_certify_reads_parity_checkpoints_from_the_table():
         "dirty parity (seed B)",
         "forced-distributed oracle parity",
     }
+
+
+def _fake_check(calls, fail=()):
+    def check(name):
+        calls.append(name)
+        if name in fail:
+            raise RuntimeError(f"boom {name}")
+        return {"ok": True, "problems": []}
+
+    return check
+
+
+def _records(path, outer=None):
+    with open(path) as fh:
+        data = json.load(fh)
+    data.pop(_sweeplib.META_KEY)
+    return data[outer] if outer else data
+
+
+def test_loop_resumes_and_reruns_only_the_selection(tmp_path):
+    path = str(tmp_path / "ckpt.json")
+    calls: list = []
+    check = _fake_check(calls)
+    assert _sweeplib.run_checks(path, ["a", "b", "c"], check) == 0
+    assert calls == ["a", "b", "c"]
+
+    calls.clear()
+    _sweeplib.run_checks(path, ["a", "b", "c"], check)
+    assert calls == []  # resumed: every name is finished
+
+    first = _records(path)
+    _sweeplib.run_checks(path, ["a", "b", "c"], check, only=frozenset({"b"}))
+    assert calls == ["b"]
+    after = _records(path)
+    assert after["a"] == first["a"] and after["c"] == first["c"]
+
+    calls.clear()
+    _sweeplib.run_checks(path, ["a", "b", "c"], check, redo=True)
+    assert calls == ["a", "b", "c"]
+
+    # "b" left the registry: the next save drops its record
+    calls.clear()
+    _sweeplib.run_checks(path, ["a", "c"], check, only=frozenset({"a"}))
+    assert calls == ["a"] and sorted(_records(path)) == ["a", "c"]
+
+
+def test_loop_rejects_an_unknown_name_before_any_write(tmp_path):
+    path = tmp_path / "ckpt.json"
+    calls: list = []
+    with pytest.raises(SystemExit):
+        _sweeplib.run_checks(str(path), ["a"], _fake_check(calls), only=frozenset({"typo"}))
+    with pytest.raises(SystemExit):
+        _sweeplib.select("a,typo".split(","), ["a"])
+    assert calls == [] and not path.exists()
+    assert _sweeplib.select([""], ["a"]) is None
+
+
+def test_loop_records_an_error_and_keeps_going(tmp_path):
+    path = str(tmp_path / "ckpt.json")
+    calls: list = []
+    bad = _sweeplib.run_checks(path, ["a", "b", "c"], _fake_check(calls, fail={"b"}))
+    assert bad == 1 and calls == ["a", "b", "c"]
+    rec = _records(path)["b"]
+    assert rec["ok"] is False and rec["error"] == "RuntimeError: boom b"
+    assert "boom b" in rec["trace"]
+    assert _records(path)["c"]["ok"] is True
+
+
+def test_checkpoint_carries_the_tree_stamp(tmp_path):
+    path = tmp_path / "ckpt.json"
+    _sweeplib.run_checks(str(path), ["a"], _fake_check([]))
+    meta = json.loads(path.read_text())[_sweeplib.META_KEY]
+    assert meta == {"tree": _sweeplib.engine_tree_hash()}
+
+    # another tree's checkpoint is discarded, so every name runs again
+    path.write_text(json.dumps({"a": {"ok": True}, _sweeplib.META_KEY: {"tree": "old"}}))
+    calls: list = []
+    _sweeplib.run_checks(str(path), ["a"], _fake_check(calls))
+    assert calls == ["a"]
+
+
+def test_nested_sections_keep_each_other(tmp_path):
+    path = str(tmp_path / "ckpt.json")
+    calls: list = []
+    check = _fake_check(calls, fail={"y"})
+    assert _sweeplib.run_checks(path, ["x", "y"], check, outer="cfg1") == 1
+    _sweeplib.run_checks(path, ["x"], check, outer="cfg2", extra={"_audit": [1]})
+    assert calls == ["x", "y", "x"]
+    data = _records(path)
+    assert sorted(data) == ["_audit", "cfg1", "cfg2"]
+    assert sorted(data["cfg1"]) == ["x", "y"] and sorted(data["cfg2"]) == ["x"]
+
+    # an empty selection visits a section without running it
+    calls.clear()
+    assert _sweeplib.run_checks(path, ["x", "y"], check, only=frozenset(), outer="cfg1") == 1
+    assert calls == []

@@ -11,7 +11,6 @@ axis' hardest value shapes on tiny synthetic fixtures.
 
 from __future__ import annotations
 
-import pyarrow as pa
 import pytest
 
 import __spark_entry__ as contract

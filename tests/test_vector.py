@@ -1,10 +1,10 @@
-"""Tests for operators/vector.py: the matryoshka rerank, and the Arrow passes (_nearest_arrow,
+"""Tests for operators/vector.py: product-quantizer distances, the
+matryoshka rerank, and the Arrow passes (_nearest_arrow,
 _pq_encode_arrow, _kmeans_rows, _lsh_bands_arrow, _cos_verify_arrow),
 each pinned bit for bit against the SQL higher-order-function or
 broadcast-loop form it replaced, on hostile shapes too (NULL vectors,
 NULL elements, NaN/Inf, ragged lengths, degenerate centroid tables).
-The older forms live in tests/reference_forms.py. Product-quantizer
-distances are pinned in tests/test_round6_ops.py."""
+The older forms live in tests/reference_forms.py."""
 
 from __future__ import annotations
 
@@ -12,10 +12,84 @@ import math
 
 from pyspark.sql import functions as F
 
+import __spark_entry__ as contract
 from ndl_core_data_pipeline_spark.operators import vector as V
 from ndl_core_data_pipeline_spark.search import N_PLANES
 
 from . import reference_forms as R
+
+QUERIES = contract.queries()
+
+
+def test_pq_adc_equals_distance_to_reconstruction(spark, sf_small):
+    """ADC identity: the approximate distance is EXACTLY the L2² between
+    the raw query and the codeword-reconstructed database vector — pins
+    the lookup-table machinery without depending on recall statistics
+    (which are poor by design at K = n_labels on near-random data)."""
+    from ndl_core_data_pipeline_spark.io import load
+    from ndl_core_data_pipeline_spark.operators.vector import (
+        PQ_M,
+        _pq_codebooks,
+        _subvectors,
+    )
+
+    from .reference_forms import pq_scored
+
+    emb = load(spark, sf_small, "embeddings")
+    scored = pq_scored(emb)
+    codes = (
+        scored.groupBy("vec_id", "m")
+        .agg(F.min(F.struct("d2", "code")).alias("b"))
+        .select("vec_id", "m", F.col("b.code").alias("code"))
+    )
+    cb = {(r["m"], r["code"]): r["subcent"] for r in _pq_codebooks(emb).collect()}
+    code_map: dict[int, dict[int, int]] = {}
+    for r in codes.collect():
+        code_map.setdefault(r["vec_id"], {})[r["m"]] = r["code"]
+    q_subs = {
+        r["m"]: [float(x) for x in r["subvec"]]
+        for r in _subvectors(emb).filter(F.col("vec_id") == 0).collect()
+    }
+    adc = QUERIES["vector_pq_adc_topk"](spark, sf_small).collect()
+    assert len(adc) == 10
+    for row in adc:
+        expect = 0.0
+        for m in range(PQ_M):
+            sub_q = q_subs[m]
+            cent = cb[(m, code_map[row["vec_id"]][m])]
+            # same rounding discipline as the operator: per-subquantizer
+            # distance rounds to 6 dp before the exact decimal sum
+            expect += round(
+                sum((a - b) * (a - b) for a, b in zip(sub_q, cent)), 6
+            )
+        assert abs(row["adc_d2"] - expect) < 1e-6, row
+
+
+def test_pq_adc_candidates_are_plausible(spark, sf_small):
+    """Weak quality floor: the ADC top-10 should mostly fall inside the
+    exact-L2 top-50 even with the deterministic per-label codebooks."""
+    from ndl_core_data_pipeline_spark.io import load
+    from ndl_core_data_pipeline_spark.operators.vector import _sq_l2
+
+    emb = load(spark, sf_small, "embeddings")
+    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
+    exact50 = {
+        r["vec_id"]
+        for r in emb.filter(F.col("vec_id") != 0)
+        .crossJoin(F.broadcast(q))
+        .select(
+            "vec_id",
+            _sq_l2(
+                F.col("embedding"), F.transform("q_emb", lambda x: x.cast("double"))
+            ).alias("d2"),
+        )
+        .orderBy("d2", "vec_id")
+        .limit(50)
+        .collect()
+    }
+    adc = {r["vec_id"] for r in QUERIES["vector_pq_adc_topk"](spark, sf_small).collect()}
+    assert len(adc & exact50) >= 5
+
 
 def test_matryoshka_reranks_from_prefix_candidates(spark, sf_small):
     from ndl_core_data_pipeline_spark.operators.vector import (

@@ -3,7 +3,6 @@ parse-from-bytes -> exploded (path, sheet, row_idx, cells) grid."""
 
 from __future__ import annotations
 
-import shutil
 import zipfile
 
 import pytest
